@@ -8,12 +8,14 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 Each query is forced through the `noop` sink (full execution, no driver
 collect) after a warm-up of the session; time is wall-clock per query.
 
-Methodology note (grid): the derived grid is LANDED as a real parquet
-table in the prologue and grid queries read it like any other input
-table (`queries.GRID_PARQUET`), so their times include a real scan; the
-warm-up touches its page cache exactly as it does every other input
-table. Outside bench (correctness driver, tests) the grid derives
-in-plan from lineitem as before.
+Methodology note (grid): the derived grid, the shared token-count
+tables and the persisted IVF index are session fixtures
+(`queries._session_fixture`): each is landed once per process on first
+use and read like any other input table, so grid queries pay a real
+scan. The prologue's first read lands them and warms their page cache
+exactly as it does every other input table, keeping the landing out of
+the timed slots. Tests and the correctness driver go through the same
+fixtures, so the plans timed here are the plans the oracle checks.
 """
 
 from __future__ import annotations
@@ -153,10 +155,6 @@ def main() -> None:
     from xarray_dataaccessor_spark.queries import QUERIES
     from xarray_dataaccessor_spark.session import get_spark
 
-    # larger SFs under 32 threads need heap headroom (sf1 hit GCLocker
-    # allocation-retry stalls in a 12g heap); tests keep the smaller
-    # default so their session startup stays cheap
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
     spark = get_spark(app_name="xda-spark-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -176,126 +174,95 @@ def main() -> None:
         p = f"{sf_dir}/{tbl}.parquet"
         if os.path.exists(p):
             spark.read.parquet(p).write.format("noop").mode("overwrite").save()
-    # 1d. land the derived grid as a REAL parquet table (a deployment
-    #     would have this as a real table; ~15 grid queries read it) so
-    #     every timed grid query pays a real scan — not an in-memory
-    #     cache hit — then warm its page cache exactly like the other
-    #     input tables in 1c, and JIT the pivot/window codepath it feeds
-    try:
-        import tempfile
+    # 1d. the derived grid: the first _grid call lands it as a real
+    #     parquet table (queries._session_fixture; ~15 grid queries read
+    #     it, the same plans the tests and the correctness driver check),
+    #     then warm its page cache exactly like the other input tables
+    #     in 1c, and JIT the pivot/window codepath it feeds
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    import xarray_dataaccessor_spark.queries as Q
 
-        import xarray_dataaccessor_spark.queries as Q
+    g = Q._grid(spark, sf_dir)
+    g.write.format("noop").mode("overwrite").save()
+    g.limit(1000).groupBy("time").pivot("x").agg(F.first("t2m")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    # axis-derivation aggregation (collect_set over the grid) — the
+    # nearest-cell-match prologue every extraction query runs
+    from xarray_dataaccessor_spark.operators.spatial import grid_axes
 
-        grid_path = os.path.join(
-            tempfile.mkdtemp(prefix="xda_bench_grid_"), "grid.parquet"
-        )
-        Q._grid(spark, sf_dir).write.mode("overwrite").parquet(grid_path)
-        Q.GRID_PARQUET = grid_path
-        print(f"# grid landed as parquet fixture: {grid_path}", file=sys.stderr)
-        g = Q._grid(spark, sf_dir)
-        g.write.format("noop").mode("overwrite").save()
-        g.limit(1000).groupBy("time").pivot("x").agg(F.first("t2m")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        # axis-derivation aggregation (collect_set over the cached grid) —
-        # the nearest-cell-match prologue every extraction query runs
-        from xarray_dataaccessor_spark.operators.spatial import grid_axes
+    grid_axes(g)
+    # full point-extraction path (nearest match + broadcast join +
+    # pivot) on a sliver of the grid — JITs the codepath whose cold
+    # cost otherwise lands inside the measured extraction query
+    from xarray_dataaccessor_spark.catalog import points_df
+    from xarray_dataaccessor_spark.operators.extraction import points_to_table
 
-        grid_axes(g)
-        # full point-extraction path (nearest match + broadcast join +
-        # pivot) on a sliver of the grid — JITs the codepath whose cold
-        # cost otherwise lands inside the measured extraction query
-        from xarray_dataaccessor_spark.catalog import points_df
-        from xarray_dataaccessor_spark.operators.extraction import points_to_table
+    pts = points_df(spark, coords=[(41.63, -82.98), (42.88, -79.43)])
+    points_to_table(g.limit(2000), pts, "t2m").write.format("noop").mode(
+        "overwrite"
+    ).save()
+    # zonal/wzonal/contour codepaths on a grid sliver, with the
+    # slot's EXACT zone literals and column types so the generated
+    # classes are identical (codegen caches on generated source):
+    # the scalar-pandas-UDF runner + the 16-zone decimal-weighted
+    # aggregation measured 12.9 s cold vs 1.7 s warm at sf0.1 —
+    # the r11 zonal_contour_stats driver-bench anomaly (the slot
+    # sorts last, every repeat stayed partially cold)
+    from xarray_dataaccessor_spark.operators.spatial import (
+        contour_segments,
+        zonal_stats,
+        zonal_stats_weighted,
+    )
 
-        pts = points_df(spark, coords=[(41.63, -82.98), (42.88, -79.43)])
-        points_to_table(g.limit(2000), pts, "t2m").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        # zonal/wzonal/contour codepaths on a grid sliver, with the
-        # slot's EXACT zone literals and column types so the generated
-        # classes are identical (codegen caches on generated source):
-        # the scalar-pandas-UDF runner + the 16-zone decimal-weighted
-        # aggregation measured 12.9 s cold vs 1.7 s warm at sf0.1 —
-        # the r11 zonal_contour_stats driver-bench anomaly (the slot
-        # sorts last, every repeat stayed partially cold)
-        from xarray_dataaccessor_spark.operators.spatial import (
-            contour_segments,
-            zonal_stats,
-            zonal_stats_weighted,
-        )
-
-        sliver = g.limit(2000).select(
+    sliver = g.limit(2000).select(
+        "x", "y",
+        F.col("t2m").cast("decimal(18,2)").alias("t2m"),
+        F.col("u100").cast("decimal(18,6)").alias("u100"),
+    )
+    zonal_stats(
+        sliver, Q._ZONAL_POLYGONS, value_cols=["t2m", "u100"],
+        how="sum",
+    ).write.format("noop").mode("overwrite").save()
+    zonal_stats_weighted(
+        sliver.select(
             "x", "y",
-            F.col("t2m").cast("decimal(18,2)").alias("t2m"),
-            F.col("u100").cast("decimal(18,6)").alias("u100"),
-        )
-        zonal_stats(
-            sliver, Q._ZONAL_POLYGONS, value_cols=["t2m", "u100"],
-            how="sum",
-        ).write.format("noop").mode("overwrite").save()
-        zonal_stats_weighted(
-            sliver.select(
-                "x", "y",
-                F.col("t2m").cast("decimal(18,2)").cast("double").alias("t2m"),
-            ),
-            [
-                [[(x0, y0), (x1, y0), (x1, y1), (x0, y1)]]
-                for x0, x1, y0, y1 in Q._WZONAL_RECTS
-            ],
-            dx=0.25, dy=0.25, value_cols=["t2m"], how="sum",
-            weight_decimals=6,
-        ).write.format("noop").mode("overwrite").save()
-        surfw = sliver.groupBy("x", "y").agg(
-            (
-                F.sum(F.col("t2m").cast("decimal(18,6)")).cast("double")
-                / F.count("t2m")
-            ).alias("z")
-        )
-        contour_segments(
-            surfw, dx=0.25, dy=0.25, levels=[1.0, 2.0], value_col="z",
-            origin=Q._GRID_ORIGIN,
-        ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass
-    # 1f. land the shared-tokenization count tables (VERDICT r11 #5): a
-    #     deployment materializes per-document unigram/bigram counts
-    #     once per corpus version; gopher, the distilled classifier and
-    #     the KN scorer all read them, so the corpus text is tokenized
-    #     once per gram shape PER SESSION instead of once per slot.
-    try:
-        import tempfile as _tf
+            F.col("t2m").cast("decimal(18,2)").cast("double").alias("t2m"),
+        ),
+        [
+            [[(x0, y0), (x1, y0), (x1, y1), (x0, y1)]]
+            for x0, x1, y0, y1 in Q._WZONAL_RECTS
+        ],
+        dx=0.25, dy=0.25, value_cols=["t2m"], how="sum",
+        weight_decimals=6,
+    ).write.format("noop").mode("overwrite").save()
+    surfw = sliver.groupBy("x", "y").agg(
+        (
+            F.sum(F.col("t2m").cast("decimal(18,6)")).cast("double")
+            / F.count("t2m")
+        ).alias("z")
+    )
+    contour_segments(
+        surfw, dx=0.25, dy=0.25, levels=[1.0, 2.0], value_col="z",
+        origin=Q._GRID_ORIGIN,
+    ).write.format("noop").mode("overwrite").save()
+    # 1e. the shared-tokenization count tables (VERDICT r11 #5): gopher,
+    #     the distilled classifier and the KN scorer all read them, so
+    #     the corpus text is tokenized once per gram shape PER SESSION;
+    #     the first read lands them, the noop write warms their page cache
+    Q._corpus_word_counts(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    Q._corpus_bigram_counts(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    # 1f. the persisted IVF index (similarity_ivf_ann 'drift' reads it;
+    #     a deployment has the index built — the slot measures the drift
+    #     scan, not the one-time build)
+    from xarray_dataaccessor_spark.queries_ext import _ivf_index_path
 
-        tok_dir = _tf.mkdtemp(prefix="xda_bench_tok_")
-        Q._corpus_word_counts(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(tok_dir, "wc.parquet")
-        )
-        Q._corpus_bigram_counts(spark, sf_dir).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tok_dir, "bc.parquet"))
-        Q.WC_PARQUET = os.path.join(tok_dir, "wc.parquet")
-        Q.BC_PARQUET = os.path.join(tok_dir, "bc.parquet")
-        print(f"# token counts landed: {tok_dir}", file=sys.stderr)
-        # warm their page cache like the other input tables (1c)
-        spark.read.parquet(Q.WC_PARQUET).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        spark.read.parquet(Q.BC_PARQUET).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception:
-        pass
-    # 1e. the persisted-IVF-index fixture (similarity_ivf_ann 'drift'
-    #     variant reads it; a deployment has the index built — the slot
-    #     measures the drift scan, not the one-time build)
-    try:
-        from xarray_dataaccessor_spark.queries_ext import _ivf_index_path
-
-        _ivf_index_path(spark, sf_dir)
-    except Exception:
-        pass
+    _ivf_index_path(spark, sf_dir)
     # 2. Python worker pool (one Arrow-batched worker per core; first use
     #    otherwise pays fork + pandas import inside a measured query)
     spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
@@ -304,82 +271,76 @@ def main() -> None:
     # 2b. connected-components substrate: signature aggregate (bit_xor of
     #     xxhash64), the localCheckpoint path, and the single-partition
     #     union-find endgame (repartition(1) + mapInPandas)
-    try:
-        from xarray_dataaccessor_spark.operators.graph import connected_components
+    from xarray_dataaccessor_spark.operators.graph import connected_components
 
-        cc_edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
-        )
-        connected_components(cc_edges).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception:
-        pass
+    cc_edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
+    )
+    connected_components(cc_edges).write.format("noop").mode(
+        "overwrite"
+    ).save()
     # 2c. IVF/k-means generated classes (min-struct argmin + the 64-wide
     #     decimal element_at mean aggregation): the generated source for
     #     a 64-dim aggregate is large enough that its first C2 compile
     #     costs seconds; running the operator once on a tiny 64-dim
     #     corpus populates the codegen cache with the exact classes
-    try:
-        from xarray_dataaccessor_spark.operators.similarity import ivf_ann, pq_ann
+    from xarray_dataaccessor_spark.operators.similarity import ivf_ann, pq_ann
 
-        tiny = spark.range(0, 64, 1, 8).select(
-            F.col("id").alias("vec_id"),
-            F.array(
-                *[((F.col("id") + i) % 17).cast("double") for i in range(64)]
-            ).alias("embedding"),
-        )
-        ivf_ann(
-            tiny.filter(F.col("vec_id") < 2), tiny, k=3, n_centroids=8,
-            n_probe=2, n_iters=2, dims=64,
-        ).write.format("noop").mode("overwrite").save()
-        # PQ stage shapes: subspace slice-explode, LUT broadcast join,
-        # decimal ADC sum, exact re-rank — same codegen-cache rationale
-        pq_ann(
-            tiny.filter(F.col("vec_id") < 2), tiny, k=3, m_subspaces=4,
-            n_codes=8, n_iters=2, refine=2, dims=64,
-        ).write.format("noop").mode("overwrite").save()
-        # banded hyperplane LSH (4x8 planes over dims=64): the literal
-        # plane folds generate large per-band expressions whose first
-        # C2 compile otherwise lands inside the measured near-dup query
-        from xarray_dataaccessor_spark.operators.similarity import (
-            embedding_near_duplicates,
-        )
+    tiny = spark.range(0, 64, 1, 8).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[((F.col("id") + i) % 17).cast("double") for i in range(64)]
+        ).alias("embedding"),
+    )
+    ivf_ann(
+        tiny.filter(F.col("vec_id") < 2), tiny, k=3, n_centroids=8,
+        n_probe=2, n_iters=2, dims=64,
+    ).write.format("noop").mode("overwrite").save()
+    # PQ stage shapes: subspace slice-explode, LUT broadcast join,
+    # decimal ADC sum, exact re-rank — same codegen-cache rationale
+    pq_ann(
+        tiny.filter(F.col("vec_id") < 2), tiny, k=3, m_subspaces=4,
+        n_codes=8, n_iters=2, refine=2, dims=64,
+    ).write.format("noop").mode("overwrite").save()
+    # banded hyperplane LSH (4x8 planes over dims=64): the literal
+    # plane folds generate large per-band expressions whose first
+    # C2 compile otherwise lands inside the measured near-dup query
+    from xarray_dataaccessor_spark.operators.similarity import (
+        embedding_near_duplicates,
+    )
 
-        embedding_near_duplicates(
-            tiny, threshold=0.99, n_bands=4, planes_per_band=8, dims=64
-        ).write.format("noop").mode("overwrite").save()
-        # distilled-classifier stage shapes (hashed-feature explode,
-        # broadcast weight joins, decimal gradient sums, rounded
-        # sigmoid): first C2 compile of the two-epoch plan otherwise
-        # lands inside the measured quality slot
-        from xarray_dataaccessor_spark.operators.classifier import (
-            distill_quality_classifier,
-        )
+    embedding_near_duplicates(
+        tiny, threshold=0.99, n_bands=4, planes_per_band=8, dims=64
+    ).write.format("noop").mode("overwrite").save()
+    # distilled-classifier stage shapes (hashed-feature explode,
+    # broadcast weight joins, decimal gradient sums, rounded
+    # sigmoid): first C2 compile of the two-epoch plan otherwise
+    # lands inside the measured quality slot
+    from xarray_dataaccessor_spark.operators.classifier import (
+        distill_quality_classifier,
+    )
 
-        tdocs = spark.range(0, 32, 1, 4).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ", *[(F.col("id") * (i + 1) % 13).cast("string")
-                       for i in range(12)]
-            ).alias("text"),
-        )
-        tlbl = tdocs.select(
-            "doc_id", (F.col("doc_id") % 2).cast("double").alias("y")
-        )
-        distill_quality_classifier(
-            tdocs, tlbl, n_buckets=32
-        ).write.format("noop").mode("overwrite").save()
-        # substring-dedup stage shapes (k-wide gram concat, span
-        # exists-lambda reconstruction) — same first-compile rationale
-        from xarray_dataaccessor_spark.operators.dedup import substring_dedup
+    tdocs = spark.range(0, 32, 1, 4).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ", *[(F.col("id") * (i + 1) % 13).cast("string")
+                   for i in range(12)]
+        ).alias("text"),
+    )
+    tlbl = tdocs.select(
+        "doc_id", (F.col("doc_id") % 2).cast("double").alias("y")
+    )
+    distill_quality_classifier(
+        tdocs, tlbl, n_buckets=32
+    ).write.format("noop").mode("overwrite").save()
+    # substring-dedup stage shapes (k-wide gram concat, span
+    # exists-lambda reconstruction) — same first-compile rationale
+    from xarray_dataaccessor_spark.operators.dedup import substring_dedup
 
-        substring_dedup(
-            tdocs, min_tokens=8
-        ).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-    except Exception:
-        pass
+    substring_dedup(
+        tdocs, min_tokens=8
+    ).write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
     # 3. micro-batch engine + state store + stateful-Python path (JIT of
     #    the streaming codepath otherwise lands on the first streaming query)
     _warm_streaming(spark)
@@ -410,10 +371,7 @@ def main() -> None:
             # drop caches a query body created for its own execution: the
             # NEXT run/query should not inherit leftover blocks (memory
             # pressure and eviction churn otherwise bleed across slots)
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
+            spark.catalog.clearCache()
         ok = sorted(r for r in runs if r >= 0)
         if ok:
             timings[name] = ok[len(ok) // 2] if len(ok) % 2 else round(

@@ -61,7 +61,6 @@ sys.path.insert(0, repo)
 from xarray_dataaccessor_spark.session import get_spark
 
 cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 spark = get_spark(app_name="xda-ab-bench", cpus=cpus)
 spark.sparkContext.setLogLevel("ERROR")
 
@@ -93,10 +92,7 @@ for name in slots:
     except Exception as exc:
         print(f"# ab error in {name}: {exc}", file=sys.stderr)
         out[name] = -1.0
-    try:
-        spark.catalog.clearCache()
-    except Exception:
-        pass
+    spark.catalog.clearCache()
 print("ABRESULT " + json.dumps(out))
 '''
 

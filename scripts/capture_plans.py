@@ -1,7 +1,6 @@
 """Capture .explain("formatted") for every declared query into a
-directory (one <slot>.txt per query) under the bench's measured
-configuration: the derived grid and the shared-token count tables are
-landed as parquet fixtures exactly as bench.py's prologue does, so the
+directory (one <slot>.txt per query). Queries read the same session
+fixtures (landed grid, shared-token count tables) as bench.py, so the
 captured plans are the plans the bench times.
 
 Usage:
@@ -12,7 +11,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -25,29 +23,13 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 
     import xarray_dataaccessor_spark.queries_ext  # noqa: F401
-    import xarray_dataaccessor_spark.queries as Q
     from xarray_dataaccessor_spark.queries import QUERIES
     from xarray_dataaccessor_spark.session import get_spark
 
     spark = get_spark(app_name="xda-capture-plans", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-
-    # land the bench fixtures (grid + token counts) like bench.py 1d/1f
-    base = tempfile.mkdtemp(prefix="xda_plans_fix_")
-    grid_path = os.path.join(base, "grid.parquet")
-    Q._grid(spark, sf_dir).write.mode("overwrite").parquet(grid_path)
-    Q.GRID_PARQUET = grid_path
-    Q._corpus_word_counts(spark, sf_dir).write.mode("overwrite").parquet(
-        os.path.join(base, "wc.parquet")
-    )
-    Q._corpus_bigram_counts(spark, sf_dir).write.mode("overwrite").parquet(
-        os.path.join(base, "bc.parquet")
-    )
-    Q.WC_PARQUET = os.path.join(base, "wc.parquet")
-    Q.BC_PARQUET = os.path.join(base, "bc.parquet")
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -63,10 +45,7 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
             fh.write(txt)
         print(f"# captured {name}", file=sys.stderr)
-        try:
-            spark.catalog.clearCache()
-        except Exception:
-            pass
+        spark.catalog.clearCache()
 
 
 if __name__ == "__main__":

@@ -4,16 +4,14 @@ runs — bench.py's consumption discipline, minus the full prologue).
 
 Usage:
     python scripts/focus_bench.py slot1,slot2 [repeats] [--plans DIR]
-        [--fixtures]
 
 With --plans DIR, also write each slot's .explain("formatted") to
 DIR/<slot>.txt (plan capture for the optimization evidence).
 
-With --fixtures, land the bench prologue's session fixtures (derived
-grid parquet, shared-tokenization count tables, persisted IVF index)
-before timing, so grid/text/ANN slots run the SAME plans bench.py
-times; without it those slots derive fixtures in-plan and their
-absolute numbers are not comparable to the full bench.
+Grid/text/ANN slots read the session fixtures (derived grid parquet,
+shared-tokenization count tables, persisted IVF index) bench.py times;
+the first slot that needs one lands it, so its first run includes the
+landing.
 """
 
 from __future__ import annotations
@@ -37,7 +35,6 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 
     import xarray_dataaccessor_spark.queries_ext  # noqa: F401
     from xarray_dataaccessor_spark.queries import QUERIES
@@ -55,40 +52,6 @@ def main() -> None:
     spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
-
-    if "--fixtures" in sys.argv:
-        import tempfile
-
-        import xarray_dataaccessor_spark.queries as Q
-
-        grid_path = os.path.join(
-            tempfile.mkdtemp(prefix="xda_focus_grid_"), "grid.parquet"
-        )
-        Q._grid(spark, sf_dir).write.mode("overwrite").parquet(grid_path)
-        Q.GRID_PARQUET = grid_path
-        spark.read.parquet(grid_path).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        tok_dir = tempfile.mkdtemp(prefix="xda_focus_tok_")
-        Q._corpus_word_counts(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(tok_dir, "wc.parquet")
-        )
-        Q._corpus_bigram_counts(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(tok_dir, "bc.parquet")
-        )
-        Q.WC_PARQUET = os.path.join(tok_dir, "wc.parquet")
-        Q.BC_PARQUET = os.path.join(tok_dir, "bc.parquet")
-        for p in (Q.WC_PARQUET, Q.BC_PARQUET):
-            spark.read.parquet(p).write.format("noop").mode("overwrite").save()
-        try:
-            from xarray_dataaccessor_spark.queries_ext import _ivf_index_path
-
-            _ivf_index_path(spark, sf_dir)
-        except Exception:
-            pass
-        spark.catalog.clearCache()
-        print(f"# fixtures landed: grid={grid_path} tok={tok_dir}",
-              file=sys.stderr)
 
     out: dict[str, list[float]] = {}
     for name in slots:
@@ -112,10 +75,7 @@ def main() -> None:
                 break
             finally:
                 spark.sparkContext.setJobDescription(None)
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
+            spark.catalog.clearCache()
         out[name] = runs
         ok = sorted(r for r in runs if r >= 0)
         med = ok[len(ok) // 2] if ok else -1.0

@@ -52,7 +52,6 @@ def main() -> None:
     out_path = "BENCH_sf3_full_r11.txt"
     if "--out" in sys.argv:
         out_path = sys.argv[sys.argv.index("--out") + 1]
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     spark = get_spark(
         app_name="xda-sf-envelope",
         cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),

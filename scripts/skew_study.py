@@ -28,7 +28,6 @@ DIRS = {
 
 
 def main():
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
     spark = get_spark(app_name="xda-skew-study", cpus="32")
     spark.sparkContext.setLogLevel("ERROR")
     reps = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))

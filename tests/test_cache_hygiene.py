@@ -71,30 +71,3 @@ def test_back_to_back_builders_no_accumulation(spark, sf_dir):
         df.write.format("noop").mode("overwrite").save()
         unpersist_intermediates(df, blocking=True)
     assert _n_persistent(spark) <= before
-
-
-def test_session_registry_survives_derivation(spark):
-    """VERDICT r11 #5: the attribute tag dies on result.filter(...);
-    the session registry survives because the handle is a name."""
-    from pyspark.sql import functions as F
-
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        register_caches,
-        registered_cache_names,
-        release_caches,
-        tag_caches,
-    )
-
-    spark.catalog.clearCache()
-    before = _n_persistent(spark)
-    inter = spark.range(100).select((F.col("id") * 2).alias("v")).cache()
-    result = tag_caches(inter.groupBy().sum("v"), inter)
-    register_caches("demo_build", inter)
-    derived = result.withColumnRenamed("sum(v)", "s")  # attribute tag lost
-    derived.write.format("noop").mode("overwrite").save()
-    assert unpersist_intermediates(derived) == 0  # the silent failure mode
-    assert "demo_build" in registered_cache_names()
-    assert release_caches("demo_build", blocking=True) == 1  # the loud fix
-    assert _n_persistent(spark) <= before
-    with pytest.raises(KeyError):  # misuse is loud, not a no-op
-        release_caches("demo_build")

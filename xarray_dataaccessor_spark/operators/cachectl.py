@@ -1,15 +1,20 @@
-"""Cache-lifecycle control for plan-builder operators.
+"""Cache-lifecycle control for plan-builder operators. Two mechanisms:
 
-Several operators (``incremental_dedup_frames``, ``train_logreg`` /
-``distill_quality_classifier``, the gopher quality slot) cache small
-intermediate frames that the RETURNED plan references — the cache is what
-keeps a multi-consumer or per-epoch lineage linear. Unpersisting inside
-the builder would defeat that, so the contract is: **the caller owns the
-cache lifecycle**. Builders tag the returned DataFrame with its
-intermediates; call :func:`unpersist_intermediates` after the consuming
-action (or ``spark.catalog.clearCache()`` between unrelated workloads,
-as ``bench.py`` does) to release the executor-memory blocks in
-long-lived sessions.
+- **Tagged caches.** Several operators (``incremental_dedup_frames``,
+  ``train_logreg`` / ``distill_quality_classifier``, the gopher quality
+  slot) cache small intermediate frames that the RETURNED plan
+  references — the cache is what keeps a multi-consumer or per-epoch
+  lineage linear. Unpersisting inside the builder would defeat that, so
+  **the caller owns the cache lifecycle**: builders tag the returned
+  DataFrame with its intermediates (:func:`tag_caches`); call
+  :func:`unpersist_intermediates` after the consuming action (or
+  ``spark.catalog.clearCache()`` between unrelated workloads, as
+  ``bench.py`` does) to release the executor-memory blocks in
+  long-lived sessions.
+- **Tracked checkpoints.** Plan-truncating ``localCheckpoint`` blocks
+  that ``clearCache`` cannot see are registered through
+  :func:`tracked_local_checkpoint` and released at the next slot
+  boundary by :func:`release_checkpoints` (``configure_session``).
 """
 
 from __future__ import annotations
@@ -56,43 +61,6 @@ def unpersist_intermediates(df: DataFrame, blocking: bool = False) -> int:
     if cached:
         setattr(df, _ATTR, [])
     return n
-
-
-# ---------------------------------------------------------------------------
-# session-scoped registry (round 12 — VERDICT r11 #5)
-# ---------------------------------------------------------------------------
-#: name -> cached frames. The DataFrame-attribute tag above dies on any
-#: derived frame (``result.filter(...)`` returns a NEW object), which
-#: fails SILENTLY in exactly the long-lived sessions the mechanism
-#: exists for. The registry survives derivation because the handle is a
-#: plain string the caller owns, and misuse is LOUD: releasing an
-#: unknown name raises KeyError instead of no-op'ing.
-_SESSION_CACHES: dict[str, list[DataFrame]] = {}
-
-
-def register_caches(name: str, *cached: DataFrame) -> None:
-    """Record ``cached`` (already persisted) frames under a session-wide
-    ``name``. Repeated registration under one name accumulates (a
-    builder invoked twice in one session registers both generations;
-    release drops them all)."""
-    _SESSION_CACHES.setdefault(name, []).extend(cached)
-
-
-def release_caches(name: str, blocking: bool = False) -> int:
-    """Unpersist every frame registered under ``name`` and forget the
-    name. Raises ``KeyError`` for names never registered — the silent
-    no-op on a derived frame was the failure mode that motivated this
-    registry."""
-    frames = _SESSION_CACHES.pop(name)  # KeyError by design
-    for f in frames:
-        f.unpersist(blocking=blocking)
-    return len(frames)
-
-
-def registered_cache_names() -> tuple[str, ...]:
-    """Names with live registrations — the audit surface for a
-    long-lived session ('what did I forget to release?')."""
-    return tuple(sorted(_SESSION_CACHES))
 
 
 # ---------------------------------------------------------------------------

@@ -42,27 +42,17 @@ from xarray_dataaccessor_spark.sources.media import (
 
 def _ship_by_value() -> None:
     """Executors may not have this package installed; ship the decoders
-    by value (same pattern as the format readers, ``ingest.py:187``)."""
-    try:
-        from pyspark import cloudpickle as _cp
+    by value (same pattern as the format readers in ``ingest.py``)."""
+    import xarray_dataaccessor_spark.operators.multimodal as _mm
+    from xarray_dataaccessor_spark.session import ship_by_value
+    from xarray_dataaccessor_spark.sources import flac as _flac
+    from xarray_dataaccessor_spark.sources import jpeg as _jpeg
+    from xarray_dataaccessor_spark.sources import media as _media
+    from xarray_dataaccessor_spark.sources import vp8 as _vp8
+    from xarray_dataaccessor_spark.sources import vp8_tables as _vp8t
+    from xarray_dataaccessor_spark.sources import webp as _webp
 
-        import xarray_dataaccessor_spark.operators.multimodal as _mm
-        from xarray_dataaccessor_spark.sources import flac as _flac
-        from xarray_dataaccessor_spark.sources import jpeg as _jpeg
-        from xarray_dataaccessor_spark.sources import media as _media
-        from xarray_dataaccessor_spark.sources import vp8 as _vp8
-        from xarray_dataaccessor_spark.sources import vp8_tables as _vp8t
-        from xarray_dataaccessor_spark.sources import webp as _webp
-
-        _cp.register_pickle_by_value(_media)
-        _cp.register_pickle_by_value(_webp)
-        _cp.register_pickle_by_value(_vp8)
-        _cp.register_pickle_by_value(_vp8t)
-        _cp.register_pickle_by_value(_jpeg)
-        _cp.register_pickle_by_value(_flac)
-        _cp.register_pickle_by_value(_mm)
-    except Exception:
-        pass
+    ship_by_value(_media, _webp, _vp8, _vp8t, _jpeg, _flac, _mm)
 
 def _task_memo(cap: int = 4096):
     """Per-task content-addressed memo for the codec loops: byte-identical

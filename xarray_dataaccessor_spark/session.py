@@ -13,26 +13,61 @@ a real cluster (AQE advisoryPartitionSizeInBytes does this dynamically).
 from __future__ import annotations
 
 import os
+import types
 
 from pyspark.sql import SparkSession
+
+
+def _mem_available_gib() -> float | None:
+    """``MemAvailable`` from /proc/meminfo in GiB (None off Linux)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemAvailable")
+            )
+    except (OSError, StopIteration, ValueError):
+        return None
+    return kb / 1024 / 1024
 
 
 def _default_driver_mem() -> str:
     """12g on boxes that can afford it (the pre-touched heap below needs
     the physical pages up front), stepping down on small hosts so the
     library default never fails JVM launch on an 8-16 GB machine."""
-    try:
-        with open("/proc/meminfo") as f:
-            kb = next(
-                int(line.split()[1]) for line in f if line.startswith("MemAvailable")
-            )
-        avail_g = kb / 1024 / 1024
-    except Exception:
+    avail_g = _mem_available_gib()
+    if avail_g is None:
         return "4g"
     for want in (12, 8, 4, 2):
         if avail_g >= want * 1.5:
             return f"{want}g"
     return "1g"
+
+
+#: share of MemAvailable a caller-requested heap may take: the heap is
+#: pre-touched at launch, so asking for more than the host can commit
+#: kills the JVM before the gateway starts
+_HEAP_CAP_SHARE = 0.6
+
+_UNIT_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _driver_mem() -> str:
+    """The driver heap: ``SPARK_DRIVER_MEM`` capped at
+    :data:`_HEAP_CAP_SHARE` of MemAvailable, else
+    :func:`_default_driver_mem`. JVM size syntax (``24g``, ``8192m``)."""
+    requested = os.environ.get("SPARK_DRIVER_MEM")
+    if not requested:
+        return _default_driver_mem()
+    avail_g = _mem_available_gib()
+    if avail_g is None:
+        return requested
+    req = requested.strip().lower()
+    if req[-1] in _UNIT_MB:
+        req_mb = float(req[:-1]) * _UNIT_MB[req[-1]]
+    else:  # plain bytes
+        req_mb = float(req) / 2**20
+    cap_mb = int(avail_g * 1024 * _HEAP_CAP_SHARE)
+    return requested if req_mb <= cap_mb else f"{cap_mb}m"
 
 
 def get_spark(
@@ -48,7 +83,7 @@ def get_spark(
       stores UTC and converts on request, ``utility_functions.py:53-74``)
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
+    driver_mem = _driver_mem()
     # Shuffle/spill files on tmpfs when available: local[n] in a VM pays
     # heavy syscall + virtio overhead on /tmp, and shuffle-file I/O is
     # the dominant variance source for small-stage workloads. On a real
@@ -101,6 +136,20 @@ def get_spark(
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     return builder.getOrCreate()
+
+
+def ship_by_value(*modules: types.ModuleType) -> None:
+    """Register ``modules`` for by-value pickling: closures that use them
+    carry the module code to Python workers, which then need neither
+    this package nor its format libraries on ``sys.path``. Raises on
+    anything that is not an imported module — a silent failure here
+    would surface later as an ImportError inside a worker. Register
+    only the modules a closure needs: every fresh worker re-executes a
+    by-value module on first use (see ``operators/spatial.py``)."""
+    from pyspark import cloudpickle
+
+    for m in modules:
+        cloudpickle.register_pickle_by_value(m)
 
 
 def configure_session(spark: SparkSession) -> SparkSession:

@@ -36,14 +36,10 @@ def grid_to_cog(
     :func:`grid_to_grib2`; cells absent from the grid land as the
     declared nodata."""
     spark = grid.sparkSession
+    from xarray_dataaccessor_spark.session import ship_by_value
     from xarray_dataaccessor_spark.sources import geotiff as _gt
 
-    try:
-        from pyspark import cloudpickle as _cp
-
-        _cp.register_pickle_by_value(_gt)
-    except Exception:  # pragma: no cover
-        pass
+    ship_by_value(_gt)
 
     os.makedirs(out_dir, exist_ok=True)
     times = sorted(r[0] for r in grid.select(time_col).distinct().collect())

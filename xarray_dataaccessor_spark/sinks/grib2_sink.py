@@ -45,14 +45,10 @@ def grid_to_grib2(
     grid, else quantized like every GRIB stream. Returns
     ``{"n_files": ..., "shape": ...}``."""
     spark = grid.sparkSession
+    from xarray_dataaccessor_spark.session import ship_by_value
     from xarray_dataaccessor_spark.sources import grib2 as _gb
 
-    try:  # ship the writer by value (executors may lack the package)
-        from pyspark import cloudpickle as _cp
-
-        _cp.register_pickle_by_value(_gb)
-    except Exception:  # pragma: no cover
-        pass
+    ship_by_value(_gb)  # executors may lack the package
 
     os.makedirs(out_dir, exist_ok=True)
     times = sorted(r[0] for r in grid.select(time_col).distinct().collect())

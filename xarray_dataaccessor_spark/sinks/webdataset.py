@@ -36,14 +36,10 @@ from pyspark.sql import functions as F
 def _ship_by_value() -> None:
     """Executors may not have this package installed; ship the tar
     helpers by value (the zarr_sink pattern)."""
-    try:
-        from pyspark import cloudpickle as _cp
+    import xarray_dataaccessor_spark.sinks.webdataset as _self
+    from xarray_dataaccessor_spark.session import ship_by_value
 
-        import xarray_dataaccessor_spark.sinks.webdataset as _self
-
-        _cp.register_pickle_by_value(_self)
-    except Exception:  # pragma: no cover
-        pass
+    ship_by_value(_self)
 
 
 def write_tar_shards(

@@ -91,20 +91,14 @@ def grid_to_zarr(
     if zarr_format not in (2, 3):
         raise ValueError("zarr_format must be 2 or 3")
     spark = grid.sparkSession
+    import xarray_dataaccessor_spark.sinks.zarr_sink as _self
+    from xarray_dataaccessor_spark.session import ship_by_value
+    from xarray_dataaccessor_spark.sources import blosc as _bl
     from xarray_dataaccessor_spark.sources import zarr as _z
+    from xarray_dataaccessor_spark.sources import zstd as _zs
 
-    try:  # ship the encoders by value (executors may lack the package)
-        from pyspark import cloudpickle as _cp
-
-        import xarray_dataaccessor_spark.sinks.zarr_sink as _self
-        from xarray_dataaccessor_spark.sources import blosc as _bl
-        from xarray_dataaccessor_spark.sources import zstd as _zs
-
-        _cp.register_pickle_by_value(_bl)
-        _cp.register_pickle_by_value(_zs)
-        _cp.register_pickle_by_value(_self)
-    except Exception:  # pragma: no cover
-        pass
+    # ship the encoders by value (executors may lack the package)
+    ship_by_value(_bl, _zs, _self)
 
     # dimension-sized axis collects (the ONLY driver-side data)
     times = np.array(

@@ -181,16 +181,11 @@ def netcdf_glob_to_grid(
     workers need neither this package nor any NetCDF/HDF5 library on
     their ``sys.path`` — the parsers travel with the task closure
     (stdlib struct + zlib + numpy only)."""
+    from xarray_dataaccessor_spark.session import ship_by_value
     from xarray_dataaccessor_spark.sources import hdf5 as _h5
     from xarray_dataaccessor_spark.sources import netcdf3 as _nc
 
-    try:  # ship the parsers by value (workers may not have the package)
-        from pyspark import cloudpickle as _cp
-
-        _cp.register_pickle_by_value(_nc)
-        _cp.register_pickle_by_value(_h5)
-    except Exception:  # pragma: no cover - older pickler fallback
-        pass
+    ship_by_value(_nc, _h5)  # workers may not have the package
 
     frag_fn = _nc.netcdf_fragment_to_pandas
 
@@ -234,14 +229,10 @@ def geotiff_glob_to_grid(
     task) -> Arrow-batched ``mapInPandas`` decode with the pure TIFF
     reader -> long-form grid rows ready for :func:`land_grid_parquet`.
     The parser ships by value; executors need no package install."""
+    from xarray_dataaccessor_spark.session import ship_by_value
     from xarray_dataaccessor_spark.sources import geotiff as _gt
 
-    try:
-        from pyspark import cloudpickle as _cp
-
-        _cp.register_pickle_by_value(_gt)
-    except Exception:  # pragma: no cover - older pickler fallback
-        pass
+    ship_by_value(_gt)
 
     frag_fn = _gt.geotiff_fragment_to_pandas
 
@@ -270,14 +261,10 @@ def grib_glob_to_grid(
     timestamp is ``ref_time + forecast_hour``; ``category``/``number``
     filter multi-parameter files to the requested variable. The parser
     ships by value; executors need no package install."""
+    from xarray_dataaccessor_spark.session import ship_by_value
     from xarray_dataaccessor_spark.sources import grib2 as _gb
 
-    try:
-        from pyspark import cloudpickle as _cp
-
-        _cp.register_pickle_by_value(_gb)
-    except Exception:  # pragma: no cover - older pickler fallback
-        pass
+    ship_by_value(_gb)
 
     parse = _gb.parse_grib2
 
@@ -362,19 +349,12 @@ def zarr_to_grid(
     v3 ``c/i/j/k`` keys."""
     import numpy as np
 
+    from xarray_dataaccessor_spark.session import ship_by_value
+    from xarray_dataaccessor_spark.sources import blosc as _bl
     from xarray_dataaccessor_spark.sources import zarr as _z
+    from xarray_dataaccessor_spark.sources import zstd as _zs
 
-    try:  # ship the decoder by value (workers may not have the package)
-        from pyspark import cloudpickle as _cp
-
-        from xarray_dataaccessor_spark.sources import blosc as _bl
-        from xarray_dataaccessor_spark.sources import zstd as _zs
-
-        _cp.register_pickle_by_value(_z)
-        _cp.register_pickle_by_value(_bl)
-        _cp.register_pickle_by_value(_zs)
-    except Exception:  # pragma: no cover - older pickler fallback
-        pass
+    ship_by_value(_z, _bl, _zs)  # workers may not have the package
 
     meta = _z.read_zarray(store, variable)
     dims = meta["dims"] or []

@@ -31,8 +31,8 @@ import numpy as np
 
 # module-level so the name ships BY VALUE with this module's functions
 # (a function-local import would run on executors whose sys.path lacks
-# the package); ingest.netcdf_glob_to_grid registers both modules with
-# cloudpickle.register_pickle_by_value
+# the package); ingest.netcdf_glob_to_grid ships both modules with
+# session.ship_by_value
 from xarray_dataaccessor_spark.sources.hdf5 import parse_hdf5 as _parse_hdf5
 
 NC_BYTE, NC_CHAR, NC_SHORT, NC_INT, NC_FLOAT, NC_DOUBLE = 1, 2, 3, 4, 5, 6

@@ -99,22 +99,17 @@ def _ship_by_value() -> None:
     the decode modules AND this module for by-value pickling so the
     whole reader travels with the plan (the ingest/webdataset pattern —
     stdlib struct/zlib + numpy on the worker is all that's assumed)."""
-    try:
-        from pyspark import cloudpickle as _cp
+    import xarray_dataaccessor_spark.sources.pyds as _self
+    from xarray_dataaccessor_spark.session import ship_by_value
+    from xarray_dataaccessor_spark.sources import blosc as _bl
+    from xarray_dataaccessor_spark.sources import geotiff as _gt
+    from xarray_dataaccessor_spark.sources import grib2 as _gb
+    from xarray_dataaccessor_spark.sources import hdf5 as _h5
+    from xarray_dataaccessor_spark.sources import netcdf3 as _nc
+    from xarray_dataaccessor_spark.sources import zarr as _z
+    from xarray_dataaccessor_spark.sources import zstd as _zs
 
-        import xarray_dataaccessor_spark.sources.pyds as _self
-        from xarray_dataaccessor_spark.sources import blosc as _bl
-        from xarray_dataaccessor_spark.sources import geotiff as _gt
-        from xarray_dataaccessor_spark.sources import grib2 as _gb
-        from xarray_dataaccessor_spark.sources import hdf5 as _h5
-        from xarray_dataaccessor_spark.sources import netcdf3 as _nc
-        from xarray_dataaccessor_spark.sources import zarr as _z
-        from xarray_dataaccessor_spark.sources import zstd as _zs
-
-        for m in (_nc, _h5, _gt, _gb, _bl, _zs, _z, _self):
-            _cp.register_pickle_by_value(m)
-    except Exception:  # pragma: no cover - older pickler fallback
-        pass
+    ship_by_value(_nc, _h5, _gt, _gb, _bl, _zs, _z, _self)
 
 __all__ = [
     "NetCDFDataSource",

@@ -109,19 +109,13 @@ def _worker_install_protoshim(
 
 
 def _ship_by_value() -> None:
-    try:
-        from pyspark import cloudpickle as _cp
+    import xarray_dataaccessor_spark.streaming.protoshim as _shim
+    import xarray_dataaccessor_spark.streaming.stateful as _self
+    from xarray_dataaccessor_spark.session import ship_by_value
 
-        import xarray_dataaccessor_spark.streaming.protoshim as _shim
-        import xarray_dataaccessor_spark.streaming.stateful as _self
-
-        _cp.register_pickle_by_value(_self)
-        # the shim must reconstruct inside Python workers too (they run
-        # the state-server client); it is stdlib-only, so by-value is
-        # exact
-        _cp.register_pickle_by_value(_shim)
-    except Exception:  # pragma: no cover
-        pass
+    # the shim must reconstruct inside Python workers too (they run the
+    # state-server client); it is stdlib-only, so by-value is exact
+    ship_by_value(_self, _shim)
 
 
 def require_transform_with_state() -> None:
