@@ -1,21 +1,34 @@
-"""Benchmark harness: runs the declared query inventory at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+"""Benchmark harness: times the declared slot inventory at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and prints ONE JSON
+line on stdout:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {...}, "sf": ...}
+     "queries": {...}, "runs_per_slot": N, "sf": ...}
 
-Each query is forced through the `noop` sink (full execution, no driver
-collect) after a warm-up of the session; time is wall-clock per query.
+Usage:
+    python bench.py [slot ...]
 
-Methodology note (grid): the derived grid, the shared token-count
-tables and the persisted IVF index are session fixtures
-(`queries._session_fixture`): each is landed once per process on first
-use and read like any other input table, so grid queries pay a real
-scan. The prologue's first read lands them and warms their page cache
-exactly as it does every other input table, keeping the landing out of
-the timed slots. Tests and the correctness driver go through the same
-fixtures, so the plans timed here are the plans the oracle checks.
+With no slot names every registered slot runs, in name order. The
+session runs on local[$SPARK_GRAFT_CPUS] (default: the host's cores).
+
+Method (`time_slots`, the one loop that times a slot): each slot runs
+once unmeasured (the cold run: JIT compilation, codegen, Python worker
+start, page cache, and the first landing of any session fixture it
+reads), then $SPARK_GRAFT_REPEATS times (default 3) timed. Every run
+writes to the `noop` sink (full execution, no driver collect) and is
+followed by `spark.catalog.clearCache()`. A slot's number is the median
+of its timed runs; -1.0 means it failed (the typed error is on stderr
+and in the detail artifact).
+
+Session fixtures (the landed grid, the shared-token count tables, the
+persisted IVF index) are built once per process by the query layer, so
+they land inside the cold run of the first slot that reads them. Tests and the correctness driver go through the same fixtures, so
+the plans timed here are the plans the oracle checks.
+
+The full detail (3-decimal medians, per-slot mins, every timed run,
+`queries_cold`, `errors`) goes to stderr and to the JSON artifact at
+$SPARK_GRAFT_BENCH_DETAIL (default BENCH_DETAIL_last.json next to this
+file).
 """
 
 from __future__ import annotations
@@ -24,386 +37,100 @@ import json
 import os
 import sys
 import time
+import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+def time_slots(spark, sf_dir: str, names: list[str], repeats: int) -> dict:
+    """Run each named slot once cold, then ``repeats`` times timed.
+
+    Returns ``{"cold": {slot: s}, "runs": {slot: [s, ...]},
+    "errors": {slot: "ExcClass: message"}}``. A failing run is recorded
+    as -1.0 and ends that slot.
+    """
+    import xarray_dataaccessor_spark.queries_ext  # noqa: F401 (registers extension slots)
+    from xarray_dataaccessor_spark.queries import QUERIES
+
+    cold: dict[str, float] = {}
+    runs: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        times: list[float] = []
+        for _ in range(repeats + 1):
+            t0 = time.perf_counter()
+            try:
+                QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                times.append(round(time.perf_counter() - t0, 3))
+            except Exception as exc:  # keep the harness alive; flag the slot
+                traceback.print_exc(file=sys.stderr)
+                times.append(-1.0)
+                errors[name] = f"{type(exc).__name__}: {exc}"
+                print(f"# bench error in {name}: {errors[name]}", file=sys.stderr)
+                break
+            finally:
+                # the next run or slot must not inherit blocks this one cached
+                spark.catalog.clearCache()
+        cold[name], runs[name] = times[0], times[1:]
+    return {"cold": cold, "runs": runs, "errors": errors}
 
 
-def _warm_jvm(spark) -> None:
-    """Exercise the shuffle + join + aggregation + string-hash codepaths
-    once so C2 compiles them before any query is timed."""
-    from pyspark.sql import functions as F
+def _median(xs: list[float]) -> float:
+    ok = sorted(x for x in xs if x >= 0)
+    if not ok:
+        return -1.0
+    mid = len(ok) // 2
+    return ok[mid] if len(ok) % 2 else round((ok[mid - 1] + ok[mid]) / 2, 3)
 
-    base = spark.range(0, 500_000, 1, 32).select(
-        (F.col("id") % 40_000).alias("k"),
-        F.md5(F.col("id").cast("string")).alias("s"),
+
+def stdout_line(medians: dict[str, float], repeats: int, sf) -> str:
+    """The one metric line. The driver keeps only the LAST ~2000 chars
+    of stdout, so it carries the total and 2-decimal per-slot medians
+    and nothing else."""
+    return json.dumps(
+        {
+            "metric": "declared-query-inventory wall time (per-slot median of %d)"
+            % repeats,
+            "value": round(sum(v for v in medians.values() if v >= 0), 3),
+            "unit": "sec",
+            "queries": {k: round(v, 2) for k, v in medians.items()},
+            "runs_per_slot": repeats,
+            "sf": sf,
+        }
     )
-    # hash aggregation + shuffle write/read
-    base.groupBy("k").agg(F.count(F.lit(1)).alias("n"), F.max("s").alias("m")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # shuffle equi-join (both sides large) + post-join aggregation
-    a, b = base.alias("a"), base.alias("b")
-    a.join(b, "k").groupBy("k").agg(F.count(F.lit(1)).alias("n")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # explode + array ops + window function
-    arr = spark.range(0, 20_000, 1, 32).select(
-        F.col("id"), F.split(F.md5(F.col("id").cast("string")), "").alias("cs")
-    )
-    exploded = arr.select("id", F.explode(F.array_distinct("cs")).alias("c"))
-    from pyspark.sql.window import Window
-
-    exploded.withColumn(
-        "r", F.row_number().over(Window.partitionBy("c").orderBy("id"))
-    ).filter(F.col("r") <= 3).write.format("noop").mode("overwrite").save()
-    # broadcast join
-    dim = spark.range(0, 100).select(F.col("id").alias("k"), F.lit("x").alias("v"))
-    base.join(F.broadcast(dim), "k").write.format("noop").mode("overwrite").save()
-    # as-of shape: unionByName + ordered window with last(ignorenulls)
-    # + max_by aggregation (first measured query is alphabetically the
-    # as-of join, which otherwise absorbs this codepath's C2 compile)
-    ts = spark.range(0, 500_000, 1, 32).select(
-        (F.col("id") % 40_000).alias("k"), F.col("id").alias("t")
-    )
-    l = ts.select("k", "t", F.lit(None).cast("string").alias("rv"))
-    r = ts.limit(10_000).select("k", "t", F.md5(F.col("t").cast("string")).alias("rv"))
-    u = l.unionByName(r)
-    wu = (
-        Window.partitionBy("k")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    u.withColumn("c", F.last("rv", ignorenulls=True).over(wu)).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    ts.groupBy("k").agg(F.max_by("t", "t").alias("m")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # min-over-struct argmin aggregation (the IVF/PQ rank-1 assignment
-    # shape) and a decimal element_at aggregation (centroid means)
-    ts.groupBy("k").agg(F.min(F.struct("t", "k")).alias("m")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    vecw = spark.range(0, 2_000, 1, 8).select(
-        (F.col("id") % 50).alias("k"),
-        F.array(*[(F.col("id") % (i + 3)).cast("double") for i in range(4)]).alias("e"),
-    )
-    vecw.groupBy("k").agg(
-        F.expr(
-            "array(CAST(sum(CAST(element_at(e, 1) AS DECIMAL(28,14))) AS DOUBLE)"
-            " / count(1), CAST(sum(CAST(element_at(e, 2) AS DECIMAL(28,14)))"
-            " AS DOUBLE) / count(1))"
-        ).alias("m")
-    ).write.format("noop").mode("overwrite").save()
-    # higher-order array fold (aggregate/zip_with) — the similarity dot
-    vec = spark.range(0, 5_000, 1, 32).select(
-        F.col("id"), F.array(*[(F.col("id") % (i + 7)).cast("double") for i in range(8)]).alias("e")
-    )
-    vec.select(
-        F.aggregate(
-            F.zip_with("e", "e", lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v
-        ).alias("d")
-    ).write.format("noop").mode("overwrite").save()
-
-
-def _warm_streaming(spark) -> None:
-    """One tiny availableNow stateful streaming query against an in-memory
-    rate-style source substitute: JIT-compiles the micro-batch engine,
-    state store, and the applyInPandasWithState Python path."""
-    import tempfile
-    from typing import Iterable, Tuple
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    src_dir = tempfile.mkdtemp(prefix="xda_warm_src_")
-    spark.range(0, 64, 1, 4).selectExpr(
-        "id % 4 AS k", "CAST(id AS DOUBLE) AS v"
-    ).write.mode("overwrite").parquet(src_dir)
-
-    def upd(key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"k": [key[0]], "n": [n]})
-
-    stream = spark.readStream.schema("k bigint, v double").parquet(src_dir)
-    out = stream.groupBy("k").applyInPandasWithState(
-        upd,
-        outputStructType="k bigint, n bigint",
-        stateStructType="n bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("xda_warm_stream")
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="xda_warm_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    repeats = max(1, int(os.environ.get("SPARK_GRAFT_REPEATS", "3")))
 
-    import xarray_dataaccessor_spark.queries_ext  # noqa: F401 (registers extension queries)
+    import xarray_dataaccessor_spark.queries_ext  # noqa: F401 (registers extension slots)
     from xarray_dataaccessor_spark.queries import QUERIES
     from xarray_dataaccessor_spark.session import get_spark
 
-    spark = get_spark(app_name="xda-spark-bench", cpus=cpus)
+    names = sys.argv[1:] or sorted(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown slot(s): {', '.join(unknown)}")
+
+    spark = get_spark(app_name="xda-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    res = time_slots(spark, sf_dir, names, repeats)
 
-    # Warm up the engine substrate so per-query times measure the query,
-    # not one-time process costs (a long-running cluster's executors are
-    # warm; local[n] must be warmed explicitly):
-    # 1. JVM + parquet footer caches
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    # 1b. JIT-compile the hot JVM paths (shuffle writer/reader, hash
-    #     aggregation, sort-merge/broadcast join, md5 + string codegen,
-    #     explode). Without this the first shuffle-heavy queries run
-    #     interpreted/C1 and absorb multiple seconds of one-time C2
-    #     compilation that no long-running cluster would pay per query.
-    _warm_jvm(spark)
-    # 1c. page-cache + footer-cache the actual input tables
-    for tbl in ("lineitem", "orders", "events", "documents", "embeddings"):
-        p = f"{sf_dir}/{tbl}.parquet"
-        if os.path.exists(p):
-            spark.read.parquet(p).write.format("noop").mode("overwrite").save()
-    # 1d. the derived grid: the first _grid call lands it as a real
-    #     parquet table (queries._session_fixture; ~15 grid queries read
-    #     it, the same plans the tests and the correctness driver check),
-    #     then warm its page cache exactly like the other input tables
-    #     in 1c, and JIT the pivot/window codepath it feeds
-    from pyspark.sql import functions as F
-
-    import xarray_dataaccessor_spark.queries as Q
-
-    g = Q._grid(spark, sf_dir)
-    g.write.format("noop").mode("overwrite").save()
-    g.limit(1000).groupBy("time").pivot("x").agg(F.first("t2m")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # axis-derivation aggregation (collect_set over the grid) — the
-    # nearest-cell-match prologue every extraction query runs
-    from xarray_dataaccessor_spark.operators.spatial import grid_axes
-
-    grid_axes(g)
-    # full point-extraction path (nearest match + broadcast join +
-    # pivot) on a sliver of the grid — JITs the codepath whose cold
-    # cost otherwise lands inside the measured extraction query
-    from xarray_dataaccessor_spark.catalog import points_df
-    from xarray_dataaccessor_spark.operators.extraction import points_to_table
-
-    pts = points_df(spark, coords=[(41.63, -82.98), (42.88, -79.43)])
-    points_to_table(g.limit(2000), pts, "t2m").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # zonal/wzonal/contour codepaths on a grid sliver, with the
-    # slot's EXACT zone literals and column types so the generated
-    # classes are identical (codegen caches on generated source):
-    # the scalar-pandas-UDF runner + the 16-zone decimal-weighted
-    # aggregation measured 12.9 s cold vs 1.7 s warm at sf0.1 —
-    # the r11 zonal_contour_stats driver-bench anomaly (the slot
-    # sorts last, every repeat stayed partially cold)
-    from xarray_dataaccessor_spark.operators.spatial import (
-        contour_segments,
-        zonal_stats,
-        zonal_stats_weighted,
-    )
-
-    sliver = g.limit(2000).select(
-        "x", "y",
-        F.col("t2m").cast("decimal(18,2)").alias("t2m"),
-        F.col("u100").cast("decimal(18,6)").alias("u100"),
-    )
-    zonal_stats(
-        sliver, Q._ZONAL_POLYGONS, value_cols=["t2m", "u100"],
-        how="sum",
-    ).write.format("noop").mode("overwrite").save()
-    zonal_stats_weighted(
-        sliver.select(
-            "x", "y",
-            F.col("t2m").cast("decimal(18,2)").cast("double").alias("t2m"),
-        ),
-        [
-            [[(x0, y0), (x1, y0), (x1, y1), (x0, y1)]]
-            for x0, x1, y0, y1 in Q._WZONAL_RECTS
-        ],
-        dx=0.25, dy=0.25, value_cols=["t2m"], how="sum",
-        weight_decimals=6,
-    ).write.format("noop").mode("overwrite").save()
-    surfw = sliver.groupBy("x", "y").agg(
-        (
-            F.sum(F.col("t2m").cast("decimal(18,6)")).cast("double")
-            / F.count("t2m")
-        ).alias("z")
-    )
-    contour_segments(
-        surfw, dx=0.25, dy=0.25, levels=[1.0, 2.0], value_col="z",
-        origin=Q._GRID_ORIGIN,
-    ).write.format("noop").mode("overwrite").save()
-    # 1e. the shared-tokenization count tables (VERDICT r11 #5): gopher,
-    #     the distilled classifier and the KN scorer all read them, so
-    #     the corpus text is tokenized once per gram shape PER SESSION;
-    #     the first read lands them, the noop write warms their page cache
-    Q._corpus_word_counts(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    Q._corpus_bigram_counts(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # 1f. the persisted IVF index (similarity_ivf_ann 'drift' reads it;
-    #     a deployment has the index built — the slot measures the drift
-    #     scan, not the one-time build)
-    from xarray_dataaccessor_spark.queries_ext import _ivf_index_path
-
-    _ivf_index_path(spark, sf_dir)
-    # 2. Python worker pool (one Arrow-batched worker per core; first use
-    #    otherwise pays fork + pandas import inside a measured query)
-    spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # 2b. connected-components substrate: signature aggregate (bit_xor of
-    #     xxhash64), the localCheckpoint path, and the single-partition
-    #     union-find endgame (repartition(1) + mapInPandas)
-    from xarray_dataaccessor_spark.operators.graph import connected_components
-
-    cc_edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
-    )
-    connected_components(cc_edges).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # 2c. IVF/k-means generated classes (min-struct argmin + the 64-wide
-    #     decimal element_at mean aggregation): the generated source for
-    #     a 64-dim aggregate is large enough that its first C2 compile
-    #     costs seconds; running the operator once on a tiny 64-dim
-    #     corpus populates the codegen cache with the exact classes
-    from xarray_dataaccessor_spark.operators.similarity import ivf_ann, pq_ann
-
-    tiny = spark.range(0, 64, 1, 8).select(
-        F.col("id").alias("vec_id"),
-        F.array(
-            *[((F.col("id") + i) % 17).cast("double") for i in range(64)]
-        ).alias("embedding"),
-    )
-    ivf_ann(
-        tiny.filter(F.col("vec_id") < 2), tiny, k=3, n_centroids=8,
-        n_probe=2, n_iters=2, dims=64,
-    ).write.format("noop").mode("overwrite").save()
-    # PQ stage shapes: subspace slice-explode, LUT broadcast join,
-    # decimal ADC sum, exact re-rank — same codegen-cache rationale
-    pq_ann(
-        tiny.filter(F.col("vec_id") < 2), tiny, k=3, m_subspaces=4,
-        n_codes=8, n_iters=2, refine=2, dims=64,
-    ).write.format("noop").mode("overwrite").save()
-    # banded hyperplane LSH (4x8 planes over dims=64): the literal
-    # plane folds generate large per-band expressions whose first
-    # C2 compile otherwise lands inside the measured near-dup query
-    from xarray_dataaccessor_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-
-    embedding_near_duplicates(
-        tiny, threshold=0.99, n_bands=4, planes_per_band=8, dims=64
-    ).write.format("noop").mode("overwrite").save()
-    # distilled-classifier stage shapes (hashed-feature explode,
-    # broadcast weight joins, decimal gradient sums, rounded
-    # sigmoid): first C2 compile of the two-epoch plan otherwise
-    # lands inside the measured quality slot
-    from xarray_dataaccessor_spark.operators.classifier import (
-        distill_quality_classifier,
-    )
-
-    tdocs = spark.range(0, 32, 1, 4).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ", *[(F.col("id") * (i + 1) % 13).cast("string")
-                   for i in range(12)]
-        ).alias("text"),
-    )
-    tlbl = tdocs.select(
-        "doc_id", (F.col("doc_id") % 2).cast("double").alias("y")
-    )
-    distill_quality_classifier(
-        tdocs, tlbl, n_buckets=32
-    ).write.format("noop").mode("overwrite").save()
-    # substring-dedup stage shapes (k-wide gram concat, span
-    # exists-lambda reconstruction) — same first-compile rationale
-    from xarray_dataaccessor_spark.operators.dedup import substring_dedup
-
-    substring_dedup(
-        tdocs, min_tokens=8
-    ).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-    # 3. micro-batch engine + state store + stateful-Python path (JIT of
-    #    the streaming codepath otherwise lands on the first streaming query)
-    _warm_streaming(spark)
-
-    # Median-of-N discipline (VERDICT r6 #2): a single run per slot
-    # cannot distinguish code regressions from machine load or one-time
-    # codegen — each slot runs SPARK_GRAFT_REPEATS times (default 3)
-    # and the recorded number is the per-slot MEDIAN; per-slot min is
-    # emitted alongside as the load-independent floor. Caches are
-    # cleared between runs so every repeat pays the full plan.
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_REPEATS", "3")))
-    timings: dict[str, float] = {}
-    mins: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
-    for name in sorted(QUERIES):
-        fn = QUERIES[name]
-        runs: list[float] = []
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(round(time.perf_counter() - t0, 3))
-            except Exception as exc:  # keep the harness alive; flag the query
-                runs.append(-1.0)
-                print(f"# bench error in {name}: {exc}", file=sys.stderr)
-                break
-            # drop caches a query body created for its own execution: the
-            # NEXT run/query should not inherit leftover blocks (memory
-            # pressure and eviction churn otherwise bleed across slots)
-            spark.catalog.clearCache()
-        ok = sorted(r for r in runs if r >= 0)
-        if ok:
-            timings[name] = ok[len(ok) // 2] if len(ok) % 2 else round(
-                (ok[len(ok) // 2 - 1] + ok[len(ok) // 2]) / 2, 3
-            )
-            mins[name] = ok[0]
-        else:
-            timings[name] = -1.0
-            mins[name] = -1.0
-        all_runs[name] = runs
-
-    total = round(sum(v for v in timings.values() if v >= 0), 3)
+    medians = {n: _median(r) for n, r in res["runs"].items()}
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf_dir
-    # The driver keeps only the LAST ~2000 chars of stdout and parses the
-    # JSON metric line it finds there (round-7 postmortem: a ~2.5 KB line
-    # carrying both the median and the min dicts lost its head to that
-    # window and recorded `parsed: null`). So stdout carries exactly ONE
-    # compact line — totals + per-slot medians rounded to 2 decimals
-    # (~1.7 KB for 50 slots) — and the full detail (3-decimal medians,
-    # per-slot mins, every raw run) goes to stderr AND to a JSON artifact
-    # file for SCALE.md to cite.
+    line = stdout_line(medians, repeats, sf_val)
     detail = {
-        "metric": "declared-query-inventory wall time (per-slot median of %d)"
-        % repeats,
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "queries_min": mins,
-        "runs": all_runs,
-        "runs_per_slot": repeats,
-        "sf": sf_val,
+        **json.loads(line),
+        "queries": medians,
+        "queries_min": {
+            n: min((x for x in r if x >= 0), default=-1.0)
+            for n, r in res["runs"].items()
+        },
+        "queries_cold": res["cold"],
+        "runs": res["runs"],
+        "errors": res["errors"],
     }
     print(json.dumps(detail), file=sys.stderr)
     detail_path = os.environ.get(
@@ -415,20 +142,9 @@ def main() -> None:
             json.dump(detail, fh, indent=1)
     except OSError as exc:
         print(f"# could not write bench detail: {exc}", file=sys.stderr)
-    print(
-        json.dumps(
-            {
-                "metric": "declared-query-inventory wall time (per-slot median of %d)"
-                % repeats,
-                "value": total,
-                "unit": "sec",
-                "queries": {k: round(v, 2) for k, v in timings.items()},
-                "runs_per_slot": repeats,
-                "sf": sf_val,
-            }
-        )
-    )
+    print(line)
 
 
 if __name__ == "__main__":
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     main()

@@ -10,13 +10,16 @@ Method
   ``round N: ...`` — the driver's round-final artifact commit) is
   checked out into a throwaway git worktree.
 - For each repeat, BOTH sides run as fresh subprocesses back-to-back
-  (prev, head, prev, head, ...): every (side, repeat) pays the same JVM
-  start + light warm-up, and machine-speed drift hits both sides of a
-  pair equally — the property single-sided artifact history lacks.
-- Each subprocess times the canary slots once (noop sink, cache cleared
-  between slots — bench.py's consumption discipline). Medians per
-  (side, slot) are compared; any same-day delta beyond +/-15 % is
-  flagged for a named cause in the round's bench narrative.
+  (prev, head, prev, head, ...); machine-speed drift hits both sides of
+  a pair equally — the property single-sided artifact history lacks.
+- Each subprocess loads the CURRENT ``bench.py`` by path and calls its
+  ``time_slots`` with one repeat: per slot one unmeasured cold run, then
+  one timed run (noop sink, cache cleared after every run), so both
+  sides warm exactly as the bench does. Medians per (side, slot) are
+  compared; any same-day delta beyond +/-15 % is flagged for a named
+  cause in the round's bench narrative.
+- The head side runs the working tree, so the artifact records whether
+  it was dirty and its ``git diff --stat HEAD`` next to ``head_sha``.
 
 Canaries default to the five slots the judge's r10 A/B used: the most
 expensive families plus the flagship — slots that are rarely touched,
@@ -50,50 +53,22 @@ DEFAULT_SLOTS = [
 
 # The runner executes inside a fresh subprocess with the TARGET repo
 # (prev worktree or current HEAD) first on sys.path, so each side runs
-# its own code, session config, and query registry.
+# its own code, session config, and query registry through one harness.
 _RUNNER = r'''
-import json, os, sys, time
+import importlib.util, json, sys
 
-repo, sf_dir = sys.argv[1], sys.argv[2]
-slots = sys.argv[3].split(",")
+bench_py, repo, sf_dir, slots = sys.argv[1:5]
 sys.path.insert(0, repo)
+spec = importlib.util.spec_from_file_location("bench", bench_py)
+bench = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(bench)
 
 from xarray_dataaccessor_spark.session import get_spark
 
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-spark = get_spark(app_name="xda-ab-bench", cpus=cpus)
+spark = get_spark(app_name="xda-ab-bench")
 spark.sparkContext.setLogLevel("ERROR")
-
-import xarray_dataaccessor_spark.queries_ext  # noqa: F401
-from xarray_dataaccessor_spark.queries import QUERIES
-
-# Light, side-identical warm-up: input page/footer caches + the shared
-# JVM codepaths. Deliberately NOT bench.py's full prologue — the A/B
-# compares sides within one harness; absolute numbers are not the point.
-spark.read.parquet(f"{sf_dir}/region.parquet").count()
-for tbl in ("lineitem", "orders", "events", "documents", "embeddings"):
-    p = f"{sf_dir}/{tbl}.parquet"
-    if os.path.exists(p):
-        spark.read.parquet(p).write.format("noop").mode("overwrite").save()
-spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
-    lambda it: it, "id long"
-).write.format("noop").mode("overwrite").save()
-
-out = {}
-for name in slots:
-    fn = QUERIES.get(name)
-    if fn is None:
-        out[name] = None  # slot absent at this HEAD (renamed/fused)
-        continue
-    t0 = time.perf_counter()
-    try:
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        out[name] = round(time.perf_counter() - t0, 3)
-    except Exception as exc:
-        print(f"# ab error in {name}: {exc}", file=sys.stderr)
-        out[name] = -1.0
-    spark.catalog.clearCache()
-print("ABRESULT " + json.dumps(out))
+res = bench.time_slots(spark, sf_dir, slots.split(","), 1)
+print("ABRESULT " + json.dumps(res))
 '''
 
 
@@ -112,9 +87,14 @@ def _default_prev_ref() -> str:
 
 
 def _run_side(runner: str, repo: str, sf_dir: str, slots: list[str]) -> dict:
+    # pin the core count for both sides: a prev side may predate the
+    # host-core default of session.get_spark
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     proc = subprocess.run(
-        [sys.executable, runner, repo, sf_dir, ",".join(slots)],
+        [sys.executable, runner, os.path.join(REPO, "bench.py"), repo, sf_dir,
+         ",".join(slots)],
         capture_output=True, text=True, timeout=3600,
+        env={**os.environ, "SPARK_GRAFT_CPUS": cpus},
     )
     for line in proc.stdout.splitlines():
         if line.startswith("ABRESULT "):
@@ -145,13 +125,17 @@ def main() -> None:
         fh.write(_RUNNER)
 
     runs: dict[str, dict[str, list]] = {s: {"prev": [], "head": []} for s in slots}
+    cold: dict[str, dict[str, list]] = {s: {"prev": [], "head": []} for s in slots}
+    errors: list[str] = []
     try:
         for rep in range(args.repeats):
             for side, repo in (("prev", wt), ("head", REPO)):
                 print(f"# rep {rep + 1}/{args.repeats} side={side}", file=sys.stderr)
                 got = _run_side(runner, repo, args.sf_dir, slots)
                 for s in slots:
-                    runs[s][side].append(got.get(s))
+                    runs[s][side] += got["runs"][s] or [-1.0]
+                    cold[s][side].append(got["cold"][s])
+                errors += [f"{side} rep {rep + 1} {s}: {e}" for s, e in got["errors"].items()]
     finally:
         subprocess.run(["git", "worktree", "remove", "--force", wt],
                        cwd=REPO, capture_output=True)
@@ -163,15 +147,19 @@ def main() -> None:
     result = {
         "method": (
             "interleaved same-session-hour A/B: per repeat, prev and head "
-            "run as back-to-back fresh subprocesses (identical light "
-            "warm-up); medians compared per slot; |delta| > 15% flagged"
+            "run as back-to-back fresh subprocesses through bench.time_slots "
+            "(one cold + one timed run per slot); medians of the timed runs "
+            "compared per slot; |delta| > 15% flagged"
         ),
         "date": datetime.date.today().isoformat(),
         "prev_ref": prev_ref,
         "prev_sha": prev_sha,
         "head_sha": head_sha,
+        "head_dirty": bool(_git("status", "--porcelain")),
+        "head_diffstat": _git("diff", "--stat", "HEAD"),
         "sf_dir": args.sf_dir,
         "repeats": args.repeats,
+        "errors": errors,
         "slots": {},
     }
     flagged = []
@@ -184,6 +172,8 @@ def main() -> None:
         entry = {
             "prev_runs": runs[s]["prev"],
             "head_runs": runs[s]["head"],
+            "prev_cold": cold[s]["prev"],
+            "head_cold": cold[s]["head"],
             "prev_median": pm,
             "head_median": hm,
             "delta_pct": delta,

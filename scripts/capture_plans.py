@@ -22,13 +22,12 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     import xarray_dataaccessor_spark.queries_ext  # noqa: F401
     from xarray_dataaccessor_spark.queries import QUERIES
     from xarray_dataaccessor_spark.session import get_spark
 
-    spark = get_spark(app_name="xda-capture-plans", cpus=cpus)
+    spark = get_spark(app_name="xda-capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

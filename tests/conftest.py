@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="xda-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "4"))
+    spark = get_spark(app_name="xda-spark-tests")
     yield spark
 
 

@@ -11,6 +11,7 @@ import xarray_dataaccessor_spark.queries_ext  # noqa: F401
 from xarray_dataaccessor_spark.plans.explain import (
     codegen_stage_count,
     count_exchanges,
+    exchange_partitionings,
     has_broadcast_join,
     has_pushed_filter,
     plan_string,
@@ -69,10 +70,10 @@ def test_upsample_has_no_aggregation(spark, sf_dir):
         _grid(spark, sf_dir), resolution_factor=2.0, resample_method="bilinear"
     )
     # everything after the landed-grid scan is windows + broadcast
-    # joins; allow the window sort exchanges but no extra aggregates
+    # joins; allow the two window exchanges but no extra aggregates
     plan = plan_string(up)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert count_exchanges(up) <= 4
+    assert count_exchanges(up) <= 2, exchange_partitionings(up)
 
 
 def test_resample_partial_aggregation(spark, sf_dir):
@@ -221,15 +222,32 @@ def test_text_profile_is_shuffle_free(spark, sf_dir):
 
 
 def test_gopher_signals_shuffle_on_doc_id_only(spark, sf_dir):
-    """Two keyed aggregation families (unigram + bigram profiles) and the
-    final id join: every Exchange hashes on the document id or the
-    (id, gram) pair — never on raw text — and map-side partial
-    aggregation precedes each shuffle."""
+    """The gate's unigram/bigram profiles and id joins plus the bigram-LM
+    fluency and perplexity tiers: nine shuffles, none keyed on raw text,
+    and map-side partial aggregation precedes each of them."""
+    # the slot caches shared relations: build its plan as the bench does,
+    # with no cache an earlier test materialized
+    spark.catalog.clearCache()
     df = QUERIES["quality_filter_gopher"](spark, sf_dir)
     plan = plan_string(df)
     assert "partial" in plan.lower()  # map-side combine before the shuffle
-    # bounded number of exchanges: 2 per gram profile + the join
-    assert count_exchanges(df) <= 6
+    assert count_exchanges(df) <= 9, exchange_partitionings(df)
+    # by partitioning key: doc_id for the per-document profiles and
+    # joins, the gram keys for the LM tables, one grouping-expression
+    # aggregate, and two single-partition corpus totals
+    assert sorted(exchange_partitionings(df)) == sorted(
+        [
+            "hashpartitioning(doc_id), ENSURE_REQUIREMENTS",
+            "hashpartitioning(doc_id), ENSURE_REQUIREMENTS",
+            "hashpartitioning(doc_id), ENSURE_REQUIREMENTS",
+            "hashpartitioning(w), ENSURE_REQUIREMENTS",
+            "hashpartitioning(w), ENSURE_REQUIREMENTS",
+            "hashpartitioning(w1, w2), ENSURE_REQUIREMENTS",
+            "hashpartitioning(_groupingexpression), ENSURE_REQUIREMENTS",
+            "SinglePartition, ENSURE_REQUIREMENTS",
+            "SinglePartition, ENSURE_REQUIREMENTS",
+        ]
+    )
 
 
 @pytest.mark.parametrize(

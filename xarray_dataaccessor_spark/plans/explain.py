@@ -41,11 +41,32 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan_string(df)
 
 
+def exchange_partitionings(df: DataFrame) -> list[str]:
+    """The partitioning of every shuffle exchange in the plan, one entry
+    per numbered ``(N) Exchange`` node of the formatted plan (broadcast
+    exchanges are not shuffles and are not listed). Expression ids, the
+    partition count and the plan id are dropped, so an entry reads e.g.
+    ``hashpartitioning(doc_id), ENSURE_REQUIREMENTS``.
+
+    Build ``df`` on a session without materialized caches (e.g. after
+    ``spark.catalog.clearCache()``, as the bench runs every slot): a
+    cached relation an earlier action ran is drawn with its executed
+    adaptive plan, final and initial, and its exchanges count twice."""
+    found: dict[str, str] = {}
+    for section in plan_string(df).split("\n\n"):
+        head = re.match(r"\((\d+)\) Exchange\n", section)
+        if head is None:
+            continue
+        args = re.search(r"^Arguments: (.*)$", section, re.M).group(1)
+        args = re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", args)
+        found[head.group(1)] = re.sub(r", \d+\)", ")", args)
+    return list(found.values())
+
+
 def count_exchanges(df: DataFrame) -> int:
     """Shuffle exchanges in the plan (lower is better; broadcast
     exchanges are not counted)."""
-    plan = plan_string(df)
-    return len(re.findall(r"\bExchange (?:hash|range|Single)", plan))
+    return len(exchange_partitionings(df))
 
 
 def codegen_stage_count(df: DataFrame) -> int:

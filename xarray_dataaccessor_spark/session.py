@@ -81,8 +81,10 @@ def get_spark(
     - Arrow on (vectorized pandas_udf / applyInPandas / toPandas)
     - UTC session timezone (grid timestamps are instants; the reference
       stores UTC and converts on request, ``utility_functions.py:53-74``)
+    - local[cpus]: the argument, else ``$SPARK_GRAFT_CPUS``, else the
+      cores this process may run on
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     driver_mem = _driver_mem()
     # Shuffle/spill files on tmpfs when available: local[n] in a VM pays
     # heavy syscall + virtio overhead on /tmp, and shuffle-file I/O is
