@@ -324,6 +324,18 @@ def test_spread_small_input_suffixed_partition_bytes(spark):
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
+def test_spread_small_input_non_file_relation(spark):
+    """A local relation lists no input files (``inputFiles`` returns
+    empty, it does not raise), so it is spread to session parallelism."""
+    from xarray_dataaccessor_spark.operators.dedup import spread_small_input
+
+    df = spark.createDataFrame([(i, f"doc {i}") for i in range(10)], "doc_id long, text string")
+    assert df.inputFiles() == []
+    out = spread_small_input(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(r.doc_id for r in out.collect()) == list(range(10))
+
+
 # ---------------------------------------------------------------------------
 # raster_pyramid — multi-level overview cascade
 # ---------------------------------------------------------------------------

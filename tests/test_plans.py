@@ -357,3 +357,72 @@ def test_grid_fixture_lands_once(spark, sf_dir):
     second = _grid(spark, sf_dir).inputFiles()
     assert first and first == second
     assert [k for k in _FIXTURES if k[0] == "grid"] == [("grid", sf_dir)]
+
+
+def test_embedding_near_duplicates_one_kernel_no_dedup_shuffle(spark, sf_dir):
+    """The grouped near-dup refine is one bucket-keyed shuffle feeding ONE
+    mapInPandas kernel per partition: no per-group Python calls, and no
+    cross-band distinct shuffle after it (each pair leaves the kernel
+    once, from its lowest shared band)."""
+    import re
+
+    from xarray_dataaccessor_spark.operators.similarity import (
+        embedding_near_duplicates,
+    )
+    from xarray_dataaccessor_spark.sources.tables import load
+
+    spark.catalog.clearCache()
+    df = embedding_near_duplicates(
+        load(spark, sf_dir, "embeddings"), threshold=0.95, dims=64
+    )
+    plan = plan_string(df)
+    assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", plan)) == 0, plan
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, plan
+    assert count_exchanges(df) <= 2, exchange_partitionings(df)
+    # the small-input spread, then the (band, bucket) repartition
+    parallelism = spark.sparkContext.defaultParallelism
+    assert exchange_partitionings(df) == [
+        f"RoundRobinPartitioning({parallelism}), REPARTITION_BY_NUM",
+        "hashpartitioning(band, val), REPARTITION_BY_COL",
+    ]
+
+
+def test_minhash_clusters_no_pair_aggregate(spark, sf_dir):
+    """MinHash pairs come out of the band self-join once each, so no
+    aggregate is keyed on (id_a, id_b); the cluster plan over the
+    union-find labels is one component-keyed window shuffle."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from xarray_dataaccessor_spark.operators.cachectl import (
+        release_checkpoints,
+        unpersist_intermediates,
+    )
+    from xarray_dataaccessor_spark.operators.dedup import minhash_near_duplicates
+    from xarray_dataaccessor_spark.operators.graph import duplicate_clusters
+    from xarray_dataaccessor_spark.sources.tables import load
+
+    spark.catalog.clearCache()
+    cand = minhash_near_duplicates(
+        load(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    pairs = cand.filter(F.col("est_jaccard") >= 0.5).select("id_a", "id_b")
+    parallelism = spark.sparkContext.defaultParallelism
+    # the small-input spread, then the signature aggregate (the band
+    # self-join over the cached signatures broadcasts at this size)
+    assert exchange_partitionings(pairs) == [
+        f"RoundRobinPartitioning({parallelism}), REPARTITION_BY_NUM",
+        "hashpartitioning(doc_id), ENSURE_REQUIREMENTS",
+    ]
+    clusters = duplicate_clusters(pairs)
+    try:
+        for df in (pairs, clusters):
+            plan = plan_string(df)
+            assert not re.search(r"Keys \[2\]: \[id_a#\d+L?, id_b#\d+L?\]", plan), plan
+        assert exchange_partitionings(clusters) == [
+            "hashpartitioning(component), ENSURE_REQUIREMENTS"
+        ]
+    finally:
+        unpersist_intermediates(cand)
+        release_checkpoints()

@@ -950,11 +950,21 @@ def test_semantic_dedup_grouped_equals_join_exactly(spark):
         assert both_null or x == y, (x, y)  # bit-exact, not approx
 
 
-def test_embedding_near_duplicates_grouped_equals_join_exactly(spark):
-    """The grouped bucket-pairwise refine produces the SAME pair set
-    with BIT-identical cosines as the join path the oracle replays."""
+@pytest.mark.parametrize(
+    "max_records", [pytest.param(None, id="default"), pytest.param(3, id="3")]
+)
+def test_embedding_near_duplicates_grouped_equals_join_exactly(
+    spark, monkeypatch, max_records
+):
+    """The grouped bucket-run refine produces the SAME pair set, each
+    pair once, with BIT-identical cosines as the join path the oracle
+    replays — also when bucket runs cross Arrow batches (3 records per
+    batch) and when one bucket is wider than the kernel's column block
+    (a cluster of 12 scaled copies shares every band; block lowered to
+    5)."""
     import numpy as np
 
+    from xarray_dataaccessor_spark.operators import similarity
     from xarray_dataaccessor_spark.operators.similarity import (
         embedding_near_duplicates,
     )
@@ -962,13 +972,25 @@ def test_embedding_near_duplicates_grouped_equals_join_exactly(spark):
     rng = np.random.default_rng(3)
     rows = [(i, rng.normal(size=8).tolist()) for i in range(150)]
     rows += [(1000 + i, [v * 1.002 for v in rows[i][1]]) for i in range(15)]
+    rows += [(2000 + i, [v * (1.0 + 0.01 * i) for v in rows[20][1]])
+             for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kw = dict(threshold=0.9, n_bands=4, planes_per_band=6, dims=8)
-    a = embedding_near_duplicates(df, refine="grouped", **kw).toPandas()
+    monkeypatch.setattr(similarity, "PAIR_BLOCK_COLS", 5)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    if max_records is not None:
+        spark.conf.set(key, str(max_records))
+    try:
+        a = embedding_near_duplicates(df, refine="grouped", **kw).toPandas()
+    finally:
+        spark.conf.set(key, prev)
     b = embedding_near_duplicates(df, refine="join", **kw).toPandas()
+    assert not a.duplicated(["id_a", "id_b"]).any()
     a = a.sort_values(["id_a", "id_b"]).reset_index(drop=True)
     b = b.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    assert len(a) == len(b) and len(a) >= 15
+    # the 12-copy cluster alone is 66 pairs (+ its source row 20)
+    assert len(a) == len(b) and len(a) >= 15 + 66
     assert a["id_a"].tolist() == b["id_a"].tolist()
     assert a["id_b"].tolist() == b["id_b"].tolist()
     assert a["cos"].tolist() == b["cos"].tolist()  # bit-exact

@@ -94,6 +94,8 @@ def release_checkpoints(blocking: bool = False) -> int:
     """Unpersist the RDD blocks behind every tracked checkpoint and empty
     the registry. Returns the number of frames released. Safe on
     never-materialized (lazy) checkpoints — unpersist is then a no-op."""
+    from py4j.protocol import Py4JError
+
     global _SESSION_CHECKPOINTS
     frames, _SESSION_CHECKPOINTS = _SESSION_CHECKPOINTS, []
     released = 0
@@ -106,7 +108,7 @@ def release_checkpoints(blocking: bool = False) -> int:
             if plan.getClass().getSimpleName() == "LogicalRDD":
                 plan.rdd().unpersist(blocking)
                 released += 1
-        except Exception:
+        except Py4JError:
             # a dead JVM / already-collected RDD is not worth failing
             # the NEXT slot over
             pass

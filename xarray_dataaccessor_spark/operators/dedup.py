@@ -65,10 +65,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
 
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
+    files = df.inputFiles()
     if not files:
         # non-file source (local relation in tests, memory sink, ...):
         # tiny by construction — spread it
@@ -188,6 +185,61 @@ def minhash_signatures(
     return hashed.groupBy(id_col).agg(*aggs)
 
 
+def _first_band_pairs(
+    sig_df: DataFrame,
+    num_perm: int,
+    rows_per_band: int,
+    id_col: str,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """The LSH band self-join with each candidate pair emitted ONCE:
+    from the lowest band whose bucket both documents share. Every
+    exploded row carries its document's signature array and bucket
+    array through the join, so the rule is a map-side filter on the
+    joined row (no cross-band distinct) and the signatures need no
+    re-join. Under ``max_bucket`` a dropped bucket is nulled in its
+    documents' bucket arrays, so it never counts as a pair's first
+    shared band. Columns: ``id_a < id_b``, ``sig_a``, ``sig_b``.
+
+    The bucket array always holds ``n_bands`` entries; ``posexplode_outer``
+    keeps Catalyst from inferring a ``size(bk) > 0`` filter that would
+    build every bucket string twice."""
+    n_bands = num_perm // rows_per_band
+    mh = [F.col(f"mh{i}") for i in range(num_perm)]
+    buckets = F.array(*[
+        F.concat_ws("_", *mh[b * rows_per_band:(b + 1) * rows_per_band])
+        for b in range(n_bands)
+    ])
+    rows = sig_df.select(
+        F.col(id_col).alias("id"), F.array(*mh).alias("sig"), buckets.alias("bk")
+    ).select("id", "sig", "bk", F.posexplode_outer("bk").alias("band", "bucket"))
+    if max_bucket is not None:
+        from pyspark.sql.window import Window
+
+        kept = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket")) <= max_bucket
+        masked = F.array_sort(F.collect_list(
+            F.struct("band", F.when(F.col("__kept"), F.col("bucket")).alias("b"))
+        ).over(Window.partitionBy("id")))
+        rows = (
+            rows.withColumn("__kept", kept)
+            .withColumn("bk", F.transform(masked, lambda s: s["b"]))
+            .filter(F.col("__kept"))
+            .drop("__kept")
+        )
+    a, b = rows.alias("a"), rows.alias("b")
+    first_shared = F.array_position(
+        F.zip_with(F.col("a.bk"), F.col("b.bk"), lambda x, y: x == y), True
+    ) - 1
+    return (
+        a.join(b, on=["band", "bucket"])
+        .filter((F.col("a.id") < F.col("b.id")) & (first_shared == F.col("band")))
+        .select(
+            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+            F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"),
+        )
+    )
+
+
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     num_perm: int = 16,
@@ -198,7 +250,8 @@ def lsh_candidate_pairs(
     """LSH banding: signature split into bands of ``rows_per_band``
     minhashes; documents sharing any band bucket become candidate pairs.
     The join key is (band_idx, band_value-string) — an equi-join Catalyst
-    shuffles on, never an O(n^2) comparison.
+    shuffles on, never an O(n^2) comparison. Each pair is emitted once,
+    from its lowest shared band, so no distinct shuffle follows the join.
 
     ``max_bucket`` is the hot-bucket guard for corpus scale: a band
     bucket with m members contributes m^2/2 candidate pairs, so one
@@ -206,37 +259,13 @@ def lsh_candidate_pairs(
     one signature band) can dominate the whole job. Buckets larger than
     the cap are DROPPED from candidate generation (the same df-cap
     discipline as ``jaccard_pairs``; the members almost certainly
-    collide in other, more selective bands). Implemented as a window
-    count over the bucket partition — no extra aggregation join."""
-    n_bands = num_perm // rows_per_band
-    bands = []
-    for b in range(n_bands):
-        cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        bands.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("_", *cols).alias("bucket"))
-        )
-    exploded = sig_df.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    if max_bucket is not None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("band", "bucket")
-        exploded = (
-            exploded.withColumn("__m", F.count(F.lit(1)).over(w))
-            .filter(F.col("__m") <= max_bucket)
-            .drop("__m")
-        )
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(b, on=["band", "bucket"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    collide in other, more selective bands), and a dropped bucket never
+    counts as a pair's lowest shared band. Implemented as window counts
+    over the bucket and document partitions — no extra aggregation
+    join."""
+    return _first_band_pairs(
+        sig_df, num_perm, rows_per_band, id_col, max_bucket
+    ).select("id_a", "id_b")
 
 
 def minhash_near_duplicates(
@@ -248,27 +277,21 @@ def minhash_near_duplicates(
     k: int = 3,
 ) -> DataFrame:
     """End-to-end MinHash+LSH near-dup detection: candidate pairs with
-    the estimated Jaccard = fraction of agreeing minhashes."""
+    the estimated Jaccard = fraction of agreeing minhashes, computed on
+    the joined row from the signature arrays the band join carries."""
     sh = word_shingles(df, text_col, id_col, k)
-    # the signature table feeds the band join AND both sides of the pair
-    # re-join — persist it instead of recomputing the shingle pipeline 3x
+    # both sides of the band self-join read the signature table — persist
+    # it instead of recomputing the shingle pipeline twice
     sig = minhash_signatures(sh, num_perm, id_col).cache()
-    pairs = lsh_candidate_pairs(sig, num_perm, rows_per_band, id_col)
-    a = sig.select(
-        F.col(id_col).alias("id_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(num_perm)]
-    )
-    b = sig.select(
-        F.col(id_col).alias("id_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(num_perm)]
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(num_perm)
+    agree = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, v: acc + v,
     )
     from xarray_dataaccessor_spark.operators.cachectl import tag_caches
 
     return tag_caches(
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
+        _first_band_pairs(sig, num_perm, rows_per_band, id_col).select(
             "id_a",
             "id_b",
             (agree.cast("double") / F.lit(float(num_perm))).alias("est_jaccard"),

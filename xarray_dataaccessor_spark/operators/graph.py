@@ -163,7 +163,10 @@ def connected_components(
     Hybrid endgame: each round's signature already measures the edge
     count; once it is at or below ``small_edge_threshold`` the remaining
     contraction runs as a single-task union-find (:func:`_endgame_cc`)
-    instead of paying whole-cluster job overhead for tiny rounds. Pass
+    instead of paying whole-cluster job overhead for tiny rounds. When
+    the endgame fires before any star round, its input is the full
+    symmetric edge set, which names every node, so its labels are the
+    whole answer and no node set or roots anti-join is built. Pass
     ``small_edge_threshold=None`` to force pure star rounds.
     """
     sym = _symmetrize(edges, src, dst)
@@ -178,18 +181,19 @@ def connected_components(
         return nodes.select(
             F.col("u").alias("node"), F.col("u").alias("component")
         )
-    for _ in range(max_iters):
+    for rounds in range(max_iters):
         if (
             small_edge_threshold is not None
             and prev_sig[0] <= small_edge_threshold
         ):
-            # lazy-checkpoint the endgame labels: the result feeds the
-            # union AND the roots anti-join here, and callers typically
-            # fan out further (sizes aggregate, join per variant) — each
-            # reference would re-run the single-task union-find plus its
-            # repartition(1) exchange (plan-shaped cost, the data is
-            # tiny). One materialization, every consumer reads blocks.
+            # lazy-checkpoint the endgame labels: callers fan out further
+            # (sizes window, join per variant) and each reference would
+            # re-run the single-task union-find plus its repartition(1)
+            # exchange (plan-shaped cost, the data is tiny). One
+            # materialization, every consumer reads blocks.
             labels = _endgame_cc(e).transform(_ckpt)
+            if rounds == 0:
+                return labels
             # nodes the contracted edge set no longer mentions are roots
             roots = nodes.join(
                 labels.select(F.col("node").alias("u")), "u", "left_anti"
@@ -226,17 +230,17 @@ def duplicate_clusters(
     clustered document with its cluster id (the minimum doc id in the
     component), the cluster size, and whether this document is the
     canonical keeper (``doc_id == cluster_id`` — the standard
-    keep-the-smallest-id policy, deterministic)."""
+    keep-the-smallest-id policy, deterministic). The size is a window
+    count over the component partition: one shuffle, no aggregate
+    re-joined to the labels."""
+    from pyspark.sql.window import Window
+
     comp = connected_components(pairs, src=src, dst=dst, max_iters=max_iters)
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        comp.join(sizes, "component")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-            "cluster_size",
-            (F.col("node") == F.col("component")).alias("is_canonical"),
-        )
+    return comp.select(
+        F.col("node").alias("doc_id"),
+        F.col("component").alias("cluster_id"),
+        F.count(F.lit(1)).over(Window.partitionBy("component")).alias("cluster_size"),
+        (F.col("node") == F.col("component")).alias("is_canonical"),
     )
 
 

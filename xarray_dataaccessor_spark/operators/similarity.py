@@ -316,6 +316,93 @@ def lsh_autoparams(
     return b, p
 
 
+#: Columns per numpy block of the grouped near-dup kernel: a bucket run
+#: of m vectors is scored as m x PAIR_BLOCK_COLS cosine blocks, so the
+#: scratch stays O(m * PAIR_BLOCK_COLS) on degenerate buckets.
+PAIR_BLOCK_COLS = 1024
+
+
+def _first_band_pairs_kernel(id_col: str, thr: float, block: int):
+    """The ``mapInPandas`` body of the grouped near-dup refine. Input
+    rows are ``(id, e, vals, band, val)`` sorted by (band, val, id)
+    within the partition; each contiguous (band, val) run is one LSH
+    bucket. Emits ``(id_a, id_b, cos)`` with ``cos > thr`` for the pairs
+    whose lowest shared band is the run's band."""
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        def run_pairs(ids, e, nrm, vals, band, out):
+            m = len(ids)
+            for j0 in range(1, m, block):
+                j1 = min(j0 + block, m)
+                # the SQL cosine fold's exact op order, as d matrix steps;
+                # rows >= j1 can never be the smaller id of a pair here
+                acc = np.zeros((j1, j1 - j0))
+                for t in range(e.shape[1]):
+                    acc = acc + e[:j1, t, None] * e[None, j0:j1, t]
+                cos = acc / (nrm[:j1, None] * nrm[None, j0:j1])
+                keep = (cos > thr) & (
+                    np.arange(j1)[:, None] < np.arange(j0, j1)[None, :]
+                )
+                ri, ci = np.nonzero(keep)
+                # another run owns a pair that shares an earlier band
+                own = ~(vals[ri, :band] == vals[ci + j0, :band]).any(axis=1)
+                ri, ci = ri[own], ci[own]
+                out.append((ids[ri], ids[ci + j0], cos[ri, ci]))
+
+        def runs(cols, out, final):
+            """Score every complete run of ``cols``; return the open last
+            run (it may continue in the next batch) unless ``final``."""
+            ids, e, nrm, vals, band, val = cols
+            cut = np.flatnonzero((band[1:] != band[:-1]) | (val[1:] != val[:-1])) + 1
+            starts = np.concatenate(([0], cut))
+            ends = np.concatenate((cut, [len(ids)]))
+            last = len(starts) if final else len(starts) - 1
+            for s, t in zip(starts[:last], ends[:last]):
+                if t - s > 1:
+                    run_pairs(ids[s:t], e[s:t], nrm[s:t], vals[s:t], int(band[s]), out)
+            if final:
+                return None
+            return tuple(c[starts[-1]:] for c in cols)
+
+        def frame(out):
+            return pd.DataFrame({
+                "id_a": np.concatenate([a for a, _, _ in out]),
+                "id_b": np.concatenate([b for _, b, _ in out]),
+                "cos": np.concatenate([c for _, _, c in out]),
+            })
+
+        carry = None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            e = np.stack(pdf["e"].to_numpy()).astype(np.float64, copy=False)
+            # per-row norm folds, once per batch
+            nrm2 = np.zeros(len(e))
+            for t in range(e.shape[1]):
+                nrm2 = nrm2 + e[:, t] * e[:, t]
+            cols = (
+                pdf[id_col].to_numpy(), e, np.sqrt(nrm2),
+                np.stack(pdf["vals"].to_numpy()),
+                pdf["band"].to_numpy(), pdf["val"].to_numpy(),
+            )
+            if carry is not None:
+                cols = tuple(np.concatenate((c, x)) for c, x in zip(carry, cols))
+            out = []
+            carry = runs(cols, out, final=False)
+            if out:
+                yield frame(out)
+        if carry is not None:
+            out = []
+            runs(carry, out, final=True)
+            if out:
+                yield frame(out)
+
+    return kernel
+
+
 def embedding_near_duplicates(
     df: DataFrame,
     threshold: float = 0.95,
@@ -331,8 +418,8 @@ def embedding_near_duplicates(
     multi-probe hyperplane LSH (the same banding machinery as MinHash
     LSH, ``dedup.py::lsh_candidate_pairs``): ``n_bands`` bands of
     ``planes_per_band`` sign bits each, candidates = pairs sharing at
-    least one band's full signature (union of per-band equi-joins,
-    deduped on ids), then an exact-cosine refine.
+    least one band's full signature (each pair once), then an
+    exact-cosine refine.
 
     Scale math (vs the old single 8-plane bucket, which was the all-pairs
     problem with a 1/256 constant): per-band bucket population is
@@ -351,13 +438,20 @@ def embedding_near_duplicates(
     counted — otherwise one count() action fires here).
 
     ``refine`` selects the candidate-refine execution (identical
-    output, pinned by test). ``"grouped"`` (default since r11): one
-    bucket-keyed shuffle of the n*b (id, vector) rows, then each
-    (band, bucket) group computes its within-bucket pairs as an
-    Arrow-batched numpy pass replaying the SQL cosine fold's exact op
-    order, deduped across bands on the bit-identical (id_a, id_b, cos)
-    rows. The ``"join"`` path (the shape the SQL oracle replays)
-    shuffles CANDIDATE-PAIR rows with both vectors attached and
+    output, pinned by test). ``"grouped"`` (default): one
+    ``(band, bucket)``-keyed shuffle of the n*b (id, vector) rows, sorted
+    within each partition by (band, bucket, id), then ONE ``mapInPandas``
+    kernel per partition walks the contiguous bucket runs (a run that
+    crosses an Arrow batch boundary is carried into the next batch). The
+    kernel builds the vector matrix once per batch and computes each
+    run's pairs as numpy steps replaying the SQL cosine fold's exact op
+    order, in blocks of :data:`PAIR_BLOCK_COLS` columns. Every row
+    carries its full bucket array, and a pair is emitted only from the
+    LOWEST band both vectors share — the duplicate-free partitioning of
+    "Distributed Similarity Joins over Top-K Rankings" (EDBT 2020) — so
+    each pair leaves the kernel exactly once and no cross-band dedup
+    shuffle follows. The ``"join"`` path (the shape the SQL oracle
+    replays) shuffles CANDIDATE-PAIR rows with both vectors attached and
     evaluates one interpreted zip_with/aggregate fold per pair —
     measured 4.5x slower at the sf3 knee (72 s vs 16 s), since
     higher-order functions never enter codegen and the pair join moves
@@ -370,80 +464,34 @@ def embedding_near_duplicates(
     if n_bands == "auto" or planes_per_band == "auto":
         n = n_docs if n_docs is not None else v.count()
         n_bands, planes_per_band = lsh_autoparams(n, threshold)
-    band_structs = [
-        F.struct(
-            F.lit(bidx).alias("band"),
-            lsh_bucket(
-                "e", planes_per_band, plane_offset=bidx * planes_per_band,
-                dims=dims,
-            ).alias("val"),
+    # the vector's bucket in every band, band = array position
+    vals = F.array(*[
+        lsh_bucket(
+            "e", planes_per_band, plane_offset=bidx * planes_per_band,
+            dims=dims,
         )
         for bidx in range(n_bands)
-    ]
+    ])
     if refine == "grouped":
-        import numpy as np
-        from pyspark.sql import types as T
-
-        svec = v.select(
-            F.col(id_col), F.col("e"),
-            F.explode(F.array(*band_structs)).alias("b"),
-        ).select(id_col, "e", F.col("b.band").alias("band"),
-                 F.col("b.val").alias("val"))
+        # posexplode_OUTER: the array always holds n_bands buckets, and the
+        # inner form makes Catalyst infer a size(vals) > 0 filter that
+        # evaluates every plane dot a second time below the shuffle
+        rows = (
+            v.withColumn("vals", vals)
+            .select(id_col, "e", "vals", F.posexplode_outer("vals").alias("band", "val"))
+            .repartition("band", "val")
+            .sortWithinPartitions("band", "val", id_col)
+        )
         id_type = v.schema[id_col].dataType
         pair_schema = T.StructType([
             T.StructField("id_a", id_type), T.StructField("id_b", id_type),
             T.StructField("cos", T.DoubleType()),
         ])
-        thr = float(threshold)
-        idc0 = id_col
-
-        def _bucket_pairs(pdf):
-            import pandas as pd
-
-            pdf = pdf.sort_values(idc0).reset_index(drop=True)
-            m = len(pdf)
-            if m < 2:
-                return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-            e_mat = np.asarray(pdf["e"].tolist(), dtype=np.float64)
-            d_ = e_mat.shape[1]
-            # the SQL cosine fold's exact op order, as d matrix steps
-            nrm2 = np.zeros(m)
-            for t in range(d_):
-                nrm2 = nrm2 + e_mat[:, t] * e_mat[:, t]
-            nrm = np.sqrt(nrm2)
-            ids = pdf[idc0].to_numpy()
-            out_a, out_b, out_c = [], [], []
-            bs = 1024  # scratch stays O(m * 1024) on degenerate buckets
-            for j0 in range(1, m, bs):
-                j1 = min(j0 + bs, m)
-                acc = np.zeros((m, j1 - j0))
-                for t in range(d_):
-                    acc = acc + e_mat[:, t, None] * e_mat[None, j0:j1, t]
-                cos = acc / (nrm[:, None] * nrm[None, j0:j1])
-                rows = np.arange(m)[:, None]
-                cols = np.arange(j0, j1)[None, :]
-                keep = (cos > thr) & (rows < cols)
-                ri, ci = np.nonzero(keep)
-                out_a.append(ids[ri])
-                out_b.append(ids[ci + j0])
-                out_c.append(cos[ri, ci])
-            return pd.DataFrame({
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos": np.concatenate(out_c),
-            })
-
-        # distinct is safe on the float column: every band computes the
-        # SAME fold over the SAME vectors, so duplicate pairs carry
-        # bit-identical cos values
-        return (
-            svec.groupBy("band", "val")
-            .applyInPandas(_bucket_pairs, pair_schema)
-            .distinct()
+        return rows.mapInPandas(
+            _first_band_pairs_kernel(id_col, float(threshold), PAIR_BLOCK_COLS),
+            pair_schema,
         )
-    sig = v.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("b")
-    ).select(id_col, F.col("b.band").alias("band"), F.col("b.val").alias("val"))
+    sig = v.select(id_col, F.posexplode_outer(vals).alias("band", "val"))
     # cache the signature table (ids + band + bucket only — b rows per
     # doc, no embedding payload; same convention as the MinHash
     # signatures): the candidate join is typically planned as a

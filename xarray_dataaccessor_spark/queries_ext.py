@@ -870,16 +870,15 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     comp = connected_components(edges)
-    sizes = comp.groupBy("component").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
     # labeled is NOT cached: both variant branches recompute it from the
-    # checkpointed component edges concurrently — cheaper than a cache
-    # barrier (memory: spark-plan-quirks #3)
-    labeled = comp.join(sizes, "component").select(
+    # checkpointed component labels concurrently — cheaper than a cache
+    # barrier, which would serialize them
+    labeled = comp.select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),
-        "cluster_size",
+        F.count(F.lit(1))
+        .over(Window.partitionBy("component"))
+        .alias("cluster_size"),
     )
     cc = labeled.select(
         F.lit("cc").alias("variant"),
