@@ -151,3 +151,131 @@ def test_netcdf4_granule_to_catalog_flagship(spark, tmp_path):
     assert len(rows) == 49  # Jan 30 00:00 .. Feb 1 00:00 inclusive
     assert rows[0]["t2m_mean"] == pytest.approx(270.0)
     assert rows[-1]["t2m_mean"] == pytest.approx(270.0 + 48 * 0.1)
+
+
+# ---------------------------------------------------------------------------
+# one row contract for every grid decode path
+# ---------------------------------------------------------------------------
+
+_NODATA_CELLS = [(0, 0, 1), (1, 2, 0), (2, 1, 3)]  # (t, y, x), k = 3
+
+
+def _cube(fill):
+    import numpy as np
+
+    vals = 250.0 + np.arange(3 * 3 * 4, dtype="f8").reshape(3, 3, 4)
+    for cell in _NODATA_CELLS:
+        vals[cell] = fill
+    return vals
+
+
+def _netcdf_granule(d):
+    """NaN cells under ``_FillValue = NaN`` (xarray's float encoding)."""
+    import numpy as np
+
+    from xarray_dataaccessor_spark.sources.netcdf3 import write_netcdf3
+
+    write_netcdf3(
+        str(d / "g.nc"),
+        {"time": 3, "y": 3, "x": 4},
+        {
+            "time": (["time"], np.arange(3.0), {"units": "hours since 2020-01-01"}),
+            "y": (["y"], 40.0 + np.arange(3.0), {}),
+            "x": (["x"], -80.0 + np.arange(4.0), {}),
+            "v": (["time", "y", "x"], _cube(np.nan), {"_FillValue": np.nan}),
+        },
+        record_dim="time",
+    )
+    return str(d / "g.nc")
+
+
+def _zarr_store(d):
+    """-9999 cells under the ``.zattrs`` ``_FillValue``."""
+    import numpy as np
+
+    from xarray_dataaccessor_spark.sources.zarr import write_zarr
+
+    store = str(d / "s.zarr")
+    write_zarr(store, "v", _cube(-9999.0), ["time", "y", "x"], chunks=[2, 2, 2],
+               attrs={"_FillValue": -9999.0})
+    write_zarr(store, "time", np.arange(3.0), ["time"],
+               attrs={"units": "hours since 2020-01-01"})
+    write_zarr(store, "y", 40.0 + np.arange(3.0), ["y"])
+    write_zarr(store, "x", -80.0 + np.arange(4.0), ["x"])
+    return store
+
+
+def _geotiff_granules(d):
+    """One raster per timestep with -9999 cells under GDAL nodata."""
+    from xarray_dataaccessor_spark.sources.geotiff import write_geotiff
+
+    for t, band in enumerate(_cube(-9999.0)):
+        write_geotiff(str(d / f"v{t}.tif"), band, -80.5, 42.5, (1.0, 1.0),
+                      nodata=-9999.0)
+    return str(d / "*.tif")
+
+
+def _grib_file(d):
+    """NaN cells packed behind the section-6 bitmap."""
+    import datetime as dt
+
+    import numpy as np
+
+    from xarray_dataaccessor_spark.sources.grib2 import write_grib2
+
+    write_grib2(str(d / "g.grib2"), [
+        {"ref_time": dt.datetime(2020, 1, 1, t), "forecast_hour": 0,
+         "category": 0, "number": 0, "lats": 42.0 - np.arange(3.0),
+         "lons": -80.0 + np.arange(4.0), "data": band}
+        for t, band in enumerate(_cube(np.nan))
+    ])
+    return str(d / "*.grib2")
+
+
+def _read_netcdf(spark, d):
+    from xarray_dataaccessor_spark.sources.pyds import register_data_sources
+
+    register_data_sources(spark)
+    return spark.read.format("netcdf").load(_netcdf_granule(d))
+
+
+def _catalog_zarr(spark, d):
+    cat = DatasetCatalog()
+    cat.register("s", _zarr_store(d), ["v"], format="zarr")
+    return cat.load(spark, "s").df
+
+
+def _grid_paths():
+    from xarray_dataaccessor_spark.sources import ingest
+
+    return {
+        "netcdf_glob_to_grid": lambda spark, d: ingest.netcdf_glob_to_grid(
+            spark, _netcdf_granule(d), "v"),
+        "format_netcdf": _read_netcdf,
+        "zarr_to_grid": lambda spark, d: ingest.zarr_to_grid(
+            spark, _zarr_store(d), "v"),
+        "geotiff_glob_to_grid": lambda spark, d: ingest.geotiff_glob_to_grid(
+            spark, _geotiff_granules(d), "v"),
+        "grib_glob_to_grid": lambda spark, d: ingest.grib_glob_to_grid(
+            spark, _grib_file(d), "v"),
+        "catalog_zarr": _catalog_zarr,
+    }
+
+
+@pytest.mark.parametrize("path", sorted(_grid_paths()))
+def test_grid_row_contract(spark, tmp_path, path):
+    """Every decode path yields ``time timestamp, y, x, <var> double``
+    with each planted nodata cell as SQL null and no NaN: a NaN would
+    poison ``avg`` where a null is skipped."""
+    from pyspark.sql import functions as F
+
+    df = _grid_paths()[path](spark, tmp_path)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("time", "timestamp"), ("y", "double"), ("x", "double"), ("v", "double"),
+    ]
+    got = df.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("v").isNull().cast("int")).alias("nulls"),
+        F.sum(F.isnan("v").cast("int")).alias("nans"),
+    ).first()
+    assert (got["rows"], got["nulls"], got["nans"]) == (3 * 3 * 4, len(_NODATA_CELLS), 0)

@@ -325,7 +325,8 @@ def test_geotiff_nodata_becomes_null_nan(spark, tmp_path):
         nodata=-9999.0,
     )
     df = spark.read.format("geotiff").load(p)
-    assert df.filter(F.isnan("value")).count() == 4
+    assert df.filter(F.col("value").isNull()).count() == 4
+    assert df.filter(F.isnan("value")).count() == 0
 
 
 def test_geotiff_year_option_stamps_time(spark, tmp_path):
@@ -780,6 +781,18 @@ def test_hdf5_chunked_granule_splits_into_time_windows(spark, tmp_path):
     assert np.allclose(got["t2m"], t2m.reshape(-1))
     assert np.allclose(got["d2m"], t2m.reshape(-1) * 0.5)
 
+    # a truncated granule beside a good one fails at planning with a
+    # typed error — never a silent whole-granule fallback partition
+    raw = open(p, "rb").read()
+    mixed = tmp_path / "mixed"
+    mixed.mkdir()
+    (mixed / "a.nc").write_bytes(raw)
+    (mixed / "b.nc").write_bytes(raw[: len(raw) // 2])
+    r = _NetCDFBatchReader({"path": str(mixed)})
+    r.infer_schema()  # schema comes from the good first granule
+    with pytest.raises(ValueError, match="truncated HDF5 granule"):
+        r.partitions()
+
 
 def test_hdf5_time_pruning_is_exact_no_opt_in(spark, tmp_path):
     # unlike classic CDF record probing, the HDF5 path decodes the time
@@ -1031,6 +1044,15 @@ def test_tiff_unsupported_codec_fails_at_planning(tmp_path):
     open(p, "wb").write(raw)
     with pytest.raises(NotImplementedError, match="compression 7"):
         _tiff_layout(p)
+    # float samples tagged with the integer predictor would decode
+    # garbage: refused at planning too
+    bad = str(tmp_path / "float_pred2.tif")
+    write_geotiff(
+        bad, _raster(8, 8), x_origin=0.0, y_origin=8.0,
+        pixel_size=(1.0, 1.0), predictor=2,
+    )
+    with pytest.raises(NotImplementedError, match="predictor 2"):
+        _tiff_layout(bad)
 
 
 def test_hdf5_schema_inference_is_header_only(spark, tmp_path):

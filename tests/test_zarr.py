@@ -81,13 +81,17 @@ def test_distributed_decode_matches_source(spark, tmp_path, compress):
 
 def test_chunk_grain_parallelism(spark, tmp_path):
     # 5 time-chunks x 2 lat-chunks x 3 lon-chunks = 30 independent tasks
+    from xarray_dataaccessor_spark.sources.pyds import register_data_sources
+
     store, _ = _store(tmp_path)
-    binf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "[0-9]*")
-        .load(store + "/t2m")
+    register_data_sources(spark)
+    df = (
+        spark.read.format("zarr")
+        .option("variable", "t2m")
+        .option("target_partition_bytes", 1)
+        .load(store)
     )
-    assert binf.count() == 30
+    assert df.rdd.getNumPartitions() == 30
 
 
 def test_fill_value_masked(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Distributed GRIB2 export: grid DataFrame -> per-timestep GRIB files.
 
-The inverse of ``sources.ingest.grib_glob_to_grid`` and the layout
+The inverse of the grib2 data source (``spark.read.format("grib2")``,
+which ``sources.ingest.grib_glob_to_grid`` wraps) and the layout
 operational meteorology distributes: one GRIB2 message per timestep,
 one file per message, a glob of files per dataset (the reference's CDS
 workflow downloads exactly this shape, ``era5_from_cds.py`` GRIB
@@ -8,7 +9,7 @@ format option). As with the Zarr sink, the driver touches only the
 dimension-sized axes; every timestep's field is assembled, packed
 (simple / complex / complex+spatial-differencing — the writer half of
 ``sources/grib2.py``) and written by the executor task that owns it.
-Missing cells ride the section-6 bitmap and come back NaN.
+Missing cells ride the section-6 bitmap and come back null.
 
 Scale shape: one shuffle keyed on the timestep. GRIB messages are
 independent byte streams, so concurrent task writes need no

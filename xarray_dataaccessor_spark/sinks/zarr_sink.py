@@ -12,8 +12,9 @@ exactly why the Zarr layout is the cloud-native target in the first
 place (on S3 each task PUTs its object; here each task writes a file).
 
 Round-trip contract (tested): a store written here is read back by the
-distributed reader ``sources.ingest.zarr_to_grid`` — and by any
-conforming Zarr v2/v3 implementation — bit-exactly.
+zarr data source (``spark.read.format("zarr")``, which
+``sources.ingest.zarr_to_grid`` wraps) — and by any conforming Zarr
+v2/v3 implementation — bit-exactly; missing cells come back null.
 
 Scale shape: one shuffle keyed on the chunk index (the exporter's only
 exchange), each task holding exactly one chunk's rows (chunk sizes are

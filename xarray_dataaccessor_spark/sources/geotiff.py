@@ -13,8 +13,9 @@ nodata tag 42113) plus the BigTIFF (v43) container — 8-byte offsets,
 are detected and rejected with a pointer at the optional geo extras.
 
 Like the NetCDF3 module this is stdlib (``struct``/``zlib``) + numpy
-only and free of package-level imports, so the parse function can ship
-to executors by value (``sources/ingest.py::geotiff_glob_to_grid``).
+only and free of package-level imports, so the module ships to
+executors by value with the geotiff data source
+(``sources/pyds.py::register_data_sources``).
 """
 
 from __future__ import annotations

@@ -45,6 +45,8 @@ import numpy as np
 
 _SIG = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
+#: superblock version -> byte offsets of its base and end-of-file addresses
+_SB_EOF_FIELDS = {0: (24, 40), 1: (28, 44), 2: (12, 28), 3: (12, 28)}
 
 
 class _R:
@@ -513,7 +515,22 @@ def parse_hdf5_layout(buf: bytes) -> dict:
     pipeline) instead of decoded data — except 1-D variables
     (coordinate axes: dimension-sized by definition), whose ``data`` IS
     decoded so a planner can prune against axis values. With an mmap
-    ``buf`` this touches only header, B-tree, and coordinate pages."""
+    ``buf`` this touches only header, B-tree, and coordinate pages.
+
+    A buffer shorter than the superblock's end-of-file address (the
+    check libhdf5 makes at open) raises ValueError: a truncated granule
+    fails at planning instead of being planned as readable."""
+    _check(buf[:8] == _SIG, "HDF5 signature")
+    ver = buf[8] if len(buf) > 8 else 0
+    if ver in _SB_EOF_FIELDS:
+        base_at, eof_at = _SB_EOF_FIELDS[ver]
+        r = _R(buf)
+        eof = r.u(base_at, 8) + r.u(eof_at, 8)
+        if len(buf) < max(eof, eof_at + 8):
+            raise ValueError(
+                f"truncated HDF5 granule: {len(buf)} bytes, superblock "
+                f"end-of-file address {eof}"
+            )
     children = _root_children(buf)
     addr_names = {addr: name for name, addr in children}
     raw_vars: dict[str, dict] = {}

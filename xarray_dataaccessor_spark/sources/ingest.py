@@ -17,7 +17,6 @@ enumeration and layout logic fully real.
 from __future__ import annotations
 
 import datetime as _dt
-import os
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -225,25 +224,18 @@ def geotiff_glob_to_grid(
     year: int | None = None,
 ) -> DataFrame:
     """Distributed GeoTIFF ingestion, the S5 twin of
-    :func:`netcdf_glob_to_grid`: ``binaryFile`` source (one granule per
-    task) -> Arrow-batched ``mapInPandas`` decode with the pure TIFF
-    reader -> long-form grid rows ready for :func:`land_grid_parquet`.
-    The parser ships by value; executors need no package install."""
-    from xarray_dataaccessor_spark.session import ship_by_value
-    from xarray_dataaccessor_spark.sources import geotiff as _gt
+    :func:`netcdf_glob_to_grid`: ``spark.read.format("geotiff")``
+    (``sources/pyds.py``) over the glob — one task per ~128 MiB of
+    strips/tiles, overview IFDs skipped, GDAL nodata as null — giving
+    long-form grid rows ready for :func:`land_grid_parquet`. ``year``
+    stamps the constant time (Jan 1; the epoch when absent)."""
+    from xarray_dataaccessor_spark.sources.pyds import register_data_sources
 
-    ship_by_value(_gt)
-
-    frag_fn = _gt.geotiff_fragment_to_pandas
-
-    def decode(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                yield frag_fn(bytes(content), variable, year=year)
-
-    schema = f"time timestamp, y double, x double, {variable} double"
-    binf = spark.read.format("binaryFile").load(pattern)
-    return binf.select("content").mapInPandas(decode, schema)
+    register_data_sources(spark)
+    reader = spark.read.format("geotiff").option("variable", variable)
+    if year is not None:
+        reader = reader.option("year", year)
+    return reader.load(pattern)
 
 
 def grib_glob_to_grid(
@@ -255,206 +247,40 @@ def grib_glob_to_grid(
 ) -> DataFrame:
     """Distributed GRIB2 ingestion — the wire format the reference's CDS
     accessor can download instead of NetCDF (``era5_from_cds.py``
-    request ``format`` param): ``binaryFile`` source (one GRIB file per
-    task, each holding one message per timestep) -> ``mapInPandas``
-    decode with the pure GRIB2 reader -> long-form grid rows. A message
-    timestamp is ``ref_time + forecast_hour``; ``category``/``number``
-    filter multi-parameter files to the requested variable. The parser
-    ships by value; executors need no package install."""
-    from xarray_dataaccessor_spark.session import ship_by_value
-    from xarray_dataaccessor_spark.sources import grib2 as _gb
+    request ``format`` param): ``spark.read.format("grib2")``
+    (``sources/pyds.py``) over the glob, decoding with the pure GRIB2
+    reader into long-form grid rows. A message timestamp is
+    ``ref_time + forecast_hour``; ``category``/``number`` filter
+    multi-parameter files to the requested variable; bitmap-masked
+    cells are null."""
+    from xarray_dataaccessor_spark.sources.pyds import register_data_sources
 
-    ship_by_value(_gb)
-
-    parse = _gb.parse_grib2
-
-    def decode(batches):
-        import datetime as _dt
-
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                for m in parse(bytes(content)):
-                    if category is not None and m["category"] != category:
-                        continue
-                    if number is not None and m["number"] != number:
-                        continue
-                    ts = m["ref_time"] + _dt.timedelta(hours=int(m["forecast_hour"]))
-                    ny, nx = m["data"].shape
-                    yield _pd.DataFrame(
-                        {
-                            "time": _np.repeat(_np.datetime64(ts, "us"), ny * nx),
-                            "y": _np.repeat(m["lats"], nx),
-                            "x": _np.tile(m["lons"], ny),
-                            variable: m["data"].reshape(-1),
-                        }
-                    )
-
-    schema = f"time timestamp, y double, x double, {variable} double"
-    binf = spark.read.format("binaryFile").load(pattern)
-    return binf.select("content").mapInPandas(decode, schema)
+    register_data_sources(spark)
+    reader = spark.read.format("grib2").option("variable", variable)
+    if category is not None:
+        reader = reader.option("category", category)
+    if number is not None:
+        reader = reader.option("number", number)
+    return reader.load(pattern)
 
 
-def _zarr_nodata_sentinel(meta: Mapping) -> float | int | None:
-    """Resolve the value to mask to NaN for a Zarr variable (see
-    zarr_to_grid's scale note). Returns None when nothing should be
-    masked — including the float-NaN case, which needs no masking since
-    blocks are cast to float64 and NaN survives the cast."""
-    import math
-
-    def _decode(v):
-        if isinstance(v, (list, tuple)):
-            v = v[0] if v else None
-        if isinstance(v, str):
-            return {
-                "NaN": float("nan"),
-                "Infinity": float("inf"),
-                "-Infinity": float("-inf"),
-            }.get(v)
-        return v
-
-    attrs = meta.get("attrs") or {}
-    nodata = _decode(attrs.get("_FillValue", attrs.get("missing_value")))
-    if nodata is None:
-        fv = _decode(meta.get("fill_value"))
-        if isinstance(fv, float) and math.isnan(fv):
-            nodata = fv
-    if isinstance(nodata, float) and math.isnan(nodata):
-        return None  # already NaN after the float64 cast; == would never match
-    return nodata
-
-
-def zarr_to_grid(
-    spark,
-    store: str,
-    variable: str,
-    time_var: str = "time",
-    x_var: str | None = None,
-    y_var: str | None = None,
-) -> DataFrame:
-    """Distributed Zarr v2 ingestion — the cloud-native sibling of
+def zarr_to_grid(spark, store: str, variable: str) -> DataFrame:
+    """Distributed Zarr v2/v3 ingestion — the cloud-native sibling of
     :func:`netcdf_glob_to_grid` / :func:`geotiff_glob_to_grid`, and the
-    best Spark fit of the three: the store IS a chunk manifest, so
-    ``binaryFile`` over the variable's chunk files gives one
-    independently-decodable block per task with no header coordination.
-    Coordinate axes (dimension-sized by definition) are read driver-side
-    and travel in the task closure; each task trims its edge-padded
-    block and emits long-form ``(time, y, x, var)`` rows.
+    best Spark fit of the three: ``spark.read.format("zarr")``
+    (``sources/pyds.py``) plans its tasks straight from the store's
+    chunk grid, decodes each chunk independently and trims edge
+    padding into long-form ``(time, y, x, var)`` rows (plus ``level``
+    for 4-D arrays); ``_FillValue`` cells are null.
 
-    Supports (time, y, x) and (y, x) arrays with xarray's
-    ``_ARRAY_DIMENSIONS`` naming (v2) or ``dimension_names`` (v3);
-    zlib/gzip/raw/blosc-lz4/blosc-zlib chunks, dotted v2 keys and nested
-    v3 ``c/i/j/k`` keys."""
-    import numpy as np
+    Supports (y, x), (time, y, x) and (time, level, y, x) arrays with
+    xarray's ``_ARRAY_DIMENSIONS`` naming (v2) or ``dimension_names``
+    (v3); zlib/gzip/zstd/raw/blosc chunks, dotted v2 keys, flat and
+    nested v3 keys, and sharded v3 stores."""
+    from xarray_dataaccessor_spark.sources.pyds import register_data_sources
 
-    from xarray_dataaccessor_spark.session import ship_by_value
-    from xarray_dataaccessor_spark.sources import blosc as _bl
-    from xarray_dataaccessor_spark.sources import zarr as _z
-    from xarray_dataaccessor_spark.sources import zstd as _zs
-
-    ship_by_value(_z, _bl, _zs)  # workers may not have the package
-
-    meta = _z.read_zarray(store, variable)
-    dims = meta["dims"] or []
-    if len(meta["shape"]) not in (2, 3):
-        raise ValueError("zarr_to_grid expects a 2-D (y,x) or 3-D (t,y,x) array")
-
-    def pick(cands, fallback_pos):
-        for c in cands:
-            if c in dims:
-                return c
-        return dims[fallback_pos] if dims else None
-
-    x_name = x_var or pick(("longitude", "lon", "x"), -1)
-    y_name = y_var or pick(("latitude", "lat", "y"), -2)
-    xs = _z.read_small_array(store, x_name).astype("float64")
-    ys = _z.read_small_array(store, y_name).astype("float64")
-    has_time = len(meta["shape"]) == 3
-    if has_time:
-        t_name = time_var if time_var in dims or not dims else dims[0]
-        times = np.asarray(_z.zarr_time_axis(store, t_name), dtype="datetime64[us]")
-    else:
-        times = np.asarray([np.datetime64("1970-01-01", "us")])
-
-    shape, chunks = meta["shape"], meta["chunks"]
-    decode = _z.decode_chunk
-    # Nodata sentinel: the .zattrs `_FillValue`/`missing_value` attribute
-    # (xarray/CF semantics). The .zarray `fill_value` marks UNWRITTEN chunk
-    # regions per the v2 spec, not nodata — a store written with the common
-    # default fill_value=0 must NOT turn legitimate zeros into NaN. It is
-    # used as a mask only when it is itself a float NaN (the one case where
-    # the two notions coincide). JSON spells non-finite floats as the
-    # strings "NaN"/"Infinity"/"-Infinity"; decode those before comparing.
-    nodata = _zarr_nodata_sentinel(meta)
-
-    key_kind, key_sep = meta.get("key_encoding", ("v2", "."))
-
-    def to_rows(batches):
-        import os as _os
-
-        import pandas as pd
-
-        def parse_idx(path):
-            if key_kind == "default" and key_sep == "/":
-                # v3 nested keys .../c/i/j/k: trailing numeric components
-                nums = []
-                for part in reversed(path.rstrip("/").split("/")):
-                    if part.isdigit():
-                        nums.append(int(part))
-                    else:
-                        break
-                return list(reversed(nums))
-            parts = _os.path.basename(path).split(key_sep)
-            if key_kind == "default":  # flat "c<sep>i<sep>j" keys
-                parts = parts[1:]
-            return [int(p) for p in parts]
-
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                idx = parse_idx(path)
-                block = decode(bytes(content), {"compressor": meta["compressor"],
-                                                "dtype": meta["dtype"],
-                                                "chunks": chunks,
-                                                "sharding": meta.get("sharding"),
-                                                "fill_value": meta.get("fill_value"),
-                                                "transpose": meta.get("transpose")})
-                lo = [i * c for i, c in zip(idx, chunks)]
-                keep = tuple(
-                    slice(0, min(c, s - l)) for c, s, l in zip(chunks, shape, lo)
-                )
-                block = np.asarray(block[keep], dtype="float64")
-                if nodata is not None:
-                    block = np.where(block == nodata, np.nan, block)
-                if not has_time:
-                    block = block[np.newaxis, ...]
-                    t_sel = times
-                else:
-                    t_sel = times[lo[0] : lo[0] + block.shape[0]]
-                y_sel = ys[lo[-2] : lo[-2] + block.shape[1]]
-                x_sel = xs[lo[-1] : lo[-1] + block.shape[2]]
-                nt, ny, nx = block.shape
-                yield pd.DataFrame(
-                    {
-                        "time": np.repeat(t_sel, ny * nx),
-                        "y": np.tile(np.repeat(y_sel, nx), nt),
-                        "x": np.tile(x_sel, nt * ny),
-                        variable: block.reshape(-1),
-                    }
-                )
-
-    schema = f"time timestamp, y double, x double, {variable} double"
-    # leaf chunk-file names: digits for v2 dotted and v3 nested keys,
-    # "c<sep>i<sep>j" for the flat v3 default encoding
-    glob = "c*" if (key_kind == "default" and key_sep != "/") else "[0-9]*"
-    binf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(os.path.join(store, variable))
-    )
-    return binf.select("path", "content").mapInPandas(to_rows, schema)
+    register_data_sources(spark)
+    return spark.read.format("zarr").option("variable", variable).load(store)
 
 
 def fetch_cds(requests: Sequence[Mapping], api_key: str | None = None):  # pragma: no cover

@@ -88,6 +88,7 @@ from xarray_dataaccessor_spark.sources.netcdf3 import (
 from xarray_dataaccessor_spark.sources.zarr import (
     chunk_relpath,
     decode_chunk,
+    nodata_sentinel,
     read_small_array,
     read_zarray,
 )
@@ -141,6 +142,44 @@ def _expand_paths(path: str, suffixes: tuple[str, ...]) -> list[str]:
     if not out:
         raise FileNotFoundError(f"No granules matched {path!r}")
     return sorted(out)
+
+
+def _grid_schema(columns: list[str], granule: bool = False) -> str:
+    """DDL of a grid reader's rows: ``time`` then ``columns`` (axes and
+    variables, all double), then ``granule`` — the contract
+    :func:`_grid_batches` emits."""
+    cols = ["time timestamp"] + [f"`{c}` double" for c in columns]
+    if granule:
+        cols.append("granule string")
+    return ", ".join(cols)
+
+
+def _grid_batches(
+    frames: list, columns: list[str], granule: str | None = None
+) -> Iterator:
+    """Decoded grid frames -> Arrow record batches, the one place every
+    grid reader builds its rows. ``time`` is a UTC ``timestamp`` (the
+    type ``netcdf_glob_to_grid``, landed parquet and every operator
+    use); every other column of ``columns`` is float64 with NaN — decoded
+    nodata — as SQL null (skipped by ``avg``, like xarray's ``skipna``);
+    ``granule`` stamps the source file's basename on every row."""
+    import pyarrow as pa
+
+    if not frames:
+        return
+
+    def cat(name, dtype):
+        parts = [np.asarray(fr[name]) for fr in frames]
+        col = parts[0] if len(parts) == 1 else np.concatenate(parts)
+        return col.astype(dtype, copy=False)
+
+    time = cat("time", "datetime64[us]")
+    cols = {"time": pa.array(time, type=pa.timestamp("us", tz="UTC"))}
+    for c in columns:
+        cols[c] = pa.array(cat(c, "f8"), type=pa.float64(), from_pandas=True)
+    if granule is not None:
+        cols["granule"] = pa.array([granule] * len(time), type=pa.string())
+    yield from pa.table(cols).to_batches(max_chunksize=1 << 16)
 
 
 def _read_header(path: str) -> dict:
@@ -294,7 +333,8 @@ def _bounds_from_filters(
                 # PROCESS timezone, shifting the bound by the UTC offset on
                 # a non-UTC driver — and a shifted bound prunes partitions
                 # that contain matching rows (silent missing data). The
-                # column is timestamp_ntz; treat the bound as naive-UTC µs.
+                # column is a UTC timestamp and Spark pushes tz-aware UTC
+                # datetimes; a naive bound is read as naive-UTC µs.
                 if v.tzinfo is not None:
                     v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
                 fv = float(np.datetime64(v, "us").astype("int64"))
@@ -348,15 +388,17 @@ class _NetCDFReaderBase:
     def _h5_layout(self, path: str) -> dict | None:
         """Header/B-tree/coordinate-only layout parse via mmap (data
         pages untouched). None when the granule can't be windowed
-        (no 3-D (t,y,x) shape, exotic layout) — caller falls back to a
-        whole-granule partition."""
+        (no 3-D (t,y,x) shape, a construct the layout parser rejects
+        with NotImplementedError) — caller falls back to a whole-granule
+        partition. A truncated or corrupt granule raises here, at
+        planning."""
         import mmap as _mmap
 
         try:
             with open(path, "rb") as f:
                 mm = _mmap.mmap(f.fileno(), 0, access=_mmap.ACCESS_READ)
                 lay = parse_hdf5_layout(mm)
-        except Exception:
+        except NotImplementedError:
             return None
         names = list(lay["variables"])
 
@@ -594,19 +636,17 @@ class _NetCDFReaderBase:
         if not data_vars:
             raise ValueError(f"No data variables detected in {first}")
         self.variables = data_vars
-        cols = ["time timestamp_ntz"] + (
-            ["level double"] if self.level_var else []
-        ) + ["y double", "x double"] + [
-            f"`{v}` double" for v in data_vars
-        ]
-        if self.include_granule:
-            cols.append("granule string")
-        return ", ".join(cols)
+        return _grid_schema(self._columns(), self.include_granule)
+
+    def _columns(self) -> list[str]:
+        return (
+            (["level"] if self.level_var else [])
+            + ["y", "x"]
+            + list(self.variables)
+        )
 
     # -- executor-side decode ------------------------------------------
     def read_partition(self, part: _NcPartition) -> Iterator:
-        import pyarrow as pa
-
         path = part.path
         with open(path, "rb") as f:
             magic = f.read(8)
@@ -618,37 +658,8 @@ class _NetCDFReaderBase:
             )
         else:
             pdf = self._classic_window_wide(part)
-        batch_rows = 1 << 16
-        schema_names = (
-            ["time"]
-            + (["level"] if self.level_var else [])
-            + ["y", "x"]
-            + list(self.variables)
-            + (["granule"] if self.include_granule else [])
-        )
-        tbl = pa.table(
-            {
-                "time": pa.array(pdf["time"], type=pa.timestamp("us")),
-                **(
-                    {"level": pa.array(pdf["level"], type=pa.float64())}
-                    if self.level_var
-                    else {}
-                ),
-                "y": pa.array(pdf["y"], type=pa.float64()),
-                "x": pa.array(pdf["x"], type=pa.float64()),
-                **{
-                    v: pa.array(pdf[v], type=pa.float64())
-                    for v in self.variables
-                },
-                **(
-                    {"granule": pa.array(pdf["granule"])}
-                    if self.include_granule
-                    else {}
-                ),
-            }
-        ).select(schema_names)
-        for batch in tbl.to_batches(max_chunksize=batch_rows):
-            yield batch
+        granule = os.path.basename(path) if self.include_granule else None
+        return _grid_batches([pdf], self._columns(), granule)
 
     def _whole_file_wide(self, path: str):
         """HDF5 (NetCDF4) or coordless fallback: full parse, wide frame."""
@@ -661,8 +672,6 @@ class _NetCDFReaderBase:
                 out = frag
             else:
                 out = out.merge(frag, on=["time", "y", "x"], how="outer")
-        if self.include_granule:
-            out["granule"] = os.path.basename(path)
         return out
 
     def _h5_window_wide(self, part: _NcPartition):
@@ -671,8 +680,6 @@ class _NetCDFReaderBase:
         records [rec_lo, rec_hi) per requested variable — data pages
         outside the window are never touched."""
         import mmap as _mmap
-
-        import pandas as pd
 
         g = self._h5_layout(part.path)
         if g is None:  # raced layout change; fall back to whole file
@@ -716,24 +723,17 @@ class _NetCDFReaderBase:
                         ]
                 frames[v] = np.ascontiguousarray(arr).astype("f8")
         times = g["times"][t_lo:t_hi]
-        out = pd.DataFrame(
-            {
-                "time": np.repeat(times, ny * nx),
-                "y": np.tile(np.repeat(ys, nx), n_win),
-                "x": np.tile(xs, n_win * ny),
-                **{v: a.reshape(-1) for v, a in frames.items()},
-            }
-        )
-        if self.include_granule:
-            out["granule"] = os.path.basename(part.path)
-        return out
+        return {
+            "time": np.repeat(times, ny * nx),
+            "y": np.tile(np.repeat(ys, nx), n_win),
+            "x": np.tile(xs, n_win * ny),
+            **{v: a.reshape(-1) for v, a in frames.items()},
+        }
 
     def _classic_window_wide(self, part: _NcPartition):
         """Classic CDF: decode ONLY this partition's record window via
         one contiguous seek-read of ``(rec_hi-rec_lo) * stride`` bytes
         (plus axis-sized coordinate reads)."""
-        import pandas as pd
-
         path = part.path
         hdr = _read_header(path)
         t, yname, xname = _detect_axes(hdr)
@@ -833,12 +833,7 @@ class _NetCDFReaderBase:
             cols["level"] = np.tile(np.repeat(levels, ny * nx), nt)
         cols["y"] = np.tile(np.repeat(ys, nx), nt * nlev)
         cols["x"] = np.tile(xs, nt * nlev * ny)
-        out = pd.DataFrame(
-            {**cols, **{v: a.reshape(-1) for v, a in frames.items()}}
-        )
-        if self.include_granule:
-            out["granule"] = os.path.basename(path)
-        return out
+        return {**cols, **{v: a.reshape(-1) for v, a in frames.items()}}
 
 
 class _NetCDFBatchReader(_NetCDFReaderBase, DataSourceReader):
@@ -1110,12 +1105,18 @@ def _tiff_layout(path: str) -> dict:
             f"TIFF compression {compression} unsupported "
             "(supported: 1=none, 5=LZW, 8/32946=DEFLATE, 32773=PackBits)"
         )
+    predictor = int(tags.get(TAG_PREDICTOR, [1])[0])
+    if predictor == 2 and kind == "f":
+        # integer differencing on float samples decodes garbage
+        raise NotImplementedError(
+            "TIFF predictor 2 with floating-point samples is invalid input"
+        )
     out = {
         "width": width,
         "height": height,
         "dtype": f"{bo}{kind}{bits // 8}",
         "compression": compression,
-        "predictor": int(tags.get(TAG_PREDICTOR, [1])[0]),
+        "predictor": predictor,
     }
     if TAG_TILE_OFFSETS in tags:
         out.update(
@@ -1259,7 +1260,6 @@ class _GeoTIFFReader(DataSourceReader):
         ]
 
     def read(self, partition: _TiffPartition) -> Iterator:
-        import pyarrow as pa
         import zlib
 
         lay = partition
@@ -1331,32 +1331,11 @@ class _GeoTIFFReader(DataSourceReader):
                         "time": np.repeat(stamp, rows * cols),
                         "y": np.repeat(ys, cols),
                         "x": np.tile(xs, rows),
-                        "v": vals.reshape(-1),
+                        self.variable: vals.reshape(-1),
                     }
                 )
-        if not frames:
-            return
-        times = np.concatenate([fr["time"] for fr in frames])
-        cols_out = {
-            "time": pa.array(times, type=pa.timestamp("us")),
-            "y": pa.array(
-                np.concatenate([fr["y"] for fr in frames]), type=pa.float64()
-            ),
-            "x": pa.array(
-                np.concatenate([fr["x"] for fr in frames]), type=pa.float64()
-            ),
-            self.variable: pa.array(
-                np.concatenate([fr["v"] for fr in frames]), type=pa.float64()
-            ),
-        }
-        if self.include_granule:
-            n = len(times)
-            cols_out["granule"] = pa.array(
-                [os.path.basename(lay.path)] * n
-            )
-        tbl = pa.table(cols_out)
-        for batch in tbl.to_batches(max_chunksize=1 << 16):
-            yield batch
+        granule = os.path.basename(lay.path) if self.include_granule else None
+        yield from _grid_batches(frames, ["y", "x", self.variable], granule)
 
 
 class _GeoTIFFStreamReader(DataSourceStreamReader):
@@ -1444,15 +1423,7 @@ class GeoTIFFDataSource(DataSource):
 
     def schema(self):
         r = _GeoTIFFReader(self.options)
-        cols = [
-            "time timestamp_ntz",
-            "y double",
-            "x double",
-            f"`{r.variable}` double",
-        ]
-        if r.include_granule:
-            cols.append("granule string")
-        return ", ".join(cols)
+        return _grid_schema(["y", "x", r.variable], r.include_granule)
 
     def reader(self, schema) -> DataSourceReader:
         return _GeoTIFFReader(self.options)
@@ -1643,8 +1614,9 @@ class _ZarrReader(DataSourceReader):
     slice min/max against the bounds — the axes are dimension-sized and
     in memory, so no monotonicity assumption is needed (unlike the
     NetCDF record probe). A missing chunk object decodes as
-    ``fill_value`` per the v2 spec, which the binaryFile-listing ingest
-    path (``ingest.zarr_to_grid``) structurally cannot represent."""
+    ``fill_value`` per the v2 spec (no rows when it is null), and cells
+    equal to the nodata sentinel (:func:`zarr.nodata_sentinel`) are
+    null."""
 
     def __init__(self, options: dict):
         self.options = dict(options)
@@ -1788,14 +1760,13 @@ class _ZarrReader(DataSourceReader):
         return parts or [_ZarrPartition(self.store, self.variable, [])]
 
     def read(self, partition: _ZarrPartition) -> Iterator:
-        import pyarrow as pa
-
         g = self._geometry()
         meta = g["meta"]
         shape, chunks = meta["shape"], meta["chunks"]
         nd = len(shape)
         xs, ys, times = g["xs"], g["ys"], g["times"]
         fill = meta.get("fill_value")
+        nodata = nodata_sentinel(meta)
         frames = []
         for idx in partition.chunk_idx:
             p = os.path.join(
@@ -1833,36 +1804,22 @@ class _ZarrReader(DataSourceReader):
                 "time": np.repeat(tsl[:ntc], nlc * nyc * nxc),
                 "y": np.tile(np.repeat(ysl, nxc), ntc * nlc),
                 "x": np.tile(xsl, ntc * nlc * nyc),
-                "v": block.astype("f8").reshape(-1),
+                self.variable: _masked(block, nodata).reshape(-1),
             }
             if nd == 4:
                 fr["level"] = np.tile(np.repeat(levsl, nyc * nxc), ntc)
             frames.append(fr)
-        if not frames:
-            return
-        cols = {
-            "time": pa.array(
-                np.concatenate([fr["time"] for fr in frames]),
-                type=pa.timestamp("us"),
-            ),
-        }
-        if nd == 4:
-            cols["level"] = pa.array(
-                np.concatenate([fr["level"] for fr in frames]),
-                type=pa.float64(),
-            )
-        cols["y"] = pa.array(
-            np.concatenate([fr["y"] for fr in frames]), type=pa.float64()
-        )
-        cols["x"] = pa.array(
-            np.concatenate([fr["x"] for fr in frames]), type=pa.float64()
-        )
-        cols[self.variable] = pa.array(
-            np.concatenate([fr["v"] for fr in frames]), type=pa.float64()
-        )
-        tbl = pa.table(cols)
-        for batch in tbl.to_batches(max_chunksize=1 << 16):
-            yield batch
+        yield from _grid_batches(frames, self._columns())
+
+    def _columns(self) -> list[str]:
+        lev = ["level"] if self._geometry()["levels"] is not None else []
+        return lev + ["y", "x", self.variable]
+
+
+def _masked(block: np.ndarray, nodata) -> np.ndarray:
+    """A decoded Zarr block as float64 with its nodata cells NaN."""
+    vals = block.astype("f8")
+    return vals if nodata is None else np.where(vals == nodata, np.nan, vals)
 
 
 def _json_float(v):
@@ -1939,8 +1896,6 @@ class _ZarrStreamReader(DataSourceStreamReader):
         return parts or [_ZarrStreamPartition(self.store, self.variable)]
 
     def read(self, partition: _ZarrStreamPartition) -> Iterator:
-        import pyarrow as pa
-
         if not partition.chunk_idx:
             return
         # re-read geometry from the store: the stream reader outlives
@@ -1970,6 +1925,7 @@ class _ZarrStreamReader(DataSourceStreamReader):
 
         shape, chunks = meta["shape"], meta["chunks"]
         fill = meta.get("fill_value")
+        nodata = nodata_sentinel(meta)
         frames = []
         for idx in partition.chunk_idx:
             p = os.path.join(
@@ -2003,33 +1959,10 @@ class _ZarrStreamReader(DataSourceStreamReader):
                     "time": np.repeat(tsl, nyc * nxc),
                     "y": np.tile(np.repeat(ysl, nxc), ntc),
                     "x": np.tile(xsl, ntc * nyc),
-                    "v": block.astype("f8").reshape(-1),
+                    self.variable: _masked(block, nodata).reshape(-1),
                 }
             )
-        if not frames:
-            return
-        tbl = pa.table(
-            {
-                "time": pa.array(
-                    np.concatenate([fr["time"] for fr in frames]),
-                    type=pa.timestamp("us"),
-                ),
-                "y": pa.array(
-                    np.concatenate([fr["y"] for fr in frames]),
-                    type=pa.float64(),
-                ),
-                "x": pa.array(
-                    np.concatenate([fr["x"] for fr in frames]),
-                    type=pa.float64(),
-                ),
-                self.variable: pa.array(
-                    np.concatenate([fr["v"] for fr in frames]),
-                    type=pa.float64(),
-                ),
-            }
-        )
-        for batch in tbl.to_batches(max_chunksize=1 << 16):
-            yield batch
+        yield from _grid_batches(frames, ["y", "x", self.variable])
 
     def commit(self, end: dict) -> None:
         pass
@@ -2053,13 +1986,7 @@ class ZarrDataSource(DataSource):
         return "zarr"
 
     def schema(self):
-        r = _ZarrReader(self.options)
-        g = r._geometry()
-        lev = "level double, " if g["levels"] is not None else ""
-        return (
-            f"time timestamp_ntz, {lev}y double, x double, "
-            f"`{r.variable}` double"
-        )
+        return _grid_schema(_ZarrReader(self.options)._columns())
 
     def reader(self, schema) -> DataSourceReader:
         return _ZarrReader(self.options)
@@ -2190,8 +2117,6 @@ class _GribReader(DataSourceReader):
     def read(self, partition: _GribPartition) -> Iterator:
         import datetime as _dt
 
-        import pyarrow as pa
-
         frames = []
         with open(partition.path, "rb") as f:
             for off, ln in partition.ranges:
@@ -2215,33 +2140,10 @@ class _GribReader(DataSourceReader):
                             ),
                             "y": np.repeat(m["lats"], nx),
                             "x": np.tile(m["lons"], ny),
-                            "v": m["data"].reshape(-1).astype("f8"),
+                            self.variable: m["data"].reshape(-1),
                         }
                     )
-        if not frames:
-            return
-        tbl = pa.table(
-            {
-                "time": pa.array(
-                    np.concatenate([fr["time"] for fr in frames]),
-                    type=pa.timestamp("us"),
-                ),
-                "y": pa.array(
-                    np.concatenate([fr["y"] for fr in frames]),
-                    type=pa.float64(),
-                ),
-                "x": pa.array(
-                    np.concatenate([fr["x"] for fr in frames]),
-                    type=pa.float64(),
-                ),
-                self.variable: pa.array(
-                    np.concatenate([fr["v"] for fr in frames]),
-                    type=pa.float64(),
-                ),
-            }
-        )
-        for batch in tbl.to_batches(max_chunksize=1 << 16):
-            yield batch
+        yield from _grid_batches(frames, ["y", "x", self.variable])
 
 
 class GRIB2DataSource(DataSource):
@@ -2260,11 +2162,7 @@ class GRIB2DataSource(DataSource):
         return "grib2"
 
     def schema(self):
-        r = _GribReader(self.options)
-        return (
-            "time timestamp_ntz, y double, x double, "
-            f"`{r.variable}` double"
-        )
+        return _grid_schema(["y", "x", _GribReader(self.options).variable])
 
     def reader(self, schema) -> DataSourceReader:
         return _GribReader(self.options)

@@ -29,15 +29,16 @@ by value.
 from __future__ import annotations
 
 import json
+import math
 import os
 import zlib
 
 import numpy as np
 
-# module-level so the cloudpickle by-value registration in
-# ingest.zarr_to_grid ships the blosc codec with decode_chunk (a lazy
-# in-function import would resolve on the executor, where the package
-# need not be importable)
+# module-level so the cloudpickle by-value registration of the zarr
+# data source (pyds.register_data_sources) ships the blosc and zstd
+# codecs with decode_chunk (a lazy in-function import would resolve on
+# the executor, where the package need not be importable)
 from xarray_dataaccessor_spark.sources import blosc as _blosc
 from xarray_dataaccessor_spark.sources import zstd as _zstd
 
@@ -375,6 +376,41 @@ def read_small_array(store: str, var: str) -> np.ndarray:
         lo = ci * c
         out[lo : min(lo + c, n)] = block[: min(c, n - lo)]
     return out
+
+
+def nodata_sentinel(meta: dict) -> float | int | None:
+    """The value to mask to NaN for a Zarr variable: the .zattrs
+    ``_FillValue``/``missing_value`` attribute (xarray/CF semantics).
+    The .zarray ``fill_value`` marks UNWRITTEN chunk regions per the v2
+    spec, not nodata — a store written with the common default
+    fill_value=0 must NOT turn legitimate zeros into NaN — so it counts
+    only when it is itself a float NaN (the one case where the two
+    notions coincide). JSON spells non-finite floats as the strings
+    "NaN"/"Infinity"/"-Infinity"; those are decoded before comparing.
+    Returns None when nothing should be masked — including the float-NaN
+    case, which needs no masking since blocks are cast to float64 and
+    NaN survives the cast."""
+
+    def _decode(v):
+        if isinstance(v, (list, tuple)):
+            v = v[0] if v else None
+        if isinstance(v, str):
+            return {
+                "NaN": float("nan"),
+                "Infinity": float("inf"),
+                "-Infinity": float("-inf"),
+            }.get(v)
+        return v
+
+    attrs = meta.get("attrs") or {}
+    nodata = _decode(attrs.get("_FillValue", attrs.get("missing_value")))
+    if nodata is None:
+        fv = _decode(meta.get("fill_value"))
+        if isinstance(fv, float) and math.isnan(fv):
+            nodata = fv
+    if isinstance(nodata, float) and math.isnan(nodata):
+        return None  # already NaN after the float64 cast; == would never match
+    return nodata
 
 
 def zarr_time_axis(store: str, var: str) -> np.ndarray:
