@@ -426,3 +426,103 @@ def test_minhash_clusters_no_pair_aggregate(spark, sf_dir):
     finally:
         unpersist_intermediates(cand)
         release_checkpoints()
+
+
+def _jobs_run(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it ran) — counted by a
+    job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def landed_grid(spark, tmp_path_factory):
+    """The golden grid landed as year=/month= parquet, the shape every
+    AOI request reads (tests.grid_fixture itself is a Python-RDD frame)."""
+    from tests.grid_fixture import grid_df
+    from xarray_dataaccessor_spark.sources.ingest import land_grid_parquet
+
+    base = str(tmp_path_factory.mktemp("aoi_plans"))
+    return land_grid_parquet(grid_df(spark, with_nulls=True), base, "grid")
+
+
+def test_catalog_second_load_runs_no_job(spark, landed_grid):
+    """A parquet entry's schema is inferred on its first load only;
+    every later request plans without touching the footers."""
+    from xarray_dataaccessor_spark.catalog import DatasetCatalog
+    from xarray_dataaccessor_spark.meta import BoundingBox
+
+    cat = DatasetCatalog()
+    cat.register("grid", landed_grid, ["t2m", "u100"])
+    request = dict(
+        variables=["u100"],
+        bbox=BoundingBox(west=-83.3, south=41.5, east=-82.0, north=42.5),
+        start_time="2019-01-31 00:00",
+        end_time="2019-02-01 12:00",
+    )
+    cat.load(spark, "grid", **request)
+    gf, jobs = _jobs_run(spark, lambda: cat.load(spark, "grid", **request))
+    assert jobs == 0
+    fresh = DatasetCatalog()
+    fresh.register("grid", landed_grid, ["t2m", "u100"])
+    assert sorted(gf.df.collect()) == sorted(fresh.load(spark, "grid", **request).df.collect())
+    assert "PartitionFilters: [((year" in plan_string(gf.df)
+    cat.register("grid", landed_grid, ["t2m"])
+    assert cat.entries["grid"].schema is None
+
+
+@pytest.mark.parametrize("op", ["points_to_table", "bilinear", "upsample_kernels"])
+def test_aoi_operators_scan_no_python_rdd(spark, landed_grid, op):
+    """The driver-built side tables (matched cells, interval maps) are
+    Arrow local relations: no executed plan reads a Python RDD."""
+    from xarray_dataaccessor_spark.catalog import points_df
+    from xarray_dataaccessor_spark.operators.extraction import points_to_table
+    from xarray_dataaccessor_spark.operators.spatial import (
+        spatial_resample,
+        spatial_upsample_kernels,
+    )
+
+    grid = spark.read.parquet(landed_grid).select("time", "y", "x", "u100")
+    if op == "points_to_table":
+        pts = points_df(spark, coords=[(42.1, -83.0), (41.6, -79.9)])
+        out = points_to_table(grid, pts, "u100")
+    elif op == "bilinear":
+        out = spatial_resample(grid, resolution_factor=2, resample_method="bilinear")
+    else:
+        out = spatial_upsample_kernels(grid, 2)
+    assert out.count() > 0
+    qe = out._jdf.queryExecution()
+    for plan in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+
+
+#: jobs of one default-event .gag render, measured on this grid: the
+#: distinct-cell guard and the one long-row collect
+GAG_SINK_JOBS = 3
+
+
+def test_gag_sink_job_count(spark, landed_grid, tmp_path):
+    """The .gag sink runs the max_gages guard and one collect of the
+    long rows; the time-extent aggregate and the pivot + orderBy plan
+    per event are gone."""
+    from pyspark.sql import functions as F
+
+    from xarray_dataaccessor_spark.sinks.gssha import make_precipitation_input
+
+    aoi = spark.read.parquet(landed_grid).filter(
+        F.col("x").between(-83.3, -82.7) & F.col("y").between(42.0, 42.7)
+    )
+    path, jobs = _jobs_run(
+        spark,
+        lambda: make_precipitation_input(aoi, "u100", file_dir=tmp_path, file_name="jobs"),
+    )
+    assert path.read_text().startswith("EVENT precipitation_event_1\nNRPDS ")
+    assert jobs <= GAG_SINK_JOBS, jobs

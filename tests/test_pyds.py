@@ -794,6 +794,22 @@ def test_hdf5_chunked_granule_splits_into_time_windows(spark, tmp_path):
         r.partitions()
 
 
+def test_netcdf_directory_of_h5_granules(spark, tmp_path):
+    # NetCDF4 granules are often named *.h5/*.hdf5: a directory load picks
+    # granules by their leading bytes, not only by the .nc suffixes, and
+    # still skips files that are not NetCDF
+    p, t2m = _h5_granule(tmp_path)
+    d = tmp_path / "granules"
+    d.mkdir()
+    raw = open(p, "rb").read()
+    (d / "a.h5").write_bytes(raw)
+    (d / "b.hdf5").write_bytes(raw)
+    (d / "README.txt").write_text("not a granule")
+    df = spark.read.format("netcdf").load(str(d))
+    assert df.count() == 2 * t2m.size
+    assert df.agg(F.sum("t2m")).first()[0] == 2 * t2m.sum()
+
+
 def test_hdf5_time_pruning_is_exact_no_opt_in(spark, tmp_path):
     # unlike classic CDF record probing, the HDF5 path decodes the time
     # axis during planning, so pruning needs no assume_sorted_time

@@ -1,5 +1,6 @@
-"""Session factory guards that need no JVM: the driver heap the factory
-asks for, and the by-value shipping helper."""
+"""Session helpers: the driver heap the factory asks for, the by-value
+shipping helper, the one-mechanism guard (no JVM for those three), and
+``local_frame``'s row contract."""
 
 from __future__ import annotations
 
@@ -44,3 +45,59 @@ def test_ship_by_value_raises_on_non_module():
     session.ship_by_value(blosc)
     with pytest.raises(ValueError):
         session.ship_by_value("xarray_dataaccessor_spark.sources.blosc")
+
+
+def test_create_dataframe_only_in_local_frame():
+    """Every driver-built table goes through ``session.local_frame``: a
+    ``createDataFrame`` call over a Python list plans a Python RDD whose
+    every read is a Spark job, so no other package module may call it."""
+    import ast
+    from pathlib import Path
+
+    import xarray_dataaccessor_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                allowed |= {id(n) for n in ast.walk(node)}
+        offenders += [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and node.attr == "createDataFrame"
+            and not (path.name == "session.py" and id(node) in allowed)
+        ]
+    assert offenders == []
+
+
+def test_local_frame_row_contract(spark):
+    import datetime as dt
+    import math
+
+    df = session.local_frame(
+        spark,
+        [
+            (1.5, dt.datetime(2020, 1, 1, 6, tzinfo=dt.timezone.utc), [1.0, None], "a"),
+            (float("nan"), None, [], None),
+            (None, dt.datetime(2020, 1, 2, tzinfo=dt.timezone.utc), None, "c"),
+        ],
+        "v double, t timestamp, arr array<double>, s string",
+    )
+    assert df.schema.simpleString() == "struct<v:double,t:timestamp,arr:array<double>,s:string>"
+    assert "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+    rows = df.collect()
+    assert rows[0].v == 1.5 and math.isnan(rows[1].v) and rows[2].v is None
+    assert df.filter("v IS NULL").count() == 1 and df.filter("isnan(v)").count() == 1
+    assert rows[0].arr == [1.0, None] and rows[1].arr == [] and rows[2].arr is None
+    assert rows[1].s is None and rows[1].t is None
+    # the timestamp is the UTC instant handed in
+    epochs = df.selectExpr("unix_seconds(t) AS e").collect()
+    assert [r.e for r in epochs] == [1577858400, None, 1577923200]
+
+    empty = session.local_frame(spark, [], "zone_id int, rings array<array<array<double>>>")
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == "struct<zone_id:int,rings:array<array<array<double>>>>"

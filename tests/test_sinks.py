@@ -60,6 +60,59 @@ def test_precipitation_gag(small_grid, tmp_path):
     assert len(path.read_text().splitlines()) > n_before
 
 
+_GOLDEN_COORDS = (
+    'NRGAG 6\n'
+    'COORD -83.5 42.75 "Center of precipitation pixel #1"\n'
+    'COORD -83.5 42.5 "Center of precipitation pixel #2"\n'
+    'COORD -83.25 42.75 "Center of precipitation pixel #3"\n'
+    'COORD -83.25 42.5 "Center of precipitation pixel #4"\n'
+    'COORD -83.0 42.75 "Center of precipitation pixel #5"\n'
+    'COORD -83.0 42.5 "Center of precipitation pixel #6"\n'
+)
+_GOLDEN_STEPS = (
+    "GAGES 2019 01 30 00 00 0.0 0.42857142857142855 0.14285714285714285 "
+    "0.5714285714285714 0.2857142857142857 0.7142857142857143\n",
+    "GAGES 2019 01 30 01 00 0.8571428571428571 1.2857142857142858 1.0 None "
+    "1.1428571428571428 1.5714285714285714\n",
+    "GAGES 2019 01 30 02 00 1.7142857142857142 2.142857142857143 "
+    "1.8571428571428572 2.2857142857142856 2.0 2.4285714285714284\n",
+    "GAGES 2019 01 30 03 00 2.5714285714285716 3.0 2.7142857142857144 "
+    "3.142857142857143 2.857142857142857 3.2857142857142856\n",
+)
+
+
+def test_precipitation_gag_golden_bytes(spark, tmp_path):
+    """Byte-exact .gag: 4 hourly steps x 3x2 cells with one null cell,
+    two explicit event windows, then a hot-start append of the default
+    whole-extent event. The bytes were rendered by the pivot-based sink
+    (a Spark groupBy/pivot per event); the driver-side matrix must
+    reproduce them exactly."""
+    xs, ys = [-83.5, -83.25, -83.0], [42.75, 42.5]
+    rows = [
+        (T0 + dt.timedelta(hours=t), y, x,
+         None if (t, i, j) == (1, 1, 1) else (t * 6 + j * 3 + i) / 7.0)
+        for t in range(4)
+        for j, y in enumerate(ys)
+        for i, x in enumerate(xs)
+    ]
+    df = spark.createDataFrame(rows, "time timestamp, y double, x double, tp double")
+    hour = lambda h: T0 + dt.timedelta(hours=h)  # noqa: E731
+    path = make_precipitation_input(
+        df, "tp", file_dir=tmp_path, file_name="golden",
+        event_intervals=[("storm_a", hour(0), hour(1)), ("storm_b", hour(2), hour(3))],
+    )
+    make_precipitation_input(
+        df, "tp", file_dir=tmp_path, file_name="golden", hot_start=True
+    )
+    s = _GOLDEN_STEPS
+    want = (
+        "EVENT storm_a\nNRPDS 12\n" + _GOLDEN_COORDS + s[0] + s[1]
+        + "\nEVENT storm_b\nNRPDS 12\n" + _GOLDEN_COORDS + s[2] + s[3]
+        + "EVENT precipitation_event_1\nNRPDS 24\n" + _GOLDEN_COORDS + "".join(s)
+    )
+    assert path.read_bytes() == want.encode("ascii")
+
+
 def test_grass_ascii_one_file_per_timestep(small_grid, tmp_path):
     paths = make_grass_ascii(small_grid, "t2m", file_dir=tmp_path)
     assert len(paths) == 5  # test_5_gssha.py:58-73

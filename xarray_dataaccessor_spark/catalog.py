@@ -23,8 +23,10 @@ from pathlib import Path
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from xarray_dataaccessor_spark.meta import BoundingBox, GridMeta
+from xarray_dataaccessor_spark.session import local_frame
 
 
 @dataclass
@@ -40,6 +42,11 @@ class DatasetEntry:
     #: source's partition planner.
     format: str = "parquet"
     options: dict = field(default_factory=dict)
+    #: a parquet entry's schema, inferred on its first ``load`` and
+    #: handed to every later read: parquet schema inference is a Spark
+    #: job over the footers, paid once per entry instead of per request
+    #: (``register`` builds a fresh entry, so re-registering resets it)
+    schema: StructType | None = field(default=None, repr=False, compare=False)
 
 
 @dataclass
@@ -129,21 +136,18 @@ class DatasetCatalog:
         entry = self.entries[name]
         keep = self.verify_variables(name, variables)
         df = self._scan(spark, entry, keep)
+        has_window = start_time is not None or end_time is not None
+        if has_window and entry.format == "parquet":
+            from xarray_dataaccessor_spark.operators.filters import (
+                with_partition_time_pruning,
+            )
+
+            # year=/month= directory pruning on the scan itself
+            df = with_partition_time_pruning(df, start_time, end_time)
         gf = GridFrame(df, entry.meta).select_variables(keep)
         if bbox is not None:
             gf = gf.filter_bbox(bbox)
-        if start_time is not None or end_time is not None:
-            if entry.format == "parquet":
-                from xarray_dataaccessor_spark.operators.filters import (
-                    with_partition_time_pruning,
-                )
-
-                pruned = with_partition_time_pruning(df, start_time, end_time)
-                if pruned is not df:
-                    # re-apply variable/bbox pipeline over the pruned scan
-                    gf = GridFrame(pruned, entry.meta).select_variables(keep)
-                    if bbox is not None:
-                        gf = gf.filter_bbox(bbox)
+        if has_window:
             gf = gf.filter_time(start_time, end_time)
         if resolution_factor is not None or xy_resolution_factors is not None:
             # optional regrid step of the flagship read path
@@ -157,13 +161,18 @@ class DatasetCatalog:
 
     @staticmethod
     def _scan(spark: SparkSession, entry: DatasetEntry, keep: list[str]) -> DataFrame:
-        """The entry's base scan: parquet, or a registered data source.
+        """The entry's base scan: parquet (under the schema resolved on
+        the entry's first load), or a registered data source.
         netcdf takes the variable list as one wide read; zarr reads one
         array per variable and outer-merges on the shared axes (the J1
         shape); geotiff/grib2 are single-variable formats whose output
         column is the entry's (sole) variable name."""
         if entry.format == "parquet":
-            return spark.read.parquet(entry.path)
+            if entry.schema is None:
+                df = spark.read.parquet(entry.path)
+                entry.schema = df.schema
+                return df
+            return spark.read.schema(entry.schema).parquet(entry.path)
         from xarray_dataaccessor_spark.sources.pyds import register_data_sources
 
         register_data_sources(spark)
@@ -450,7 +459,7 @@ def points_df(
     """
     if coords is not None:
         rows = [(str(i), float(lon), float(lat)) for i, (lat, lon) in enumerate(coords)]
-        return spark.createDataFrame(rows, "point_id string, lon double, lat double")
+        return local_frame(spark, rows, "point_id string, lon double, lat double")
     if csv is not None:
         df = spark.read.csv(str(csv), header=True, inferSchema=True)
         id_col = id_column if id_column and id_column in df.columns else None

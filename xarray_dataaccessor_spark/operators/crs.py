@@ -37,6 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from xarray_dataaccessor_spark.session import local_frame
+
 # WGS84 defining parameters (public: NGA/EPSG)
 WGS84_A = 6378137.0
 WGS84_F = 1.0 / 298.257223563
@@ -1579,7 +1581,7 @@ class NTv2Grid:
             (i, float(s["lat_shift"][i]), float(s["lon_shift"][i]))
             for i in range(s["nrows"] * s["ncols"])
         ]
-        return spark.createDataFrame(rows, "idx bigint, dlat double, dlon double")
+        return local_frame(spark, rows, "idx bigint, dlat double, dlon double")
 
     def apply_to_grid(
         self,

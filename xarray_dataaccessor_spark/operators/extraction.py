@@ -6,8 +6,9 @@ cell per point, then a (time x point_id) pivot, batched 100 timesteps at a
 time to bound memory.
 
 Spark design — one lazy plan, no batching:
-    broadcast(points) -> J3 nearest-cell match
-    -> equi-join the fact table on (y, x)   [broadcast hash join]
+    driver-side J3 nearest-cell snap (one axes job)
+    -> equi-join the fact table on (y, x)   [broadcast hash join against
+       the matched cells, a local relation]
     -> groupBy(time).pivot(point_id).agg(first(var))
 
 The pivot fans out only the <=N requested points (J3 pre-filters the fact
@@ -24,7 +25,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xarray_dataaccessor_spark.operators.joins import nearest_cell_match
+from xarray_dataaccessor_spark.operators.joins import snap_points
+from xarray_dataaccessor_spark.session import local_frame
 
 
 def points_to_table(
@@ -40,17 +42,19 @@ def points_to_table(
     from the point's nearest grid cell.
 
     ``points`` is a small DataFrame ``(point_id, lon, lat)``
-    (see ``catalog.points_df``); it is broadcast on both joins.
+    (see ``catalog.points_df``); it is collected, snapped to the grid on
+    the driver, and the matched cells are the broadcast side of the
+    fact join.
     """
-    # the grid feeds the two axis-distinct scans AND the fact join; the
-    # nearest-match side is tiny, so collect it once and let the fact scan
-    # be the only pass over the grid
-    matched = nearest_cell_match(points, grid, x_col=x_col, y_col=y_col)
-    cell_rows = matched.select("point_id", x_col, y_col).collect()
+    # the snap runs on the driver (one axes job, see snap_points) and the
+    # matched cells go straight into the broadcast side as a local
+    # relation, so the fact scan is the only pass over the grid's rows
+    snapped = snap_points(points, grid, x_col=x_col, y_col=y_col)
     if point_ids is None:
-        point_ids = sorted({r["point_id"] for r in cell_rows})
-    cells = grid.sparkSession.createDataFrame(
-        [(r["point_id"], r[x_col], r[y_col]) for r in cell_rows],
+        point_ids = sorted({row["point_id"] for row, _, _ in snapped})
+    cells = local_frame(
+        grid.sparkSession,
+        [(row["point_id"], x, y) for row, x, y in snapped],
         f"point_id string, {x_col} double, {y_col} double",
     )
     fact = grid.select(time_col, x_col, y_col, variable)

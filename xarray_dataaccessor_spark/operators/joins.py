@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from xarray_dataaccessor_spark.session import local_frame
+
 
 def merge_variables(
     dfs: Sequence[DataFrame],
@@ -87,6 +89,41 @@ def _nearest_1d_py(target: float, axis_vals: Sequence[float]) -> float:
     return lo if (target - lo) <= (hi - target) else hi
 
 
+def snap_points(
+    points: DataFrame,
+    grid: DataFrame,
+    x_col: str = "x",
+    y_col: str = "y",
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+) -> list[tuple]:
+    """J3 on the driver: ``(point row, nearest x, nearest y)`` for each
+    row of ``points``, snapped per axis independently (exactly the
+    reference's two 1-D argmins, ``to_tables.py:76-101``; also
+    ``ds.sel(method='nearest')``, ``to_gssha.py:563-567``).
+
+    The grid axes come from ONE ``collect_set`` aggregation pass (the
+    driver receives |xs| + |ys| values — never the O(nx*ny) cell set),
+    and the points side is user-supplied coordinates, so the per-point
+    argmin is a driver-side bisect with the tie semantics of
+    :func:`nearest_match_1d` (distance asc, then the smaller axis value):
+    one Spark job for the axes, none for the match."""
+    from xarray_dataaccessor_spark.operators.spatial import grid_axes
+
+    xs_vals, ys_vals = grid_axes(grid, x_col, y_col)
+    pt_rows = points.collect()
+    for row in pt_rows:
+        if row[lon_col] is None or row[lat_col] is None:
+            raise ValueError(
+                f"point {row.asDict()} has a NULL coordinate; drop or fill "
+                "the points table before extraction"
+            )
+    return [
+        (row, _nearest_1d_py(row[lon_col], xs_vals), _nearest_1d_py(row[lat_col], ys_vals))
+        for row in pt_rows
+    ]
+
+
 def nearest_cell_match(
     points: DataFrame,
     grid: DataFrame,
@@ -95,45 +132,15 @@ def nearest_cell_match(
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
-    """J3: snap each sample point to its nearest grid cell, per axis
-    independently (exactly the reference's two 1-D argmins,
-    ``to_tables.py:76-101``; also ``ds.sel(method='nearest')``,
-    ``to_gssha.py:563-567``).
-
-    Returns ``points`` with nearest ``(x, y)`` columns attached. The grid
-    axes are dimension-sized (thousands of distinct values for a 100 TB
-    fact table), so both sides of each match are broadcastable; the two
-    axes come from ONE ``collect_set`` aggregation pass (driver receives
-    |xs| + |ys| values — never the O(nx*ny) distinct cell set).
-    """
-    from xarray_dataaccessor_spark.operators.spatial import grid_axes
-
-    spark = grid.sparkSession
-    xs_vals, ys_vals = grid_axes(grid, x_col, y_col)
-    # the axes are already on the driver (dimension-sized by contract) and
-    # the points side is user-supplied coordinates, so the per-point argmin
-    # is a driver-side bisect — identical tie semantics to nearest_match_1d
-    # (distance asc, then smaller axis value), zero extra Spark jobs vs the
-    # four (2 crossJoin+window, 2 join) the DataFrame formulation needs.
-    pt_rows = points.collect()
-    for row in pt_rows:
-        if row[lon_col] is None or row[lat_col] is None:
-            raise ValueError(
-                f"point {row.asDict()} has a NULL coordinate; drop or fill "
-                "the points table before extraction"
-            )
-    data = [
-        row.asDict()
-        | {
-            x_col: _nearest_1d_py(row[lon_col], xs_vals),
-            y_col: _nearest_1d_py(row[lat_col], ys_vals),
-        }
-        for row in pt_rows
-    ]
+    """J3: ``points`` with the nearest grid cell's ``(x, y)`` columns
+    attached (see :func:`snap_points`), as a driver-built local
+    relation: reading it runs no job and broadcasting it starts no
+    Python worker."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     schema = StructType(
         list(points.schema)
         + [StructField(x_col, DoubleType()), StructField(y_col, DoubleType())]
     )
-    return spark.createDataFrame(data, schema)
+    snapped = snap_points(points, grid, x_col, y_col, lon_col, lat_col)
+    return local_frame(grid.sparkSession, [(*row, x, y) for row, x, y in snapped], schema)

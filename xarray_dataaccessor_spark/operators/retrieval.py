@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from xarray_dataaccessor_spark.session import local_frame
+
 # Lucene-style BM25 constants (k1, b). 1.2 / 0.75 / 0.25 spelled the
 # same way in the SQL oracle so both engines parse identical doubles.
 BM25_K1 = 1.2
@@ -92,7 +94,7 @@ def queries_df(
     rows = sorted(
         {(int(qid), w) for qid, q in queries.items() for w in q.split() if w}
     )
-    return spark.createDataFrame(rows, "query_id bigint, w string")
+    return local_frame(spark, rows, "query_id bigint, w string")
 
 
 def bm25_scores(

@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 from xarray_dataaccessor_spark.operators.cachectl import (
     tracked_local_checkpoint as _ckpt,
 )
+from xarray_dataaccessor_spark.session import local_frame
 
 RESAMPLING_KERNELS = (
     "nearest",
@@ -163,7 +164,8 @@ def _interval_map(spark, new_axis, old_axis, col, kernel):
     """Tiny per-axis interval table (broadcast side of the upsample
     join) — one row per target coordinate, so the join multiplies the
     fact table by at most the new/old axis ratio."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         interval_rows(new_axis, old_axis, kernel),
         f"src_{col} double, new_{col} double, w_{col} double, hi_{col} double",
     )
@@ -258,8 +260,8 @@ def _interval_map_multi(spark, new_axis, old_axis, col, kernels):
     for i, (src, new, _w, hi) in enumerate(per_kernel[0]):
         rows.append((src, new, *(pk[i][2] for pk in per_kernel), hi))
     weight_cols = ", ".join(f"w_{k}_{col} double" for k in kernels)
-    return spark.createDataFrame(
-        rows, f"src_{col} double, new_{col} double, {weight_cols}, hi_{col} double"
+    return local_frame(
+        spark, rows, f"src_{col} double, new_{col} double, {weight_cols}, hi_{col} double"
     )
 
 
@@ -451,11 +453,13 @@ def _resample_convolutional(df, xs, ys, fx, fy, method, value_cols, time_col, x_
     spark = df.sparkSession
     new_xs = _target_axis(xs, fx)
     new_ys = _target_axis(ys, fy)
-    tapx = spark.createDataFrame(
+    tapx = local_frame(
+        spark,
         conv_tap_rows(new_xs, xs, method, fx),
         f"src_{x_col} double, new_{x_col} double, w_{x_col} double",
     )
-    tapy = spark.createDataFrame(
+    tapy = local_frame(
+        spark,
         conv_tap_rows(new_ys, ys, method, fy),
         f"src_{y_col} double, new_{y_col} double, w_{y_col} double",
     )
@@ -895,7 +899,8 @@ def zonal_stats_bucketed(
                       for a, b, c, d in edges],
                      x0, x1, y0, y1)
                 )
-    cand = df.sparkSession.createDataFrame(
+    cand = local_frame(
+        df.sparkSession,
         cand_rows,
         "cell_x bigint, cell_y bigint, zone_id int, "
         "edges array<struct<x1:double,y1:double,x2:double,y2:double>>, "
@@ -1004,13 +1009,14 @@ def zonal_stats_weighted(
         for cx in range(math.floor(x0 / cs), math.floor(x1 / cs) + 1):
             for cy in range(math.floor(y0 / cs), math.floor(y1 / cs) + 1):
                 cand_rows.append((cx, cy, int(zid), x0, x1, y0, y1))
-    cand = df.sparkSession.createDataFrame(
+    cand = local_frame(
+        df.sparkSession,
         cand_rows,
         "cell_x bigint, cell_y bigint, zone_id int, "
         "bx0 double, bx1 double, by0 double, by1 double",
     )
-    zr = df.sparkSession.createDataFrame(
-        zone_rings, "zone_id int, rings array<array<array<double>>>"
+    zr = local_frame(
+        df.sparkSession, zone_rings, "zone_id int, rings array<array<array<double>>>"
     )
     keyed = df.select(
         *group_cols, *value_cols,

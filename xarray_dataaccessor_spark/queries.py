@@ -22,7 +22,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xarray_dataaccessor_spark.session import configure_session
+from xarray_dataaccessor_spark.session import configure_session, local_frame
 from xarray_dataaccessor_spark.sources.tables import GRID_SQL_BODY, grid_view, load
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1179,8 +1179,8 @@ def nearest_neighbor_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xarray_dataaccessor_spark.operators.joins import nearest_match_1d
 
     part = load(spark, sf_dir, "part")
-    targets = spark.createDataFrame(
-        [(100.0,), (500.5,), (999.99,), (1500.25,), (2000.0,)], "target double"
+    targets = local_frame(
+        spark, [(100.0,), (500.5,), (999.99,), (1500.25,), (2000.0,)], "target double"
     )
     out = nearest_match_1d(
         targets, part, "target", "p_retailprice", out_col="nearest_price"

@@ -30,7 +30,7 @@ from xarray_dataaccessor_spark.operators.similarity import (
 )
 from xarray_dataaccessor_spark.operators.sketch import hll_ndv_sql
 from xarray_dataaccessor_spark.queries import query
-from xarray_dataaccessor_spark.session import configure_session
+from xarray_dataaccessor_spark.session import configure_session, local_frame
 from xarray_dataaccessor_spark.sources.tables import load
 
 # ---------------------------------------------------------------------------
@@ -1367,7 +1367,8 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [("pca_comp", j, None, comp[j], None) for j in range(64)]
         + [("pca_comp", -1, None, lam, None)]
     )
-    pca_small = spark.createDataFrame(
+    pca_small = local_frame(
+        spark,
         small,
         "variant string, query_id bigint, neighbor_id bigint, "
         "cos double, rk int",
@@ -2478,7 +2479,8 @@ def similarity_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = ivf_index_drift(spark, path)
-    drift = spark.createDataFrame(
+    drift = local_frame(
+        spark,
         [
             ("drift", m, None, float(v), None)
             for m, v in enumerate(
@@ -4133,7 +4135,7 @@ def token_counts_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("w")
     )
     counters = cms_build(words, "w", w=1024, d=3)
-    probes = spark.createDataFrame([(p,) for p in _CMS_PROBES], "word string")
+    probes = local_frame(spark, [(p,) for p in _CMS_PROBES], "word string")
     tc = (
         words.filter(F.col("w").isin(list(_CMS_PROBES)))
         .groupBy("w")

@@ -14,8 +14,10 @@ from __future__ import annotations
 
 import os
 import types
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 
 def _mem_available_gib() -> float | None:
@@ -138,6 +140,42 @@ def get_spark(
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-built table (axis maps, point sets, slot inputs)
+    as a DataFrame over an Arrow ``LocalRelation`` — the one way the
+    package turns Python rows into a DataFrame.
+
+    ``spark.createDataFrame(<python list>, ddl)`` plans a ``LogicalRDD``
+    over a parallelized Python RDD: every read of it (a ``collect``, the
+    build side of a broadcast join) is a Spark job whose tasks start
+    Python workers to unpickle the rows. The same rows handed over as a
+    ``pyarrow.Table`` plan as a ``LocalRelation`` held in the driver's
+    JVM: collecting it runs no job, and broadcasting it runs a JVM-only
+    job. Measured on a 4-vCPU host, ``local[2]``, 3 rows: collect 325 ms
+    and 1 job vs 19-23 ms and 0 jobs; a broadcast join against a
+    20 000-row cached table 430-447 ms vs 172-202 ms.
+
+    ``schema`` is a DDL string or a ``StructType``; ``rows`` are
+    sequences in its field order. ``None`` is SQL null and a float NaN
+    stays NaN. A ``timestamp`` value converts as Spark's own row path
+    converts it (a naive datetime is process-local time)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    arrays = []
+    for i, (field, values) in enumerate(zip(struct.fields, columns)):
+        if isinstance(field.dataType, TimestampType):
+            values = [None if v is None else field.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, type=arrow.field(i).type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
 
 
 def ship_by_value(*modules: types.ModuleType) -> None:

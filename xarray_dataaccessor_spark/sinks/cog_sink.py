@@ -36,7 +36,7 @@ def grid_to_cog(
     :func:`grid_to_grib2`; cells absent from the grid land as the
     declared nodata."""
     spark = grid.sparkSession
-    from xarray_dataaccessor_spark.session import ship_by_value
+    from xarray_dataaccessor_spark.session import local_frame, ship_by_value
     from xarray_dataaccessor_spark.sources import geotiff as _gt
 
     ship_by_value(_gt)
@@ -58,13 +58,16 @@ def grid_to_cog(
     # GeoTIFF origin = upper-left CORNER of the upper-left pixel
     x0 = float(xs[0]) - sx / 2.0
     y0 = float(ys[0]) + sy / 2.0
-    t_map = spark.createDataFrame(
+    t_map = local_frame(
+        spark,
         [(t, i) for i, t in enumerate(times)], f"{time_col} timestamp, __ti int"
     )
-    y_map = spark.createDataFrame(
+    y_map = local_frame(
+        spark,
         [(float(v), i) for i, v in enumerate(ys)], f"{y_col} double, __yi int"
     )
-    x_map = spark.createDataFrame(
+    x_map = local_frame(
+        spark,
         [(float(v), i) for i, v in enumerate(xs)], f"{x_col} double, __xi int"
     )
     rows = (

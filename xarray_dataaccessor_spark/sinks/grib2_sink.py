@@ -46,7 +46,7 @@ def grid_to_grib2(
     grid, else quantized like every GRIB stream. Returns
     ``{"n_files": ..., "shape": ...}``."""
     spark = grid.sparkSession
-    from xarray_dataaccessor_spark.session import ship_by_value
+    from xarray_dataaccessor_spark.session import local_frame, ship_by_value
     from xarray_dataaccessor_spark.sources import grib2 as _gb
 
     ship_by_value(_gb)  # executors may lack the package
@@ -63,13 +63,16 @@ def grid_to_grib2(
         dtype="float64",
     )
     nj, ni = len(ys), len(xs)
-    t_map = spark.createDataFrame(
+    t_map = local_frame(
+        spark,
         [(t, i) for i, t in enumerate(times)], f"{time_col} timestamp, __ti int"
     )
-    y_map = spark.createDataFrame(
+    y_map = local_frame(
+        spark,
         [(float(v), i) for i, v in enumerate(ys)], f"{y_col} double, __yi int"
     )
-    x_map = spark.createDataFrame(
+    x_map = local_frame(
+        spark,
         [(float(v), i) for i, v in enumerate(xs)], f"{x_col} double, __xi int"
     )
     rows = (

@@ -1,10 +1,12 @@
 """GSSHA hydrology ASCII sinks (S9-S11, SURVEY §2.1).
 
 Output-format parity with the reference's ``ConvertToGSSHA``
-(``data_converters/to_gssha.py:240-595``); the heavy lifting (event
-filters, per-timestep collapses, pivots) runs as Spark plans and only the
+(``data_converters/to_gssha.py:240-595``); the heavy lifting (AOI and
+time filters, per-timestep collapses) runs as Spark plans and only the
 bounded final artifact (a gage network x timesteps of text) is rendered
 driver-side — same division of labor as SURVEY §2.1 S9-S11 prescribes.
+The ``.gag`` matrix is that artifact: its long rows, bounded by
+``max_gages``, reach the driver in one collect and are pivoted there.
 
 Formats (published GSSHA conventions, gsshawiki.com):
 
@@ -124,16 +126,20 @@ def make_precipitation_input(
 ) -> Path:
     """S9 ``.gag`` precipitation sink (to_gssha.py:245-362).
 
-    The wide (time x gage) matrix is computed as one Spark plan:
-    ``groupBy(time).pivot(cell)`` over the event-filtered grid; each gage
-    is a grid cell ordered by x ascending then y descending — the
-    reference's stable ``sort_values([x_dim, 'time'])`` (to_gssha.py:
+    Each gage is a grid cell, ordered by x ascending then y descending —
+    the reference's stable ``sort_values([x_dim, 'time'])`` (to_gssha.py:
     299-309) preserves the dataset's y order within each x, which for
-    ERA5-style grids is descending latitude. Only the gage-network-sized
-    result is collected; ``max_gages`` bounds that collect (a .gag file
-    is a gage *network*, not a planetary raster — the text format itself
-    puts every gage on every line).
+    ERA5-style grids is descending latitude. ``max_gages`` bounds the
+    distinct-cell collect that comes first (a .gag file is a gage
+    *network*, not a planetary raster — the text format itself puts
+    every gage on every line). The guarded AOI's long rows then arrive
+    in ONE ``toArrow`` collect: the (time x gage) matrix, the default
+    event's time extent and every event's time window are driver-side
+    work over a payload the text file repeats anyway. An absent
+    (time, cell) row and a null value both render as ``None``.
     """
+    import pyarrow as pa
+
     path = Path(file_dir) / f"{file_name}{file_suffix}"
     cell_rows = (
         grid.select(x_col, y_col).distinct().limit(max_gages + 1).collect()
@@ -148,7 +154,7 @@ def make_precipitation_input(
         ((r[x_col], r[y_col]) for r in cell_rows),
         key=lambda c: (c[0], -c[1]),
     )
-    cell_ids = [f"{cx}_{cy}" for cx, cy in cells]
+    gage_of = {c: i for i, c in enumerate(cells)}
 
     projected = _project_coords(cells, input_epsg, output_epsg)
     coord_lines = [f"NRGAG {len(cells)}"]
@@ -158,29 +164,39 @@ def make_precipitation_input(
         )
     coords_header = "\n".join(coord_lines) + "\n"
 
-    if event_intervals is None:
-        lo, hi = grid.agg(F.min(time_col), F.max(time_col)).first()
-        event_intervals = [("precipitation_event_1", lo, hi)]
+    # timestamps stay epoch microseconds on the driver; the time type's
+    # own conversions give the bounds and the rendered wall clock exactly
+    # as a Spark literal and a collected row would
+    time_type = grid.schema[time_col].dataType
+    long = grid.select(time_col, x_col, y_col, precipitation_variable).toArrow()
+    matrix: dict[int, list] = {}
+    for t, cx, cy, v in zip(
+        long.column(time_col).cast(pa.int64()).to_pylist(),
+        long.column(x_col).to_pylist(),
+        long.column(y_col).to_pylist(),
+        long.column(precipitation_variable).to_pylist(),
+    ):
+        if t is not None:
+            matrix.setdefault(t, [None] * len(cells))[gage_of[(cx, cy)]] = v
+    times = sorted(matrix)
 
-    cell_key = F.concat_ws(
-        "_", F.col(x_col).cast("string"), F.col(y_col).cast("string")
-    )
-    wide = (
-        grid.withColumn("__cell", cell_key)
-        .groupBy(time_col)
-        .pivot("__cell", cell_ids)
-        .agg(F.first(precipitation_variable))
-        .orderBy(time_col)
-    )
+    def micros(bound):
+        return None if bound is None else time_type.toInternal(to_datetime(bound))
+
+    if event_intervals is None:
+        windows = [("precipitation_event_1", min(times, default=None), max(times, default=None))]
+    else:
+        windows = [(name, micros(start), micros(end)) for name, start, end in event_intervals]
 
     event_strings: list[str] = []
-    for name, start, end in event_intervals:
-        rows = filter_time(wide, start, end, time_col=time_col).collect()
-        n_long_rows = len(rows) * len(cells)  # reference counts long rows
+    for name, lo, hi in windows:
+        # inclusive both ends, like filter_time
+        steps = [t for t in times if (lo is None or t >= lo) and (hi is None or t <= hi)]
+        n_long_rows = len(steps) * len(cells)  # reference counts long rows
         s = f"EVENT {name}\nNRPDS {n_long_rows}\n" + coords_header
-        for row in rows:
-            ts = row[time_col].strftime("%Y %m %d %H %M")
-            vals = " ".join(str(row[c]) for c in cell_ids)
+        for t in steps:
+            ts = time_type.fromInternal(t).strftime("%Y %m %d %H %M")
+            vals = " ".join(str(v) for v in matrix[t])
             s += f"{precipitation_type} {ts} {vals}\n"
         event_strings.append(s)
 

@@ -57,6 +57,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from xarray_dataaccessor_spark.session import local_frame
+
 
 def _schema_type(simple: str):
     """Manifest schema string -> StructType (the reader's .schema()
@@ -297,7 +299,7 @@ def read_versioned(
             kept.append(f)
         files = kept
     if not files:
-        return spark.createDataFrame([], m["schema"])
+        return local_frame(spark, [], m["schema"])
     paths = [os.path.join(path, "data", f["name"]) for f in files]
     # the MANIFEST schema drives the read (not a sampled file footer):
     # files written before an add_column commit are missing the new

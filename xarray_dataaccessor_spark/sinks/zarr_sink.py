@@ -93,7 +93,7 @@ def grid_to_zarr(
         raise ValueError("zarr_format must be 2 or 3")
     spark = grid.sparkSession
     import xarray_dataaccessor_spark.sinks.zarr_sink as _self
-    from xarray_dataaccessor_spark.session import ship_by_value
+    from xarray_dataaccessor_spark.session import local_frame, ship_by_value
     from xarray_dataaccessor_spark.sources import blosc as _bl
     from xarray_dataaccessor_spark.sources import zarr as _z
     from xarray_dataaccessor_spark.sources import zstd as _zs
@@ -131,13 +131,16 @@ def grid_to_zarr(
                     time_col)
 
     # broadcast value->index maps (axes are dimension-sized)
-    t_map = spark.createDataFrame(
+    t_map = local_frame(
+        spark,
         [(t.item(), i) for i, t in enumerate(times)], f"{time_col} timestamp, __ti int"
     )
-    y_map = spark.createDataFrame(
+    y_map = local_frame(
+        spark,
         [(float(v), i) for i, v in enumerate(ys)], f"{y_col} double, __yi int"
     )
-    x_map = spark.createDataFrame(
+    x_map = local_frame(
+        spark,
         [(float(v), i) for i, v in enumerate(xs)], f"{x_col} double, __xi int"
     )
     rows = (

@@ -125,13 +125,29 @@ _HDF5_MAGIC = b"\x89HDF\r\n\x1a\n"
 _LEVEL_NAMES = ("level", "lev", "plev", "pressure_level", "isobaricInhPa")
 
 
-def _expand_paths(path: str, suffixes: tuple[str, ...]) -> list[str]:
-    """A load() path -> sorted file list: file, directory, or glob."""
+#: leading bytes of a NetCDF granule: classic CDF-1/CDF-2, and the HDF5
+#: superblock of a NetCDF4 file (often named ``*.h5``/``*.hdf5``)
+_NETCDF_MAGICS = (b"CDF\x01", b"CDF\x02", _HDF5_MAGIC[:4])
+
+
+def _has_magic(path: str, magics: tuple[bytes, ...]) -> bool:
+    with open(path, "rb") as f:
+        return f.read(max(map(len, magics))).startswith(magics)
+
+
+def _expand_paths(
+    path: str, suffixes: tuple[str, ...], magics: tuple[bytes, ...] = ()
+) -> list[str]:
+    """A load() path -> sorted file list: file, directory, or glob. A
+    directory keeps the files named with one of ``suffixes`` and, when
+    ``magics`` is given, every other file that starts with one of them."""
     if os.path.isdir(path):
+        names = [os.path.join(path, f) for f in os.listdir(path)]
         out = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(suffixes)
+            p
+            for p in names
+            if os.path.isfile(p)
+            and (p.endswith(suffixes) or (magics and _has_magic(p, magics)))
         ]
     elif any(ch in path for ch in "*?["):
         out = [p for p in _glob.glob(path) if os.path.isfile(p)]
@@ -382,7 +398,7 @@ class _NetCDFReaderBase:
 
     # -- planning -----------------------------------------------------
     def _files(self) -> list[str]:
-        return _expand_paths(self.path, (".nc", ".nc4", ".cdf"))
+        return _expand_paths(self.path, (".nc", ".nc4", ".cdf"), _NETCDF_MAGICS)
 
     # -- HDF5 (NetCDF4) planning: chunk index via mmap, split on time --
     def _h5_layout(self, path: str) -> dict | None:
