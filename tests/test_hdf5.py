@@ -95,7 +95,7 @@ def test_fragment_dispatch_long_form(tmp_path):
 
 def test_mixed_generation_glob_ingest(spark, tmp_path):
     """One classic CDF granule + one NetCDF4/HDF5 granule in the same
-    glob: binaryFile + mapInPandas decode dispatches per granule on the
+    glob: binaryFile + mapInArrow decode dispatches per granule on the
     executors (parsers shipped by value — no package on worker path)."""
     t2m = _t2m()
     write_netcdf3(
@@ -184,7 +184,7 @@ def test_dense_group_links_gated(tmp_path):
     root = _ohdr_v2([(0x02, li)])
     buf = bytearray(b"\x00" * 512)
     sb = _SIG + bytes([3, 8, 8, 0]) + struct.pack(
-        "<QQQQ", 0, 0xFFFFFFFFFFFFFFFF, 512 + len(root), 48
+        "<QQQQ", 0, 0xFFFFFFFFFFFFFFFF, 512, 48
     )
     buf[: len(sb)] = sb
     buf[48 : 48 + len(root)] = root
@@ -207,3 +207,13 @@ def test_fletcher32_filter_stripped():
     assert _apply_filters(payload + b"\x00\x00\x00\x00", [(3, [])], mask=0) == payload
     # masked-out filter entries are skipped per spec
     assert _apply_filters(payload, [(3, [])], mask=1) == payload
+
+
+def test_truncated_granule_raises_through_glob_ingest(spark, tmp_path):
+    """A granule cut short of its superblock end-of-file address is
+    refused by the shared decode, not read as a shorter grid."""
+    raw = open(_era5_like_h5(tmp_path / "full.h5"), "rb").read()
+    for cut in (8, 40):
+        (tmp_path / f"cut{cut}.nc").write_bytes(raw[:-cut])
+        with pytest.raises(Exception, match="ValueError: truncated HDF5 granule"):
+            netcdf_glob_to_grid(spark, str(tmp_path / f"cut{cut}.nc"), "t2m").collect()

@@ -70,7 +70,7 @@ def test_gated_openers_raise_not_implemented(tmp_path):
     root = _ohdr_v2([(0x02, li)])
     buf = bytearray(b"\x00" * 512)
     sb = _SIG + bytes([3, 8, 8, 0]) + struct.pack(
-        "<QQQQ", 0, 0xFFFFFFFFFFFFFFFF, 512 + len(root), 48
+        "<QQQQ", 0, 0xFFFFFFFFFFFFFFFF, 512, 48
     )
     buf[: len(sb)] = sb
     buf[48 : 48 + len(root)] = root
@@ -161,11 +161,16 @@ _NODATA_CELLS = [(0, 0, 1), (1, 2, 0), (2, 1, 3)]  # (t, y, x), k = 3
 
 
 def _cube(fill):
+    """(t, y, x) cells numbered 251, 252, ... in row-major order, skipping
+    the nodata cells, which hold ``fill``: the first row reads
+    ``251, fill, 252, 253``."""
     import numpy as np
 
-    vals = 250.0 + np.arange(3 * 3 * 4, dtype="f8").reshape(3, 3, 4)
+    vals = np.full((3, 3, 4), fill, dtype="f8")
+    keep = np.ones(vals.shape, dtype=bool)
     for cell in _NODATA_CELLS:
-        vals[cell] = fill
+        keep[cell] = False
+    vals[keep] = 251.0 + np.arange(keep.sum())
     return vals
 
 
@@ -187,6 +192,33 @@ def _netcdf_granule(d):
         record_dim="time",
     )
     return str(d / "g.nc")
+
+
+def _packed_granule(d, container, nodata_attr):
+    """int16 packed as ERA5/CDS ships it: scale 0.01, offset 250, the
+    nodata cells at -32767 under ``nodata_attr`` (``_FillValue`` or
+    ``missing_value``) — the first row is stored ``100, -32767, 200,
+    300`` and decodes to ``251, null, 252, 253``."""
+    import numpy as np
+
+    from xarray_dataaccessor_spark.sources.hdf5 import write_hdf5
+    from xarray_dataaccessor_spark.sources.netcdf3 import write_netcdf3
+
+    cube = (_cube(np.nan) - 250.0) * 100
+    packed = np.where(np.isnan(cube), -32767, np.round(cube)).astype("i2")
+    attrs = {"scale_factor": 0.01, "add_offset": 250.0, nodata_attr: -32767}
+    path = str(d / "packed.nc")
+    variables = {
+        "time": (["time"], np.arange(3.0), {"units": "hours since 2020-01-01"}),
+        "y": (["y"], 40.0 + np.arange(3.0), {}),
+        "x": (["x"], -80.0 + np.arange(4.0), {}),
+        "v": (["time", "y", "x"], packed, attrs),
+    }
+    if container == "cdf":
+        write_netcdf3(path, {"time": 3, "y": 3, "x": 4}, variables, record_dim="time")
+    else:
+        write_hdf5(path, {"time": 3, "y": 3, "x": 4}, variables)
+    return path
 
 
 def _zarr_store(d):
@@ -247,7 +279,23 @@ def _catalog_zarr(spark, d):
 
 def _grid_paths():
     from xarray_dataaccessor_spark.sources import ingest
+    from xarray_dataaccessor_spark.sources.pyds import register_data_sources
 
+    def glob_packed(container, attr):
+        return lambda spark, d: ingest.netcdf_glob_to_grid(
+            spark, _packed_granule(d, container, attr), "v")
+
+    def format_packed(container, attr):
+        def read(spark, d):
+            register_data_sources(spark)
+            return spark.read.format("netcdf").load(_packed_granule(d, container, attr))
+        return read
+
+    packed = {}
+    for container in ("cdf", "h5"):
+        for attr, tag in (("_FillValue", "fill"), ("missing_value", "missing")):
+            packed[f"netcdf_glob_to_grid_packed_{tag}_{container}"] = glob_packed(container, attr)
+            packed[f"format_netcdf_packed_{tag}_{container}"] = format_packed(container, attr)
     return {
         "netcdf_glob_to_grid": lambda spark, d: ingest.netcdf_glob_to_grid(
             spark, _netcdf_granule(d), "v"),
@@ -259,14 +307,17 @@ def _grid_paths():
         "grib_glob_to_grid": lambda spark, d: ingest.grib_glob_to_grid(
             spark, _grib_file(d), "v"),
         "catalog_zarr": _catalog_zarr,
+        **packed,
     }
 
 
 @pytest.mark.parametrize("path", sorted(_grid_paths()))
 def test_grid_row_contract(spark, tmp_path, path):
     """Every decode path yields ``time timestamp, y, x, <var> double``
-    with each planted nodata cell as SQL null and no NaN: a NaN would
-    poison ``avg`` where a null is skipped."""
+    with each planted nodata cell as SQL null and no NaN — a NaN would
+    poison ``avg`` where a null is skipped — and every other cell
+    decoded to the value the fixture planted (CF-unpacked for the
+    packed NetCDF granules)."""
     from pyspark.sql import functions as F
 
     df = _grid_paths()[path](spark, tmp_path)
@@ -279,3 +330,123 @@ def test_grid_row_contract(spark, tmp_path, path):
         F.sum(F.isnan("v").cast("int")).alias("nans"),
     ).first()
     assert (got["rows"], got["nulls"], got["nans"]) == (3 * 3 * 4, len(_NODATA_CELLS), 0)
+    values = [r["v"] for r in df.filter("v IS NOT NULL").orderBy("v").collect()]
+    assert values == [251.0 + k for k in range(3 * 3 * 4 - len(_NODATA_CELLS))]
+
+
+@pytest.mark.parametrize("container", ["cdf", "h5"])
+def test_netcdf_dims_matched_by_name(spark, tmp_path, container):
+    """A variable stored ``(time, longitude, latitude)`` puts each value at
+    the ``(time, y, x)`` cell the writer gave it, through ``format("netcdf")``
+    split into several record windows and through ``netcdf_glob_to_grid``;
+    in the helper, which has no ``level`` column, a non-degenerate extra
+    dim raises a ValueError naming the variable's dims."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from xarray_dataaccessor_spark.sources.hdf5 import write_hdf5
+    from xarray_dataaccessor_spark.sources.ingest import netcdf_glob_to_grid
+    from xarray_dataaccessor_spark.sources.netcdf3 import write_netcdf3
+    from xarray_dataaccessor_spark.sources.pyds import register_data_sources
+
+    nt, nlon, nlat = 6, 4, 3
+    lats, lons = 40.0 + np.arange(nlat), -80.0 + np.arange(nlon)
+    vals = np.arange(nt * nlon * nlat, dtype="f8").reshape(nt, nlon, nlat)
+
+    def write(path, extra=None):
+        dims = {"time": nt, "longitude": nlon, "latitude": nlat}
+        variables = {
+            "time": (["time"], np.arange(nt, dtype="f8"), {"units": "hours since 2020-01-01"}),
+            "latitude": (["latitude"], lats, {}),
+            "longitude": (["longitude"], lons, {}),
+            "v": (["time", "longitude", "latitude"], vals, {}),
+        }
+        if extra:
+            dims["height"] = 2
+            variables["height"] = (["height"], np.array([2.0, 10.0]), {})
+            variables["v"] = (["time", "height", "longitude", "latitude"],
+                              np.stack([vals, vals], axis=1), {})
+        if container == "cdf":
+            write_netcdf3(path, dims, variables, record_dim="time")
+        else:
+            write_hdf5(path, dims, variables, chunks={"v": [2] * len(variables["v"][0])})
+        return path
+
+    path = write(str(tmp_path / "g.nc"))
+    register_data_sources(spark)
+    windows = (spark.read.format("netcdf")
+               .option("target_partition_bytes", 2 * nlon * nlat * 8).load(path))
+    assert windows.rdd.getNumPartitions() == nt // 2
+    want = {
+        (t, lats[j], lons[i]): vals[t, i, j]
+        for t in range(nt) for i in range(nlon) for j in range(nlat)
+    }
+    for df in (windows, netcdf_glob_to_grid(spark, path, "v")):
+        hours = ((F.unix_timestamp("time") - 1577836800) / 3600).cast("int")
+        got = {(r.t, r.y, r.x): r.v for r in df.select(hours.alias("t"), "y", "x", "v").collect()}
+        assert got == want
+
+    bad = write(str(tmp_path / "extra.nc"), extra=True)
+    with pytest.raises(Exception, match=r"ValueError: variable 'v' has dims \['time', 'height'"):
+        netcdf_glob_to_grid(spark, bad, "v").collect()
+
+
+def test_one_decoder_per_grid_format():
+    """One TIFF block decoder in the package, no NetCDF decoder in the
+    data sources (they call ``netcdf3.read_grid``), and no
+    ``format("netcdf")`` read in ``netcdf_glob_to_grid``: the Python
+    data source planner costs 0.3-0.4 s per ``load()`` and per action,
+    which the per-month backfill would pay."""
+    import ast
+    from pathlib import Path
+
+    import xarray_dataaccessor_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    trees = {p.relative_to(root).as_posix(): ast.parse(p.read_text()) for p in root.rglob("*.py")}
+    defs = [
+        (path, node)
+        for path, tree in trees.items()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef)
+    ]
+    assert [p for p, d in defs if d.name == "decode_block"] == ["sources/geotiff.py"]
+
+    pyds = trees["sources/pyds.py"]
+    names = [d.name for p, d in defs if p == "sources/pyds.py"]
+    assert [n for n in names if any(w in n for w in ("window", "whole_file", "wide"))] == []
+    imported = {
+        (node.module, a.name)
+        for node in ast.walk(pyds)
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+    }
+    assert not [m for m, _ in imported if m.endswith(".hdf5")]
+    assert not [n for _, n in imported if n.startswith("TAG_")]
+    plain = {a.name for n in ast.walk(pyds) if isinstance(n, ast.Import) for a in n.names}
+    assert "struct" not in plain  # the TIFF tag walk is geotiff.py's
+
+    (glob,) = [d for p, d in defs if p == "sources/ingest.py" and d.name == "netcdf_glob_to_grid"]
+    formats = [
+        node.args[0].value
+        for node in ast.walk(glob)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "format"
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+    ]
+    assert formats == ["binaryFile"]
+
+
+def test_netcdf_glob_to_grid_plan(spark, tmp_path):
+    """The helper is one ``binaryFile`` scan and one Python map node: no
+    Python data source scan (``BatchScan``), whose planner runs per
+    action."""
+    import re
+
+    from xarray_dataaccessor_spark.sources.ingest import netcdf_glob_to_grid
+
+    plan = plan_string(netcdf_glob_to_grid(spark, _netcdf_granule(tmp_path), "v"))
+    assert len(re.findall(r"\(\d+\) (MapInArrow|MapInPandas)", plan)) == 1, plan
+    assert "BatchScan" not in plan, plan

@@ -87,7 +87,7 @@ def test_fragment_to_pandas_long_form(tmp_path):
 
 
 def test_distributed_glob_ingest_and_catalog_query(spark, tmp_path):
-    """Two granules -> binaryFile + mapInPandas decode -> partitioned
+    """Two granules -> binaryFile + mapInArrow decode -> partitioned
     parquet landing -> pruned query; the full S1/S4 path on real bytes."""
     _era5_like_file(tmp_path / "g1.nc")
     _era5_like_file(tmp_path / "g2.nc", scale=2.0)

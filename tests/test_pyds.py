@@ -101,19 +101,21 @@ def test_write_netcdf3_single_record_var_unpadded(tmp_path):
 
 
 def test_header_only_parse_is_prefix_safe(tmp_path):
-    # a 100 KiB char attribute pushes the header past the planner's
-    # 64 KiB first read; _read_header must escalate, not mis-parse
+    # a 100 KiB char attribute pushes the header past 64 KiB; the planner
+    # parses headers through an mmap of the whole granule, so no prefix
+    # length can cut it short
     p = str(tmp_path / "bighdr.nc")
     write_netcdf3(
         p,
         {"x": 4},
         {"x": (["x"], np.arange(4.0), {"note": "z" * 100_000})},
     )
-    from xarray_dataaccessor_spark.sources.pyds import _read_header
+    from xarray_dataaccessor_spark.sources.netcdf3 import netcdf_layout
+    from xarray_dataaccessor_spark.sources.pyds import _mmap
 
-    hdr = _read_header(p)
-    assert hdr["vars"][0][0] == "x"
-    assert hdr["header_end"] > 64 * 1024
+    lay = netcdf_layout(_mmap(p))
+    assert list(lay["variables"]) == ["x"]
+    assert lay["variables"]["x"]["attrs"]["note"] == "z" * 100_000
 
 
 # ---------------------------------------------------------------------------

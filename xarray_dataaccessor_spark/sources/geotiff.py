@@ -251,8 +251,10 @@ def parse_geotiff_overviews(buf: bytes) -> list[dict]:
     return out
 
 
-def _decode_ifd(buf: bytes, bo: str, big: bool, ifd_off: int):
-    """Decode ONE IFD -> (parsed dict, next IFD offset or 0)."""
+def _ifd_tags(buf, bo: str, big: bool, ifd_off: int) -> tuple[dict, int]:
+    """Walk ONE IFD: ``({tag: values}, next IFD offset or 0)``. ``buf``
+    is the file's bytes or an mmap of it (only the IFD and its
+    out-of-line values are read)."""
     if big:
         (n_entries,) = struct.unpack(bo + "Q", buf[ifd_off : ifd_off + 8])
         entry_base, entry_len = ifd_off + 8, 20
@@ -271,7 +273,24 @@ def _decode_ifd(buf: bytes, bo: str, big: bool, ifd_off: int):
         if ftype not in _TYPE_SIZES:
             continue
         tags[tag] = _read_ifd_values(buf, bo, ftype, int(count), value_field, big)
+    next_pos = entry_base + entry_len * int(n_entries)
+    fmt = "Q" if big else "I"
+    width_b = 8 if big else 4
+    if next_pos + width_b <= len(buf):
+        (next_off,) = struct.unpack(bo + fmt, buf[next_pos : next_pos + width_b])
+    else:
+        next_off = 0
+    return tags, int(next_off)
 
+
+def _ifd_layout(tags: dict, bo: str) -> dict:
+    """The format checks and the image layout of one IFD: ``{width,
+    height, dtype, compression, predictor, tiled, tile_w, tile_h,
+    rows_per_strip, offsets, counts}`` — what :func:`decode_block`
+    needs — plus the georeferencing ``x0, dx, y0, dy`` (pixel-CENTER
+    axes ``x0 + i * dx`` and ``y0 - j * dy``; None without the GeoTIFF
+    scale and tiepoint tags), ``nodata`` and ``epsg``. Unsupported
+    input raises here, before any pixel byte is read."""
     width = int(tags[TAG_WIDTH][0])
     height = int(tags[TAG_HEIGHT][0])
     bits = int(tags.get(TAG_BITS, [32])[0])
@@ -281,6 +300,9 @@ def _decode_ifd(buf: bytes, bo: str, big: bool, ifd_off: int):
     spp = int(tags.get(TAG_SAMPLES_PER_PIXEL, [1])[0])
     if spp != 1:
         raise NotImplementedError("Multi-sample TIFFs need the geo extras (rasterio)")
+    # 1=none, 5=LZW, 8/32946=DEFLATE, 32773=PackBits. Anything else
+    # (JPEG=7, LZMA=34925, ZSTD=50000, ...) fails here with the codec
+    # named, not as an opaque zlib error deep in a decode
     if compression not in (1, 5, 8, 32773, 32946):
         raise NotImplementedError(
             f"TIFF compression {compression} unsupported (none/LZW/PackBits/DEFLATE); "
@@ -294,8 +316,6 @@ def _decode_ifd(buf: bytes, bo: str, big: bool, ifd_off: int):
             f"TIFF bits-per-sample {bits} with sample format {kind!r} "
             "unsupported (corrupt header?)"
         )
-    dtype = np.dtype(f"{bo}{kind}{bits // 8}")
-
     if predictor == 2 and kind == "f":
         # predictor 2 is INTEGER horizontal differencing; running it through
         # an int64 cumsum on float samples truncates the deltas and decodes
@@ -304,91 +324,49 @@ def _decode_ifd(buf: bytes, bo: str, big: bool, ifd_off: int):
             "TIFF predictor 2 with floating-point samples is invalid input "
             "for the built-in reader; install the geo extras (rasterio)."
         )
-
-    def decode_block(raw, rows, cols):
-        if compression == 5:
-            raw = _lzw_decode_tiff(raw)
-        elif compression == 32773:
-            raw = _packbits_decode(raw)
-        elif compression != 1:
-            # bounded inflate: a corrupt/hostile deflate stream can
-            # otherwise expand without limit before any length check
-            want = rows * cols * dtype.itemsize
-            raw = zlib.decompressobj().decompress(raw, want)
-        if predictor == 3:
-            # TIFF TechNote 3 floating-point differencing: per row the
-            # float bytes are stored plane-separated (all MSBs first,
-            # big-endian order) and byte-wise horizontally differenced;
-            # undo = byte cumsum across the row, then re-interleave
-            nb = dtype.itemsize
-            b = np.frombuffer(raw, dtype="u1", count=rows * cols * nb)
-            b = b.reshape(rows, nb * cols)
-            # byte-wise cumsum mod 256 (uint16 wraparound preserves the
-            # low byte, so any row length is safe)
-            b = np.cumsum(b.astype(np.uint16), axis=1).astype(np.uint8)
-            planes = b.reshape(rows, nb, cols)
-            inter = np.moveaxis(planes, 1, 2).reshape(rows, cols * nb)
-            return (
-                np.frombuffer(inter.tobytes(), dtype=np.dtype(f">f{nb}"))
-                .reshape(rows, cols)
-                .astype(dtype)
-            )
-        arr = np.frombuffer(raw, dtype=dtype, count=rows * cols).reshape(rows, cols)
-        if predictor == 2:
-            arr = np.cumsum(arr.astype(np.int64), axis=1, dtype=np.int64).astype(dtype)
-        elif predictor != 1:
-            raise NotImplementedError(f"TIFF predictor {predictor} unsupported")
-        return arr
-
-    if height <= 0 or width <= 0 or height * width > (1 << 28):
-        raise ValueError(
-            f"TIFF dimensions {width}x{height} invalid or beyond the "
-            "2^28-pixel sanity cap (corrupt header)"
-        )
-    data = np.zeros((height, width), dtype=dtype)
+    if predictor not in (1, 2, 3):
+        raise NotImplementedError(f"TIFF predictor {predictor} unsupported")
+    lay = {
+        "width": width,
+        "height": height,
+        "dtype": f"{bo}{kind}{bits // 8}",
+        "compression": compression,
+        "predictor": predictor,
+    }
     if TAG_TILE_OFFSETS in tags:
-        tw = int(tags[TAG_TILE_WIDTH][0])
-        th = int(tags[TAG_TILE_HEIGHT][0])
-        offsets = tags[TAG_TILE_OFFSETS]
-        counts = tags[TAG_TILE_COUNTS]
-        tiles_across = (width + tw - 1) // tw
-        for ti, (off, cnt) in enumerate(zip(offsets, counts)):
-            tile = decode_block(buf[int(off) : int(off) + int(cnt)], th, tw)
-            r0 = (ti // tiles_across) * th
-            c0 = (ti % tiles_across) * tw
-            rows = min(th, height - r0)
-            cols = min(tw, width - c0)
-            data[r0 : r0 + rows, c0 : c0 + cols] = tile[:rows, :cols]
+        lay.update(
+            tiled=True,
+            tile_w=int(tags[TAG_TILE_WIDTH][0]),
+            tile_h=int(tags[TAG_TILE_HEIGHT][0]),
+            rows_per_strip=0,
+            offsets=[int(v) for v in tags[TAG_TILE_OFFSETS]],
+            counts=[int(v) for v in tags[TAG_TILE_COUNTS]],
+        )
     else:
-        rps = int(tags.get(TAG_ROWS_PER_STRIP, [height])[0])
-        offsets = tags[TAG_STRIP_OFFSETS]
-        counts = tags[TAG_STRIP_COUNTS]
-        for si, (off, cnt) in enumerate(zip(offsets, counts)):
-            r0 = si * rps
-            rows = min(rps, height - r0)
-            data[r0 : r0 + rows] = decode_block(
-                buf[int(off) : int(off) + int(cnt)], rows, width
-            )
-    data = data.astype(data.dtype.newbyteorder("="))
+        lay.update(
+            tiled=False,
+            tile_w=0,
+            tile_h=0,
+            rows_per_strip=int(tags.get(TAG_ROWS_PER_STRIP, [height])[0]),
+            offsets=[int(v) for v in tags[TAG_STRIP_OFFSETS]],
+            counts=[int(v) for v in tags[TAG_STRIP_COUNTS]],
+        )
 
-    x_axis = y_axis = None
+    lay.update(x0=None, dx=None, y0=None, dy=None, nodata=None, epsg=None)
     if TAG_PIXEL_SCALE in tags and TAG_TIEPOINT in tags:
         sx, sy = tags[TAG_PIXEL_SCALE][0], tags[TAG_PIXEL_SCALE][1]
-        tp = tags[TAG_TIEPOINT]
-        col0, row0, _, gx, gy = tp[0], tp[1], tp[2], tp[3], tp[4]
+        col0, row0, _, gx, gy = tags[TAG_TIEPOINT][:5]
         # raster-space tiepoint is the cell's upper-left corner; centers
         # sit half a step in (GeoTIFF PixelIsArea, rasterio's xy(...,'center'))
-        x_axis = gx + (np.arange(width) - col0 + 0.5) * sx
-        y_axis = gy - (np.arange(height) - row0 + 0.5) * sy
-
-    nodata = None
+        lay.update(
+            x0=gx + (0.5 - col0) * sx, dx=float(sx),
+            y0=gy - (0.5 - row0) * sy, dy=float(sy),
+        )
     if TAG_GDAL_NODATA in tags:
         try:
-            nodata = float(str(tags[TAG_GDAL_NODATA]).strip())
+            lay["nodata"] = float(str(tags[TAG_GDAL_NODATA]).strip())
         except ValueError:
             pass
-
-    epsg = None
     if TAG_GEO_KEYS in tags:
         keys = tags[TAG_GEO_KEYS]
         # GeoKeyDirectory: header of 4 shorts, then (key, location, count,
@@ -396,26 +374,109 @@ def _decode_ifd(buf: bytes, bo: str, big: bool, ifd_off: int):
         for k in range(4, len(keys) - 3, 4):
             key_id, loc, _cnt, val = keys[k : k + 4]
             if key_id in (GEOKEY_PROJECTED_CRS, GEOKEY_GEOGRAPHIC_CRS) and loc == 0:
-                epsg = int(val)
+                lay["epsg"] = int(val)
                 if key_id == GEOKEY_PROJECTED_CRS:
                     break
-    next_pos = entry_base + entry_len * int(n_entries)
-    fmt = "Q" if big else "I"
-    width_b = 8 if big else 4
-    if next_pos + width_b <= len(buf):
-        (next_off,) = struct.unpack(bo + fmt, buf[next_pos : next_pos + width_b])
+    return lay
+
+
+def tiff_layout(buf) -> dict:
+    """:func:`_ifd_layout` of the first full-resolution image (overview
+    IFDs of a COG skipped) — the IFD chain walk only: with ``buf`` an
+    mmap, no pixel byte is read."""
+    bo, big, off = _tiff_header(buf)
+    tags, nxt = _ifd_tags(buf, bo, big, off)
+    while int(tags.get(TAG_SUBFILE_TYPE, [0])[0]) & 1 and nxt:  # overview
+        tags, nxt = _ifd_tags(buf, bo, big, nxt)
+    return _ifd_layout(tags, bo)
+
+
+def block_window(lay: dict, bi: int) -> tuple[int, int, int, int]:
+    """``(first row, first col, rows, cols)`` of strip or tile ``bi``
+    inside the image (a layout from :func:`_ifd_layout`)."""
+    if lay["tiled"]:
+        across = (lay["width"] + lay["tile_w"] - 1) // lay["tile_w"]
+        r0, c0 = (bi // across) * lay["tile_h"], (bi % across) * lay["tile_w"]
+        return r0, c0, min(lay["tile_h"], lay["height"] - r0), min(lay["tile_w"], lay["width"] - c0)
+    r0 = bi * lay["rows_per_strip"]
+    return r0, 0, min(lay["rows_per_strip"], lay["height"] - r0), lay["width"]
+
+
+def decode_block(raw: bytes, lay: dict, bi: int) -> np.ndarray:
+    """Stored strip or tile ``bi`` -> its ``(rows, cols)`` samples in the
+    file's dtype (tile padding trimmed): decompression (LZW, PackBits,
+    DEFLATE), then the horizontal (2) or floating-point (3) predictor
+    undone."""
+    _r0, _c0, rows, cols = block_window(lay, bi)
+    if lay["tiled"]:  # a tile is stored whole, padding included
+        rows_s, cols_s = lay["tile_h"], lay["tile_w"]
     else:
-        next_off = 0
+        rows_s, cols_s = rows, cols
+    dtype = np.dtype(lay["dtype"])
+    compression, predictor = lay["compression"], lay["predictor"]
+    if compression == 5:
+        raw = _lzw_decode_tiff(raw)
+    elif compression == 32773:
+        raw = _packbits_decode(raw)
+    elif compression != 1:
+        # bounded inflate: a corrupt/hostile deflate stream can
+        # otherwise expand without limit before any length check
+        raw = zlib.decompressobj().decompress(raw, rows_s * cols_s * dtype.itemsize)
+    if predictor == 3:
+        # TIFF TechNote 3 floating-point differencing: per row the
+        # float bytes are stored plane-separated (all MSBs first,
+        # big-endian order) and byte-wise horizontally differenced;
+        # undo = byte cumsum across the row, then re-interleave
+        nb = dtype.itemsize
+        b = np.frombuffer(raw, dtype="u1", count=rows_s * cols_s * nb)
+        b = b.reshape(rows_s, nb * cols_s)
+        # byte-wise cumsum mod 256 (uint16 wraparound preserves the
+        # low byte, so any row length is safe)
+        b = np.cumsum(b.astype(np.uint16), axis=1).astype(np.uint8)
+        planes = b.reshape(rows_s, nb, cols_s)
+        inter = np.moveaxis(planes, 1, 2).reshape(rows_s, cols_s * nb)
+        arr = (
+            np.frombuffer(inter.tobytes(), dtype=np.dtype(f">f{nb}"))
+            .reshape(rows_s, cols_s)
+            .astype(dtype)
+        )
+    else:
+        arr = np.frombuffer(raw, dtype=dtype, count=rows_s * cols_s).reshape(rows_s, cols_s)
+        if predictor == 2:
+            arr = np.cumsum(arr.astype(np.int64), axis=1, dtype=np.int64).astype(dtype)
+    return arr[:rows, :cols]
+
+
+def _decode_ifd(buf: bytes, bo: str, big: bool, ifd_off: int):
+    """Decode ONE IFD -> (parsed dict, next IFD offset or 0)."""
+    tags, next_off = _ifd_tags(buf, bo, big, ifd_off)
+    lay = _ifd_layout(tags, bo)
+    width, height = lay["width"], lay["height"]
+    if height <= 0 or width <= 0 or height * width > (1 << 28):
+        raise ValueError(
+            f"TIFF dimensions {width}x{height} invalid or beyond the "
+            "2^28-pixel sanity cap (corrupt header)"
+        )
+    data = np.zeros((height, width), dtype=lay["dtype"])
+    for bi, (off, cnt) in enumerate(zip(lay["offsets"], lay["counts"])):
+        r0, c0, rows, cols = block_window(lay, bi)
+        data[r0 : r0 + rows, c0 : c0 + cols] = decode_block(buf[off : off + cnt], lay, bi)
+    data = data.astype(data.dtype.newbyteorder("="))
+
+    x_axis = y_axis = None
+    if lay["x0"] is not None:
+        x_axis = lay["x0"] + np.arange(width) * lay["dx"]
+        y_axis = lay["y0"] - np.arange(height) * lay["dy"]
     return {
         "width": width,
         "height": height,
         "data": data,
         "x_axis": x_axis,
         "y_axis": y_axis,
-        "nodata": nodata,
-        "epsg": epsg,
+        "nodata": lay["nodata"],
+        "epsg": lay["epsg"],
         "subfile_type": int(tags.get(TAG_SUBFILE_TYPE, [0])[0]),
-    }, int(next_off)
+    }, next_off
 
 
 def geotiff_fragment_to_pandas(content: bytes, variable: str, year: int | None = None):

@@ -481,41 +481,63 @@ def decode_chunk_block(
     return block.reshape(cdims)
 
 
-def _read_dataset(buf: bytes, ohdr: int, addr_names: dict) -> dict:
-    lay = _read_dataset_layout(buf, ohdr, addr_names)
-    shape, attrs, dtype = lay["shape"], lay["attrs"], lay["dtype"]
-    layout = lay["layout"]
-    n = int(np.prod(shape)) if shape else 1
-    if layout[0] == "compact":
-        raw = layout[1]
-    elif layout[0] == "contiguous":
-        _, addr, size = layout
-        raw = b"\x00" * (n * lay["dt_size"]) if addr == _UNDEF else buf[addr : addr + size]
-    else:
-        full = np.zeros(shape, dtype=dtype) if shape else np.zeros((), dtype)
+def read_dataset(
+    buf: bytes, lay: dict, axis: int | None = None, lo: int = 0, hi: int | None = None
+) -> np.ndarray:
+    """Decode one dataset from its layout (:func:`parse_hdf5_layout`'s
+    per-variable dict) into a native-endian array. With ``axis`` only
+    the index window ``[lo, hi)`` along that axis is decoded: a chunked
+    dataset decodes just the chunks overlapping the window, a contiguous
+    one reads just the window's byte range when ``axis`` is 0 — with
+    ``buf`` an mmap, data pages outside the window are never touched."""
+    shape, dtype, layout = list(lay["shape"]), lay["dtype"], lay["layout"]
+    win = [range(s) for s in shape]
+    if axis is not None:
+        win[axis] = range(shape[axis])[lo:hi]
+    if layout[0] == "chunked":
+        out = np.zeros([len(w) for w in win], dtype=dtype)
         for chunk in lay["chunks"]:
-            block = decode_chunk_block(buf, lay, chunk)
-            offs = chunk[0]
-            sel = tuple(
-                slice(o, min(o + c, s))
-                for o, c, s in zip(offs, lay["chunk_dims"], shape)
-            )
-            keep = tuple(slice(0, s.stop - s.start) for s in sel)
-            full[sel] = block[keep]
-        data = full.astype(full.dtype.newbyteorder("="))
-        return {"shape": shape, "attrs": attrs, "data": data}
-    data = np.frombuffer(raw, dtype=dtype, count=n).reshape(shape)
-    return {"shape": shape, "attrs": attrs, "data": data.astype(data.dtype.newbyteorder("="))}
+            src, dst = [], []
+            for o, c, w in zip(chunk[0], lay["chunk_dims"], win):
+                a, b = max(o, w.start), min(o + c, w.stop)
+                src.append(slice(a - o, b - o))
+                dst.append(slice(a - w.start, b - w.start))
+            if all(s.stop > s.start for s in src):
+                out[tuple(dst)] = decode_chunk_block(buf, lay, chunk)[tuple(src)]
+    else:
+        n = int(np.prod(shape)) if shape else 1
+        if layout[0] == "compact":
+            raw = layout[1]
+        elif layout[1] == _UNDEF:  # never written: the fill value
+            raw = b"\x00" * (n * lay["dt_size"])
+        elif axis == 0:  # row-major: the window's rows are one byte range
+            per = n // shape[0] if shape[0] else 0
+            w, nbytes = win[0], per * dtype.itemsize
+            raw = buf[layout[1] + w.start * nbytes : layout[1] + w.stop * nbytes]
+            shape[0], n, win[0] = len(w), len(w) * per, range(len(w))
+        else:
+            raw = buf[layout[1] : layout[1] + layout[2]]
+        out = np.frombuffer(raw, dtype=dtype, count=n).reshape(shape)
+        out = out[tuple(slice(w.start, w.stop) for w in win)]
+    return out.astype(out.dtype.newbyteorder("="))
 
 
 def parse_hdf5_layout(buf: bytes) -> dict:
-    """Header-only sibling of :func:`parse_hdf5`: same
-    ``{dims, variables}`` structure, but each variable carries its
-    STORAGE LAYOUT (dtype, chunk index / contiguous extent, filter
-    pipeline) instead of decoded data — except 1-D variables
-    (coordinate axes: dimension-sized by definition), whose ``data`` IS
-    decoded so a planner can prune against axis values. With an mmap
-    ``buf`` this touches only header, B-tree, and coordinate pages.
+    """Header-only walk of a (netCDF-4-shaped) HDF5 file:
+    ``{dims, attrs, variables: {name: {dims, shape, attrs, dtype,
+    layout, filters, [chunks, chunk_dims], layout_only, [data]}}}``.
+    Each variable carries its STORAGE LAYOUT (dtype, chunk index /
+    contiguous extent, filter pipeline); 1-D variables (coordinate
+    axes: dimension-sized by definition) also carry their decoded
+    ``data`` so a planner can prune against axis values, and have
+    ``layout_only`` False. With an mmap ``buf`` this touches only
+    header, B-tree, and coordinate pages; :func:`read_dataset` decodes
+    the rest.
+
+    Dimension names come from the netCDF-4 dimension-scale convention:
+    a variable's DIMENSION_LIST attribute references the dimension-scale
+    datasets; scales themselves are 1-D coordinate variables named after
+    their dimension.
 
     A buffer shorter than the superblock's end-of-file address (the
     check libhdf5 makes at open) raises ValueError: a truncated granule
@@ -536,12 +558,10 @@ def parse_hdf5_layout(buf: bytes) -> dict:
     raw_vars: dict[str, dict] = {}
     for name, addr in children:
         lay = _read_dataset_layout(buf, addr, addr_names)
-        if len(lay["shape"]) <= 1:
-            raw_vars[name] = _read_dataset(buf, addr, addr_names) | {
-                "layout_only": False
-            }
-        else:
-            raw_vars[name] = lay | {"layout_only": True}
+        lay["layout_only"] = len(lay["shape"]) > 1
+        if not lay["layout_only"]:
+            lay["data"] = read_dataset(buf, lay)
+        raw_vars[name] = lay
     dims: dict[str, int] = {}
     out_vars: dict[str, dict] = {}
     for name, ds in raw_vars.items():
@@ -571,46 +591,19 @@ def parse_hdf5_layout(buf: bytes) -> dict:
 def parse_hdf5(buf: bytes) -> dict:
     """Parse a (netCDF-4-shaped) HDF5 file into the same structure
     :func:`netcdf3.parse_netcdf3` produces:
-    ``{dims, attrs, variables: {name: {dims, attrs, data}}}``.
-
-    Dimension names come from the netCDF-4 dimension-scale convention:
-    a variable's DIMENSION_LIST attribute references the dimension-scale
-    datasets; scales themselves are 1-D coordinate variables named after
-    their dimension."""
-    children = _root_children(buf)
-    addr_names = {addr: name for name, addr in children}
-    variables: dict[str, dict] = {}
-    for name, addr in children:
-        ds = _read_dataset(buf, addr, addr_names)
-        variables[name] = ds
-    dims: dict[str, int] = {}
-    out_vars: dict[str, dict] = {}
-    for name, ds in variables.items():
-        attrs = ds["attrs"]
-        is_scale = attrs.get("CLASS") == "DIMENSION_SCALE" or (
-            isinstance(attrs.get("NAME"), str)
-            and attrs["NAME"].startswith("This is a netCDF dimension")
-        )
-        if is_scale and len(ds["shape"]) == 1:
-            dims[name] = ds["shape"][0]
-    for name, ds in variables.items():
-        attrs = dict(ds["attrs"])
-        dl = attrs.pop("DIMENSION_LIST", None)
-        attrs.pop("REFERENCE_LIST", None)
-        attrs.pop("CLASS", None)
-        nc_name = attrs.pop("NAME", None)
-        if isinstance(nc_name, str) and nc_name.startswith("This is a netCDF dimension"):
-            pass
-        if dl is not None:
-            vdims = [refs[0] if refs else "?" for refs in dl]
-        elif name in dims:
-            vdims = [name]
-        else:
-            vdims = [f"phony_dim_{i}" for i in range(len(ds["shape"]))]
-            for i, s in enumerate(ds["shape"]):
-                dims.setdefault(vdims[i], s)
-        out_vars[name] = {"dims": vdims, "attrs": attrs, "data": ds["data"]}
-    return {"dims": dims, "attrs": {}, "variables": out_vars}
+    ``{dims, attrs, variables: {name: {dims, attrs, data}}}`` — the
+    layout walk of :func:`parse_hdf5_layout` plus a decode of every
+    layout-only variable."""
+    lay = parse_hdf5_layout(buf)
+    variables = {
+        name: {
+            "dims": v["dims"],
+            "attrs": v["attrs"],
+            "data": read_dataset(buf, v) if v["layout_only"] else v["data"],
+        }
+        for name, v in lay["variables"].items()
+    }
+    return {"dims": lay["dims"], "attrs": {}, "variables": variables}
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,11 @@ documentation): header with dim/attr/var lists, fixed-size variables at
 absolute offsets, record variables interleaved per record (with the
 single-record-variable no-padding special case). NetCDF4 files are HDF5
 containers and route through the sibling pure HDF5 reader
-(``sources/hdf5.py``) — :func:`netcdf_fragment_to_pandas` dispatches on
-the magic bytes, so both generations decode through one ingestion path.
+(``sources/hdf5.py``): :func:`netcdf_layout` dispatches on the magic
+bytes, and :func:`read_grid` — the one NetCDF decode behind
+``ingest.netcdf_glob_to_grid``, ``spark.read.format("netcdf")`` and
+:func:`netcdf_fragment_to_pandas` — reads both generations, applying CF
+packing and missing values and matching dims to axes by name.
 
 Reference parity: the reference opens granules with xarray/h5netcdf
 (``era5_from_aws.py:349-376``, ``nasa_from_LPDAAC.py:480-489``) and its
@@ -18,9 +21,11 @@ offline fixture is exactly such a classic file
 ``test_2_era5.py:131-156``). The writer here exists to build equivalent
 fixtures; the reader is the ingestion path.
 
-Everything below is stdlib ``struct`` + numpy, deliberately free of
-package-level imports so the parse function can be shipped to executors
-by value (see ``sources/ingest.py::netcdf_glob_to_grid``).
+Everything below is stdlib ``struct`` + numpy plus the sibling HDF5
+module, imported at module level, so both modules ship to executors BY
+VALUE with the decode closures (``sources/pyds.py::_ship_by_value``,
+used by ``format("netcdf")`` and ``ingest.netcdf_glob_to_grid``):
+workers need neither this package nor a NetCDF library.
 """
 
 from __future__ import annotations
@@ -29,11 +34,11 @@ import struct
 
 import numpy as np
 
-# module-level so the name ships BY VALUE with this module's functions
+# module-level so the names ship BY VALUE with this module's functions
 # (a function-local import would run on executors whose sys.path lacks
-# the package); ingest.netcdf_glob_to_grid ships both modules with
-# session.ship_by_value
-from xarray_dataaccessor_spark.sources.hdf5 import parse_hdf5 as _parse_hdf5
+# the package)
+from xarray_dataaccessor_spark.sources.hdf5 import _SIG as _HDF5_SIG
+from xarray_dataaccessor_spark.sources.hdf5 import parse_hdf5_layout, read_dataset
 
 NC_BYTE, NC_CHAR, NC_SHORT, NC_INT, NC_FLOAT, NC_DOUBLE = 1, 2, 3, 4, 5, 6
 _DTYPES = {
@@ -52,12 +57,9 @@ def _pad4(n: int) -> int:
 
 
 class _Reader:
-    def __init__(self, buf: bytes, strict: bool = False):
+    def __init__(self, buf: bytes):
         self.buf = buf
         self.pos = 0
-        # strict=True raises TruncatedHeader instead of silently reading
-        # a short slice — the header-only parser retries with more bytes
-        self.strict = strict
 
     def i4(self) -> int:
         (v,) = struct.unpack_from(">i", self.buf, self.pos)
@@ -76,10 +78,7 @@ class _Reader:
 
     def name(self) -> str:
         n = self.i4()
-        raw = self.buf[self.pos : self.pos + n]
-        if self.strict and len(raw) < n:
-            raise TruncatedHeader(self.pos + n)
-        s = raw.decode("utf-8")
+        s = self.buf[self.pos : self.pos + n].decode("utf-8")
         self.pos += n + _pad4(n)
         return s
 
@@ -87,24 +86,13 @@ class _Reader:
         dt = _DTYPES[nc_type]
         nbytes = dt.itemsize * n
         raw = self.buf[self.pos : self.pos + nbytes]
-        if self.strict and len(raw) < nbytes:
-            raise TruncatedHeader(self.pos + nbytes)
         self.pos += nbytes + _pad4(nbytes)
         if nc_type == NC_CHAR:
             return raw.decode("utf-8", errors="replace")
         return np.frombuffer(raw, dtype=dt).tolist()
 
 
-class TruncatedHeader(Exception):
-    """Header parse ran past the supplied bytes; retry with a larger
-    prefix. ``needed`` is a lower bound on the prefix length."""
-
-    def __init__(self, needed: int):
-        self.needed = needed
-        super().__init__(f"need at least {needed} header bytes")
-
-
-def parse_netcdf3_header(buf: bytes, strict: bool = False) -> dict:
+def parse_netcdf3_header(buf: bytes) -> dict:
     """Parse ONLY the classic-CDF header (no data reads) into::
 
         {"offsets64": bool, "numrecs": int, "dims": [(name, size)],
@@ -112,12 +100,9 @@ def parse_netcdf3_header(buf: bytes, strict: bool = False) -> dict:
          begin)], "stride": int, "header_end": int}
 
     ``stride`` is the record-section stride in bytes (0 when the file
-    has no record variables). With ``strict=True`` a short ``buf``
-    raises :class:`TruncatedHeader` instead of mis-parsing, so callers
-    holding only a file PREFIX (the data-source partition planner reads
-    64 KiB, not the granule) can retry with a longer prefix — this is
-    what makes partition planning O(header) instead of O(file) at
-    100 TB archive scale."""
+    has no record variables). With ``buf`` an mmap of the granule only
+    the header pages are read — what makes partition planning O(header)
+    instead of O(file) at 100 TB archive scale."""
     if buf[:4] == b"\x89HDF":
         raise NotImplementedError(
             "This is a NetCDF4 (HDF5) file; parse_netcdf3 handles classic "
@@ -127,7 +112,7 @@ def parse_netcdf3_header(buf: bytes, strict: bool = False) -> dict:
     if buf[:3] != b"CDF" or buf[3] not in (1, 2):
         raise ValueError("Not a classic NetCDF file (bad magic)")
     offsets64 = buf[3] == 2
-    r = _Reader(buf, strict=strict)
+    r = _Reader(buf)
     r.pos = 4
     numrecs = r.i4()
 
@@ -195,66 +180,93 @@ def parse_netcdf3_header(buf: bytes, strict: bool = False) -> dict:
     }
 
 
+def _classic_layout(buf) -> dict:
+    """:func:`parse_netcdf3_header` as the layout view :func:`netcdf_layout`
+    shares with HDF5 granules."""
+    hdr = parse_netcdf3_header(buf)
+    numrecs, dims = hdr["numrecs"], hdr["dims"]
+    variables = {
+        vname: {
+            "dims": [dims[i][0] for i in dimids],
+            "shape": [dims[i][1] or numrecs for i in dimids],
+            "attrs": atts,
+            "dtype": _DTYPES[nc_type],
+            "begin": begin,
+        }
+        for vname, dimids, atts, nc_type, _vsize, begin in hdr["vars"]
+    }
+    return {
+        "dims": {name: size or numrecs for name, size in dims},
+        "attrs": hdr["attrs"],
+        "variables": variables,
+        "record_dim": next((name for name, size in dims if size == 0), None),
+        "stride": hdr["stride"],
+    }
+
+
 def parse_netcdf3(buf: bytes) -> dict:
     """Parse classic NetCDF bytes into
     ``{dims, attrs, variables: {name: {dims, attrs, data}}}`` with
     native-endian numpy arrays. Raises on NetCDF4/HDF5 input."""
-    hdr = parse_netcdf3_header(buf)
-    offsets64, numrecs = hdr["offsets64"], hdr["numrecs"]
-    dims, global_atts, variables = hdr["dims"], hdr["attrs"], hdr["vars"]
-    rec_vars = [
-        v for v in variables if v[1] and dims[v[1][0]][1] == 0
-    ]
-    single_rec = len(rec_vars) == 1
-
-    out_vars = {}
-    for vname, dimids, vatts, nc_type, vsize, begin in variables:
-        dt = _DTYPES[nc_type]
-        vdims = [dims[i][0] for i in dimids]
-        shape = [dims[i][1] for i in dimids]
-        is_record = bool(dimids) and dims[dimids[0]][1] == 0
-        if not is_record:
-            count = int(np.prod(shape)) if shape else 1
-            data = np.frombuffer(buf, dtype=dt, count=count, offset=begin)
-            data = data.reshape(shape)
-        else:
-            per_rec_shape = shape[1:]
-            per_rec_count = int(np.prod(per_rec_shape)) if per_rec_shape else 1
-            per_rec_bytes = per_rec_count * dt.itemsize
-            # record stride: sum of every record variable's padded
-            # per-record size — except with exactly one record variable,
-            # where the spec drops the alignment requirement
-            if single_rec:
-                stride = per_rec_bytes
-            else:
-                stride = sum(
-                    rv[4] for rv in rec_vars
-                )  # vsize is already the padded per-record chunk
-            if numrecs and begin + (numrecs - 1) * stride + per_rec_bytes > len(buf):
-                raise ValueError(
-                    f"Record variable {vname!r} extends past the file end "
-                    f"(begin={begin}, stride={stride}, numrecs={numrecs}) — "
-                    "corrupt header or unsupported layout."
-                )
-            recs = []
-            for rec in range(numrecs):
-                off = begin + rec * stride
-                recs.append(
-                    np.frombuffer(buf, dtype=dt, count=per_rec_count, offset=off)
-                )
-            data = (
-                np.stack(recs).reshape([numrecs] + per_rec_shape)
-                if recs
-                else np.empty([0] + per_rec_shape, dtype=dt)
-            )
-        if nc_type != NC_CHAR:
-            data = data.astype(data.dtype.newbyteorder("="))
-        out_vars[vname] = {"dims": vdims, "attrs": vatts, "data": data}
-
-    dim_sizes = {
-        name: (numrecs if size == 0 else size) for name, size in dims
+    lay = _classic_layout(buf)
+    variables = {
+        name: {"dims": v["dims"], "attrs": v["attrs"], "data": read_variable(buf, lay, name)}
+        for name, v in lay["variables"].items()
     }
-    return {"dims": dim_sizes, "attrs": global_atts, "variables": out_vars}
+    return {"dims": lay["dims"], "attrs": lay["attrs"], "variables": variables}
+
+
+def netcdf_layout(buf) -> dict:
+    """Header-only view of a classic-CDF or NetCDF4/HDF5 granule (dispatch
+    on the magic bytes): ``{dims, attrs, variables: {name: {dims, shape,
+    attrs, dtype, ...}}, record_dim}``. ``record_dim`` is the dimension a
+    read window indexes: the unlimited dimension of a classic file, the
+    time dimension of an HDF5 one. With ``buf`` an mmap only header
+    pages (and, for HDF5, chunk B-tree and coordinate pages) are read."""
+    if buf[:8] != _HDF5_SIG:
+        return _classic_layout(buf)
+    lay = parse_hdf5_layout(buf)
+    tv = lay["variables"].get("time")
+    lay["record_dim"] = tv["dims"][0] if tv is not None and tv["dims"] else None
+    return lay
+
+
+def read_variable(buf, layout: dict, name: str, window=None) -> np.ndarray:
+    """One variable's values as a native-endian array (``NC_CHAR`` stays
+    bytes). With ``window = (lo, hi)`` only indices ``[lo, hi)`` of the
+    layout's ``record_dim`` are read, when the variable has that dim: a
+    classic record variable reads one strided byte range, an HDF5 one
+    only the chunks (or contiguous rows) the window overlaps."""
+    v = layout["variables"][name]
+    axis = None
+    if window is not None and layout["record_dim"] in v["dims"]:
+        axis = v["dims"].index(layout["record_dim"])
+    if "begin" not in v:  # HDF5
+        if "data" in v:  # 1-D, decoded with the layout
+            return v["data"] if axis is None else v["data"][slice(*window)]
+        return read_dataset(buf, v, axis, *(window or (0, None)))
+    dt, shape, begin = v["dtype"], list(v["shape"]), v["begin"]
+    if v["dims"] and v["dims"][0] == layout["record_dim"]:
+        lo, hi = window or (0, shape[0])
+        hi = min(hi, shape[0])
+        lo = min(lo, hi)
+        stride = layout["stride"]
+        per = int(np.prod(shape[1:])) * dt.itemsize
+        end = begin + (hi - 1) * stride + per
+        if hi > lo and end > len(buf):
+            raise ValueError(
+                f"Record variable {name!r} extends past the file end "
+                f"(begin={begin}, stride={stride}, numrecs={shape[0]}) — "
+                "corrupt header or unsupported layout."
+            )
+        start = begin + lo * stride
+        flat = np.frombuffer(buf, dtype="u1", count=max(end - start, 0), offset=start)
+        recs = np.lib.stride_tricks.as_strided(flat, (hi - lo, per), (stride, 1))
+        data = np.ascontiguousarray(recs).view(dt).reshape([hi - lo] + shape[1:])
+    else:
+        count = int(np.prod(shape))
+        data = np.frombuffer(buf, dtype=dt, count=count, offset=begin).reshape(shape)
+    return data if dt.kind == "S" else data.astype(dt.newbyteorder("="))
 
 
 def decode_time_units(values: np.ndarray, units: str) -> np.ndarray:
@@ -282,83 +294,141 @@ def decode_time_units(values: np.ndarray, units: str) -> np.ndarray:
     )
 
 
+def decode_times(values: np.ndarray, attrs: dict) -> np.ndarray:
+    """A time variable's values -> datetime64[us]: CF ``'<unit> since'``
+    units decode; without them the values are microseconds since the
+    epoch."""
+    units = attrs.get("units")
+    if isinstance(units, str) and "since" in units:
+        return decode_time_units(values, units)
+    return np.asarray(values, dtype="int64").view("datetime64[us]")
+
+
+_CF_MISSING = ("_FillValue", "missing_value")
+
+
+def cf_decode(raw: np.ndarray, attrs: dict) -> np.ndarray:
+    """CF decoding, as xarray's default open does: cells equal to
+    ``_FillValue`` or ``missing_value`` (compared in packed units) become
+    NaN, then ``scale_factor`` and ``add_offset`` apply. Output is
+    float64 (``raw`` itself when it already is: decoded in place); a
+    variable without these attributes is only cast."""
+    out = raw.astype("f8", copy=False)
+    fills = np.asarray(
+        [m for k in _CF_MISSING if k in attrs for m in np.ravel(attrs[k])], dtype="f8"
+    )
+    if fills.size:
+        if raw.dtype.kind == "f":
+            fills = fills.astype(raw.dtype)
+        out[np.isin(raw, fills)] = np.nan
+    if "scale_factor" in attrs:
+        out *= float(np.ravel(attrs["scale_factor"])[0])
+    if "add_offset" in attrs:
+        out += float(np.ravel(attrs["add_offset"])[0])
+    return out
+
+
 _X_NAMES = ("longitude", "lon", "x")
 _Y_NAMES = ("latitude", "lat", "y")
+_LEVEL_NAMES = ("level", "lev", "plev", "pressure_level", "isobaricInhPa")
 
 
-def netcdf_fragment_to_pandas(
-    content: bytes,
-    variable: str,
-    time_var: str = "time",
-    x_var: str | None = None,
-    y_var: str | None = None,
-):
-    """One granule's bytes -> long-form pandas DataFrame
-    ``(time, y, x, <variable>)`` — the reference's per-granule
-    ``xr.open_dataset(...).to_dataframe()`` shape, from the pure reader.
-    Coordinate variables are auto-detected (longitude/lon/x,
-    latitude/lat/y); CF time units are decoded when present.
-
-    Dispatches on magic bytes: classic CDF-1/CDF-2 decodes here,
-    NetCDF4 (HDF5 container) through :mod:`.hdf5` — the same dual
-    opener the reference gets from xarray's engine auto-detection."""
-    import pandas as pd
-
-    if content[:8] == b"\x89HDF\r\n\x1a\n":
-        parsed = _parse_hdf5(content)
-    else:
-        parsed = parse_netcdf3(content)
-    variables = parsed["variables"]
-    if variable not in variables:
-        raise KeyError(
-            f"Variable {variable!r} not in granule (has {sorted(variables)})"
-        )
+def grid_axes(variables: dict) -> tuple[str | None, str | None, str | None, str | None]:
+    """Names of the ``(time, level, y, x)`` coordinate variables, each
+    None when the granule has none (``time`` by name; the others by the
+    first of their conventional names present)."""
 
     def pick(cands):
-        for c in cands:
-            if c in variables:
-                return c
-        return None
+        return next((c for c in cands if c in variables), None)
 
-    x_var = x_var or pick(_X_NAMES)
-    y_var = y_var or pick(_Y_NAMES)
-    if x_var is None or y_var is None:
+    t = "time" if "time" in variables else None
+    return t, pick(_LEVEL_NAMES), pick(_Y_NAMES), pick(_X_NAMES)
+
+
+def data_variables(variables: dict) -> list[str]:
+    """Every variable that is not a coordinate axis and has at least two
+    dims (the grid cube shape)."""
+    axes = set(grid_axes(variables))
+    return [n for n, v in variables.items() if n not in axes and len(v["dims"]) >= 2]
+
+
+def read_grid(buf, variables: list[str], window=None, level: bool = False) -> dict:
+    """One granule (bytes or an mmap; classic CDF or NetCDF4/HDF5) ->
+    long-form grid columns ``time``, [``level``], ``y``, ``x`` and one
+    float64 column per variable, CF-decoded (:func:`cf_decode`: nodata
+    is NaN). ``window = (lo, hi)`` reads only those records of the
+    layout's record dim (:func:`read_variable`).
+
+    Each variable's dims are matched to the axes BY NAME, whatever
+    order they are stored in, and rows come out in (time, [level], y,
+    x) order. A size-1 extra dim is squeezed; any other extra dim (a
+    level dim when ``level`` is False) raises ValueError naming the
+    variable's dims. A variable without the time dim gets one epoch
+    time stamp."""
+    lay = netcdf_layout(buf)
+    vs = lay["variables"]
+    for v in variables:
+        if v not in vs:
+            raise KeyError(f"Variable {v!r} not in granule (has {sorted(vs)})")
+    t, lev, y, x = grid_axes(vs)
+    if y is None or x is None:
         raise ValueError("Could not detect x/y coordinate variables")
 
-    tv = variables.get(time_var)
-    times = None
-    if tv is not None:
-        units = tv["attrs"].get("units")
-        if isinstance(units, str) and "since" in units:
-            times = decode_time_units(tv["data"], units)
-        else:
-            times = np.asarray(tv["data"])
+    def dim(name):
+        return vs[name]["dims"][0] if name and vs[name]["dims"] else name
 
-    data_var = variables[variable]
-    vdims = list(data_var["dims"])
-    arr = np.asarray(data_var["data"], dtype="float64")
-    xs = np.asarray(variables[x_var]["data"], dtype="float64")
-    ys = np.asarray(variables[y_var]["data"], dtype="float64")
-    x_dim = variables[x_var]["dims"][0] if variables[x_var]["dims"] else x_var
-    y_dim = variables[y_var]["dims"][0] if variables[y_var]["dims"] else y_var
-    # squeeze size-1 extras (e.g. a level dim), then order as (t, y, x)
-    for d in list(vdims):
-        if d not in (time_var, x_dim, y_dim) and arr.shape[vdims.index(d)] == 1:
-            arr = np.squeeze(arr, axis=vdims.index(d))
-            vdims.remove(d)
-    has_time = time_var in vdims and times is not None
-    order = ([time_var] if has_time else []) + [y_dim, x_dim]
-    arr = np.transpose(arr, [vdims.index(d) for d in order])
-    if not has_time:
-        arr = arr[np.newaxis, ...]
-        times = np.asarray([np.datetime64("1970-01-01", "us")])
-    nt, ny, nx = arr.shape
-    tt = np.repeat(times[:nt], ny * nx)
-    yy = np.tile(np.repeat(ys, nx), nt)
-    xx = np.tile(xs, nt * ny)
-    return pd.DataFrame(
-        {"time": tt, "y": yy, "x": xx, variable: arr.reshape(-1)}
-    )
+    def axis(name):
+        return np.asarray(read_variable(buf, lay, name), dtype="f8").ravel()
+
+    want = [dim(t)] + ([dim(lev)] if level else []) + [dim(y), dim(x)]
+    named = [d for d in want if d]
+    cubes = []
+    for v in variables:
+        arr = cf_decode(read_variable(buf, lay, v, window), vs[v]["attrs"])
+        dims = list(vs[v]["dims"])
+        for d in [d for d in dims if d not in want]:
+            if arr.shape[dims.index(d)] != 1:
+                raise ValueError(
+                    f"variable {v!r} has dims {vs[v]['dims']}: {d!r} is not one "
+                    f"of the grid axes {named} and has more than one index"
+                )
+            arr = arr.squeeze(dims.index(d))
+            dims.remove(d)
+        if dim(t) not in dims:
+            arr, dims = arr[np.newaxis], [dim(t)] + dims
+        if set(dims) != set(want):
+            raise ValueError(
+                f"variable {v!r} has dims {vs[v]['dims']}; a grid variable needs {named}"
+            )
+        cubes.append(arr.transpose([dims.index(d) for d in want]))
+    if any(c.shape != cubes[0].shape for c in cubes):
+        raise ValueError(f"variables {variables} differ in shape")
+    if t is not None and dim(t) in vs[variables[0]]["dims"]:
+        times = decode_times(read_variable(buf, lay, t, window), vs[t]["attrs"])
+    else:
+        times = np.asarray(["1970-01-01"], dtype="datetime64[us]")
+    ys, xs = axis(y), axis(x)
+    nt, nl, ny, nx = cubes[0].shape[0], cubes[0].shape[1] if level else 1, len(ys), len(xs)
+    cols = {"time": np.repeat(times.astype("datetime64[us]"), nl * ny * nx)}
+    if level:
+        cols["level"] = np.tile(np.repeat(axis(lev), ny * nx), nt)
+    cols["y"] = np.tile(np.repeat(ys, nx), nt * nl)
+    cols["x"] = np.tile(xs, nt * nl * ny)
+    cols.update({v: c.reshape(-1) for v, c in zip(variables, cubes)})
+    return cols
+
+
+def netcdf_fragment_to_pandas(content: bytes, variable: str):
+    """One granule's bytes -> long-form pandas DataFrame
+    ``(time, y, x, <variable>)`` — the reference's per-granule
+    ``xr.open_dataset(...).to_dataframe()`` shape: :func:`read_grid`
+    over the whole granule. Classic CDF-1/CDF-2 and NetCDF4 (HDF5
+    container) both decode, dispatched on the magic bytes — the same
+    dual opener the reference gets from xarray's engine
+    auto-detection."""
+    import pandas as pd
+
+    return pd.DataFrame(read_grid(content, [variable]))
 
 
 # ---------------------------------------------------------------------------

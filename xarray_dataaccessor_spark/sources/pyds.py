@@ -17,17 +17,17 @@ unhandled, so Spark re-applies them and pruning can never change
 results, only skip I/O (the same best-effort contract as parquet
 row-group pruning).
 
-Executor-side decode reuses the engine's pure readers
-(``sources/netcdf3.py`` / ``sources/hdf5.py`` / ``sources/geotiff.py``)
-and yields Arrow record batches (the API's vectorized fast path), so
-rows never materialize one-by-one in Python.
+Executor-side decode calls the engine's pure readers —
+``netcdf3.read_grid`` (classic CDF and NetCDF4/HDF5; also behind
+``ingest.netcdf_glob_to_grid``) and ``geotiff.decode_block`` — and
+yields Arrow record batches (the API's vectorized fast path), so rows
+never materialize one-by-one in Python.
 """
 
 from __future__ import annotations
 
 import glob as _glob
 import os
-import struct
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -49,41 +49,22 @@ from pyspark.sql.datasource import (
 )
 
 from xarray_dataaccessor_spark.sources.geotiff import (
-    _TYPE_SIZES,
-    TAG_BITS,
-    TAG_COMPRESSION,
-    TAG_GDAL_NODATA,
-    TAG_HEIGHT,
-    TAG_PIXEL_SCALE,
-    TAG_PREDICTOR,
-    TAG_ROWS_PER_STRIP,
-    TAG_SAMPLE_FORMAT,
-    TAG_SAMPLES_PER_PIXEL,
-    TAG_STRIP_COUNTS,
-    TAG_STRIP_OFFSETS,
-    TAG_SUBFILE_TYPE,
-    TAG_TIEPOINT,
-    TAG_TILE_COUNTS,
-    TAG_TILE_HEIGHT,
-    TAG_TILE_OFFSETS,
-    TAG_TILE_WIDTH,
-    TAG_WIDTH,
-    _lzw_decode_tiff,
-    _packbits_decode,
+    block_window,
+    decode_block,
+    tiff_layout,
 )
 from xarray_dataaccessor_spark.sources.grib2 import parse_grib2
-from xarray_dataaccessor_spark.sources.hdf5 import (
-    decode_chunk_block,
-    parse_hdf5_layout,
-)
 from xarray_dataaccessor_spark.sources.netcdf3 import (
-    _DTYPES,
+    _LEVEL_NAMES,
     _X_NAMES,
     _Y_NAMES,
-    TruncatedHeader,
+    data_variables,
     decode_time_units,
-    netcdf_fragment_to_pandas,
-    parse_netcdf3_header,
+    decode_times,
+    grid_axes,
+    netcdf_layout,
+    read_grid,
+    read_variable,
 )
 from xarray_dataaccessor_spark.sources.zarr import (
     chunk_relpath,
@@ -121,13 +102,9 @@ __all__ = [
     "register_data_sources",
 ]
 
-_HDF5_MAGIC = b"\x89HDF\r\n\x1a\n"
-_LEVEL_NAMES = ("level", "lev", "plev", "pressure_level", "isobaricInhPa")
-
-
 #: leading bytes of a NetCDF granule: classic CDF-1/CDF-2, and the HDF5
 #: superblock of a NetCDF4 file (often named ``*.h5``/``*.hdf5``)
-_NETCDF_MAGICS = (b"CDF\x01", b"CDF\x02", _HDF5_MAGIC[:4])
+_NETCDF_MAGICS = (b"CDF\x01", b"CDF\x02", b"\x89HDF")
 
 
 def _has_magic(path: str, magics: tuple[bytes, ...]) -> bool:
@@ -198,128 +175,20 @@ def _grid_batches(
     yield from pa.table(cols).to_batches(max_chunksize=1 << 16)
 
 
-def _read_header(path: str) -> dict:
-    """Header-only parse of a classic-CDF file: read a 64 KiB prefix,
-    escalate geometrically on truncation. Never reads the data section
-    — this is the planner's O(header) contract."""
-    size = os.path.getsize(path)
-    want = min(size, 64 * 1024)
+def _mmap(path: str):
+    """A read-only map of the whole file: parsers index it like bytes,
+    and only the pages they touch are read."""
+    import mmap
+
     with open(path, "rb") as f:
-        buf = f.read(want)
-        while True:
-            try:
-                hdr = parse_netcdf3_header(buf, strict=True)
-                break
-            except (TruncatedHeader, struct.error, IndexError):
-                if len(buf) >= size:
-                    raise ValueError(
-                        f"{path}: header parse ran past the file end "
-                        "(corrupt classic-CDF header)"
-                    )
-                buf += f.read(min(size, len(buf) * 4) - len(buf))
-    hdr["file_size"] = size
-    return hdr
-
-
-def _fixed_var_data(path: str, hdr: dict, name: str) -> np.ndarray:
-    """Targeted seek-read of one FIXED (non-record) variable's values.
-    Cost is the variable's own bytes (a coordinate axis, not the cube)."""
-    dims = dict(hdr["dims"])
-    for vname, dimids, _atts, nc_type, _vsize, begin in hdr["vars"]:
-        if vname != name:
-            continue
-        shape = [hdr["dims"][i][1] for i in dimids]
-        if shape and hdr["dims"][dimids[0]][1] == 0:
-            raise ValueError(f"{name} is a record variable")
-        dt = _DTYPES[nc_type]
-        count = int(np.prod(shape)) if shape else 1
-        with open(path, "rb") as f:
-            f.seek(begin)
-            raw = f.read(count * dt.itemsize)
-        arr = np.frombuffer(raw, dtype=dt, count=count)
-        if nc_type != 2:  # NC_CHAR
-            arr = arr.astype(dt.newbyteorder("="))
-        return arr.reshape(shape)
-    raise KeyError(f"{name} not in {path} (has {[v[0] for v in hdr['vars']]})")
-
-
-def _var_entry(hdr: dict, name: str):
-    for v in hdr["vars"]:
-        if v[0] == name:
-            return v
-    raise KeyError(name)
-
-
-def _is_record(hdr: dict, entry) -> bool:
-    return bool(entry[1]) and hdr["dims"][entry[1][0]][1] == 0
-
-
-def _probe_record_time(path: str, hdr: dict, tname: str, recs: list[int]):
-    """Seek-read single time values at the given record indices (one
-    itemsize read per probe — O(probes), not O(records))."""
-    entry = _var_entry(hdr, tname)
-    dt = _DTYPES[entry[3]]
-    out = []
-    with open(path, "rb") as f:
-        for r in recs:
-            f.seek(entry[5] + r * hdr["stride"])
-            out.append(
-                np.frombuffer(f.read(dt.itemsize), dtype=dt)[0]
-            )
-    return np.asarray(out).astype(np.dtype(dt).newbyteorder("="))
-
-
-def _decode_times(values: np.ndarray, atts: dict) -> np.ndarray:
-    units = atts.get("units")
-    if isinstance(units, str) and "since" in units:
-        return decode_time_units(np.asarray(values), units)
-    # already epoch-ish numbers: interpret as microseconds since epoch
-    return np.asarray(values, dtype="int64").view("datetime64[us]")
-
-
-def _detect_axes(hdr: dict) -> tuple[str | None, str | None, str | None]:
-    names = [v[0] for v in hdr["vars"]]
-
-    def pick(cands):
-        for c in cands:
-            if c in names:
-                return c
-        return None
-
-    x = pick(_X_NAMES)
-    y = pick(_Y_NAMES)
-    t = "time" if "time" in names else None
-    return t, y, x
-
-
-def _detect_level(hdr: dict) -> str | None:
-    names = [v[0] for v in hdr["vars"]]
-    for c in _LEVEL_NAMES:
-        if c in names:
-            return c
-    return None
-
-
-def _var_dim_names(hdr: dict, entry) -> list[str]:
-    return [hdr["dims"][i][0] for i in entry[1]]
-
-
-def _data_var_names(hdr: dict) -> list[str]:
-    """Data variables = everything that is not a detected coordinate
-    axis and has >= 2 dims (the grid cube shape)."""
-    t, y, x = _detect_axes(hdr)
-    coords = {t, y, x, _detect_level(hdr)} - {None}
-    return [
-        v[0]
-        for v in hdr["vars"]
-        if v[0] not in coords and len(v[1]) >= 2
-    ]
+        return mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
 
 
 @dataclass
 class _NcPartition(InputPartition):
-    """One (granule, record-range) task. ``rec_lo``/``rec_hi`` bound
-    the record window ([0, 0) = fixed-layout or HDF5 whole file)."""
+    """One (granule, record-range) task: records ``[rec_lo, rec_hi)`` of
+    the granule's record dim (``netcdf3.netcdf_layout``), or the whole
+    granule when ``whole``."""
 
     path: str
     rec_lo: int = 0
@@ -400,178 +269,75 @@ class _NetCDFReaderBase:
     def _files(self) -> list[str]:
         return _expand_paths(self.path, (".nc", ".nc4", ".cdf"), _NETCDF_MAGICS)
 
-    # -- HDF5 (NetCDF4) planning: chunk index via mmap, split on time --
-    def _h5_layout(self, path: str) -> dict | None:
-        """Header/B-tree/coordinate-only layout parse via mmap (data
-        pages untouched). None when the granule can't be windowed
-        (no 3-D (t,y,x) shape, a construct the layout parser rejects
-        with NotImplementedError) — caller falls back to a whole-granule
-        partition. A truncated or corrupt granule raises here, at
-        planning."""
-        import mmap as _mmap
-
-        try:
-            with open(path, "rb") as f:
-                mm = _mmap.mmap(f.fileno(), 0, access=_mmap.ACCESS_READ)
-                lay = parse_hdf5_layout(mm)
-        except NotImplementedError:
-            return None
-        names = list(lay["variables"])
-
-        def pick(cands):
-            for c in cands:
-                if c in names:
-                    return c
-            return None
-
-        x, y = pick(_X_NAMES), pick(_Y_NAMES)
-        t = "time" if "time" in names else None
-        if x is None or y is None or t is None:
-            return None
-        data_vars = self.variables or [
-            n
-            for n in names
-            if n not in (t, y, x) and len(lay["variables"][n]["shape"]) >= 2
-        ]
-        for v in data_vars:
-            dv = lay["variables"].get(v)
-            if (
-                dv is None
-                or dv.get("layout_only") is not True
-                or len(dv["shape"]) != 3
-                or dv["layout"][0] not in ("chunked", "contiguous")
-            ):
-                return None  # not windowable; whole-granule fallback
-        tv = lay["variables"][t]
-        times = _decode_times(tv["data"], tv["attrs"]).astype("datetime64[us]")
-        return {
-            "lay": lay,
-            "t": t,
-            "y": y,
-            "x": x,
-            "data_vars": data_vars,
-            "times": times,
-            "ys": np.asarray(lay["variables"][y]["data"], dtype="f8").ravel(),
-            "xs": np.asarray(lay["variables"][x]["data"], dtype="f8").ravel(),
-        }
-
-    def _plan_h5_file(self, path: str) -> list[_NcPartition]:
-        g = self._h5_layout(path)
-        if g is None:
-            return [_NcPartition(path)]
-        # granule-level bbox pruning (same contract as the classic path)
-        for cname, axis in (("y", g["ys"]), ("x", g["xs"])):
-            lo, hi = _bounds_from_filters(self._filters, cname)
-            if lo is None and hi is None:
-                continue
-            if (hi is not None and float(axis.min()) > hi) or (
-                lo is not None and float(axis.max()) < lo
-            ):
-                return []
-        nt = len(g["times"])
-        if nt <= 0:
-            return [_NcPartition(path)]
-        # UNCOMPRESSED bytes per time row across requested vars -> row
-        # ranges: decoded size is what bounds task memory (the classic
-        # path's stride is likewise the unpacked record size); stored
-        # bytes would let a well-compressed granule produce one
-        # OOM-sized task
-        per_row = max(
-            1,
-            sum(
-                int(np.prod(g["lay"]["variables"][v]["shape"][1:]))
-                * g["lay"]["variables"][v]["dtype"].itemsize
-                for v in g["data_vars"]
-            ),
-        )
-        rows_per = max(1, self.target_bytes // per_row)
-        ranges = [(lo, min(lo + rows_per, nt)) for lo in range(0, nt, rows_per)]
-        # EXACT time pruning: the axis is decoded, no sortedness opt-in
-        # needed — a range survives iff any of its axis values fits
-        tlo, thi = _bounds_from_filters(self._filters, "time")
-        if tlo is not None or thi is not None:
-            us = g["times"].astype("int64")
-            kept = []
-            for lo_r, hi_r in ranges:
-                sl = us[lo_r:hi_r]
-                if thi is not None and float(sl.min()) > thi:
-                    continue
-                if tlo is not None and float(sl.max()) < tlo:
-                    continue
-                kept.append((lo_r, hi_r))
-            ranges = kept
-        if len(ranges) == 1 and ranges[0] == (0, nt):
-            return [_NcPartition(path)]
-        return [
-            _NcPartition(path, rec_lo=lo, rec_hi=hi, whole=False)
-            for lo, hi in ranges
-        ]
-
     def _plan_file(self, path: str) -> list[_NcPartition]:
-        with open(path, "rb") as f:
-            magic = f.read(8)
-        if magic == _HDF5_MAGIC:
-            return self._plan_h5_file(path)
-        hdr = _read_header(path)
-        t, y, x = _detect_axes(hdr)
-
-        # granule-level bbox pruning from pushed x/y filters: the
-        # coordinate axes are fixed variables, so this is two targeted
+        """Header-only planning (``netcdf_layout`` through an mmap; data
+        pages are never read): granule bbox pruning, then windows of
+        ~``target_partition_bytes`` of decoded values along the record
+        dim, then time pruning of the windows. A truncated or corrupt
+        granule raises here, at planning."""
+        mm = _mmap(path)
+        lay = netcdf_layout(mm)
+        vs = lay["variables"]
+        t, _lev, y, x = grid_axes(vs)
+        # granule-level bbox pruning from pushed x/y filters: two
         # axis-sized reads per granule — never the data cube
-        for cname in (y, x):
-            if cname is None:
+        for col, name in (("y", y), ("x", x)):
+            lo, hi = _bounds_from_filters(self._filters, col)
+            if name is None or (lo is None and hi is None):
                 continue
-            lo, hi = _bounds_from_filters(self._filters, "y" if cname == y else "x")
-            if lo is None and hi is None:
-                continue
-            entry = _var_entry(hdr, cname)
-            if _is_record(hdr, entry):
-                continue
-            axis = _fixed_var_data(path, hdr, cname).astype("f8")
-            if (hi is not None and float(axis.min()) > hi) or (
-                lo is not None and float(axis.max()) < lo
+            axis = np.asarray(read_variable(mm, lay, name), dtype="f8")
+            if (hi is not None and axis.min() > hi) or (
+                lo is not None and axis.max() < lo
             ):
                 return []
-
-        numrecs, stride = hdr["numrecs"], hdr["stride"]
-        if numrecs <= 0 or stride <= 0:
+        rdim = lay["record_dim"]
+        n = lay["dims"].get(rdim, 0) if rdim else 0
+        windowed = [vs[v] for v in self.variables if rdim in vs[v]["dims"]]
+        if n <= 0 or not windowed:
             return [_NcPartition(path)]
-        recs_per = max(1, self.target_bytes // max(stride, 1))
-        ranges = [
-            (lo, min(lo + recs_per, numrecs))
-            for lo in range(0, numrecs, recs_per)
-        ]
-
-        # record-range time pruning: only when time IS the record axis,
-        # bounds were pushed, and the caller vouches for CF-monotonic
-        # time (assume_sorted_time) — boundary probes alone cannot prove
-        # inner monotonicity, and pruning must never drop matching rows
+        # DECODED bytes per record across the requested vars bound task
+        # memory; stored bytes would let a well-compressed granule
+        # produce one OOM-sized task
+        per_row = sum(
+            int(np.prod(v["shape"])) // n * v["dtype"].itemsize for v in windowed
+        )
+        rows = max(1, self.target_bytes // max(per_row, 1))
+        ranges = [(lo, min(lo + rows, n)) for lo in range(0, n, rows)]
         tlo, thi = _bounds_from_filters(self._filters, "time")
-        if (
-            t is not None
-            and (tlo is not None or thi is not None)
-            and self.assume_sorted_time
-        ):
-            entry = _var_entry(hdr, t)
-            if _is_record(hdr, entry):
-                probes = sorted({r for pr in ranges for r in (pr[0], pr[1] - 1)})
-                vals = _probe_record_time(path, hdr, t, probes)
-                times = _decode_times(vals, entry[2]).astype("datetime64[us]")
-                us = times.astype("int64")
-                by_rec = dict(zip(probes, us))
-                kept = []
-                for lo_r, hi_r in ranges:
-                    lo_us, hi_us = by_rec[lo_r], by_rec[hi_r - 1]
-                    if thi is not None and lo_us > thi:
-                        continue
-                    if tlo is not None and hi_us < tlo:
-                        continue
-                    kept.append((lo_r, hi_r))
-                ranges = kept
-        if len(ranges) == 1 and ranges[0] == (0, numrecs):
+        if t is not None and rdim in vs[t]["dims"] and (tlo, thi) != (None, None):
+            bounds = self._time_bounds(mm, lay, t, ranges)
+            if bounds is not None:
+                ranges = [
+                    r
+                    for r, (first, last) in zip(ranges, bounds)
+                    if not (thi is not None and first > thi)
+                    and not (tlo is not None and last < tlo)
+                ]
+        if ranges == [(0, n)]:
             return [_NcPartition(path)]
+        return [_NcPartition(path, lo, hi, whole=False) for lo, hi in ranges]
+
+    def _time_bounds(self, mm, lay: dict, t: str, ranges: list) -> list | None:
+        """(first, last) epoch µs of each record range, or None when
+        ranges cannot be pruned. An HDF5 time axis is decoded with the
+        layout, so its bounds are exact; a classic record time is
+        probed at each range's first and last record, which bounds the
+        range only when time is CF-monotonic — the caller vouches for
+        that with ``assume_sorted_time``, since probes cannot prove
+        it, and pruning must never drop matching rows."""
+        tv = lay["variables"][t]
+
+        def us(values):
+            return decode_times(values, tv["attrs"]).astype("datetime64[us]").astype("int64")
+
+        if "data" in tv:
+            axis = us(tv["data"])
+            return [(axis[lo:hi].min(), axis[lo:hi].max()) for lo, hi in ranges]
+        if not self.assume_sorted_time:
+            return None
         return [
-            _NcPartition(path, rec_lo=lo, rec_hi=hi, whole=False)
+            (us(read_variable(mm, lay, t, (lo, lo + 1)))[0],
+             us(read_variable(mm, lay, t, (hi - 1, hi)))[0])
             for lo, hi in ranges
         ]
 
@@ -583,72 +349,32 @@ class _NetCDFReaderBase:
 
     # -- schema -------------------------------------------------------
     def infer_schema(self) -> str:
+        # header-only layout parse through an mmap: schema inference
+        # stays O(header) even for a 100 GB granule
         first = self._files()[0]
-        with open(first, "rb") as f:
-            magic = f.read(8)
-        if magic == _HDF5_MAGIC:
-            # header-only layout parse (mmap: header/B-tree/coordinate
-            # pages, no data chunks) — schema inference must stay
-            # O(header) even for a 100 GB NetCDF4 granule
-            import mmap as _mmap
-
-            with open(first, "rb") as f:
-                mm = _mmap.mmap(f.fileno(), 0, access=_mmap.ACCESS_READ)
-                parsed = parse_hdf5_layout(mm)
-            names = list(parsed["variables"])
-
-            def pick(cands):
-                for c in cands:
-                    if c in names:
-                        return c
-                return None
-
-            coords = {pick(_X_NAMES), pick(_Y_NAMES), "time"} - {None}
-            data_vars = self.variables or [
-                n
-                for n in names
-                if n not in coords and len(parsed["variables"][n]["dims"]) >= 2
-            ]
-            for n in data_vars:
-                extra = [
-                    d for d in parsed["variables"][n]["dims"][:-2]
-                    if d != "time"
-                ]
-                if extra:
-                    raise NotImplementedError(
-                        f"{first}: HDF5 variable {n!r} has extra dims "
-                        f"{extra}; pressure-level columns are supported "
-                        "for classic-CDF and zarr granules only"
-                    )
-        else:
-            hdr = _read_header(first)
-            present = {v[0] for v in hdr["vars"]}
-            missing = [v for v in self.variables if v not in present]
-            if missing:
-                # fail at schema time with the granule's inventory, not
-                # as a KeyError inside an executor task
+        vs = netcdf_layout(_mmap(first))["variables"]
+        missing = [v for v in self.variables if v not in vs]
+        if missing:
+            # fail at schema time with the granule's inventory, not
+            # as a KeyError inside an executor task
+            raise ValueError(
+                f"variables {missing} not in {first} (has {sorted(vs)})"
+            )
+        data_vars = self.variables or data_variables(vs)
+        # pressure-level detection (CDS pressure-level downloads):
+        # every chosen var must agree on carrying the level dim
+        lev = grid_axes(vs)[1]
+        if lev is not None and data_vars:
+            lev_dim = (vs[lev]["dims"] or [lev])[0]
+            has = [lev_dim in vs[v]["dims"] for v in data_vars]
+            if all(has):
+                self.level_var = lev
+            elif any(has):
                 raise ValueError(
-                    f"variables {missing} not in {first} "
-                    f"(has {sorted(present)})"
+                    f"variables mix level and non-level shapes in "
+                    f"{first}; pass an explicit 'variables' option "
+                    "with one shape"
                 )
-            data_vars = self.variables or _data_var_names(hdr)
-            # pressure-level detection (CDS pressure-level downloads):
-            # every chosen var must agree on carrying the level dim
-            lev = _detect_level(hdr)
-            if lev is not None and data_vars:
-                lev_dim = _var_dim_names(hdr, _var_entry(hdr, lev))[0]
-                has = [
-                    lev_dim in _var_dim_names(hdr, _var_entry(hdr, v))
-                    for v in data_vars
-                ]
-                if all(has):
-                    self.level_var = lev
-                elif any(has):
-                    raise ValueError(
-                        f"variables mix level and non-level shapes in "
-                        f"{first}; pass an explicit 'variables' option "
-                        "with one shape"
-                    )
         if not data_vars:
             raise ValueError(f"No data variables detected in {first}")
         self.variables = data_vars
@@ -663,193 +389,12 @@ class _NetCDFReaderBase:
 
     # -- executor-side decode ------------------------------------------
     def read_partition(self, part: _NcPartition) -> Iterator:
-        path = part.path
-        with open(path, "rb") as f:
-            magic = f.read(8)
-        if magic == _HDF5_MAGIC:
-            pdf = (
-                self._whole_file_wide(path)
-                if part.whole
-                else self._h5_window_wide(part)
-            )
-        else:
-            pdf = self._classic_window_wide(part)
-        granule = os.path.basename(path) if self.include_granule else None
-        return _grid_batches([pdf], self._columns(), granule)
-
-    def _whole_file_wide(self, path: str):
-        """HDF5 (NetCDF4) or coordless fallback: full parse, wide frame."""
-        with open(path, "rb") as f:
-            content = f.read()
-        out = None
-        for v in self.variables:
-            frag = netcdf_fragment_to_pandas(content, v)
-            if out is None:
-                out = frag
-            else:
-                out = out.merge(frag, on=["time", "y", "x"], how="outer")
-        return out
-
-    def _h5_window_wide(self, part: _NcPartition):
-        """NetCDF4/HDF5 time-window decode: mmap the granule, decode
-        ONLY the chunks (or the contiguous byte window) overlapping
-        records [rec_lo, rec_hi) per requested variable — data pages
-        outside the window are never touched."""
-        import mmap as _mmap
-
-        g = self._h5_layout(part.path)
-        if g is None:  # raced layout change; fall back to whole file
-            return self._whole_file_wide(part.path)
-        t_lo, t_hi = part.rec_lo, part.rec_hi
-        n_win = t_hi - t_lo
-        ys, xs = g["ys"], g["xs"]
-        ny, nx = len(ys), len(xs)
-        frames = {}
-        with open(part.path, "rb") as f:
-            mm = _mmap.mmap(f.fileno(), 0, access=_mmap.ACCESS_READ)
-            for v in self.variables:
-                dv = g["lay"]["variables"][v]
-                shape = dv["shape"]
-                dtype = dv["dtype"]
-                if dv["layout"][0] == "contiguous":
-                    _, addr, _size = dv["layout"]
-                    row = shape[1] * shape[2] * dtype.itemsize
-                    raw = mm[addr + t_lo * row : addr + t_hi * row]
-                    arr = np.frombuffer(raw, dtype=dtype).reshape(
-                        n_win, shape[1], shape[2]
-                    )
-                else:
-                    arr = np.zeros((n_win, shape[1], shape[2]), dtype=dtype)
-                    cdims = dv["chunk_dims"]
-                    for chunk in dv["chunks"]:
-                        offs = chunk[0]
-                        if offs[0] >= t_hi or offs[0] + cdims[0] <= t_lo:
-                            continue  # chunk outside the time window
-                        block = decode_chunk_block(mm, dv, chunk)
-                        b_lo = max(offs[0], t_lo)
-                        b_hi = min(offs[0] + cdims[0], t_hi, shape[0])
-                        sel_y = slice(offs[1], min(offs[1] + cdims[1], shape[1]))
-                        sel_x = slice(offs[2], min(offs[2] + cdims[2], shape[2]))
-                        arr[
-                            b_lo - t_lo : b_hi - t_lo, sel_y, sel_x
-                        ] = block[
-                            b_lo - offs[0] : b_hi - offs[0],
-                            : sel_y.stop - sel_y.start,
-                            : sel_x.stop - sel_x.start,
-                        ]
-                frames[v] = np.ascontiguousarray(arr).astype("f8")
-        times = g["times"][t_lo:t_hi]
-        return {
-            "time": np.repeat(times, ny * nx),
-            "y": np.tile(np.repeat(ys, nx), n_win),
-            "x": np.tile(xs, n_win * ny),
-            **{v: a.reshape(-1) for v, a in frames.items()},
-        }
-
-    def _classic_window_wide(self, part: _NcPartition):
-        """Classic CDF: decode ONLY this partition's record window via
-        one contiguous seek-read of ``(rec_hi-rec_lo) * stride`` bytes
-        (plus axis-sized coordinate reads)."""
-        path = part.path
-        hdr = _read_header(path)
-        t, yname, xname = _detect_axes(hdr)
-        if yname is None or xname is None:
-            return self._whole_file_wide(path)
-        numrecs, stride = hdr["numrecs"], hdr["stride"]
-        rec_lo, rec_hi = (
-            (0, numrecs) if part.whole else (part.rec_lo, part.rec_hi)
+        window = None if part.whole else (part.rec_lo, part.rec_hi)
+        cols = read_grid(
+            _mmap(part.path), self.variables, window, self.level_var is not None
         )
-
-        ys = _fixed_var_data(path, hdr, yname).astype("f8").ravel()
-        xs = _fixed_var_data(path, hdr, xname).astype("f8").ravel()
-        ny, nx = len(ys), len(xs)
-
-        rec_entries = [v for v in hdr["vars"] if _is_record(hdr, v)]
-        window = None
-        rec_base = min((v[5] for v in rec_entries), default=0)
-        n_win = rec_hi - rec_lo
-        if rec_entries and n_win > 0:
-            with open(path, "rb") as f:
-                f.seek(rec_base + rec_lo * stride)
-                window = np.frombuffer(
-                    f.read(n_win * stride), dtype="u1"
-                ).reshape(n_win, stride)
-
-        def record_var_values(entry) -> np.ndarray:
-            dt = _DTYPES[entry[3]]
-            per_shape = [hdr["dims"][i][1] for i in entry[1][1:]]
-            per_count = int(np.prod(per_shape)) if per_shape else 1
-            off = entry[5] - rec_base
-            chunk = window[:, off : off + per_count * dt.itemsize]
-            return (
-                np.ascontiguousarray(chunk)
-                .view(dt)
-                .astype(np.dtype(dt).newbyteorder("="))
-                .reshape([n_win] + per_shape)
-            )
-
-        # time axis for the window
-        if t is not None:
-            entry = _var_entry(hdr, t)
-            if _is_record(hdr, entry):
-                tvals = record_var_values(entry).ravel()
-            else:
-                tvals = _fixed_var_data(path, hdr, t).ravel()[rec_lo:rec_hi] \
-                    if numrecs else _fixed_var_data(path, hdr, t).ravel()
-            times = _decode_times(tvals, entry[2]).astype("datetime64[us]")
-        else:
-            times = np.asarray([np.datetime64("1970-01-01", "us")])
-
-        levels = None
-        if self.level_var:
-            levels = (
-                _fixed_var_data(path, hdr, self.level_var).astype("f8").ravel()
-            )
-        nlev = len(levels) if levels is not None else 1
-
-        frames = {}
-        nt = None
-        for v in self.variables:
-            entry = _var_entry(hdr, v)
-            if _is_record(hdr, entry):
-                arr = record_var_values(entry)
-            else:
-                # fixed data cube (no record dim): decode whole, one task
-                arr = _fixed_var_data(path, hdr, v)
-                if arr.ndim == 2 or (self.level_var and arr.ndim == 3):
-                    arr = arr[np.newaxis, ...]
-            # target rank: 4 with a level column, else 3 — squeeze
-            # size-1 extras beyond that (e.g. a degenerate height dim)
-            want = 4 if self.level_var else 3
-            while arr.ndim > want:
-                ax = next(
-                    (i for i in range(1, arr.ndim) if arr.shape[i] == 1), None
-                )
-                if ax is None:
-                    raise ValueError(
-                        f"{v}: >{want} non-degenerate dims unsupported "
-                        f"(shape {arr.shape})"
-                    )
-                arr = np.squeeze(arr, axis=ax)
-            if arr.ndim == 2:
-                arr = arr[np.newaxis, ...]
-            if self.level_var and arr.ndim == 3:
-                arr = arr[:, np.newaxis, ...]
-            frames[v] = arr.astype("f8")
-            nt = arr.shape[0] if nt is None else nt
-
-        nt = nt or 1
-        times = (
-            times[:nt]
-            if len(times) >= nt
-            else np.resize(times, nt)
-        )
-        cols = {"time": np.repeat(times, nlev * ny * nx)}
-        if self.level_var:
-            cols["level"] = np.tile(np.repeat(levels, ny * nx), nt)
-        cols["y"] = np.tile(np.repeat(ys, nx), nt * nlev)
-        cols["x"] = np.tile(xs, nt * nlev * ny)
-        return {**cols, **{v: a.reshape(-1) for v, a in frames.items()}}
+        granule = os.path.basename(part.path) if self.include_granule else None
+        return _grid_batches([cols], self._columns(), granule)
 
 
 class _NetCDFBatchReader(_NetCDFReaderBase, DataSourceReader):
@@ -988,189 +533,26 @@ class NetCDFDataSource(DataSource):
 @dataclass
 class _TiffPartition(InputPartition):
     """One (file, block-range) task with everything read() needs to
-    decode WITHOUT re-walking the IFD: per-block byte ranges and the
-    grid geometry. Offsets/counts lists are block-counted (a few ints
-    per strip/tile), not data-sized."""
+    decode WITHOUT re-walking the IFD: the image ``layout``
+    (:func:`_tiff_layout` — per-block byte ranges and the grid
+    geometry; block-counted lists, not data-sized)."""
 
     path: str
     block_ids: list[int] = field(default_factory=list)
-    # layout
-    width: int = 0
-    height: int = 0
-    dtype: str = "f8"
-    compression: int = 1
-    predictor: int = 1
-    tiled: bool = False
-    tile_w: int = 0
-    tile_h: int = 0
-    rows_per_strip: int = 0
-    offsets: list[int] = field(default_factory=list)
-    counts: list[int] = field(default_factory=list)
-    x0: float = 0.0
-    dx: float = 1.0
-    y0: float = 0.0
-    dy: float = 1.0
-    nodata: float | None = None
+    layout: dict = field(default_factory=dict)
     year: int | None = None
 
 
 def _tiff_layout(path: str) -> dict:
-    """Header/IFD-only TIFF walk with SEEKS — never reads pixel data.
-    Returns block geometry + byte ranges + geotransform for the first
-    full-resolution IFD."""
-    with open(path, "rb") as f:
-        head = f.read(16)
-        if head[:2] in (b"II", b"MM"):
-            bo = "<" if head[:2] == b"II" else ">"
-        else:
-            raise ValueError(f"{path}: not a TIFF")
-        (magic,) = struct.unpack(bo + "H", head[2:4])
-        big = magic == 43
-        if big:
-            (ifd_off,) = struct.unpack(bo + "Q", head[8:16])
-        elif magic == 42:
-            (ifd_off,) = struct.unpack(bo + "I", head[4:8])
-        else:
-            raise ValueError(f"{path}: bad TIFF magic {magic}")
-
-        def read_at(off: int, n: int) -> bytes:
-            f.seek(off)
-            return f.read(n)
-
-        _unpack_fmt = {
-            1: "B", 2: "c", 3: "H", 4: "I", 5: "II", 6: "b",
-            8: "h", 9: "i", 11: "f", 12: "d", 16: "Q", 17: "q",
-        }
-
-        def values(ftype: int, count: int, value_field: bytes):
-            size = _TYPE_SIZES[ftype] * count
-            inline = 8 if big else 4
-            if size <= inline:
-                raw = value_field[:size]
-            else:
-                (off,) = struct.unpack(
-                    bo + ("Q" if big else "I"), value_field
-                )
-                raw = read_at(off, size)
-            if ftype == 2:
-                return raw.rstrip(b"\x00").decode("ascii", errors="replace")
-            if ftype == 5:  # RATIONAL pairs
-                ints = struct.unpack(bo + "I" * (2 * count), raw)
-                return [
-                    ints[2 * i] / (ints[2 * i + 1] or 1) for i in range(count)
-                ]
-            fmt = _unpack_fmt[ftype]
-            return list(struct.unpack(bo + fmt * count, raw))
-
-        while True:
-            if big:
-                (n_entries,) = struct.unpack(bo + "Q", read_at(ifd_off, 8))
-                entry_base, entry_len = ifd_off + 8, 20
-            else:
-                (n_entries,) = struct.unpack(bo + "H", read_at(ifd_off, 2))
-                entry_base, entry_len = ifd_off + 2, 12
-            blob = read_at(entry_base, entry_len * int(n_entries) + 8)
-            tags: dict[int, object] = {}
-            for i in range(int(n_entries)):
-                e = blob[entry_len * i : entry_len * (i + 1)]
-                if big:
-                    tag, ftype, count = struct.unpack(bo + "HHQ", e[:12])
-                    vf = e[12:20]
-                else:
-                    tag, ftype, count = struct.unpack(bo + "HHI", e[:8])
-                    vf = e[8:12]
-                if ftype in _TYPE_SIZES:
-                    tags[tag] = values(ftype, int(count), vf)
-            subfile = int(tags.get(TAG_SUBFILE_TYPE, [0])[0])
-            next_pos = entry_base + entry_len * int(n_entries)
-            nxt_raw = blob[
-                entry_len * int(n_entries) : entry_len * int(n_entries)
-                + (8 if big else 4)
-            ]
-            next_off = (
-                struct.unpack(bo + ("Q" if big else "I"), nxt_raw)[0]
-                if len(nxt_raw) >= (8 if big else 4)
-                else 0
-            )
-            if subfile & 1 and next_off:  # reduced-resolution overview
-                ifd_off = int(next_off)
-                continue
-            break
-
-    width = int(tags[TAG_WIDTH][0])
-    height = int(tags[TAG_HEIGHT][0])
-    bits = int(tags.get(TAG_BITS, [32])[0])
-    sample_format = int(tags.get(TAG_SAMPLE_FORMAT, [1])[0])
-    spp = int(tags.get(TAG_SAMPLES_PER_PIXEL, [1])[0])
-    if spp != 1:
-        raise NotImplementedError(
-            "Multi-sample TIFFs need the geo extras (rasterio)"
-        )
-    kind = {1: "u", 2: "i", 3: "f"}.get(sample_format)
-    if kind is None:
-        raise NotImplementedError(
-            f"TIFF sample format {sample_format} unsupported"
-        )
-    compression = int(tags.get(TAG_COMPRESSION, [1])[0])
-    # 1=none, 5=LZW, 8/32946=DEFLATE, 32773=PackBits. Anything else
-    # (JPEG=7, LZMA=34925, ZSTD=50000, ...) must fail HERE at planning
-    # time with the codec named, not as an opaque zlib error deep in an
-    # executor task.
-    if compression not in (1, 5, 8, 32773, 32946):
-        raise NotImplementedError(
-            f"TIFF compression {compression} unsupported "
-            "(supported: 1=none, 5=LZW, 8/32946=DEFLATE, 32773=PackBits)"
-        )
-    predictor = int(tags.get(TAG_PREDICTOR, [1])[0])
-    if predictor == 2 and kind == "f":
-        # integer differencing on float samples decodes garbage
-        raise NotImplementedError(
-            "TIFF predictor 2 with floating-point samples is invalid input"
-        )
-    out = {
-        "width": width,
-        "height": height,
-        "dtype": f"{bo}{kind}{bits // 8}",
-        "compression": compression,
-        "predictor": predictor,
-    }
-    if TAG_TILE_OFFSETS in tags:
-        out.update(
-            tiled=True,
-            tile_w=int(tags[TAG_TILE_WIDTH][0]),
-            tile_h=int(tags[TAG_TILE_HEIGHT][0]),
-            rows_per_strip=0,
-            offsets=[int(v) for v in tags[TAG_TILE_OFFSETS]],
-            counts=[int(v) for v in tags[TAG_TILE_COUNTS]],
-        )
-    else:
-        out.update(
-            tiled=False,
-            tile_w=0,
-            tile_h=0,
-            rows_per_strip=int(tags.get(TAG_ROWS_PER_STRIP, [height])[0]),
-            offsets=[int(v) for v in tags[TAG_STRIP_OFFSETS]],
-            counts=[int(v) for v in tags[TAG_STRIP_COUNTS]],
-        )
-    if TAG_PIXEL_SCALE not in tags or TAG_TIEPOINT not in tags:
+    """``geotiff.tiff_layout`` of the first full-resolution image, read
+    through an mmap (IFD pages only — never pixel data). A raster
+    without GeoTIFF georeferencing is refused."""
+    lay = tiff_layout(_mmap(path))
+    if lay["x0"] is None:
         raise ValueError(
             f"{path}: TIFF lacks GeoTIFF georeferencing (scale + tiepoint)"
         )
-    sx, sy = tags[TAG_PIXEL_SCALE][0], tags[TAG_PIXEL_SCALE][1]
-    tp = tags[TAG_TIEPOINT]
-    col0, row0, _, gx, gy = tp[0], tp[1], tp[2], tp[3], tp[4]
-    out["x0"] = gx + (0 - col0 + 0.5) * sx
-    out["dx"] = float(sx)
-    out["y0"] = gy - (0 - row0 + 0.5) * sy
-    out["dy"] = float(sy)
-    nodata = None
-    if TAG_GDAL_NODATA in tags:
-        try:
-            nodata = float(str(tags[TAG_GDAL_NODATA]).strip())
-        except ValueError:
-            pass
-    out["nodata"] = nodata
-    return out
+    return lay
 
 
 class _GeoTIFFReader(DataSourceReader):
@@ -1215,19 +597,25 @@ class _GeoTIFFReader(DataSourceReader):
         self, lay: dict, bi: int
     ) -> tuple[float, float, float, float]:
         """(ymin, ymax, xmin, xmax) of one block's cell centers."""
-        if lay["tiled"]:
-            across = (lay["width"] + lay["tile_w"] - 1) // lay["tile_w"]
-            r0 = (bi // across) * lay["tile_h"]
-            c0 = (bi % across) * lay["tile_w"]
-            rows = min(lay["tile_h"], lay["height"] - r0)
-            cols = min(lay["tile_w"], lay["width"] - c0)
-        else:
-            r0, c0 = bi * lay["rows_per_strip"], 0
-            rows = min(lay["rows_per_strip"], lay["height"] - r0)
-            cols = lay["width"]
+        r0, c0, rows, cols = block_window(lay, bi)
         ys = (lay["y0"] - r0 * lay["dy"], lay["y0"] - (r0 + rows - 1) * lay["dy"])
         xs = (lay["x0"] + c0 * lay["dx"], lay["x0"] + (c0 + cols - 1) * lay["dx"])
         return min(ys), max(ys), min(xs), max(xs)
+
+    def _group(self, path: str, lay: dict, blocks) -> list[_TiffPartition]:
+        """Block ids -> tasks of ~``target_partition_bytes`` stored bytes."""
+        parts: list[_TiffPartition] = []
+        group: list[int] = []
+        acc = 0
+        for bi in blocks:
+            group.append(bi)
+            acc += lay["counts"][bi]
+            if acc >= self.target_bytes:
+                parts.append(_TiffPartition(path, group, lay, self.year))
+                group, acc = [], 0
+        if group:
+            parts.append(_TiffPartition(path, group, lay, self.year))
+        return parts
 
     def partitions(self) -> list[InputPartition]:
         ylo, yhi = _bounds_from_filters(self._filters, "y")
@@ -1235,9 +623,8 @@ class _GeoTIFFReader(DataSourceReader):
         parts: list[_TiffPartition] = []
         for path in self._files():
             lay = _tiff_layout(path)
-            n_blocks = len(lay["offsets"])
             keep: list[int] = []
-            for bi in range(n_blocks):
+            for bi in range(len(lay["offsets"])):
                 if ylo is not None or yhi is not None or xlo is not None or xhi is not None:
                     bymin, bymax, bxmin, bxmax = self._block_extent(lay, bi)
                     if yhi is not None and bymin > yhi:
@@ -1249,108 +636,35 @@ class _GeoTIFFReader(DataSourceReader):
                     if xlo is not None and bxmax < xlo:
                         continue
                 keep.append(bi)
-            # group pruned block list into ~target_bytes tasks
-            group: list[int] = []
-            acc = 0
-            for bi in keep:
-                group.append(bi)
-                acc += lay["counts"][bi]
-                if acc >= self.target_bytes:
-                    parts.append(
-                        _TiffPartition(
-                            path, block_ids=group, year=self.year, **lay
-                        )
-                    )
-                    group, acc = [], 0
-            if group:
-                parts.append(
-                    _TiffPartition(path, block_ids=group, year=self.year, **lay)
-                )
-        return parts or [
-            _TiffPartition(
-                self._files()[0],
-                block_ids=[],
-                year=self.year,
-                **_tiff_layout(self._files()[0]),
-            )
-        ]
+            parts.extend(self._group(path, lay, keep))
+        return parts or [_TiffPartition("")]
 
     def read(self, partition: _TiffPartition) -> Iterator:
-        import zlib
-
-        lay = partition
-        dtype = np.dtype(lay.dtype)
-        bo = lay.dtype[0]
-
-        def decode_block(raw: bytes, rows: int, cols: int) -> np.ndarray:
-            if lay.compression == 5:
-                raw = _lzw_decode_tiff(raw)
-            elif lay.compression == 32773:
-                raw = _packbits_decode(raw)
-            elif lay.compression != 1:
-                want = rows * cols * dtype.itemsize
-                raw = zlib.decompressobj().decompress(raw, want)
-            if lay.predictor == 3:
-                nb = dtype.itemsize
-                b = np.frombuffer(raw, dtype="u1", count=rows * cols * nb)
-                b = b.reshape(rows, nb * cols)
-                b = np.cumsum(b.astype(np.uint16), axis=1).astype(np.uint8)
-                planes = b.reshape(rows, nb, cols)
-                inter = np.moveaxis(planes, 1, 2).reshape(rows, cols * nb)
-                return (
-                    np.frombuffer(inter.tobytes(), dtype=np.dtype(f">f{nb}"))
-                    .reshape(rows, cols)
-                    .astype(dtype)
-                )
-            arr = np.frombuffer(raw, dtype=dtype, count=rows * cols).reshape(
-                rows, cols
-            )
-            if lay.predictor == 2:
-                arr = np.cumsum(
-                    arr.astype(np.int64), axis=1, dtype=np.int64
-                ).astype(dtype)
-            elif lay.predictor != 1:
-                raise NotImplementedError(
-                    f"TIFF predictor {lay.predictor} unsupported"
-                )
-            return arr
-
+        lay = partition.layout
         stamp = np.datetime64(
-            f"{lay.year}-01-01" if lay.year else "1970-01-01", "us"
+            f"{partition.year}-01-01" if partition.year else "1970-01-01", "us"
         )
+        mm = _mmap(partition.path) if partition.block_ids else None
         frames = []
-        with open(lay.path, "rb") as f:
-            for bi in lay.block_ids:
-                f.seek(lay.offsets[bi])
-                raw = f.read(lay.counts[bi])
-                if lay.tiled:
-                    across = (lay.width + lay.tile_w - 1) // lay.tile_w
-                    r0 = (bi // across) * lay.tile_h
-                    c0 = (bi % across) * lay.tile_w
-                    rows = min(lay.tile_h, lay.height - r0)
-                    cols = min(lay.tile_w, lay.width - c0)
-                    block = decode_block(raw, lay.tile_h, lay.tile_w)[
-                        :rows, :cols
-                    ]
-                else:
-                    r0, c0 = bi * lay.rows_per_strip, 0
-                    rows = min(lay.rows_per_strip, lay.height - r0)
-                    cols = lay.width
-                    block = decode_block(raw, rows, cols)
-                vals = block.astype("f8")
-                if lay.nodata is not None:
-                    vals = np.where(vals == lay.nodata, np.nan, vals)
-                ys = lay.y0 - (r0 + np.arange(rows)) * lay.dy
-                xs = lay.x0 + (c0 + np.arange(cols)) * lay.dx
-                frames.append(
-                    {
-                        "time": np.repeat(stamp, rows * cols),
-                        "y": np.repeat(ys, cols),
-                        "x": np.tile(xs, rows),
-                        self.variable: vals.reshape(-1),
-                    }
-                )
-        granule = os.path.basename(lay.path) if self.include_granule else None
+        for bi in partition.block_ids:
+            off = lay["offsets"][bi]
+            vals = decode_block(mm[off : off + lay["counts"][bi]], lay, bi).astype("f8")
+            if lay["nodata"] is not None:
+                vals = np.where(vals == lay["nodata"], np.nan, vals)
+            r0, c0, rows, cols = block_window(lay, bi)
+            ys = lay["y0"] - (r0 + np.arange(rows)) * lay["dy"]
+            xs = lay["x0"] + (c0 + np.arange(cols)) * lay["dx"]
+            frames.append(
+                {
+                    "time": np.repeat(stamp, rows * cols),
+                    "y": np.repeat(ys, cols),
+                    "x": np.tile(xs, rows),
+                    self.variable: vals.reshape(-1),
+                }
+            )
+        granule = (
+            os.path.basename(partition.path) if self.include_granule else None
+        )
         yield from _grid_batches(frames, ["y", "x", self.variable], granule)
 
 
@@ -1377,34 +691,8 @@ class _GeoTIFFStreamReader(DataSourceStreamReader):
         parts: list[_TiffPartition] = []
         for path in files:
             lay = _tiff_layout(path)
-            n_blocks = len(lay["offsets"])
-            group: list[int] = []
-            acc = 0
-            for bi in range(n_blocks):
-                group.append(bi)
-                acc += lay["counts"][bi]
-                if acc >= self._reader.target_bytes:
-                    parts.append(
-                        _TiffPartition(
-                            path, block_ids=group,
-                            year=self._reader.year, **lay,
-                        )
-                    )
-                    group, acc = [], 0
-            if group:
-                parts.append(
-                    _TiffPartition(
-                        path, block_ids=group, year=self._reader.year, **lay
-                    )
-                )
-        return parts or [
-            _TiffPartition(
-                "", block_ids=[], width=0, height=0, dtype="f8",
-                compression=1, predictor=1, tiled=False, tile_w=0,
-                tile_h=0, rows_per_strip=0, offsets=[], counts=[],
-                x0=0.0, dx=1.0, y0=0.0, dy=1.0, nodata=None, year=None,
-            )
-        ]
+            parts.extend(self._reader._group(path, lay, range(len(lay["offsets"]))))
+        return parts or [_TiffPartition("")]
 
     def read(self, partition: _TiffPartition) -> Iterator:
         if not partition.path:
