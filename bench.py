@@ -16,7 +16,8 @@ once unmeasured (the cold run: JIT compilation, codegen, Python worker
 start, page cache, and the first landing of any session fixture it
 reads), then $SPARK_GRAFT_REPEATS times (default 3) timed. Every run
 writes to the `noop` sink (full execution, no driver collect) and is
-followed by `spark.catalog.clearCache()`. A slot's number is the median
+followed by `cachectl.release()`, which frees every cache and checkpoint
+the run's operators made. A slot's number is the median
 of its timed runs; -1.0 means it failed (the typed error is on stderr
 and in the detail artifact).
 
@@ -48,6 +49,7 @@ def time_slots(spark, sf_dir: str, names: list[str], repeats: int) -> dict:
     as -1.0 and ends that slot.
     """
     import xarray_dataaccessor_spark.queries_ext  # noqa: F401 (registers extension slots)
+    from xarray_dataaccessor_spark.operators.cachectl import release
     from xarray_dataaccessor_spark.queries import QUERIES
 
     cold: dict[str, float] = {}
@@ -70,7 +72,7 @@ def time_slots(spark, sf_dir: str, names: list[str], repeats: int) -> dict:
                 break
             finally:
                 # the next run or slot must not inherit blocks this one cached
-                spark.catalog.clearCache()
+                release()
         cold[name], runs[name] = times[0], times[1:]
     return {"cold": cold, "runs": runs, "errors": errors}
 

@@ -24,6 +24,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import xarray_dataaccessor_spark.queries_ext  # noqa: F401
+    from xarray_dataaccessor_spark.operators.cachectl import release
     from xarray_dataaccessor_spark.queries import QUERIES
     from xarray_dataaccessor_spark.session import get_spark
 
@@ -44,7 +45,7 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
             fh.write(txt)
         print(f"# captured {name}", file=sys.stderr)
-        spark.catalog.clearCache()
+        release()
 
 
 if __name__ == "__main__":

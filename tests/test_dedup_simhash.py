@@ -92,14 +92,13 @@ def test_pair_guard_trips_and_routes(spark):
         simhash_duplicate_pairs(df, max_candidate_pairs=100)
     with pytest.raises(CandidatePairExplosion, match="max_hamming"):
         simhash_hamming_pairs(df, max_hamming=2, max_candidate_pairs=100)
-    # below the ceiling: results flow, and the guard cache is tagged
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        unpersist_intermediates,
-    )
+    # below the ceiling: results flow, and the guard cache is tracked
+    from xarray_dataaccessor_spark.operators.cachectl import release
 
+    release()
     ok = simhash_hamming_pairs(df, max_hamming=2, max_candidate_pairs=10_000)
     assert ok.count() == 40 * 39 // 2
-    assert unpersist_intermediates(ok) == 1
+    assert release() == 1
 
 
 def test_jaccard_prefix_filter_is_exact(spark, sf_dir):

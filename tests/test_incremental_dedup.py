@@ -217,10 +217,11 @@ def test_state_num_perm_mismatch_is_loud(spark, corpus_and_batch, tmp_path):
 
 def test_intermediate_caches_tagged_and_releasable(spark):
     """ADVICE r5: long-lived sessions accumulate the operator's internal
-    caches — the result frame is tagged with them and
-    unpersist_intermediates releases them after the consuming action."""
+    caches — the operator registers them with ``cachectl`` and
+    ``release`` frees them after the consuming action."""
     from xarray_dataaccessor_spark.operators.cachectl import (
-        unpersist_intermediates,
+        release,
+        tracked_count,
     )
     from xarray_dataaccessor_spark.functions.hashing import portable_hash64
     from xarray_dataaccessor_spark.operators.dedup import (
@@ -239,11 +240,11 @@ def test_intermediate_caches_tagged_and_releasable(spark):
     )
     fps = corpus.select("doc_id", portable_hash64(F.col("text")).alias("fp"))
     sigs = minhash_signatures(word_shingles(corpus, "text", "doc_id", 3), 8, "doc_id")
+    release()
     out = incremental_dedup_frames(batch, fps, sigs, num_perm=8)
     rows = out.collect()
     assert len(rows) == 2
-    released = unpersist_intermediates(out)
+    released = release()
     assert released == 2  # nfp + nsig
-    assert unpersist_intermediates(out) == 0  # idempotent
-    # untagged frames are a no-op
-    assert unpersist_intermediates(batch) == 0
+    assert release() == 0  # idempotent
+    assert tracked_count() == 0

@@ -391,6 +391,62 @@ def test_netcdf_dims_matched_by_name(spark, tmp_path, container):
         netcdf_glob_to_grid(spark, bad, "v").collect()
 
 
+@pytest.mark.parametrize("container", ["cdf", "h5"])
+def test_netcdf_valid_time_axis(spark, tmp_path, container):
+    """Current CDS NetCDF downloads name the time coordinate
+    ``valid_time``: ``t2m(valid_time, latitude, longitude)`` decodes with
+    every value at the cell the writer gave it, through
+    ``netcdf_fragment_to_pandas``, ``netcdf_glob_to_grid`` and a
+    ``format("netcdf")`` read split into record windows."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from xarray_dataaccessor_spark.sources.hdf5 import write_hdf5
+    from xarray_dataaccessor_spark.sources.ingest import netcdf_glob_to_grid
+    from xarray_dataaccessor_spark.sources.netcdf3 import (
+        netcdf_fragment_to_pandas,
+        write_netcdf3,
+    )
+    from xarray_dataaccessor_spark.sources.pyds import register_data_sources
+
+    nt, nlat, nlon = 4, 3, 5
+    lats, lons = 42.0 - np.arange(nlat), -80.0 + np.arange(nlon)
+    vals = 250.0 + np.arange(nt * nlat * nlon, dtype="f8").reshape(nt, nlat, nlon)
+    dims = {"valid_time": nt, "latitude": nlat, "longitude": nlon}
+    variables = {
+        "valid_time": (["valid_time"], np.arange(nt, dtype="f8"),
+                       {"units": "hours since 2020-01-01"}),
+        "latitude": (["latitude"], lats, {}),
+        "longitude": (["longitude"], lons, {}),
+        "t2m": (["valid_time", "latitude", "longitude"], vals, {"units": "K"}),
+    }
+    path = str(tmp_path / "cds.nc")
+    if container == "cdf":
+        write_netcdf3(path, dims, variables, record_dim="valid_time")
+    else:
+        write_hdf5(path, dims, variables, chunks={"t2m": [1, nlat, nlon]})
+    want = {
+        (t, lats[j], lons[i]): vals[t, j, i]
+        for t in range(nt) for j in range(nlat) for i in range(nlon)
+    }
+
+    pdf = netcdf_fragment_to_pandas(open(path, "rb").read(), "t2m")
+    t0 = pd.Timestamp("2020-01-01")
+    hrs = ((pdf["time"] - t0) // pd.Timedelta(hours=1)).astype(int)
+    assert dict(zip(zip(hrs, pdf["y"], pdf["x"]), pdf["t2m"])) == want
+
+    register_data_sources(spark)
+    windows = (spark.read.format("netcdf")
+               .option("target_partition_bytes", nlat * nlon * 8).load(path))
+    assert windows.rdd.getNumPartitions() == nt
+    for df in (windows, netcdf_glob_to_grid(spark, path, "t2m")):
+        hours = ((F.unix_timestamp("time") - 1577836800) / 3600).cast("int")
+        got = {(r.t, r.y, r.x): r.t2m
+               for r in df.select(hours.alias("t"), "y", "x", "t2m").collect()}
+        assert got == want
+
+
 def test_one_decoder_per_grid_format():
     """One TIFF block decoder in the package, no NetCDF decoder in the
     data sources (they call ``netcdf3.read_grid``), and no

@@ -266,9 +266,7 @@ def test_gopher_stack_tokenizes_corpus_twice(spark, sf_dir, slot):
     corpus-sized shuffle."""
     import re
 
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        unpersist_intermediates,
-    )
+    from xarray_dataaccessor_spark.operators.cachectl import release
     from xarray_dataaccessor_spark.queries import _FIXTURES
 
     df = QUERIES[slot](spark, sf_dir)
@@ -284,7 +282,7 @@ def test_gopher_stack_tokenizes_corpus_twice(spark, sf_dir, slot):
         assert sorted(locations) == sorted(landed), locations
         assert "documents.parquet" not in plan, plan[:4000]
     finally:
-        assert unpersist_intermediates(df) >= 3  # wc, bc, base, feats…
+        assert release() >= 3  # wc, bc, base, feats…
 
 
 def test_pyramid_executes_one_base_scan(spark, tmp_path):
@@ -395,10 +393,7 @@ def test_minhash_clusters_no_pair_aggregate(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        release_checkpoints,
-        unpersist_intermediates,
-    )
+    from xarray_dataaccessor_spark.operators.cachectl import release
     from xarray_dataaccessor_spark.operators.dedup import minhash_near_duplicates
     from xarray_dataaccessor_spark.operators.graph import duplicate_clusters
     from xarray_dataaccessor_spark.sources.tables import load
@@ -424,8 +419,7 @@ def test_minhash_clusters_no_pair_aggregate(spark, sf_dir):
             "hashpartitioning(component), ENSURE_REQUIREMENTS"
         ]
     finally:
-        unpersist_intermediates(cand)
-        release_checkpoints()
+        release()
 
 
 def _jobs_run(spark, fn):

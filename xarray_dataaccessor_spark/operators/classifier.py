@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xarray_dataaccessor_spark.functions.hashing import portable_hash32
+from xarray_dataaccessor_spark.operators.cachectl import tracked_cache
 
 #: decimal type used for order-independent float accumulation
 _DEC = "decimal(28,14)"
@@ -159,7 +160,7 @@ def train_logreg(
     # builds the cache; every epoch then touches sample-sized data only
     # (guide §2.4/§5 — at 100 TB this removes epochs-1 full passes over
     # the hashed-feature table).
-    tfeats = feats.join(y.select(id_col), id_col).cache()
+    tfeats = tracked_cache(feats.join(y.select(id_col), id_col))
 
     def grad_step(weights: DataFrame | None) -> DataFrame:
         if weights is None:
@@ -200,19 +201,14 @@ def train_logreg(
             )
         )
 
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
     w = None
-    epoch_caches = [tfeats]
     for i in range(max(1, epochs)):
         w = grad_step(w)
         if i < epochs - 1:
             # weights are bucket-sized; caching each epoch keeps the
             # nested plan linear in epochs instead of exponential
-            w = w.cache()
-            epoch_caches.append(w)
-    # caller owns the cache lifecycle: see cachectl.unpersist_intermediates
-    return tag_caches(w, *epoch_caches)
+            w = tracked_cache(w)
+    return w
 
 
 def score_logreg(
@@ -267,13 +263,6 @@ def distill_quality_classifier(
                 F.col("x").cast("double").alias("x"),
             )
         )
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
-
-    feats = feats.cache()
+    feats = tracked_cache(feats)
     w = train_logreg(feats, labels, id_col, label_col, epochs, lr)
-    scored = score_logreg(feats, w, id_col)
-    # caller owns the cache lifecycle: see cachectl.unpersist_intermediates
-    return tag_caches(scored, feats, *get_tagged_caches(w))
+    return score_logreg(feats, w, id_col)

@@ -25,6 +25,7 @@ from xarray_dataaccessor_spark.functions.hashing import (
     portable_hash32,
     portable_hash64,
 )
+from xarray_dataaccessor_spark.operators.cachectl import tracked_cache
 
 # deterministic (a, b) parameters for the universal-hash permutations;
 # a < 2**20 keeps (a*h + b) % p inside int64 for 32-bit h (hashing.py).
@@ -282,21 +283,16 @@ def minhash_near_duplicates(
     sh = word_shingles(df, text_col, id_col, k)
     # both sides of the band self-join read the signature table — persist
     # it instead of recomputing the shingle pipeline twice
-    sig = minhash_signatures(sh, num_perm, id_col).cache()
+    sig = tracked_cache(minhash_signatures(sh, num_perm, id_col))
     agree = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    return tag_caches(
-        _first_band_pairs(sig, num_perm, rows_per_band, id_col).select(
-            "id_a",
-            "id_b",
-            (agree.cast("double") / F.lit(float(num_perm))).alias("est_jaccard"),
-        ),
-        sig,
+    return _first_band_pairs(sig, num_perm, rows_per_band, id_col).select(
+        "id_a",
+        "id_b",
+        (agree.cast("double") / F.lit(float(num_perm))).alias("est_jaccard"),
     )
 
 
@@ -404,7 +400,7 @@ def jaccard_pairs(
     # calls in one session) share one materialization — reused by
     # sizes + both sides of the inverted-index join (and by the guard's
     # pair-count agg, which therefore warms it)
-    sh = sh.cache()
+    sh = tracked_cache(sh)
     occ = _kept_shingles(sh, id_col, max_df) if max_df is not None else sh
     if max_candidate_pairs is not None:
         n_pairs = _candidate_pair_count(occ, "h")
@@ -435,8 +431,6 @@ def jaccard_pairs(
                 "Use minhash_near_duplicates (banded LSH, never all-pairs) "
                 "or pass auto_route=True.",
             )
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
     # Prefix-filter routing (r14, VERDICT r13 #8): the prefix path cuts
     # the quadratic candidate join ~(1-t)^2 (~6x at t=0.6) but costs
     # two extra linear passes (the per-doc rank window + the candidate
@@ -465,8 +459,7 @@ def jaccard_pairs(
             .collect()[0]["__mx"]
         )
         use_prefix = (max_mult or 0) <= 1
-    out = _pairs_from_occurrences(occ, id_col, threshold, use_prefix=use_prefix)
-    return tag_caches(out, *([sh] if occ is sh else [sh, occ]))
+    return _pairs_from_occurrences(occ, id_col, threshold, use_prefix=use_prefix)
 
 
 def _pairs_from_occurrences(occ, id_col, threshold, use_prefix=False):
@@ -587,7 +580,7 @@ def _kept_shingles(sh, id_col, max_df):
     # tiny, but an explicit small cap on a huge corpus grows it as
     # total_occurrences/max_df — let AQE convert the anti-join to a
     # broadcast at runtime when (and only when) the built side is small
-    return sh.join(hot, "h", "left_anti").cache()
+    return tracked_cache(sh.join(hot, "h", "left_anti"))
 
 
 def simhash(
@@ -629,11 +622,11 @@ def simhash_duplicate_pairs(
     bounded (2^bits), so past ~2^(bits/2) docs the bucket join is N² by
     the birthday bound regardless of corpus content (measured exponent
     1.58 past sf1 — SCALE.md). When the guard is on, the signature
-    table is cached and tagged (``cachectl``) so the guard's count and
+    table is a tracked cache (``cachectl``) so the guard's count and
     the pair join share one materialization."""
     sig = simhash(df, text_col, id_col, bits)
     if max_candidate_pairs is not None:
-        sig = sig.cache()
+        sig = tracked_cache(sig)
         n_pairs = _candidate_pair_count(sig, "simhash")
         if n_pairs > max_candidate_pairs:
             sig.unpersist()
@@ -648,16 +641,11 @@ def simhash_duplicate_pairs(
     # shuffle once already
     a = sig.select(F.col(id_col).alias("id_a"), F.col("simhash"))
     b = sig.select(F.col(id_col).alias("id_b"), F.col("simhash"))
-    out = (
+    return (
         a.join(b, "simhash")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "simhash")
     )
-    if max_candidate_pairs is not None:
-        from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-        out = tag_caches(out, sig)
-    return out
 
 
 def simhash_hamming_pairs(
@@ -697,9 +685,8 @@ def simhash_hamming_pairs(
     guarded = max_candidate_pairs is not None
     if guarded:
         # cache the n-row signature table so the guard's bucket count
-        # and the band join share one materialization (tagged below for
-        # caller-side release — see operators/cachectl.py)
-        sig = sig.cache()
+        # and the band join share one materialization
+        sig = tracked_cache(sig)
     bands = []
     for j in range(k):
         off = j * w
@@ -740,15 +727,10 @@ def simhash_hamming_pairs(
         .distinct()
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("int")
-    out = (
+    return (
         cand.select("id_a", "id_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
-    if guarded:
-        from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-        out = tag_caches(out, sig)
-    return out
 
 
 def _band_keys(
@@ -875,7 +857,7 @@ def incremental_dedup_frames(
         )
     new = spread_small_input(new_batch).select(F.col(id_col), F.col(text_col))
 
-    nfp = new.select(id_col, portable_hash64(F.col(text_col)).alias("fp")).cache()
+    nfp = tracked_cache(new.select(id_col, portable_hash64(F.col(text_col)).alias("fp")))
     prior_fp = fps.select(F.col(id_col).alias("__prior"), "fp").unionByName(
         nfp.select(F.col(id_col).alias("__prior"), "fp")
     )
@@ -894,9 +876,9 @@ def incremental_dedup_frames(
         .agg(F.min("__prior").alias("__exact_of"))
     )
 
-    nsig = minhash_signatures(
+    nsig = tracked_cache(minhash_signatures(
         word_shingles(new, text_col, id_col, k), num_perm, id_col
-    ).cache()
+    ))
     prior_sig = sigs.unionByName(nsig)
     nb = _band_keys(nsig, num_perm, rows_per_band, id_col)
     pb = _band_keys(prior_sig, num_perm, rows_per_band, id_col).select(
@@ -938,9 +920,7 @@ def incremental_dedup_frames(
             (-F.col("__b.neg_id")).alias("__near_of"),
         )
     )
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    result = (
+    return (
         new.select(id_col)
         .join(exact, id_col, "left")
         .join(near, id_col, "left")
@@ -956,8 +936,6 @@ def incremental_dedup_frames(
             ).alias("est_jaccard"),
         )
     )
-    # caller owns the cache lifecycle: see cachectl.unpersist_intermediates
-    return tag_caches(result, nfp, nsig)
 
 
 def substring_dedup(

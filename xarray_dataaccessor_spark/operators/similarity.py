@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from xarray_dataaccessor_spark.operators.cachectl import (
+    tracked_cache,
     tracked_local_checkpoint as _ckpt,
 )
 
@@ -497,7 +498,7 @@ def embedding_near_duplicates(
     # signatures): the candidate join is typically planned as a
     # broadcast self-join, whose two sides would otherwise each
     # recompute all b*r plane dots over the corpus
-    sig = sig.cache()
+    sig = tracked_cache(sig)
     cand = (
         sig.alias("sa")
         .join(sig.alias("sb"), ["band", "val"])
@@ -510,15 +511,12 @@ def embedding_near_duplicates(
     )
     ea = v.select(F.col(id_col).alias("id_a"), F.col("e").alias("ea"))
     eb = v.select(F.col(id_col).alias("id_b"), F.col("e").alias("eb"))
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    return tag_caches(
+    return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
         .withColumn("cos", cosine(F.col("ea"), F.col("eb"), dims))
         .filter(F.col("cos") > threshold)
-        .select("id_a", "id_b", "cos"),
-        sig,
+        .select("id_a", "id_b", "cos")
     )
 
 
@@ -715,13 +713,10 @@ def kmeans_centroids(
     if execution not in ("grouped", "join"):
         raise ValueError(f"execution must be 'grouped' or 'join': {execution!r}")
     train = vectors
-    tagged = []
     if train_limit is not None:
         # cache: the sample feeds init + one assignment per iteration,
-        # and it is train_limit rows — trivially cacheable (tagged on
-        # the result for caller-side release, cachectl contract)
-        train = training_sample(vectors, id_col, train_limit).cache()
-        tagged.append(train)
+        # and it is train_limit rows — trivially cacheable
+        train = tracked_cache(training_sample(vectors, id_col, train_limit))
     cent = train.orderBy(id_col).limit(n_centroids).select(
         F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("ce")
     )
@@ -736,9 +731,7 @@ def kmeans_centroids(
                 dims=dims,
             )
         cent = _centroid_means(assigned, ["centroid_id"], vec_col, dims)
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    return tag_caches(cent, *tagged)
+    return cent
 
 
 def _centroid_means(
@@ -996,10 +989,8 @@ def pq_codebooks(
             f"dims ({dims}) must be known and divisible by m_subspaces "
             f"({m_subspaces})"
         )
-    tagged = []
     if train_limit is not None:
-        vectors = training_sample(vectors, id_col, train_limit).cache()
-        tagged.append(vectors)
+        vectors = tracked_cache(training_sample(vectors, id_col, train_limit))
     sub = dims // m_subspaces
     subv = vectors.select(
         F.col(id_col),
@@ -1040,9 +1031,7 @@ def pq_codebooks(
             )
         )
         cent = _centroid_means(assigned, ["m", "code_id"], "sv", sub)
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    return tag_caches(cent, *tagged)
+    return cent
 
 
 def pq_encode(
@@ -1265,7 +1254,7 @@ def pq_ann(
             "ce", F.transform("ce", lambda x: x / norm(F.col("ce"), dims))
         )
 
-    books = pq_codebooks(
+    books = tracked_cache(pq_codebooks(
         cn,
         m_subspaces=m_subspaces,
         n_codes=n_codes,
@@ -1274,7 +1263,7 @@ def pq_ann(
         vec_col="ce",
         dims=dims,
         train_limit=train_limit,
-    ).cache()
+    ))
     if execution == "grouped":
         codes = _pq_encode_arrow(
             cn, books, id_col="neighbor_id", vec_col="ce", dims=dims,
@@ -1345,17 +1334,10 @@ def pq_ann(
         .withColumn("cos", dot(F.col("qe"), F.col("ce"), dims))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
-
-    return tag_caches(
+    return (
         rescored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", F.col("rk").cast("int").alias("rk")),
-        books,
-        *get_tagged_caches(books),
+        .select("query_id", "neighbor_id", "cos", F.col("rk").cast("int").alias("rk"))
     )
 
 
@@ -1386,10 +1368,10 @@ def ivf_ann(
     vecs = corpus.select(
         id_col, F.col(vec_col).cast("array<double>").alias("e")
     )
-    cent = kmeans_centroids(
+    cent = tracked_cache(kmeans_centroids(
         vecs, n_centroids, n_iters, id_col=id_col, dims=dims,
         train_limit=train_limit,
-    ).cache()
+    ))
     c_assigned = ivf_assign(
         vecs,
         cent,
@@ -1410,17 +1392,10 @@ def ivf_ann(
         .withColumn("cos", cosine(F.col("qe"), F.col("nbr"), dims))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
-
-    return tag_caches(
+    return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", F.col("rk").cast("int").alias("rk")),
-        cent,
-        *get_tagged_caches(cent),
+        .select("query_id", "neighbor_id", "cos", F.col("rk").cast("int").alias("rk"))
     )
 
 
@@ -1497,22 +1472,17 @@ def build_ivf_index(
     vecs = corpus.select(
         id_col, F.col(vec_col).cast("array<double>").alias("e")
     )
-    cent = kmeans_centroids(
+    cent = tracked_cache(kmeans_centroids(
         vecs, n_centroids, n_iters, id_col=id_col, dims=dims,
         train_limit=train_limit,
-    ).cache()
+    ))
     cent.write.mode("overwrite").parquet(f"{path}/centroids")
     assigned = ivf_assign(vecs, F.broadcast(cent), id_col=id_col, rank=1, dims=dims)
     assigned.select(id_col, "e", "centroid_id").write.mode(
         "overwrite"
     ).partitionBy("centroid_id").parquet(f"{path}/lists")
     # both consumers are completed write actions — release the build's
-    # cached quantizer and its tagged train sample (cachectl contract)
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        unpersist_intermediates,
-    )
-
-    unpersist_intermediates(cent)
+    # cached quantizer (its train sample goes at the next release)
     cent.unpersist()
 
 
@@ -1607,14 +1577,14 @@ def build_ivfpq_index(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("e"),
     ).withColumn("e", F.transform("e", lambda x: x / norm(F.col("e"), dims)))
-    cent = kmeans_centroids(
+    cent = tracked_cache(kmeans_centroids(
         cn, n_centroids, n_iters, id_col="vec_id", vec_col="e", dims=dims,
         train_limit=train_limit,
-    ).cache()
+    ))
     cent.write.mode("overwrite").parquet(f"{path}/centroids")
     assigned = ivf_assign(cn, F.broadcast(cent), id_col="vec_id", rank=1,
                           dims=dims).select("vec_id", "e", "centroid_id")
-    assigned = assigned.cache()  # one assignment feeds training + writes
+    assigned = tracked_cache(assigned)  # one assignment feeds training + writes
     if by_residual:
         enc_input = assigned.join(
             F.broadcast(cent), "centroid_id"
@@ -1625,10 +1595,10 @@ def build_ivfpq_index(
         )
     else:
         enc_input = assigned
-    books = pq_codebooks(
+    books = tracked_cache(pq_codebooks(
         enc_input, m_subspaces=m_subspaces, n_codes=n_codes, n_iters=n_iters,
         id_col="vec_id", vec_col="e", dims=dims, train_limit=train_limit,
-    ).cache()
+    ))
     books.write.mode("overwrite").parquet(f"{path}/codebooks")
     assigned.select("vec_id", "e", "centroid_id").write.mode(
         "overwrite"
@@ -1641,13 +1611,7 @@ def build_ivfpq_index(
         f"{path}/lists"
     )
     # all consumers are completed write actions — release the build's
-    # cached frames and their tagged train samples (cachectl contract)
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        unpersist_intermediates,
-    )
-
-    unpersist_intermediates(cent)
-    unpersist_intermediates(books)
+    # cached frames (their train samples go at the next release)
     assigned.unpersist()
     cent.unpersist()
     books.unpersist()
@@ -1918,7 +1882,7 @@ def append_to_ivfpq_index(
     # batch-sized cache: one assignment feeds the vectors write AND the
     # encode join (the batch is small relative to the index by
     # definition of incremental maintenance)
-    assigned = assigned.cache()
+    assigned = tracked_cache(assigned)
     if by_residual:
         enc_input = assigned.join(F.broadcast(cent), "centroid_id").select(
             "vec_id",
@@ -2097,17 +2061,13 @@ def semantic_dedup(
         import numpy as np
         from pyspark.sql import types as T
 
-        from xarray_dataaccessor_spark.operators.cachectl import (
-            unpersist_intermediates,
-        )
-
         if assign == "coarse":
             # two-level Arrow assignment (see coarse_structure): the
             # structure build collects cent several times (coarse Lloyd
             # iterations + gmap + member matrices), so pin it when we
             # own it; nothing in the returned plan references cent
             # afterwards — every matrix lives in the mapInPandas closure
-            cent_pin = cent.cache() if owns_cent else cent
+            cent_pin = tracked_cache(cent) if owns_cent else cent
             coarse, gmap = coarse_structure(
                 cent_pin, n_groups=n_groups, dims=dims,
                 execution="grouped",
@@ -2118,7 +2078,6 @@ def semantic_dedup(
             ).withColumnRenamed("centroid_id", "cluster_id")
             if owns_cent:
                 cent_pin.unpersist()
-                unpersist_intermediates(cent)
             rk = assigned.withColumn("prio", F.row_number().over(w))
         else:
             # Arrow-exact rank-1 assignment: the SQL path's broadcast
@@ -2135,11 +2094,6 @@ def semantic_dedup(
             cent_rows = sorted(
                 cent.collect(), key=lambda r: r["centroid_id"]
             )
-            # the collect consumed the Lloyd plan — release the
-            # train-sample cache now (when we own it); no downstream
-            # plan references cent in this path
-            if owns_cent:
-                unpersist_intermediates(cent)
             c_mat = [list(map(float, r["ce"])) for r in cent_rows]
             c_ids = [r["centroid_id"] for r in cent_rows]
             v_fields = {f.name: f for f in v.schema.fields}
@@ -2253,10 +2207,8 @@ def semantic_dedup(
                 ],
             })
 
-        # no caches remain: the train sample was released after the
-        # centroid collect and this path adds none of its own
         return rk.groupBy("cluster_id").applyInPandas(_witness, schema)
-    ranked = assigned.withColumn("prio", F.row_number().over(w)).cache()
+    ranked = tracked_cache(assigned.withColumn("prio", F.row_number().over(w)))
     a = ranked.select(
         F.col("cluster_id"),
         F.col(id_col).alias("__ida"),
@@ -2284,12 +2236,7 @@ def semantic_dedup(
     # between engines (double->decimal cast rounding), which is fine for
     # every DISCRETE decision (assignment, priority order) but not for a
     # hashed float column.
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
-
-    return tag_caches(
+    return (
         ranked.join(dropped, id_col, "left")
         .select(
             id_col,
@@ -2297,10 +2244,7 @@ def semantic_dedup(
             "cos_centroid",
             F.col("witness_cos").isNull().alias("kept"),
             "witness_cos",
-        ),
-        ranked,
-        # a caller-provided centroid table's caches belong to the caller
-        *(get_tagged_caches(cent) if owns_cent else ()),
+        )
     )
 
 

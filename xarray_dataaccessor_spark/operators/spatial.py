@@ -160,17 +160,6 @@ def interval_rows(new_axis, old_axis, kernel):
     return rows
 
 
-def _interval_map(spark, new_axis, old_axis, col, kernel):
-    """Tiny per-axis interval table (broadcast side of the upsample
-    join) — one row per target coordinate, so the join multiplies the
-    fact table by at most the new/old axis ratio."""
-    return local_frame(
-        spark,
-        interval_rows(new_axis, old_axis, kernel),
-        f"src_{col} double, new_{col} double, w_{col} double, hi_{col} double",
-    )
-
-
 def spatial_resample(
     df: DataFrame,
     resolution_factor: float | None = None,
@@ -209,10 +198,11 @@ def spatial_resample(
     new_xs = _target_axis(xs, fx)
     new_ys = _target_axis(ys, fy)
     kernel = "nearest" if resample_method == "nearest" else "bilinear"
-    mapx = F.broadcast(_interval_map(spark, new_xs, xs, x_col, kernel))
-    mapy = F.broadcast(_interval_map(spark, new_ys, ys, y_col, kernel))
-    out = _axis_lerp(df, mapx, x_col, (time_col, y_col), value_cols)
-    out = _axis_lerp(out, mapy, y_col, (time_col, x_col), value_cols)
+    mapx = F.broadcast(_interval_map_multi(spark, new_xs, xs, x_col, [kernel]))
+    mapy = F.broadcast(_interval_map_multi(spark, new_ys, ys, y_col, [kernel]))
+    pairs = [(v, kernel, v) for v in value_cols]
+    out = _axis_lerp_multi(df, mapx, x_col, (time_col, y_col), pairs)
+    out = _axis_lerp_multi(out, mapy, y_col, (time_col, x_col), pairs)
     return out.select(time_col, y_col, x_col, *value_cols)
 
 
@@ -253,8 +243,10 @@ def spatial_upsample_kernels(
 
 
 def _interval_map_multi(spark, new_axis, old_axis, col, kernels):
-    """Interval table with one weight column per kernel (src/new/hi are
-    kernel-independent; only the weight differs)."""
+    """Tiny per-axis interval table (broadcast side of the upsample
+    join) — one row per target coordinate, so the join multiplies the
+    fact table by at most the new/old axis ratio — with one weight
+    column per kernel (src/new/hi are kernel-independent)."""
     per_kernel = [interval_rows(new_axis, old_axis, k) for k in kernels]
     rows = []
     for i, (src, new, _w, hi) in enumerate(per_kernel[0]):
@@ -266,9 +258,20 @@ def _interval_map_multi(spark, new_axis, old_axis, col, kernels):
 
 
 def _axis_lerp_multi(df, interval_map, axis_col, partition_cols, pairs):
-    """One-axis lerp where each (input_col, kernel, output_col) triple
-    uses its kernel's weight column — one window sort + one broadcast
-    join shared by every kernel."""
+    """One-axis linear interpolation without any aggregation: the next
+    present cell along the axis comes from a window ``lead`` (one sort
+    within the existing partitioning), the target coordinates + weights
+    from a broadcast interval join, the value from a per-row lerp. Each
+    ``(input_col, kernel, output_col)`` triple uses its kernel's weight
+    column, so every kernel shares the one sort and the one join.
+
+    Bilinear regridding is separable, so two of these passes replace the
+    4-neighbor join + groupBy (which shuffles 4x the fact rows); per-row
+    arithmetic is also deterministic, unlike a float sum aggregate.
+    If the right neighbor of an interval is absent at a timestep (sparse
+    grid), the target keeps the left value (weight renormalization over
+    the present neighbor).
+    """
     w = Window.partitionBy(*partition_cols).orderBy(axis_col)
     enriched = df.withColumn("__next_coord", F.lead(axis_col).over(w))
     in_cols = list(dict.fromkeys(p[0] for p in pairs))
@@ -283,38 +286,6 @@ def _axis_lerp_multi(df, interval_map, axis_col, partition_cols, pairs):
         nxt = F.when(valid_next, F.col(f"__next_{src}")).otherwise(F.col(src))
         wcol = F.col(f"w_{kernel}_{axis_col}")
         projected.append((F.col(src) + (nxt - F.col(src)) * wcol).alias(out))
-    return joined.select(
-        *partition_cols, F.col(f"new_{axis_col}").alias(axis_col), *projected
-    )
-
-
-def _axis_lerp(df, interval_map, axis_col, partition_cols, value_cols):
-    """One-axis linear interpolation without any aggregation: the next
-    present cell along the axis comes from a window ``lead`` (one sort
-    within the existing partitioning), the target coordinates + weights
-    from a broadcast interval join, the value from a per-row lerp.
-
-    Bilinear regridding is separable, so two of these passes replace the
-    4-neighbor join + groupBy (which shuffles 4x the fact rows); per-row
-    arithmetic is also deterministic, unlike a float sum aggregate.
-    If the right neighbor of an interval is absent at a timestep (sparse
-    grid), the target keeps the left value (weight renormalization over
-    the present neighbor).
-    """
-    w = Window.partitionBy(*partition_cols).orderBy(axis_col)
-    enriched = df.withColumn("__next_coord", F.lead(axis_col).over(w))
-    for v in value_cols:
-        enriched = enriched.withColumn(f"__next_{v}", F.lead(v).over(w))
-    joined = enriched.join(
-        interval_map, F.col(axis_col) == F.col(f"src_{axis_col}")
-    )
-    valid_next = F.col("__next_coord") == F.col(f"hi_{axis_col}")
-    projected = []
-    for v in value_cols:
-        nxt = F.when(valid_next, F.col(f"__next_{v}")).otherwise(F.col(v))
-        projected.append(
-            (F.col(v) + (nxt - F.col(v)) * F.col(f"w_{axis_col}")).alias(v)
-        )
     return joined.select(
         *partition_cols, F.col(f"new_{axis_col}").alias(axis_col), *projected
     )

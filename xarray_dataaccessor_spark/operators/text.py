@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xarray_dataaccessor_spark.functions.hashing import portable_hash64
+from xarray_dataaccessor_spark.operators.cachectl import tracked_cache
 
 # Small marker-word sets for the language-ID heuristic. Real pipelines
 # use character n-gram models (fasttext-style); the mechanism here — per
@@ -426,7 +427,7 @@ def kneser_ney_from_counts(
     Returns ``(id, kn_bigrams, kn_neg_log2p)``. Property pinned in
     tests: ``sum over the vocabulary of P(w2|w1) == 1`` per context.
 
-    The global bigram table ``big`` is persisted (lazily,
+    The global bigram table ``big`` is a tracked cache (lazy,
     MEMORY_AND_DISK): it feeds four branches — the context counts, the
     continuation counts, the broadcast D/N1+(*,*) aggregate, and the
     per-document join — and Spark does not reuse exchanges across the
@@ -437,7 +438,7 @@ def kneser_ney_from_counts(
     its run-to-run variance amplifier — diagnosed round 10). ``big``
     is vocabulary-squared-bounded (a model table, not fact data), so
     the cache is safe at any corpus scale."""
-    big = bc.groupBy("w1", "w2").agg(F.sum("c").alias("cb")).persist()
+    big = tracked_cache(bc.groupBy("w1", "w2").agg(F.sum("c").alias("cb")))
     ctx = big.groupBy("w1").agg(
         F.sum("cb").alias("cw1"),
         F.count(F.lit(1)).alias("n_cont"),  # N1+(w1, *)
@@ -462,9 +463,7 @@ def kneser_ney_from_counts(
         * (F.col("n_left") / F.col("n_big").cast("double"))
     )
     term = F.round(-F.log2(p), 6).cast("decimal(28,14)")
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    out = (
+    return (
         bc.join(big, ["w1", "w2"])
         .join(ctx, "w1")
         .join(right, "w2")
@@ -478,10 +477,6 @@ def kneser_ney_from_counts(
             ).alias("kn_neg_log2p"),
         )
     )
-    # caller owns the cache lifecycle (cachectl contract): big must stay
-    # persisted while the returned plan is consumed, then be released
-    # via unpersist_intermediates in long-lived sessions
-    return tag_caches(out, big)
 
 
 def perplexity_buckets(

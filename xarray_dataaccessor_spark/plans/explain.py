@@ -49,7 +49,7 @@ def exchange_partitionings(df: DataFrame) -> list[str]:
     ``hashpartitioning(doc_id), ENSURE_REQUIREMENTS``.
 
     Build ``df`` on a session without materialized caches (e.g. after
-    ``spark.catalog.clearCache()``, as the bench runs every slot): a
+    ``cachectl.release()``, as the bench runs after every slot): a
     cached relation an earlier action ran is drawn with its executed
     adaptive plan, final and initial, and its exchanges count twice."""
     found: dict[str, str] = {}

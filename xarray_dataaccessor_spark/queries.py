@@ -22,6 +22,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xarray_dataaccessor_spark.operators.cachectl import tracked_cache
 from xarray_dataaccessor_spark.session import configure_session, local_frame
 from xarray_dataaccessor_spark.sources.tables import GRID_SQL_BODY, grid_view, load
 
@@ -2170,11 +2171,11 @@ def snap_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the surface feeds THREE consumers (D8 pipeline, Horn stencil,
     # watershed's flow input) and exchanges are not reused across union
     # branches — cache the ~cell-count-sized table once
-    surf = grid.groupBy("x", "y").agg(
+    surf = tracked_cache(grid.groupBy("x", "y").agg(
         F.sum(F.col("t2m").cast("decimal(18,2)")).cast("double").alias("z")
-    ).cache()
+    ))
     g_origin = _GRID_ORIGIN
-    flow = d8_flow_direction(surf, dx=0.25, dy=0.25, origin=g_origin).cache()
+    flow = tracked_cache(d8_flow_direction(surf, dx=0.25, dy=0.25, origin=g_origin))
     flowacc = flow_accumulation(
         flow, dx=0.25, dy=0.25, origin=g_origin
     ).select(
@@ -2201,15 +2202,7 @@ def snap_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sink_x").alias("t2m"),
         F.col("sink_y").alias("u100"),
     )
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    return tag_caches(
-        snap.unionByName(flowacc)
-        .unionByName(terrain)
-        .unionByName(wshed),
-        surf,
-        flow,
-    )
+    return snap.unionByName(flowacc).unionByName(terrain).unionByName(wshed)
 
 
 def _contour_cross_sql(za, zb, ax_o, ay_o, bx_o, by_o):
@@ -2410,12 +2403,12 @@ def zonal_contour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t2m"),
         F.col("covered_cells").alias("u100"),
     )
-    surfm = grid.groupBy("x", "y").agg(
+    surfm = tracked_cache(grid.groupBy("x", "y").agg(
         (
             F.sum(F.col("t2m").cast("decimal(18,6)")).cast("double")
             / F.count("t2m")
         ).alias("z")
-    ).cache()
+    ))
     # quartile levels from the surface's own bounds: a 1-row collect
     # (dimension-sized by the standing rule); MIN/MAX of doubles and
     # lo + (hi - lo) * f are bit-identical in both engines, so the
@@ -2433,9 +2426,7 @@ def zonal_contour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("t2m"),
         F.lit(None).cast("double").alias("u100"),
     )
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    return tag_caches(cont.unionByName(zonal).unionByName(wz), surfm)
+    return cont.unionByName(zonal).unionByName(wz)
 
 
 # ---------------------------------------------------------------------------

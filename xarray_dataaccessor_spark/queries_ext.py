@@ -28,6 +28,7 @@ from xarray_dataaccessor_spark.operators.similarity import (
     embedding_near_duplicates,
     lsh_ann,
 )
+from xarray_dataaccessor_spark.operators.cachectl import tracked_cache
 from xarray_dataaccessor_spark.operators.sketch import hll_ndv_sql
 from xarray_dataaccessor_spark.queries import query
 from xarray_dataaccessor_spark.session import configure_session, local_frame
@@ -580,11 +581,11 @@ def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across the broadcast-subquery boundary — diagnosed round 10, the
     # r9 slot plan ran 10 documents scans and its serial broadcast
     # stages were the per-repeat variance amplifier VERDICT r9 #1 flagged)
-    agg = out.groupBy("source").agg(
+    agg = tracked_cache(out.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("ws_tokens").alias("total_ws_tokens"),
         F.sum("bpe_tokens").alias("total_bpe_tokens"),
-    ).persist()
+    ))
     tok = F.col("total_bpe_tokens").cast("double")
     glob = agg.agg(
         F.sum("total_bpe_tokens").alias("tot_tokens"),
@@ -656,7 +657,7 @@ def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         _corpus_word_counts,
     )
 
-    bc_kn = _corpus_bigram_counts(spark, sf_dir).persist()
+    bc_kn = tracked_cache(_corpus_bigram_counts(spark, sf_dir))
     kn = kneser_ney_from_counts(_corpus_word_counts(spark, sf_dir), bc_kn)
     rk = F.round(F.col("kn_neg_log2p"), 6)
     kn_src = (
@@ -692,13 +693,7 @@ def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_tokens",
         F.lit(None).cast("double").alias("approx_ndv"),
     )
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
-
-    out = counts.unionByName(report).unionByName(knrows)
-    return tag_caches(out, agg, bc_kn, *get_tagged_caches(kn))
+    return counts.unionByName(report).unionByName(knrows)
 
 
 # ---------------------------------------------------------------------------
@@ -864,10 +859,8 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge list feeds components AND pagerank — cache it so the
     # union branches don't re-run the MinHash pipeline (memory:
     # spark-plan-quirks — no reuse across union branches)
-    edges = (
-        pairs.filter(F.col("est_jaccard") >= 0.5)
-        .select("id_a", "id_b")
-        .cache()
+    edges = tracked_cache(
+        pairs.filter(F.col("est_jaccard") >= 0.5).select("id_a", "id_b")
     )
     comp = connected_components(edges)
     # labeled is NOT cached: both variant branches recompute it from the
@@ -903,12 +896,7 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pr",
         )
     )
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
-
-    return tag_caches(cc.unionByName(central), edges, *get_tagged_caches(pairs))
+    return cc.unionByName(central)
 
 
 def _simhash_oracle(bits: int = 32) -> str:
@@ -1681,10 +1669,9 @@ def embedding_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold expressions would be cloned into (and codegen-compiled for)
     # every union branch (memory: spark-plan-quirks — no reuse across
     # union branches)
-    corpus = (
+    corpus = tracked_cache(
         base.unionByName(scaled).unionByName(exact)
         .select("vec_id", F.col("e").alias("embedding"))
-        .cache()
     )
     # corpus count feeds BOTH scale rules: SemDeDup's k ∝ N (below) and
     # the LSH banding autoparams — (4, 8) through sf0.1, so the fixed
@@ -1716,10 +1703,10 @@ def embedding_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     vsel = corpus.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    cent = kmeans_centroids(
+    cent = tracked_cache(kmeans_centroids(
         vsel, n_centroids=k_sem, n_iters=2, dims=64,
         train_limit=max(256, 4 * k_sem),
-    ).cache()
+    ))
     # assign="coarse" (round 12): the flat n*k argmin was the slot's one
     # superlinear term under k ∝ N (N^2/300 — the measured sf3->sf10
     # exponent 1.91); the two-level route is O(n*sqrt(k)) and the oracle
@@ -1763,16 +1750,7 @@ def embedding_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("cos"),
         F.lit(None).cast("boolean").alias("kept"),
     )
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
-
-    return tag_caches(
-        pairs.unionByName(sem).unionByName(semc), corpus, cent,
-        *get_tagged_caches(cent),
-        *get_tagged_caches(nd), *get_tagged_caches(sd),
-    )
+    return pairs.unionByName(sem).unionByName(semc)
 
 
 # ---------------------------------------------------------------------------
@@ -2494,14 +2472,7 @@ def similarity_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "variant string, query_id bigint, neighbor_id bigint, "
         "cos double, rk int",
     )
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
-
-    return tag_caches(
-        ann.unionByName(lists).unionByName(drift), *get_tagged_caches(ann_raw)
-    )
+    return ann.unionByName(lists).unionByName(drift)
 
 
 # ---------------------------------------------------------------------------
@@ -2790,7 +2761,7 @@ def line_dedup_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1; the same boundary on stratified_sample_langs and
     # similarity_bruteforce_topk measured ZERO win — their scans are
     # projection-pruned narrow reads — so those stay uncached)
-    corpus = _corpus(spark, sf_dir).cache()
+    corpus = tracked_cache(_corpus(spark, sf_dir))
     chunks = remove_duplicate_chunks(corpus).select(
         F.lit("chunks").alias("variant"),
         "doc_id",
@@ -2820,9 +2791,7 @@ def line_dedup_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_units").alias("n_total"),
         F.col("n_unique_units").alias("n_kept"),
     )
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
-
-    return tag_caches(chunks.unionByName(subs).unionByName(within), corpus)
+    return chunks.unionByName(subs).unionByName(within)
 
 
 # ---------------------------------------------------------------------------
@@ -3459,7 +3428,6 @@ def quality_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     to ``token_count_by_source`` 'kn' in round 9 for the same
     reason)."""
     configure_session(spark)
-    from xarray_dataaccessor_spark.operators.cachectl import tag_caches
     from xarray_dataaccessor_spark.operators.text import (
         bigram_lm_from_counts,
         gopher_from_counts,
@@ -3475,20 +3443,18 @@ def quality_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         _corpus_word_counts,
     )
 
-    wc = _corpus_word_counts(spark, sf_dir).cache()
-    bc = _corpus_bigram_counts(spark, sf_dir).cache()
+    wc = tracked_cache(_corpus_word_counts(spark, sf_dir))
+    bc = tracked_cache(_corpus_bigram_counts(spark, sf_dir))
     gopher = gopher_from_counts(wc, bc)
     lm = bigram_lm_from_counts(wc, bc)
     # base feeds the output twice (once for the tier histogram, once
     # for the labeled rows): cache the doc-sized signal table instead
     # of recomputing the gopher+lm pipeline.
-    base = (
-        gopher.join(lm, "doc_id", "left")
-        .withColumn(
+    base = tracked_cache(
+        gopher.join(lm, "doc_id", "left").withColumn(
             "lm_bigrams",
             F.coalesce(F.col("lm_bigrams"), F.lit(0)).cast("bigint"),
         )
-        .cache()
     )
     # CCNet perplexity terciles over the SAME cached base table — the
     # histogram threshold derivation scans base once, and the labels
@@ -3496,8 +3462,7 @@ def quality_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on base (NO extra doc-sized join: labeling is map-side)
     from xarray_dataaccessor_spark.operators.text import perplexity_buckets
 
-    out = perplexity_buckets(base, n_buckets=3)
-    return tag_caches(out, wc, bc, base)
+    return perplexity_buckets(base, n_buckets=3)
 
 
 @query(
@@ -3662,10 +3627,6 @@ def quality_classifier_distill_query(spark: SparkSession, sf_dir: str) -> DataFr
     6-decimal-rounded sigmoids) AND the eval metric, so the learned
     weights, scores and AUC all hash-match across engines."""
     configure_session(spark)
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        get_tagged_caches,
-        tag_caches,
-    )
     from xarray_dataaccessor_spark.operators.classifier import (
         distill_quality_classifier,
     )
@@ -3681,11 +3642,11 @@ def quality_classifier_distill_query(spark: SparkSession, sf_dir: str) -> DataFr
         _corpus_word_counts,
     )
 
-    wc = _corpus_word_counts(spark, sf_dir).cache()
-    bc = _corpus_bigram_counts(spark, sf_dir).cache()
+    wc = tracked_cache(_corpus_word_counts(spark, sf_dir))
+    bc = tracked_cache(_corpus_bigram_counts(spark, sf_dir))
     # teacher = the gopher gate (weak labels + quality signals); the
     # doc-sized signal table feeds labels, features and the output join
-    base = gopher_from_counts(wc, bc).cache()
+    base = tracked_cache(gopher_from_counts(wc, bc))
     # deterministic 80/20 hash split (VERDICT r6 #7): the classifier
     # trains on the train side only and is scored with a held-out
     # rank-sum AUC — the metric a production distill loop gates on
@@ -3735,7 +3696,7 @@ def quality_classifier_distill_query(spark: SparkSession, sf_dir: str) -> DataFr
     # chain + corpus score pass executed twice per invocation. It is
     # doc-sized (id, score, keep), so cache it (guide §2.4: one
     # materialization, two consumers).
-    clf = clf.cache()
+    clf = tracked_cache(clf)
     # held-out rank-sum AUC (Mann-Whitney with ties as half-wins),
     # integer-exact until the final division: group eval scores by
     # value, one ordered prefix-sum over the <= |distinct 6-decimal
@@ -3766,7 +3727,7 @@ def quality_classifier_distill_query(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("npos").cast("bigint").alias("eval_pos"),
         F.col("nneg").cast("bigint").alias("eval_neg"),
     )
-    out = (
+    return (
         labels_all.withColumnRenamed("y", "weak_label")
         .join(clf, "doc_id")
         .crossJoin(F.broadcast(metrics))
@@ -3775,7 +3736,6 @@ def quality_classifier_distill_query(spark: SparkSession, sf_dir: str) -> DataFr
             "eval_auc", "eval_pos", "eval_neg",
         )
     )
-    return tag_caches(out, wc, bc, base, clf, *get_tagged_caches(clf))
 
 
 @query(

@@ -198,15 +198,12 @@ def configure_session(spark: SparkSession) -> SparkSession:
     safe to set after JVM start.
 
     Also the slot-boundary teardown hook: every query body calls this
-    first, and by then the PREVIOUS body's plans are dead — so the RDD
-    blocks its operators pinned via ``tracked_local_checkpoint`` are
-    released here (``spark.catalog.clearCache()`` between slots cannot
-    see them; VERDICT r13 #5)."""
-    from xarray_dataaccessor_spark.operators.cachectl import (
-        release_checkpoints,
-    )
+    first, and by then the PREVIOUS body's plans are dead — so every
+    cache and checkpoint its operators registered with ``cachectl`` is
+    released here."""
+    from xarray_dataaccessor_spark.operators.cachectl import release
 
-    release_checkpoints()
+    release()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -226,7 +226,8 @@ def netcdf_layout(buf) -> dict:
     if buf[:8] != _HDF5_SIG:
         return _classic_layout(buf)
     lay = parse_hdf5_layout(buf)
-    tv = lay["variables"].get("time")
+    t = grid_axes(lay["variables"])[0]
+    tv = lay["variables"][t] if t else None
     lay["record_dim"] = tv["dims"][0] if tv is not None and tv["dims"] else None
     return lay
 
@@ -328,6 +329,7 @@ def cf_decode(raw: np.ndarray, attrs: dict) -> np.ndarray:
     return out
 
 
+_TIME_NAMES = ("time", "valid_time")  # current CDS NetCDF uses valid_time
 _X_NAMES = ("longitude", "lon", "x")
 _Y_NAMES = ("latitude", "lat", "y")
 _LEVEL_NAMES = ("level", "lev", "plev", "pressure_level", "isobaricInhPa")
@@ -335,14 +337,13 @@ _LEVEL_NAMES = ("level", "lev", "plev", "pressure_level", "isobaricInhPa")
 
 def grid_axes(variables: dict) -> tuple[str | None, str | None, str | None, str | None]:
     """Names of the ``(time, level, y, x)`` coordinate variables, each
-    None when the granule has none (``time`` by name; the others by the
-    first of their conventional names present)."""
+    None when the granule has none (the first of each axis's
+    conventional names present)."""
 
     def pick(cands):
         return next((c for c in cands if c in variables), None)
 
-    t = "time" if "time" in variables else None
-    return t, pick(_LEVEL_NAMES), pick(_Y_NAMES), pick(_X_NAMES)
+    return pick(_TIME_NAMES), pick(_LEVEL_NAMES), pick(_Y_NAMES), pick(_X_NAMES)
 
 
 def data_variables(variables: dict) -> list[str]:

@@ -21,6 +21,8 @@ Patterns provided:
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 import uuid
 from typing import Iterable, Tuple
@@ -106,13 +108,19 @@ def start_available_now(
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="xda_ckpt_"))
+            .option("checkpointLocation", _checkpoint_dir(name))
             .trigger(availableNow=True)
             .start()
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return q, name
+
+
+def _checkpoint_dir(name: str) -> str:
+    """The checkpoint directory of the availableNow query sinking into
+    ``name`` (unique: the sink name carries a random id)."""
+    return os.path.join(tempfile.gettempdir(), f"xda_ckpt_{name}")
 
 
 #: Bound on any single availableNow drain (seconds). Generous for every
@@ -132,17 +140,23 @@ def finish_available_now(
     then stopped and a ``TimeoutError`` names the hang (environment
     overload or a stuck source), instead of a bare await wedging the
     driver forever. A query that FAILED raises its own
-    ``StreamingQueryException`` from inside ``awaitTermination``."""
+    ``StreamingQueryException`` from inside ``awaitTermination``.
+
+    Once the query has terminated (or been stopped) its checkpoint
+    directory is removed: the memory-sink table does not read it."""
     q, name = handle
-    if not q.awaitTermination(timeout_sec):
-        try:
-            q.stop()
-        finally:
-            raise TimeoutError(
-                f"availableNow query '{name}' did not finish within "
-                f"{timeout_sec:.0f}s — environment overload or source "
-                "hang, NOT a result mismatch"
-            )
+    try:
+        if not q.awaitTermination(timeout_sec):
+            try:
+                q.stop()
+            finally:
+                raise TimeoutError(
+                    f"availableNow query '{name}' did not finish within "
+                    f"{timeout_sec:.0f}s — environment overload or source "
+                    "hang, NOT a result mismatch"
+                )
+    finally:
+        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
     return spark.table(name)
 
 
