@@ -9,12 +9,10 @@ from __future__ import annotations
 
 import random
 import signal
-from struct import error as struct_error
 
 import pytest
 
-_ERRS = (ValueError, IndexError, KeyError, struct_error, OverflowError,
-         ZeroDivisionError, UnicodeDecodeError)
+from xarray_dataaccessor_spark.sources.media import PARSE_ERRORS as _ERRS
 
 
 class _Timebox:

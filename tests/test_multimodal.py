@@ -5,15 +5,35 @@ absence is the point of the fake-codec gate)."""
 
 from __future__ import annotations
 
+import ast
+import struct
+from functools import partial
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import xarray_dataaccessor_spark as pkg
+from xarray_dataaccessor_spark.operators import multimodal as mm
 from xarray_dataaccessor_spark.operators.multimodal import (
+    attach_audio_column,
     attach_binary_column,
+    attach_container_audio_column,
+    attach_media_column,
+    attach_mp3_column,
+    attach_tone_audio_column,
+    attach_video_column,
+    attach_webp_lossy_column,
+    audio_probe,
+    audio_spectrogram,
     binary_features,
     decode_binary,
     decode_image,
+    fused_attach_probe,
+    image_channel_stats,
+    probe_images,
+    probe_videos,
     resample_audio,
     sample_frames,
 )
@@ -220,32 +240,116 @@ def test_probe_videos(spark):
     assert out[4]["duration_ms"] == 900
 
 
-def test_fused_attach_probe_matches_chained_and_is_one_python_stage(spark):
-    """r14 (VERDICT r13 #7): composing attach+probe inside one
-    mapInPandas must be row-identical to the chained two-node form and
-    must collapse the branch to exactly ONE Python stage (the payload
-    bytes no longer cross the JVM boundary between the two functions)."""
+# every attach -> probe pair queries_ext.multimodal_binary_features fuses;
+# the image branch filters the docs to its codec's residue class first
+_FUSED = [
+    pytest.param(attach_media_column, partial(decode_image, codec=c), i, id=f"media-{c}")
+    for i, c in enumerate(("netpbm", "png", "jpeg"))
+] + [
+    pytest.param(attach_audio_column, partial(resample_audio, rate=4000, codec="flac"),
+                 None, id="flac-resample_audio"),
+    pytest.param(attach_mp3_column, audio_probe, None, id="mp3-audio_probe"),
+    pytest.param(attach_webp_lossy_column, partial(image_channel_stats, codec="webp"),
+                 None, id="webp-image_channel_stats"),
+    pytest.param(attach_container_audio_column, audio_probe, None,
+                 id="container_audio-audio_probe"),
+    pytest.param(attach_video_column, probe_videos, None, id="video-probe_videos"),
+    pytest.param(attach_tone_audio_column, partial(audio_spectrogram, codec="wav"),
+                 None, id="tone-audio_spectrogram"),
+]
+
+
+@pytest.mark.parametrize("attach, probe, residue", _FUSED)
+def test_fused_attach_probe_matches_chained_and_is_one_python_stage(
+    spark, attach, probe, residue
+):
+    """Composing attach+probe inside one mapInPandas must be row-identical
+    to the chained two-node form and must collapse the branch to exactly
+    ONE Python stage (the payload bytes no longer cross the JVM boundary
+    between the two functions)."""
     import re
 
-    from xarray_dataaccessor_spark.operators.multimodal import (
-        attach_mp3_column,
-        audio_probe,
-        fused_attach_probe,
-    )
-
-    docs = spark.range(0, 40).select(F.col("id").alias("doc_id"))
-    chained = audio_probe(attach_mp3_column(docs))
-    fused = fused_attach_probe(
-        docs,
-        attach_mp3_column(None, _fn_only=True),
-        audio_probe(None, _fn_only=True),
-    )
-    a = sorted(map(tuple, chained.collect()))
-    b = sorted(map(tuple, fused.collect()))
-    assert a == b
     from xarray_dataaccessor_spark.plans.explain import plan_string
 
+    docs = spark.range(0, 40).select(F.col("id").alias("doc_id"))
+    if residue is not None:
+        docs = docs.filter(F.col("doc_id") % 3 == residue)
+    chained = probe(attach(docs))
+    fused = fused_attach_probe(docs, attach, probe)
+    a = sorted(map(tuple, chained.collect()))
+    b = sorted(map(tuple, fused.collect()))
+    assert a == b and len(a) == docs.count()
     plan = plan_string(fused)
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, plan
     chained_plan = plan_string(chained)
     assert len(re.findall(r"\(\d+\) MapInPandas", chained_plan)) == 2
+
+
+def _stage_row(builder):
+    """The row function a builder plans, without a JVM."""
+    (stage,) = builder(mm._Fused())
+    return stage.row
+
+
+def test_probe_rows_null_parse_errors_and_raise_program_errors(monkeypatch):
+    """No JVM. The probes keep the all-null 'unknown' record for exactly
+    the errors the parser fuzz allows; anything else fails loudly."""
+    from xarray_dataaccessor_spark.sources.media import PARSE_ERRORS, write_mp3_frames
+
+    assert set(PARSE_ERRORS) == {
+        ValueError, IndexError, KeyError, struct.error, OverflowError,
+        ZeroDivisionError, UnicodeDecodeError,
+    }
+    for builder in (audio_probe, probe_images, probe_videos):
+        rec = _stage_row(builder)(b"definitely not a media payload " * 8)
+        assert rec["fmt"] == "unknown"
+        assert {k for k, v in rec.items() if v is not None} == {"fmt"}
+
+    payload = write_mp3_frames(12, kbps=128)
+    assert _stage_row(audio_probe)(payload)["fmt"] == "mp3"
+
+    def broken(raw):
+        raise TypeError("program error, not a corrupt payload")
+
+    monkeypatch.setattr(mm, "mp3_probe", broken)
+    with pytest.raises(TypeError, match="program error"):
+        _stage_row(audio_probe)(payload)
+
+
+def test_one_python_stage_helper_in_multimodal():
+    """No JVM. ``operators/multimodal.py`` plans every Python stage
+    through one ``mapInPandas`` call, no builder carries a stage-only
+    flag, and no broad ``except Exception`` swallows a failure in the
+    multimodal operators, the query registry or the WebDataset sink."""
+    root = Path(pkg.__file__).parent
+
+    def tree(rel):
+        return ast.parse((root / rel).read_text())
+
+    calls = [
+        node for node in ast.walk(tree("operators/multimodal.py"))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "mapInPandas"
+    ]
+    assert len(calls) == 1
+
+    broad = [
+        f"{rel}:{node.lineno}"
+        for rel in ("operators/multimodal.py", "queries.py", "sinks/webdataset.py")
+        for node in ast.walk(tree(rel))
+        if isinstance(node, ast.ExceptHandler)
+        and (node.type is None
+             or any(isinstance(t, ast.Name) and t.id == "Exception" for t in ast.walk(node.type)))
+    ]
+    assert broad == []
+
+    flag = "_fn_only"
+    uses = [
+        f"{path.name}:{node.lineno}"
+        for path in [*root.rglob("*.py"), *Path(__file__).parent.rglob("*.py")]
+        for node in ast.walk(ast.parse(path.read_text()))
+        if flag in (getattr(node, "arg", None), getattr(node, "id", None),
+                    getattr(node, "attr", None))
+    ]
+    assert uses == []

@@ -17,26 +17,61 @@ library (MP3/AAC sample decode, H.264 slice entropy decode) would plug
 in — the ENVELOPE layers above those gates are real: MP3 side info +
 scalefactors, ADTS walk, H.264 SPS, MP4 boxes, WebM EBML
 (``audio_probe`` / ``probe_videos``).
+
+One row-function contract: every Python-side operator here is a pure
+ROW FUNCTION plus an output schema, and ``_python_stage`` is the one
+place that turns it into a Python stage. The row function maps the
+memo key of one input value (the ``doc_id`` for the ``attach_*``
+builders, the payload bytes for the decoders and probes) to a dict of
+output columns, or to a list of dicts for one-to-many
+:func:`sample_frames`; the helper adds ``doc_id`` and owns shipping the
+codecs by value, the per-task memo, the Arrow batch loop, the output
+frame and the attach→probe fusion of :func:`fused_attach_probe`.
+
+Probe failure policy: :func:`audio_probe`, :func:`probe_images` and
+:func:`probe_videos` emit the all-null ``fmt='unknown'`` row for a
+payload the parsers reject with one of ``sources/media.py::
+PARSE_ERRORS`` — the errors the corruption fuzz
+(``tests/test_media_fuzz.py``) holds the parsers to. Any other
+exception is a program error and fails the task.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
+from typing import Callable, NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xarray_dataaccessor_spark.sources.flac import parse_flac
-from xarray_dataaccessor_spark.sources.jpeg import parse_jpeg
-from xarray_dataaccessor_spark.sources.webp import parse_webp
+from xarray_dataaccessor_spark.sources.flac import parse_flac, write_flac
+from xarray_dataaccessor_spark.sources.jpeg import parse_jpeg, write_jpeg
+from xarray_dataaccessor_spark.sources.webp import parse_webp, write_webp_lossy
 from xarray_dataaccessor_spark.sources.media import (
+    PARSE_ERRORS,
+    aac_adts_probe,
+    h264_probe,
+    image_probe,
+    mp3_probe,
+    mp4_probe,
+    ogg_probe,
     parse_bmp,
     parse_gif,
     parse_netpbm,
     parse_png,
     parse_wav,
     parse_y4m,
+    webm_probe,
+    write_adts_frames,
+    write_h264_annexb,
+    write_mp3_frames,
+    write_mp4_avc,
+    write_netpbm,
+    write_ogg_opus,
+    write_png,
+    write_wav,
+    write_webm,
 )
 
 
@@ -54,7 +89,8 @@ def _ship_by_value() -> None:
 
     ship_by_value(_media, _webp, _vp8, _vp8t, _jpeg, _flac, _mm)
 
-def _task_memo(cap: int = 4096):
+
+def _task_memo(cap: int):
     """Per-task content-addressed memo for the codec loops: byte-identical
     payloads (or identical generation parameters) collapse to ONE
     encode/decode per task — the standard dedup-before-decode move
@@ -71,12 +107,97 @@ def _task_memo(cap: int = 4096):
         try:
             return memo[key]
         except KeyError:
-            val = compute()
+            val = compute(key)
             if len(memo) < cap:
                 memo[key] = val
             return val
 
     return get
+
+
+class _Stage(NamedTuple):
+    """A pure row function and its output schema: ``row(key(x))`` gives
+    the output columns for the value ``x`` of ``in_col``, memoized per
+    task on ``key(x)`` (at most ``cap`` entries)."""
+
+    row: Callable
+    schema: str
+    in_col: str
+    key: Callable = bytes
+    cap: int = 4096
+
+
+class _Fused(tuple):
+    """What :func:`fused_attach_probe` hands the builders in place of a
+    DataFrame: the stages collected so far."""
+
+
+def _python_stage(df, *stages: _Stage, id_col: str = "doc_id"):
+    """Plan ``stages`` as ONE ``mapInPandas`` over ``df``'s ``id_col``
+    and the first stage's ``in_col``; each later stage reads its
+    ``in_col`` from the earlier stage's output columns, and the output
+    rows are ``doc_id`` plus the last stage's columns. Given a
+    :class:`_Fused` instead of a DataFrame, the stages are appended to it
+    and nothing is planned."""
+    if isinstance(df, _Fused):
+        return _Fused(df + stages)
+    _ship_by_value()
+    # plain tuples of functions: the batch closure ships to the workers
+    plan = [(s.row, s.in_col, s.key, s.cap) for s in stages]
+    in_col = stages[0].in_col
+
+    def batches_fn(batches):
+        import pandas as pd
+
+        memos = [_task_memo(cap) for _, _, _, cap in plan]
+        for pdf in batches:
+            rows = []
+            for d, x in zip(pdf[id_col].tolist(), pdf[in_col].tolist()):
+                outs = [{in_col: x}]
+                for (row, col, key, _), memo in zip(plan, memos):
+                    nxt = []
+                    for prev in outs:
+                        out = memo(key(prev[col]), row)
+                        nxt += out if isinstance(out, list) else [out]
+                    outs = nxt
+                rows += [{"doc_id": d, **o} for o in outs]
+            yield pd.DataFrame(rows)
+
+    cols = list(dict.fromkeys((id_col, in_col)))
+    return df.select(*cols).mapInPandas(batches_fn, stages[-1].schema)
+
+
+_IMAGE_PARSERS = {
+    "netpbm": parse_netpbm,
+    "bmp": parse_bmp,
+    "png": parse_png,
+    "gif": lambda raw: parse_gif(raw)[1][0],  # first frame
+    "jpeg": parse_jpeg,
+    "webp": parse_webp,
+}
+
+_AUDIO_PARSERS = {"wav": parse_wav, "flac": parse_flac}
+
+_LUMA = np.array([0.299, 0.587, 0.114])  # ITU-R 601
+
+
+_PURE_CODECS = {
+    "image": ("PIL/opencv", tuple(_IMAGE_PARSERS)),
+    "audio": ("librosa/soundfile", tuple(_AUDIO_PARSERS)),
+    "video": ("ffmpeg/av", ("y4m", "gif")),
+}
+
+
+def _require_codec(kind: str, codec: str) -> None:
+    """The codec gate of one media kind: ``'fake'`` and the pure parsers
+    pass; anything else names the library it would need."""
+    lib, pure = _PURE_CODECS[kind]
+    if codec != "fake" and codec not in pure:
+        raise NotImplementedError(
+            f"{kind} codec {codec!r} requires {lib}, not installed; "
+            + "/".join(f"'{c}'" for c in pure)
+            + " decode purely, 'fake' exercises the plumbing"
+        )
 
 
 BINARY_META_SCHEMA = (
@@ -103,8 +224,7 @@ def attach_binary_column(
 
 
 def attach_media_column(
-    df: DataFrame, id_col: str = "doc_id", size: tuple[int, int] = (8, 8),
-    _fn_only: bool = False,
+    df: DataFrame, id_col: str = "doc_id", size: tuple[int, int] = (8, 8)
 ) -> DataFrame:
     """Attach REAL image payloads built with the pure codecs so a DuckDB
     oracle can reproduce decoded statistics exactly. Codec rotates on
@@ -118,47 +238,27 @@ def attach_media_column(
       lossy codec has a SQL-derivable decoded mean)
 
     Output: ``(doc_id, payload binary, img_codec string)``."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.jpeg import write_jpeg
-    from xarray_dataaccessor_spark.sources.media import write_netpbm, write_png
-
     h, w = size
-    wn, wp, wj = write_netpbm, write_png, write_jpeg
+    k = np.arange(h * w, dtype="int64")
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import numpy as np
-        import pandas as pd
+    def row(key):
+        m, g = key
+        if m == 2:
+            solid = np.full((h, w), g, dtype="u1")
+            return {"payload": write_jpeg(solid, quality=100), "img_codec": "jpeg"}
+        gradient = ((g + k) % 256).astype("u1").reshape(h, w)
+        if m == 0:
+            return {"payload": write_netpbm(gradient, binary=True), "img_codec": "netpbm"}
+        return {"payload": write_png(gradient), "img_codec": "png"}
 
-        k = np.arange(h * w, dtype="int64")
-        memo = _task_memo()
-
-        def build(m, g):
-            if m == 0:
-                return wn(((g + k) % 256).astype("u1").reshape(h, w),
-                          binary=True), "netpbm"
-            if m == 1:
-                return wp(((g + k) % 256).astype("u1").reshape(h, w)), "png"
-            return wj(np.full((h, w), g, dtype="u1"), quality=100), "jpeg"
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                # payload is a pure function of (d % 3, (d*7) % 256):
-                # memo per task instead of re-encoding per doc
-                m, g = d % 3, (d * 7) % 256
-                payload, codec = memo((m, g), lambda: build(m, g))
-                rows.append({"doc_id": d, "payload": payload, "img_codec": codec})
-            yield pd.DataFrame(rows)
-
-    if _fn_only:
-        return batches_fn, "doc_id bigint, payload binary, img_codec string"
-    return df.select(id_col).mapInPandas(batches_fn, "doc_id bigint, payload binary, img_codec string")
+    # a payload is a pure function of (d % 3, (d*7) % 256)
+    stage = _Stage(row, "doc_id bigint, payload binary, img_codec string", id_col,
+                   key=lambda d: (d % 3, (d * 7) % 256))
+    return _python_stage(df, stage, id_col=id_col)
 
 
 def attach_webp_lossy_column(
-    df: DataFrame, id_col: str = "doc_id", size: tuple[int, int] = (16, 32),
-    _fn_only: bool = False,
+    df: DataFrame, id_col: str = "doc_id", size: tuple[int, int] = (16, 32)
 ) -> DataFrame:
     """Attach a REAL lossy-WebP (VP8 key frame) payload per document —
     SOLID gray ``(d*11) % 256`` at q_index 0, where the decode is
@@ -168,32 +268,15 @@ def attach_webp_lossy_column(
     analogue of the solid-q100-JPEG trick). The decoded channel means
     are therefore integer-valued and SQL-derivable through the two
     integer color conversions. Output: ``(doc_id, payload binary)``."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.webp import write_webp_lossy
-
     h, w = size
-    wl = write_webp_lossy
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import numpy as np
-        import pandas as pd
+    def row(g):
+        return {"payload": write_webp_lossy(np.full((h, w, 3), g, dtype="u1"), q_index=0)}
 
-        memo = _task_memo()
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                # payload is a pure function of (d*11) % 256 (<= 256
-                # distinct frames): memo the VP8 encode per task
-                g = (d * 11) % 256
-                payload = memo(g, lambda: wl(
-                    np.full((h, w, 3), g, dtype="u1"), q_index=0))
-                rows.append({"doc_id": d, "payload": payload})
-            yield pd.DataFrame(rows)
-
-    if _fn_only:
-        return batches_fn, "doc_id bigint, payload binary"
-    return df.select(id_col).mapInPandas(batches_fn, "doc_id bigint, payload binary")
+    # <= 256 distinct frames: one VP8 encode per gray level per task
+    stage = _Stage(row, "doc_id bigint, payload binary", id_col,
+                   key=lambda d: (d * 11) % 256)
+    return _python_stage(df, stage, id_col=id_col)
 
 
 def attach_audio_column(
@@ -201,7 +284,6 @@ def attach_audio_column(
     id_col: str = "doc_id",
     n_samples: int = 256,
     sample_rate: int = 8000,
-    _fn_only: bool = False,
 ) -> DataFrame:
     """Attach a REAL FLAC payload per document so a DuckDB oracle can
     reproduce decoded audio statistics exactly: mono int16 samples
@@ -209,33 +291,16 @@ def attach_audio_column(
     |s| <= 2000 so every squared partial sum stays an exact double),
     FLAC-encoded losslessly by the pure ``sources/flac.py`` writer.
     Output: ``(doc_id, payload binary)``."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.flac import write_flac
+    k = np.arange(n_samples, dtype="int64")
 
-    wf = write_flac
+    def row(r):
+        samples = (((r + k * 7) % 4001) - 2000).astype("<i2")
+        return {"payload": write_flac(samples, sample_rate)}
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import numpy as np
-        import pandas as pd
-
-        k = np.arange(n_samples, dtype="int64")
-        memo = _task_memo(cap=8192)
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                # samples are a pure function of (d*13) % 4001: memo
-                # the FLAC encode per task
-                r = (d * 13) % 4001
-                payload = memo(r, lambda: wf(
-                    (((r + k * 7) % 4001) - 2000).astype("<i2"),
-                    sample_rate))
-                rows.append({"doc_id": d, "payload": payload})
-            yield pd.DataFrame(rows)
-
-    if _fn_only:
-        return batches_fn, "doc_id bigint, payload binary"
-    return df.select(id_col).mapInPandas(batches_fn, "doc_id bigint, payload binary")
+    # samples are a pure function of (d*13) % 4001
+    stage = _Stage(row, "doc_id bigint, payload binary", id_col,
+                   key=lambda d: (d * 13) % 4001, cap=8192)
+    return _python_stage(df, stage, id_col=id_col)
 
 
 def attach_tone_audio_column(
@@ -245,7 +310,6 @@ def attach_tone_audio_column(
     sample_rate: int = 8000,
     n_fft: int = 256,
     codec: str = "wav",
-    _fn_only: bool = False,
 ) -> DataFrame:
     """Attach an audio payload holding a PLANTED PURE TONE per document —
     the spectrogram fixture: ``s[k] = round(1000 * cos(2*pi*b*k/n_fft))``
@@ -257,78 +321,34 @@ def attach_tone_audio_column(
     FLAC encode path is already oracle-verified by the audio_rms branch
     and its pure-Python LPC costs ~2x here for no extra coverage.
     Output: ``(doc_id, payload)``."""
-    _ship_by_value()
-    if codec == "wav":
-        from xarray_dataaccessor_spark.sources.media import write_wav
+    write = write_wav if codec == "wav" else write_flac
+    k = np.arange(n_samples, dtype="float64")
 
-        wf = write_wav
-    else:
-        from xarray_dataaccessor_spark.sources.flac import write_flac
+    def row(b):
+        tone = np.round(1000.0 * np.cos(2.0 * np.pi * b * k / n_fft))
+        return {"payload": write(tone.astype("<i2"), sample_rate)}
 
-        wf = write_flac
-
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import numpy as np
-        import pandas as pd
-
-        k = np.arange(n_samples, dtype="float64")
-        memo = _task_memo()
-
-        def build(b):
-            return wf(np.round(
-                1000.0 * np.cos(2.0 * np.pi * b * k / n_fft)
-            ).astype("<i2"), sample_rate)
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                # 8 distinct tones (b = 3 + d%8): memo the encode
-                b = 3 + d % 8
-                rows.append({"doc_id": d, "payload": memo(b, lambda: build(b))})
-            yield pd.DataFrame(rows)
-
-    if _fn_only:
-        return batches_fn, "doc_id bigint, payload binary"
-    return df.select(id_col).mapInPandas(batches_fn, "doc_id bigint, payload binary")
+    # 8 distinct tones (b = 3 + d % 8)
+    stage = _Stage(row, "doc_id bigint, payload binary", id_col, key=lambda d: 3 + d % 8)
+    return _python_stage(df, stage, id_col=id_col)
 
 
-def attach_mp3_column(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    _fn_only: bool = False,
-) -> DataFrame:
+def attach_mp3_column(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a syntactically valid MPEG-audio payload per document
     (``media.write_mp3_frames``) with SQL-derivable envelope metadata:
     ``n_frames = 10 + d % 16``; documents with ``d % 5 == 0`` alternate
     128/192 kbps (VBR), the rest are 128 kbps CBR. Frame headers are
     real; payloads are zero-filled (the probe never decodes audio).
     Output: ``(doc_id, payload binary)``."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.media import write_mp3_frames
 
-    wm = write_mp3_frames
+    def row(key):
+        n, alt = key
+        return {"payload": write_mp3_frames(n, kbps=128, vbr_alt_kbps=alt)}
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import pandas as pd
-
-        memo = _task_memo()
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                # 32 distinct payloads (n_frames x vbr flag): memo
-                n = 10 + d % 16
-                alt = 192 if d % 5 == 0 else None
-                rows.append(
-                    {"doc_id": d, "payload": memo(
-                        (n, alt), lambda: wm(n, kbps=128, vbr_alt_kbps=alt))}
-                )
-            yield pd.DataFrame(rows)
-
-    if _fn_only:
-        return batches_fn, "doc_id bigint, payload binary"
-    return df.select(id_col).mapInPandas(batches_fn, "doc_id bigint, payload binary")
+    # 32 distinct payloads (n_frames x vbr flag)
+    stage = _Stage(row, "doc_id bigint, payload binary", id_col,
+                   key=lambda d: (10 + d % 16, 192 if d % 5 == 0 else None))
+    return _python_stage(df, stage, id_col=id_col)
 
 
 def binary_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -349,77 +369,46 @@ def decode_binary(
     df: DataFrame, payload_col: str = "payload", batch_schema: str | None = None
 ) -> DataFrame:
     """Arrow-batched mapInPandas decode: the distributed plumbing a real
-    image/audio decode would ride on. The per-batch function receives
-    pandas DataFrames with raw bytes; the codec call is replaced by a
-    deterministic fake (first/last byte, simple checksum) so the batch
-    shape, schema, and partition behavior are testable in this container.
+    image/audio decode would ride on. The row function receives the raw
+    bytes; the codec call is replaced by a deterministic fake (first/last
+    byte, simple checksum) so the batch shape, schema, and partition
+    behavior are testable in this container.
     """
     out_schema = batch_schema or (
         "doc_id bigint, n_bytes bigint, first_byte int, last_byte int, byte_sum bigint"
     )
 
-    def decode_batches(batches: "Iterator") -> "Iterator":
-        import pandas as pd
+    def row(raw):
+        return {
+            "n_bytes": len(raw),
+            "first_byte": raw[0] if raw else -1,
+            "last_byte": raw[-1] if raw else -1,
+            "byte_sum": sum(raw[:64]),
+        }
 
-        for pdf in batches:
-            payload = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": payload.map(len),
-                    "first_byte": payload.map(lambda b: b[0] if len(b) else -1),
-                    "last_byte": payload.map(lambda b: b[-1] if len(b) else -1),
-                    "byte_sum": payload.map(lambda b: int(sum(b[:64]))),
-                }
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(decode_batches, out_schema)
+    return _python_stage(df, _Stage(row, out_schema, payload_col))
 
 
-def _decode_raw(raw: bytes, codec: str):
-    """Decode payload bytes to the parser's native array — (h, w) gray
-    or (h, w, 3/4) color float64; 'fake' tiles the raw bytes to 32x32."""
-    if codec == "jpeg":
-        return parse_jpeg(raw).astype("float64")
-    if codec == "netpbm":
-        return parse_netpbm(raw).astype("float64")
-    if codec == "bmp":
-        return parse_bmp(raw).astype("float64")
-    if codec == "png":
-        img = parse_png(raw).astype("float64")
-        if img.ndim == 3 and img.shape[2] == 4:  # drop alpha
-            img = img[:, :, :3]
-        return img
-    if codec == "gif":
-        return parse_gif(raw)[1][0].astype("float64")  # first frame
-    if codec == "webp":
-        img = parse_webp(raw).astype("float64")
-        if img.ndim == 3 and img.shape[2] == 4:  # drop alpha
-            img = img[:, :, :3]
-        return img
-    return np.resize(np.frombuffer(raw, dtype=np.uint8), (32, 32)).astype(
-        "float64"
-    )
-
-
-def _decode_raw_keep_alpha(raw: bytes, codec: str):
-    """Like :func:`_decode_raw` but preserves a 4th (alpha) channel for
-    the codecs that carry one — the per-channel stats operator's
-    alpha-content checks need it; the luma paths drop it by policy."""
-    if codec == "png":
-        return parse_png(raw).astype("float64")
-    if codec == "webp":
-        return parse_webp(raw).astype("float64")
-    return _decode_raw(raw, codec)
-
-
-def _decode_gray(raw: bytes, codec: str):
-    """Decode payload bytes to a float64 grayscale array (color
-    collapses to ITU-R 601 luma)."""
-    img = _decode_raw(raw, codec)
-    if img.ndim == 3:
-        img = img @ np.array([0.299, 0.587, 0.114])
+def _decode_image(raw: bytes, codec: str, alpha: bool = False):
+    """Decode payload bytes to the parser's native array — (h, w) gray or
+    (h, w, 3) color float64, (h, w, 4) when ``alpha`` keeps a PNG/WebP
+    alpha channel; 'fake' tiles the raw bytes to 32x32."""
+    if codec == "fake":
+        return np.resize(np.frombuffer(raw, dtype=np.uint8), (32, 32)).astype("float64")
+    img = _IMAGE_PARSERS[codec](raw).astype("float64")
+    if not alpha and img.ndim == 3 and img.shape[2] == 4:
+        img = img[:, :, :3]
     return img
+
+
+def _decode_audio(raw: bytes, codec: str, source_rate: int):
+    """Decode payload bytes to ``(sample_rate, mono float64 waveform)``:
+    'wav' / 'flac' are the pure parsers (header rate wins, channels mix
+    to mono); 'fake' reads raw int16 at ``source_rate``."""
+    if codec == "fake":
+        return source_rate, np.frombuffer(raw[: len(raw) // 2 * 2], dtype="<i2").astype("float64")
+    rate, chans = _AUDIO_PARSERS[codec](raw)
+    return rate, chans.astype("float64").mean(axis=1)
 
 
 def _resize_area(img, oh: int, ow: int):
@@ -447,7 +436,6 @@ def decode_image(
     payload_col: str = "payload",
     out_size: tuple[int, int] = (8, 8),
     codec: str = "fake",
-    _fn_only: bool = False,
 ) -> DataFrame:
     """Image decode + resize over mapInPandas.
 
@@ -466,48 +454,18 @@ def decode_image(
     the same real array math for every codec — area-mean pooling to
     ``out_size``. ``codec="pil"`` marks where a general compressed-
     format library (WebP/AVIF/progressive JPEG) would plug in."""
-    if codec not in ("fake", "netpbm", "bmp", "png", "gif", "jpeg", "webp"):
-        raise NotImplementedError(
-            f"image codec {codec!r} requires PIL/opencv, not installed; "
-            "'netpbm'/'bmp'/'png'/'gif'/'jpeg'/'webp' decode purely, "
-            "'fake' exercises the plumbing"
-        )
-    _ship_by_value()
+    _require_codec("image", codec)
     oh, ow = out_size
-    dec, rz = _decode_gray, _resize_area
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import pandas as pd
-
-        memo = _task_memo()
-
-        def stats(raw):
-            img = dec(raw, codec)
-            resized = rz(img, oh, ow)
-            return (float(img.mean()),
-                    [float(v) for v in resized.reshape(-1)])
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                # content-addressed: byte-identical payloads decode once
-                raw = bytes(payload)
-                mean_pixel, pixels = memo(raw, lambda: stats(raw))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "height": oh,
-                        "width": ow,
-                        "mean_pixel": mean_pixel,
-                        "pixels": pixels,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(raw):
+        img = _decode_image(raw, codec)
+        if img.ndim == 3:
+            img = img @ _LUMA
+        return {"height": oh, "width": ow, "mean_pixel": float(img.mean()),
+                "pixels": _resize_area(img, oh, ow).reshape(-1).tolist()}
 
     schema = "doc_id bigint, height int, width int, mean_pixel double, pixels array<double>"
-    if _fn_only:
-        return batches_fn, schema
-    return df.select("doc_id", payload_col).mapInPandas(batches_fn, schema)
+    return _python_stage(df, _Stage(row, schema, payload_col))
 
 
 def resample_audio(
@@ -516,7 +474,6 @@ def resample_audio(
     rate: int = 16000,
     source_rate: int = 44100,
     codec: str = "fake",
-    _fn_only: bool = False,
 ) -> DataFrame:
     """Audio resample over mapInPandas.
 
@@ -531,62 +488,19 @@ def resample_audio(
     Either way the RESAMPLE is real linear interpolation onto the target
     rate's time grid. ``codec="soundfile"`` marks where a remaining
     compressed-format decoder (MP3/OGG) would plug in."""
-    if codec not in ("fake", "wav", "flac"):
-        raise NotImplementedError(
-            f"audio codec {codec!r} requires librosa/soundfile, not installed; "
-            "'wav'/'flac' decode purely, 'fake' exercises the plumbing"
-        )
-    _ship_by_value()
-    wav_parse = parse_wav
-    flac_parse = parse_flac
+    _require_codec("audio", codec)
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import numpy as np
-        import pandas as pd
-
-        memo = _task_memo()
-
-        def stats(raw):
-            src_rate = source_rate
-            if codec == "wav":
-                src_rate, chans = wav_parse(raw)
-                wave = chans.mean(axis=1)  # mix to mono
-            elif codec == "flac":
-                src_rate, chans = flac_parse(raw)
-                wave = chans.astype("float64").mean(axis=1)
-            else:
-                wave = np.frombuffer(
-                    raw[: len(raw) // 2 * 2], dtype="<i2"
-                ).astype("float64")
-            if wave.size < 2:
-                wave = np.zeros(2)
-            n_out = max(2, int(round(wave.size * rate / src_rate)))
-            t_in = np.arange(wave.size) / src_rate
-            t_out = np.arange(n_out) / rate
-            out = np.interp(t_out, t_in, wave)
-            return (int(wave.size), int(out.size),
-                    float(np.sqrt((out**2).mean())))
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                # content-addressed: byte-identical payloads decode once
-                raw = bytes(payload)
-                n_in, n_out_v, rms = memo(raw, lambda: stats(raw))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_samples_in": n_in,
-                        "n_samples_out": n_out_v,
-                        "rms": rms,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(raw):
+        src_rate, wave = _decode_audio(raw, codec, source_rate)
+        if wave.size < 2:
+            wave = np.zeros(2)
+        n_out = max(2, int(round(wave.size * rate / src_rate)))
+        out = np.interp(np.arange(n_out) / rate, np.arange(wave.size) / src_rate, wave)
+        return {"n_samples_in": int(wave.size), "n_samples_out": int(out.size),
+                "rms": float(np.sqrt((out**2).mean()))}
 
     schema = "doc_id bigint, n_samples_in bigint, n_samples_out bigint, rms double"
-    if _fn_only:
-        return batches_fn, schema
-    return df.select("doc_id", payload_col).mapInPandas(batches_fn, schema)
+    return _python_stage(df, _Stage(row, schema, payload_col))
 
 
 def sample_frames(
@@ -606,81 +520,43 @@ def sample_frames(
     reports its true luma mean + digest. ``codec="fake"`` treats each
     64-byte payload slice as a frame. ``codec="ffmpeg"`` marks where a
     compressed-container decoder plugs in."""
-    if codec not in ("fake", "y4m", "gif"):
-        raise NotImplementedError(
-            f"video codec {codec!r} requires ffmpeg/av, not installed; "
-            "'y4m'/'gif' decode purely, 'fake' exercises the plumbing"
-        )
-    _ship_by_value()
-    y4m_parse, gif_parse = parse_y4m, parse_gif
+    _require_codec("video", codec)
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import hashlib
+    def frame(i, ts_ms, pixels: bytes, mean_luma: float):
+        return {"frame_idx": i, "ts_ms": ts_ms,
+                "frame_md5": hashlib.md5(pixels).hexdigest(), "mean_luma": mean_luma}
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(payload)
-                if codec == "y4m":
-                    real_fps, frames = y4m_parse(raw)
-                    step_f = max(1, int(round(real_fps * every_ms / 1000.0)))
-                    for fi in range(0, len(frames), step_f):
-                        f = frames[fi]
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "frame_idx": fi,
-                                "ts_ms": int(fi * 1000 / real_fps),
-                                "frame_md5": hashlib.md5(f.tobytes()).hexdigest(),
-                                "mean_luma": float(f.mean()),
-                            }
-                        )
-                    continue
-                if codec == "gif":
-                    delays, frames = gif_parse(raw)
-                    # frames carry their OWN timestamps (variable frame
-                    # durations); sample the first frame at or past each
-                    # every_ms tick
-                    t, next_tick = 0, 0
-                    for fi, (f, d) in enumerate(zip(frames, delays)):
-                        if t >= next_tick:
-                            luma = f.astype("float64") @ [0.299, 0.587, 0.114]
-                            rows.append(
-                                {
-                                    "doc_id": doc_id,
-                                    "frame_idx": fi,
-                                    "ts_ms": t,
-                                    "frame_md5": hashlib.md5(
-                                        f.tobytes()
-                                    ).hexdigest(),
-                                    "mean_luma": float(luma.mean()),
-                                }
-                            )
-                            next_tick += every_ms
-                        t += max(d, 10)
-                    continue
-                step = max(1, int(round(fps * every_ms / 1000.0)))
-                n_frames = max(1, len(raw) // 64)
-                for fi in range(0, n_frames, step):
-                    frame = raw[fi * 64 : (fi + 1) * 64]
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": fi,
-                            "ts_ms": int(fi * 1000 / fps),
-                            "frame_md5": hashlib.md5(frame).hexdigest(),
-                            "mean_luma": float(sum(frame) / max(1, len(frame))),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def row(raw):
+        if codec == "y4m":
+            real_fps, frames = parse_y4m(raw)
+            step = max(1, int(round(real_fps * every_ms / 1000.0)))
+            return [frame(i, int(i * 1000 / real_fps), frames[i].tobytes(), float(frames[i].mean()))
+                    for i in range(0, len(frames), step)]
+        if codec == "gif":
+            # frames carry their OWN timestamps (variable frame
+            # durations); sample the first frame at or past each
+            # every_ms tick
+            delays, frames = parse_gif(raw)
+            out, t, next_tick = [], 0, 0
+            for i, (f, d) in enumerate(zip(frames, delays)):
+                if t >= next_tick:
+                    luma = f.astype("float64") @ _LUMA
+                    out.append(frame(i, t, f.tobytes(), float(luma.mean())))
+                    next_tick += every_ms
+                t += max(d, 10)
+            return out
+        step = max(1, int(round(fps * every_ms / 1000.0)))
+        out = []
+        for i in range(0, max(1, len(raw) // 64), step):
+            chunk = raw[i * 64 : (i + 1) * 64]
+            out.append(frame(i, int(i * 1000 / fps), chunk, float(sum(chunk) / max(1, len(chunk)))))
+        return out
 
     schema = (
         "doc_id bigint, frame_idx int, ts_ms bigint, frame_md5 string, "
         "mean_luma double"
     )
-    return df.select("doc_id", payload_col).mapInPandas(batches_fn, schema)
+    return _python_stage(df, _Stage(row, schema, payload_col))
 
 
 def audio_spectrogram(
@@ -691,7 +567,6 @@ def audio_spectrogram(
     n_bands: int = 8,
     source_rate: int = 16000,
     codec: str = "fake",
-    _fn_only: bool = False,
 ) -> DataFrame:
     """Log-magnitude spectrogram features over mapInPandas — the speech
     pre-processing step between decode and model input (the pipeline's
@@ -708,87 +583,37 @@ def audio_spectrogram(
     Scale shape: the FFT is per-row numpy inside an Arrow batch —
     embarrassingly parallel, no shuffle; output is (doc, small fixed
     vector), so the wide waveform never leaves the task."""
-    if codec not in ("fake", "wav", "flac"):
-        raise NotImplementedError(
-            f"audio codec {codec!r} requires librosa/soundfile, not installed; "
-            "'wav'/'flac' decode purely, 'fake' exercises the plumbing"
-        )
-    _ship_by_value()
-    wav_parse = parse_wav
-    flac_parse = parse_flac
+    _require_codec("audio", codec)
+    win = np.hanning(n_fft)
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import numpy as np
-        import pandas as pd
-
-        win = np.hanning(n_fft)
-        memo = _task_memo()
-
-        def stats(raw):
-            sr = source_rate
-            if codec == "wav":
-                sr, chans = wav_parse(raw)
-                wave = chans.mean(axis=1)
-            elif codec == "flac":
-                sr, chans = flac_parse(raw)
-                wave = chans.astype("float64").mean(axis=1)
-            else:
-                wave = np.frombuffer(
-                    raw[: len(raw) // 2 * 2], dtype="<i2"
-                ).astype("float64")
-            n_frames = max(0, (wave.size - n_fft) // hop + 1)
-            if n_frames == 0:
-                pad = np.zeros(n_fft)
-                pad[: wave.size] = wave
-                frames = pad[None, :]
-                n_frames = 1
-            else:
-                idx = (
-                    np.arange(n_frames)[:, None] * hop
-                    + np.arange(n_fft)[None, :]
-                )
-                frames = wave[idx]
-            spec = np.abs(np.fft.rfft(frames * win, axis=1)) ** 2
-            mean_spec = spec.mean(axis=0)
-            n_bins = mean_spec.size
-            band_w = n_bins // n_bands
-            bands = [
-                float(np.log1p(mean_spec[b * band_w : (b + 1) * band_w].mean()))
-                for b in range(n_bands)
-            ]
-            peak_bin = int(mean_spec[1:].argmax()) + 1  # skip DC
-            return (int(sr), int(n_frames),
-                    float(peak_bin * sr / n_fft), bands)
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                # content-addressed: byte-identical payloads decode once
-                raw = bytes(payload)
-                sr_v, nf, hz, bands = memo(raw, lambda: stats(raw))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "sample_rate": sr_v,
-                        "n_frames": nf,
-                        "dominant_hz": hz,
-                        "log_band_energy": bands,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(raw):
+        sr, wave = _decode_audio(raw, codec, source_rate)
+        n_frames = max(0, (wave.size - n_fft) // hop + 1)
+        if n_frames == 0:
+            pad = np.zeros(n_fft)
+            pad[: wave.size] = wave
+            frames = pad[None, :]
+            n_frames = 1
+        else:
+            idx = np.arange(n_frames)[:, None] * hop + np.arange(n_fft)[None, :]
+            frames = wave[idx]
+        mean_spec = (np.abs(np.fft.rfft(frames * win, axis=1)) ** 2).mean(axis=0)
+        band_w = mean_spec.size // n_bands
+        bands = [float(np.log1p(mean_spec[b * band_w : (b + 1) * band_w].mean()))
+                 for b in range(n_bands)]
+        peak_bin = int(mean_spec[1:].argmax()) + 1  # skip DC
+        return {"sample_rate": int(sr), "n_frames": int(n_frames),
+                "dominant_hz": float(peak_bin * sr / n_fft), "log_band_energy": bands}
 
     schema = (
         "doc_id bigint, sample_rate int, n_frames int, dominant_hz double, "
         "log_band_energy array<double>"
     )
-    if _fn_only:
-        return batches_fn, schema
-    return df.select("doc_id", payload_col).mapInPandas(batches_fn, schema)
+    return _python_stage(df, _Stage(row, schema, payload_col))
 
 
 def image_channel_stats(
-    df: DataFrame, payload_col: str = "payload", codec: str = "fake",
-    _fn_only: bool = False,
+    df: DataFrame, payload_col: str = "payload", codec: str = "fake"
 ) -> DataFrame:
     """Per-channel image statistics WITHOUT the luma collapse — the
     color-aware sibling of :func:`decode_image` (a vision pipeline
@@ -796,66 +621,63 @@ def image_channel_stats(
     color-cast screening, alpha-content checks). Emits
     ``(doc_id, height, width, n_channels, channel_means array<double>,
     channel_stds array<double>)``; grayscale inputs report one channel.
-    Same codec dispatch and Arrow batch shape as the other decoders;
+    Same codec gate and row-function shape as the other decoders;
     unlike the luma paths, a 4th (alpha) channel is KEPT — per-channel
     stats exist precisely for alpha-content screening."""
-    if codec not in ("fake", "netpbm", "bmp", "png", "gif", "jpeg", "webp"):
-        raise NotImplementedError(
-            f"image codec {codec!r} requires PIL/opencv, not installed; "
-            "'netpbm'/'bmp'/'png'/'gif'/'jpeg'/'webp' decode purely, "
-            "'fake' exercises the plumbing"
-        )
-    _ship_by_value()
-    dec = _decode_raw_keep_alpha
+    _require_codec("image", codec)
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import numpy as np
-        import pandas as pd
-
-        memo = _task_memo()
-
-        def stats(raw):
-            img = dec(raw, codec)
-            if img.ndim == 2:
-                img = img[:, :, None]
-            return (
-                int(img.shape[0]), int(img.shape[1]), int(img.shape[2]),
-                [float(v) for v in img.mean(axis=(0, 1))],
-                [float(v) for v in img.std(axis=(0, 1))],
-            )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                # content-addressed: byte-identical payloads decode once
-                raw = bytes(payload)
-                hh, ww, nc, cm, cs = memo(raw, lambda: stats(raw))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "height": hh,
-                        "width": ww,
-                        "n_channels": nc,
-                        "channel_means": cm,
-                        "channel_stds": cs,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(raw):
+        img = _decode_image(raw, codec, alpha=True)
+        if img.ndim == 2:
+            img = img[:, :, None]
+        return {"height": img.shape[0], "width": img.shape[1], "n_channels": img.shape[2],
+                "channel_means": img.mean(axis=(0, 1)).tolist(),
+                "channel_stds": img.std(axis=(0, 1)).tolist()}
 
     schema = (
         "doc_id bigint, height int, width int, n_channels int, "
         "channel_means array<double>, channel_stds array<double>"
     )
-    if _fn_only:
-        return batches_fn, schema
-    return df.select("doc_id", payload_col).mapInPandas(batches_fn, schema)
+    return _python_stage(df, _Stage(row, schema, payload_col))
 
 
-def audio_probe(
-    df: DataFrame,
-    payload_col: str = "payload",
-    _fn_only: bool = False,
-) -> DataFrame:
+def _probe_row(envelope: Callable, schema: str) -> Callable:
+    """The one probe site: the row function of a header probe. ``envelope``
+    fills the all-null ``fmt='unknown'`` record (the ``schema`` columns
+    after ``doc_id``); a payload it rejects with one of ``PARSE_ERRORS``
+    keeps the null record, and any other exception propagates."""
+    unknown = dict.fromkeys(c.split()[0] for c in schema.split(",")[1:])
+    unknown["fmt"] = "unknown"
+
+    def row(raw):
+        try:
+            return {**unknown, **envelope(raw)}
+        except PARSE_ERRORS:
+            return unknown
+
+    return row
+
+
+def _audio_envelope(raw: bytes) -> dict:
+    """Format auto-detection and envelope of :func:`audio_probe`."""
+    if raw[:4] in (b"RIFF", b"fLaC"):
+        fmt = "wav" if raw[:4] == b"RIFF" else "flac"
+        rate, chans = _AUDIO_PARSERS[fmt](raw)
+        return {"fmt": fmt, "sample_rate": rate, "channels": int(chans.shape[1]),
+                "duration_ms": int(round(chans.shape[0] * 1000.0 / rate)), "vbr": False}
+    if raw[:4] == b"OggS":
+        p = ogg_probe(raw)
+        return {"fmt": "ogg-" + p.get("codec", "unknown"), "sample_rate": p.get("sample_rate"),
+                "channels": p.get("channels"), "duration_ms": p.get("duration_ms"), "vbr": True}
+    keys = ("sample_rate", "channels", "duration_ms", "bitrate_kbps")
+    if len(raw) > 1 and raw[0] == 0xFF and (raw[1] & 0xF6) == 0xF0:
+        p = aac_adts_probe(raw)
+        return {"fmt": "aac", "vbr": False, **{k: p[k] for k in keys}}
+    p = mp3_probe(raw)
+    return {"fmt": "mp3", "vbr": p["vbr"], **{k: p[k] for k in keys}}
+
+
+def audio_probe(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Audio metadata extraction over mapInPandas — the envelope a
     curation pipeline FILTERS on (duration, sample rate, channel count,
     bitrate profile) without decoding samples where the container
@@ -876,133 +698,59 @@ def audio_probe(
       parameters (these decode; both are cheap linear formats).
 
     Output: ``(doc_id, fmt, sample_rate, channels, duration_ms,
-    bitrate_kbps, vbr)`` — unknown formats yield fmt='unknown' with
-    nulls, never an executor exception."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.media import (
-        aac_adts_probe,
-        mp3_probe,
-        ogg_probe,
-    )
-
-    wav_parse, flac_parse, probe = parse_wav, parse_flac, mp3_probe
-    aac_probe, ogg = aac_adts_probe, ogg_probe
-
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import pandas as pd
-
-        memo = _task_memo()
-
-        def stats(raw):
-            rec = {"fmt": "unknown",
-                   "sample_rate": None, "channels": None,
-                   "duration_ms": None, "bitrate_kbps": None,
-                   "vbr": None}
-            try:
-                if raw[:4] == b"RIFF":
-                    rate, chans = wav_parse(raw)
-                    rec.update(fmt="wav", sample_rate=rate,
-                               channels=int(chans.shape[1]),
-                               duration_ms=int(round(
-                                   chans.shape[0] * 1000.0 / rate)),
-                               vbr=False)
-                elif raw[:4] == b"fLaC":
-                    rate, chans = flac_parse(raw)
-                    rec.update(fmt="flac", sample_rate=rate,
-                               channels=int(chans.shape[1]),
-                               duration_ms=int(round(
-                                   chans.shape[0] * 1000.0 / rate)),
-                               vbr=False)
-                elif raw[:4] == b"OggS":
-                    p = ogg(raw)
-                    rec.update(fmt="ogg-" + p.get("codec", "unknown"),
-                               sample_rate=p.get("sample_rate"),
-                               channels=p.get("channels"),
-                               duration_ms=p.get("duration_ms"),
-                               vbr=True)
-                elif len(raw) > 1 and raw[0] == 0xFF and (
-                    raw[1] & 0xF6
-                ) == 0xF0:
-                    p = aac_probe(raw)
-                    rec.update(fmt="aac", sample_rate=p["sample_rate"],
-                               channels=p["channels"],
-                               duration_ms=p["duration_ms"],
-                               bitrate_kbps=p["bitrate_kbps"],
-                               vbr=False)
-                else:
-                    p = probe(raw)
-                    rec.update(fmt="mp3", sample_rate=p["sample_rate"],
-                               channels=p["channels"],
-                               duration_ms=p["duration_ms"],
-                               bitrate_kbps=p["bitrate_kbps"],
-                               vbr=p["vbr"])
-            except Exception:
-                pass  # unknown/corrupt: emit the null record
-            return rec
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                # content-addressed: byte-identical payloads probe once
-                raw = bytes(payload)
-                rec = dict(memo(raw, lambda: stats(raw)))
-                rec["doc_id"] = int(doc_id)
-                rows.append(rec)
-            yield pd.DataFrame(rows)
-
+    bitrate_kbps, vbr)`` — a payload the parsers reject (``PARSE_ERRORS``)
+    yields fmt='unknown' with nulls."""
     schema = (
         "doc_id bigint, fmt string, sample_rate int, channels int, "
         "duration_ms bigint, bitrate_kbps double, vbr boolean"
     )
-    if _fn_only:
-        return batches_fn, schema
-    return df.select("doc_id", payload_col).mapInPandas(batches_fn, schema)
+    return _python_stage(df, _Stage(_probe_row(_audio_envelope, schema), schema, payload_col))
 
 
-def probe_images(
-    df: DataFrame,
-    payload_col: str = "payload",
-) -> DataFrame:
+def probe_images(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Image metadata extraction over mapInPandas — header-only
     dimension/format detection (``sources/media.py::image_probe``:
     PNG, baseline/progressive JPEG, GIF, BMP, netpbm, TIFF, and all
     three WebP container flavors incl. LOSSY VP8 dimensions) for the
     resolution/format filters a curation pipeline applies before any
-    pixel decode. O(header bytes) per document; corrupt payloads yield
-    a null 'unknown' row, never a task failure."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.media import image_probe
-
-    probe = image_probe
-
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                rec = {"doc_id": int(doc_id), "fmt": "unknown",
-                       "width": None, "height": None,
-                       "bit_depth": None, "n_channels": None}
-                try:
-                    rec.update(probe(bytes(payload)))
-                except Exception:
-                    pass
-                rows.append(rec)
-            yield pd.DataFrame(rows)
-
+    pixel decode. O(header bytes) per document; a payload the parser
+    rejects (``PARSE_ERRORS``) yields a null 'unknown' row."""
     schema = (
         "doc_id bigint, fmt string, width int, height int, "
         "bit_depth int, n_channels int"
     )
-    return df.select("doc_id", payload_col).mapInPandas(batches_fn, schema)
+    return _python_stage(df, _Stage(_probe_row(image_probe, schema), schema, payload_col))
 
 
-def probe_videos(
-    df: DataFrame,
-    payload_col: str = "payload",
-    _fn_only: bool = False,
-) -> DataFrame:
+def _video_envelope(raw: bytes) -> dict:
+    """Format auto-detection and envelope of :func:`probe_videos`."""
+    if raw[4:8] == b"ftyp":
+        m = mp4_probe(raw)
+        rec = {"fmt": "mp4", "duration_ms": m.get("duration_ms")}
+        if m["tracks"]:
+            t = m["tracks"][0]
+            rec.update(codec=t.get("codec"), width=t.get("width"), height=t.get("height"))
+            sps = t.get("sps")
+            if sps:
+                rec.update({k: sps[k] for k in ("width", "height", "profile_idc", "level_idc")})
+        return rec
+    if raw[:4] == b"\x1a\x45\xdf\xa3":
+        m = webm_probe(raw)
+        vid = next((t for t in m["tracks"] if t.get("type") == "video"), {})
+        return {"fmt": "webm", "duration_ms": m.get("duration_ms"), "codec": vid.get("codec"),
+                "width": vid.get("width"), "height": vid.get("height")}
+    if raw[:9] == b"YUV4MPEG2":
+        fps, frames = parse_y4m(raw)
+        return {"fmt": "y4m", "codec": "raw", "width": int(frames[0].shape[1]),
+                "height": int(frames[0].shape[0]), "n_pictures": len(frames),
+                "duration_ms": int(round(len(frames) * 1000.0 / fps))}
+    p = h264_probe(raw)
+    return {"fmt": "h264", "codec": "avc", "n_i_slices": p.get("n_i_slices"),
+            "entropy_coding": p.get("entropy_coding"),
+            **{k: p[k] for k in ("width", "height", "profile_idc", "level_idc", "n_pictures")}}
+
+
+def probe_videos(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Video metadata extraction over mapInPandas — the envelope a
     curation pipeline filters on without touching sample data:
 
@@ -1022,106 +770,18 @@ def probe_videos(
 
     Entropy-coded slice decode stays gated (no reference decoder in
     this environment to pin bit-exactness against — the MP3 spectral
-    precedent). Corrupt/unknown payloads yield a null 'unknown' row,
-    never a task failure."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.media import (
-        h264_probe,
-        mp4_probe,
-        parse_y4m,
-        webm_probe,
-    )
-
-    hp, mp, yp, wp = h264_probe, mp4_probe, parse_y4m, webm_probe
-
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import pandas as pd
-
-        memo = _task_memo(cap=8192)
-
-        def stats(raw):
-            rec = {"fmt": "unknown",
-                   "codec": None, "width": None, "height": None,
-                   "profile_idc": None, "level_idc": None,
-                   "n_pictures": None, "duration_ms": None,
-                   "n_i_slices": None, "entropy_coding": None}
-            try:
-                if raw[4:8] == b"ftyp":
-                    m = mp(raw)
-                    rec.update(fmt="mp4",
-                               duration_ms=m.get("duration_ms"))
-                    if m["tracks"]:
-                        t = m["tracks"][0]
-                        rec.update(codec=t.get("codec"),
-                                   width=t.get("width"),
-                                   height=t.get("height"))
-                        sps = t.get("sps")
-                        if sps:
-                            rec.update(
-                                width=sps["width"],
-                                height=sps["height"],
-                                profile_idc=sps["profile_idc"],
-                                level_idc=sps["level_idc"],
-                            )
-                elif raw[:4] == b"\x1a\x45\xdf\xa3":
-                    m = wp(raw)
-                    rec.update(fmt="webm",
-                               duration_ms=m.get("duration_ms"))
-                    vid = next(
-                        (t for t in m["tracks"]
-                         if t.get("type") == "video"), None
-                    )
-                    if vid:
-                        rec.update(codec=vid.get("codec"),
-                                   width=vid.get("width"),
-                                   height=vid.get("height"))
-                elif raw[:9] == b"YUV4MPEG2":
-                    fps, frames = yp(raw)
-                    rec.update(
-                        fmt="y4m", codec="raw",
-                        width=int(frames[0].shape[1]),
-                        height=int(frames[0].shape[0]),
-                        n_pictures=len(frames),
-                        duration_ms=int(round(
-                            len(frames) * 1000.0 / fps)),
-                    )
-                else:
-                    p = hp(raw)
-                    rec.update(fmt="h264", codec="avc",
-                               width=p["width"], height=p["height"],
-                               profile_idc=p["profile_idc"],
-                               level_idc=p["level_idc"],
-                               n_pictures=p["n_pictures"],
-                               n_i_slices=p.get("n_i_slices"),
-                               entropy_coding=p.get("entropy_coding"))
-            except Exception:
-                pass
-            return rec
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                # content-addressed: byte-identical payloads probe once
-                raw = bytes(payload)
-                rec = dict(memo(raw, lambda: stats(raw)))
-                rec["doc_id"] = int(doc_id)
-                rows.append(rec)
-            yield pd.DataFrame(rows)
+    precedent). A payload the parsers reject (``PARSE_ERRORS``) yields a
+    null 'unknown' row."""
     schema = (
         "doc_id bigint, fmt string, codec string, width int, height int, "
         "profile_idc int, level_idc int, n_pictures int, duration_ms bigint, "
         "n_i_slices int, entropy_coding string"
     )
-    if _fn_only:
-        return batches_fn, schema
-    return df.select("doc_id", payload_col).mapInPandas(batches_fn, schema)
+    stage = _Stage(_probe_row(_video_envelope, schema), schema, payload_col, cap=8192)
+    return _python_stage(df, stage)
 
 
-def attach_video_column(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    _fn_only: bool = False,
-) -> DataFrame:
+def attach_video_column(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a deterministic VIDEO container payload per document —
     format rotates by ``d % 3`` with SQL-derivable envelope metadata
     (the ``attach_mp3_column`` seeding discipline, so
@@ -1139,50 +799,28 @@ def attach_video_column(
       ``duration_ms = 400 + d%1600``.
 
     Output: ``(doc_id, payload binary)``."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.media import (
-        write_h264_annexb,
-        write_mp4_avc,
-        write_webm,
-    )
 
-    wh, wm, ww = write_h264_annexb, write_mp4_avc, write_webm
+    def key(d):
+        if d % 3 == 0:
+            return 0, (2 + d % 5, 16 * (2 + d % 6), 16 * (2 + d % 4))
+        if d % 3 == 1:
+            return 1, (16 * (1 + d % 8), 16 * (1 + d % 5), 500 + d % 1500)
+        return 2, (100 + d % 540, 80 + d % 300, 400 + d % 1600)
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import pandas as pd
+    def row(key):
+        m, (a, b, c) = key
+        if m == 0:
+            return {"payload": write_h264_annexb(n_frames=a, width=b, height=c)}
+        if m == 1:
+            return {"payload": write_mp4_avc(width=a, height=b, duration_ms=c)}
+        return {"payload": write_webm(width=a, height=b, duration_ms=c)}
 
-        memo = _task_memo(cap=8192)
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                m = d % 3
-                # payload is a pure function of the writer args: memo
-                if m == 0:
-                    args = (2 + d % 5, 16 * (2 + d % 6), 16 * (2 + d % 4))
-                    payload = memo((m, args), lambda: wh(
-                        n_frames=args[0], width=args[1], height=args[2]))
-                elif m == 1:
-                    args = (16 * (1 + d % 8), 16 * (1 + d % 5), 500 + d % 1500)
-                    payload = memo((m, args), lambda: wm(
-                        width=args[0], height=args[1], duration_ms=args[2]))
-                else:
-                    args = (100 + d % 540, 80 + d % 300, 400 + d % 1600)
-                    payload = memo((m, args), lambda: ww(
-                        width=args[0], height=args[1], duration_ms=args[2]))
-                rows.append({"doc_id": d, "payload": payload})
-            yield pd.DataFrame(rows)
-
-    if _fn_only:
-        return batches_fn, "doc_id bigint, payload binary"
-    return df.select(id_col).mapInPandas(batches_fn, "doc_id bigint, payload binary")
+    # a payload is a pure function of the writer args
+    stage = _Stage(row, "doc_id bigint, payload binary", id_col, key=key, cap=8192)
+    return _python_stage(df, stage, id_col=id_col)
 
 
-def attach_container_audio_column(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    _fn_only: bool = False,
-) -> DataFrame:
+def attach_container_audio_column(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a deterministic CONTAINERIZED audio payload per document —
     the two envelope formats :func:`audio_probe` dispatches beyond
     MP3/WAV/FLAC, seeded by the generation-rule discipline:
@@ -1195,38 +833,20 @@ def attach_container_audio_column(
       44.1 kHz; duration rounds from 1024-sample frames.
 
     Output: ``(doc_id, payload binary)``."""
-    _ship_by_value()
-    from xarray_dataaccessor_spark.sources.media import (
-        write_adts_frames,
-        write_ogg_opus,
-    )
 
-    wa, wo = write_adts_frames, write_ogg_opus
+    def key(d):
+        return d % 2, 3 + d % 16 if d % 2 else 300 + d % 1700, 1 + (d % 4) // 2
 
-    def batches_fn(batches: "Iterator") -> "Iterator":
-        import pandas as pd
+    def row(key):
+        aac, n, ch = key
+        if aac:
+            return {"payload": write_adts_frames(n_frames=n, rate=44100, channels=ch)}
+        return {"payload": write_ogg_opus(duration_ms=n, channels=ch)}
 
-        memo = _task_memo(cap=8192)
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                ch = 1 + (d % 4) // 2
-                # payload is a pure function of the writer args: memo
-                if d % 2 == 0:
-                    dur = 300 + d % 1700
-                    payload = memo((0, dur, ch), lambda: wo(
-                        duration_ms=dur, channels=ch))
-                else:
-                    n = 3 + d % 16
-                    payload = memo((1, n, ch), lambda: wa(
-                        n_frames=n, rate=44100, channels=ch))
-                rows.append({"doc_id": d, "payload": payload})
-            yield pd.DataFrame(rows)
+    # a payload is a pure function of the writer args
+    stage = _Stage(row, "doc_id bigint, payload binary", id_col, key=key, cap=8192)
+    return _python_stage(df, stage, id_col=id_col)
 
-    if _fn_only:
-        return batches_fn, "doc_id bigint, payload binary"
-    return df.select(id_col).mapInPandas(batches_fn, "doc_id bigint, payload binary")
 
 def fused_attach_probe(
     df: DataFrame,
@@ -1234,24 +854,18 @@ def fused_attach_probe(
     probe,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Compose an attach builder with its probe/decode builder inside ONE
-    ``mapInPandas`` pass (guide §4.1/§4.2 — r14, VERDICT r13 #7).
+    """``probe(attach(df))`` as ONE ``mapInPandas`` pass (guide
+    §4.1/§4.2).
 
-    ``attach`` / ``probe`` are the ``(batches_fn, out_schema)`` pairs the
-    builders return with ``_fn_only=True``. Chained as two mapInPandas
-    nodes, each branch ships its payload bytes across the Python→JVM→
-    Python boundary twice (Arrow transpose + serialization both ways)
-    purely to hand them to the next Python function; composed at the
-    ITERATOR level the payload never leaves the Python worker — the task
-    reads only ``doc_id`` and emits only the probe's small feature rows.
-    Both functions are per-row pure (per-task memos included), so batch
-    boundaries cannot change values and the output is row-identical to
-    the chained form.
+    ``attach`` / ``probe`` are the builders themselves (options bound
+    with ``functools.partial``). Chained as two mapInPandas nodes, each
+    branch ships its payload bytes across the Python→JVM→Python boundary
+    twice (Arrow transpose + serialization both ways) purely to hand
+    them to the next Python function; composed in one batch loop the
+    payload never leaves the Python worker — the task reads only
+    ``doc_id`` and emits only the probe's small feature rows. Both row
+    functions are pure (per-task memos included), so batch boundaries
+    cannot change values and the output is row-identical to the chained
+    form.
     """
-    attach_fn, _ = attach
-    probe_fn, probe_schema = probe
-
-    def fused(batches):
-        yield from probe_fn(attach_fn(batches))
-
-    return df.select(id_col).mapInPandas(fused, probe_schema)
+    return _python_stage(df, *probe(attach(_Fused(), id_col=id_col)), id_col=id_col)

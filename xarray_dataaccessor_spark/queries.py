@@ -1111,17 +1111,17 @@ def ingest_datasources(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stop the wedged queries before raising (VERDICT r13 #6): a
         # thread stuck inside processAllAvailable never reaches its own
         # finally-stop, and an abandoned polling stream would keep
-        # scheduling micro-batches under every later slot in the session
-        for q in spark.streams.active:
-            try:
+        # scheduling micro-batches under every later slot in the session.
+        # A failed stop becomes the TimeoutError's context.
+        try:
+            for q in spark.streams.active:
                 q.stop()
-            except Exception:
-                pass
-        raise TimeoutError(
-            "tail stream lifecycle did not finish within 600s — "
-            "environment overload or source hang, NOT an "
-            "offset-contract failure"
-        )
+        finally:
+            raise TimeoutError(
+                "tail stream lifecycle did not finish within 600s — "
+                "environment overload or source hang, NOT an "
+                "offset-contract failure"
+            )
     if errs:
         raise errs[0]
     ntail = (

@@ -1950,6 +1950,8 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact FFT bin, so the Arrow-batched numpy STFT path hash-verifies;
     the log-band energies stay pytest-evidenced."""
     configure_session(spark)
+    from functools import partial
+
     from xarray_dataaccessor_spark.operators.dedup import spread_small_input
     from xarray_dataaccessor_spark.operators.multimodal import (
         attach_audio_column,
@@ -1964,6 +1966,7 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_spectrogram,
         binary_features,
         decode_image,
+        fused_attach_probe,
         image_channel_stats,
         probe_videos,
         resample_audio,
@@ -1998,22 +2001,18 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only doc_id and emits only the small feature rows. Row-identical
     # (both functions are per-row pure), plan: 2 MapInPandas per branch
     # → 1, and the Arrow payload serialization disappears.
-    from xarray_dataaccessor_spark.operators.multimodal import (
-        fused_attach_probe,
-    )
-
     decoded = None
     for i, codec in enumerate(("netpbm", "png", "jpeg")):
         part = fused_attach_probe(
             docs.filter(F.col("doc_id") % 3 == i),
-            attach_media_column(None, _fn_only=True),
-            decode_image(None, codec=codec, _fn_only=True),
+            attach_media_column,
+            partial(decode_image, codec=codec),
         ).select("doc_id", "mean_pixel").withColumn("img_codec", F.lit(codec))
         decoded = part if decoded is None else decoded.unionByName(part)
     audio = fused_attach_probe(
         docs,
-        attach_audio_column(None, _fn_only=True),
-        resample_audio(None, rate=4000, codec="flac", _fn_only=True),
+        attach_audio_column,
+        partial(resample_audio, rate=4000, codec="flac"),
     ).select(
         "doc_id",
         F.col("n_samples_in").alias("audio_n_in"),
@@ -2022,8 +2021,8 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mp3 = fused_attach_probe(
         docs,
-        attach_mp3_column(None, _fn_only=True),
-        audio_probe(None, _fn_only=True),
+        attach_mp3_column,
+        audio_probe,
     ).select(
         "doc_id",
         F.col("duration_ms").alias("mp3_duration_ms"),
@@ -2032,8 +2031,8 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     webp = fused_attach_probe(
         docs,
-        attach_webp_lossy_column(None, _fn_only=True),
-        image_channel_stats(None, codec="webp", _fn_only=True),
+        attach_webp_lossy_column,
+        partial(image_channel_stats, codec="webp"),
     ).select(
         "doc_id",
         F.element_at("channel_means", 1).alias("webp_mean"),
@@ -2045,8 +2044,8 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vs the generation rule, the mp3-envelope discipline
     aud2 = fused_attach_probe(
         docs,
-        attach_container_audio_column(None, _fn_only=True),
-        audio_probe(None, _fn_only=True),
+        attach_container_audio_column,
+        audio_probe,
     ).select(
         "doc_id",
         F.col("fmt").alias("aud2_fmt"),
@@ -2056,8 +2055,8 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vid = fused_attach_probe(
         docs,
-        attach_video_column(None, _fn_only=True),
-        probe_videos(None, _fn_only=True),
+        attach_video_column,
+        probe_videos,
     ).select(
         "doc_id",
         F.col("fmt").alias("vid_fmt"),
@@ -2080,8 +2079,8 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # energies stay pytest-evidenced (no SQL spelling of an FFT)
     spect = fused_attach_probe(
         docs,
-        attach_tone_audio_column(None, _fn_only=True),
-        audio_spectrogram(None, codec="wav", _fn_only=True),
+        attach_tone_audio_column,
+        partial(audio_spectrogram, codec="wav"),
     ).select(
         "doc_id",
         F.col("sample_rate").alias("spect_rate"),

@@ -29,6 +29,7 @@ import json
 import os
 import tarfile
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -141,14 +142,7 @@ def write_tar_shards(
 
 
 def _jsonable(v):
-    try:
-        import numpy as np
-
-        if isinstance(v, np.generic):
-            return v.item()
-    except Exception:
-        pass
-    return v
+    return v.item() if isinstance(v, np.generic) else v
 
 
 def read_tar_shards(spark: SparkSession, path: str) -> DataFrame:

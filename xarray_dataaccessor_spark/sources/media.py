@@ -33,6 +33,13 @@ import struct
 
 import numpy as np
 
+# The errors the parsers here raise on a malformed payload — the set the
+# corruption fuzz (tests/test_media_fuzz.py) holds them to. A caller that
+# maps a rejected payload to a null record catches exactly these; any
+# other exception is a program error.
+PARSE_ERRORS = (ValueError, IndexError, KeyError, struct.error, OverflowError,
+                ZeroDivisionError, UnicodeDecodeError)
+
 # ---------------------------------------------------------------------------
 # WAV / RIFF PCM
 # ---------------------------------------------------------------------------
