@@ -8,10 +8,12 @@ Method
 ------
 - The previous round's HEAD (default: newest commit whose subject is
   ``round N: ...`` — the driver's round-final artifact commit) is
-  checked out into a throwaway git worktree.
-- For each repeat, BOTH sides run as fresh subprocesses back-to-back
-  (prev, head, prev, head, ...); machine-speed drift hits both sides of
-  a pair equally — the property single-sided artifact history lacks.
+  exported with ``git archive`` into a throwaway directory.
+- For each repeat, BOTH sides run as fresh subprocesses back-to-back,
+  and the first side alternates (prev/head on even repeats, head/prev
+  on odd ones; the artifact records each pair's order): machine-speed
+  drift hits both sides of a pair equally and neither side always runs
+  first — the property single-sided artifact history lacks.
 - Each subprocess loads the CURRENT ``bench.py`` by path and calls its
   ``time_slots`` with one repeat: per slot one unmeasured cold run, then
   one timed run (noop sink, cache cleared after every run), so both
@@ -36,6 +38,7 @@ import argparse
 import datetime
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -52,7 +55,7 @@ DEFAULT_SLOTS = [
 ]
 
 # The runner executes inside a fresh subprocess with the TARGET repo
-# (prev worktree or current HEAD) first on sys.path, so each side runs
+# (prev export or current HEAD) first on sys.path, so each side runs
 # its own code, session config, and query registry through one harness.
 _RUNNER = r'''
 import importlib.util, json, sys
@@ -76,6 +79,14 @@ def _git(*args: str, cwd: str = REPO) -> str:
     return subprocess.run(
         ["git", *args], cwd=cwd, check=True, capture_output=True, text=True
     ).stdout.strip()
+
+
+def _export(sha: str, dest: str) -> None:
+    """Write the tree of ``sha`` into ``dest`` as plain files."""
+    tar = subprocess.run(
+        ["git", "archive", sha], cwd=REPO, check=True, capture_output=True
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", dest], input=tar, check=True)
 
 
 def _default_prev_ref() -> str:
@@ -118,18 +129,24 @@ def main() -> None:
     prev_sha = _git("rev-parse", prev_ref)
     head_sha = _git("rev-parse", "HEAD")
 
-    wt = tempfile.mkdtemp(prefix="xda_ab_prev_")
-    _git("worktree", "add", "--detach", wt, prev_sha)
-    runner = os.path.join(tempfile.mkdtemp(prefix="xda_ab_"), "runner.py")
+    prev_dir = tempfile.mkdtemp(prefix="xda_ab_prev_")
+    _export(prev_sha, prev_dir)
+    runner_dir = tempfile.mkdtemp(prefix="xda_ab_")
+    runner = os.path.join(runner_dir, "runner.py")
     with open(runner, "w") as fh:
         fh.write(_RUNNER)
 
     runs: dict[str, dict[str, list]] = {s: {"prev": [], "head": []} for s in slots}
     cold: dict[str, dict[str, list]] = {s: {"prev": [], "head": []} for s in slots}
     errors: list[str] = []
+    order: list[list[str]] = []
     try:
         for rep in range(args.repeats):
-            for side, repo in (("prev", wt), ("head", REPO)):
+            sides = (("prev", prev_dir), ("head", REPO))
+            if rep % 2:
+                sides = sides[::-1]
+            order.append([side for side, _ in sides])
+            for side, repo in sides:
                 print(f"# rep {rep + 1}/{args.repeats} side={side}", file=sys.stderr)
                 got = _run_side(runner, repo, args.sf_dir, slots)
                 for s in slots:
@@ -137,8 +154,8 @@ def main() -> None:
                     cold[s][side].append(got["cold"][s])
                 errors += [f"{side} rep {rep + 1} {s}: {e}" for s, e in got["errors"].items()]
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt],
-                       cwd=REPO, capture_output=True)
+        shutil.rmtree(prev_dir, ignore_errors=True)
+        shutil.rmtree(runner_dir, ignore_errors=True)
 
     def med(xs):
         ok = [x for x in xs if isinstance(x, (int, float)) and x >= 0]
@@ -148,8 +165,9 @@ def main() -> None:
         "method": (
             "interleaved same-session-hour A/B: per repeat, prev and head "
             "run as back-to-back fresh subprocesses through bench.time_slots "
-            "(one cold + one timed run per slot); medians of the timed runs "
-            "compared per slot; |delta| > 15% flagged"
+            "(one cold + one timed run per slot), the first side alternating "
+            "by repeat (see 'order'); medians of the timed runs compared per "
+            "slot; |delta| > 15% flagged"
         ),
         "date": datetime.date.today().isoformat(),
         "prev_ref": prev_ref,
@@ -159,6 +177,7 @@ def main() -> None:
         "head_diffstat": _git("diff", "--stat", "HEAD"),
         "sf_dir": args.sf_dir,
         "repeats": args.repeats,
+        "order": order,
         "errors": errors,
         "slots": {},
     }

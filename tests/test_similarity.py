@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from xarray_dataaccessor_spark.operators import similarity as similarity_module
 from xarray_dataaccessor_spark.operators.similarity import (
     cosine,
     embedding_near_duplicates,
@@ -921,33 +922,225 @@ def test_embedding_near_duplicates_auto_banding(spark):
     pdf = out.toPandas()
     assert ((pdf.id_a == 0) & (pdf.id_b == 1000)).any()
 
+# Test-local references: each operator's Arrow kernel against the same
+# plan composed from the pure-DataFrame primitives (ivf_assign, l2sq,
+# cosine, lsh_bucket, pq_encode, _centroid_means) — the join shape the
+# SQL oracles replay. Centroid vectors differ by ~1 ulp across engines,
+# so the references run in Spark and every comparison is ``==``.
 
-def test_semantic_dedup_grouped_equals_join_exactly(spark):
-    """The grouped (applyInPandas) refine replays the SQL aggregate's
-    left-fold op order, so every witness cosine is BIT-identical to the
-    join path — the property that lets the slot keep its join-shaped
-    oracle while executing the n-row-shuffle plan."""
+
+def _lloyd_reference(vectors, n_centroids, n_iters, dims, train_limit):
+    """kmeans_centroids with the broadcast-join ivf_assign argmin."""
+    from xarray_dataaccessor_spark.operators.similarity import (
+        _centroid_means,
+        ivf_assign,
+        training_sample,
+    )
+
+    train = vectors
+    if train_limit is not None:
+        train = training_sample(vectors, "vec_id", train_limit)
+    cent = train.orderBy("vec_id").limit(n_centroids).select(
+        F.col("vec_id").alias("centroid_id"), F.col("e").alias("ce")
+    )
+    for _ in range(n_iters):
+        assigned = ivf_assign(train, cent, rank=1, dims=dims)
+        cent = _centroid_means(assigned, ["centroid_id"], "e", dims)
+    return cent
+
+
+def _coarse_structure_reference(cent, dims, n_groups=None):
+    """coarse_structure with the join Lloyd and the join group map."""
     import math
 
-    import numpy as np
+    from xarray_dataaccessor_spark.operators.similarity import ivf_assign
 
-    from xarray_dataaccessor_spark.operators.similarity import semantic_dedup
+    k = cent.count()
+    g = n_groups if n_groups is not None else max(2, math.ceil(math.sqrt(k)))
+    cfine = cent.select(F.col("centroid_id").alias("vec_id"), F.col("ce").alias("e"))
+    coarse = _lloyd_reference(cfine, g, 2, dims, None)
+    gmap = ivf_assign(cfine, coarse, rank=1, dims=dims).select(
+        F.col("vec_id").alias("centroid_id"), F.col("centroid_id").alias("group_id")
+    )
+    nonempty = coarse.join(
+        gmap.select(F.col("group_id").alias("centroid_id")).distinct(),
+        "centroid_id", "left_semi",
+    )
+    return nonempty, gmap
+
+
+def _coarse_assign_reference(vectors, cent, coarse, gmap, dims):
+    """coarse_rank1_assign as two broadcast-join argmins: route to the
+    nearest coarse center, then the min-struct over its group."""
+    from xarray_dataaccessor_spark.operators.similarity import ivf_assign, l2sq
+
+    routed = ivf_assign(vectors, coarse, rank=1, dims=dims).select(
+        "vec_id", "e", F.col("centroid_id").alias("group_id")
+    )
+    best = (
+        routed.join(F.broadcast(gmap), "group_id")
+        .join(F.broadcast(cent.select("centroid_id", "ce")), "centroid_id")
+        .withColumn("__d", l2sq(F.col("e"), F.col("ce"), dims))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("__d", "centroid_id", "e")).alias("__b"))
+    )
+    return best.select(
+        "vec_id", F.col("__b.e").alias("e"), F.col("__b.centroid_id").alias("centroid_id")
+    )
+
+
+def _semantic_dedup_reference(assigned, cent, threshold, dims):
+    """semantic_dedup's refine as the within-cluster self-join, over a
+    reference ``(vec_id, e, centroid_id)`` assignment."""
+    from pyspark.sql.window import Window
+
+    from xarray_dataaccessor_spark.operators.similarity import cosine
+
+    scored = assigned.join(F.broadcast(cent), "centroid_id").select(
+        "vec_id", "e", F.col("centroid_id").alias("cluster_id"),
+        cosine(F.col("e"), F.col("ce"), dims).alias("cos_centroid"),
+    )
+    w = Window.partitionBy("cluster_id").orderBy(
+        F.asc(F.round(F.col("cos_centroid"), 4)), F.asc("vec_id")
+    )
+    ranked = scored.withColumn("prio", F.row_number().over(w))
+
+    def side(s):
+        return ranked.select(
+            "cluster_id", F.col("vec_id").alias(f"id{s}"),
+            F.col("e").alias(f"e{s}"), F.col("prio").alias(f"p{s}"),
+        )
+
+    dropped = (
+        side("a").join(side("b"), "cluster_id")
+        .filter(F.col("pa") < F.col("pb"))
+        .withColumn("c", cosine(F.col("ea"), F.col("eb"), dims))
+        .filter(F.col("c") >= threshold)
+        .groupBy(F.col("idb").alias("vec_id"))
+        .agg(F.max("c").alias("witness_cos"))
+    )
+    return ranked.join(dropped, "vec_id", "left").select(
+        "vec_id", "cluster_id", "cos_centroid",
+        F.col("witness_cos").isNull().alias("kept"), "witness_cos",
+    )
+
+
+def _neardup_reference(df, threshold, n_bands, planes_per_band, dims):
+    """embedding_near_duplicates as the candidate-pair join: pairs
+    sharing any band's bucket, each once, refined by the SQL cosine."""
+    from xarray_dataaccessor_spark.operators.similarity import lsh_bucket
+
+    v = df.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    vals = F.array(*[
+        lsh_bucket("e", planes_per_band, plane_offset=b * planes_per_band, dims=dims)
+        for b in range(n_bands)
+    ])
+    sig = v.select("vec_id", F.posexplode_outer(vals).alias("band", "val"))
+    cand = (
+        sig.alias("sa").join(sig.alias("sb"), ["band", "val"])
+        .filter(F.col("sa.vec_id") < F.col("sb.vec_id"))
+        .select(F.col("sa.vec_id").alias("id_a"), F.col("sb.vec_id").alias("id_b"))
+        .distinct()
+    )
+    return (
+        cand.join(v.toDF("id_a", "ea"), "id_a")
+        .join(v.toDF("id_b", "eb"), "id_b")
+        .withColumn("cos", cosine(F.col("ea"), F.col("eb"), dims))
+        .filter(F.col("cos") > threshold)
+        .select("id_a", "id_b", "cos")
+    )
+
+
+def _pq_ann_reference(queries, corpus, k, m_subspaces, n_codes, n_iters,
+                      refine, dims, train_limit):
+    """pq_ann with the SQL transform-normalization and pq_encode's
+    broadcast-join argmin in place of the two Arrow passes."""
+    from pyspark.sql.window import Window
+
+    from xarray_dataaccessor_spark.operators.similarity import (
+        dot,
+        l2sq,
+        norm,
+        pq_codebooks,
+        pq_encode,
+    )
+
+    def unit(df, id_name, vec_name):
+        return df.select(
+            F.col("vec_id").alias(id_name),
+            F.col("embedding").cast("array<double>").alias(vec_name),
+        ).withColumn(
+            vec_name, F.transform(vec_name, lambda x: x / norm(F.col(vec_name), dims))
+        )
+
+    qn = unit(queries, "query_id", "qe")
+    cn = unit(corpus, "neighbor_id", "ce")
+    books = pq_codebooks(
+        cn, m_subspaces=m_subspaces, n_codes=n_codes, n_iters=n_iters,
+        id_col="neighbor_id", vec_col="ce", dims=dims, train_limit=train_limit,
+    )
+    codes = pq_encode(
+        cn, books, id_col="neighbor_id", vec_col="ce", dims=dims,
+        m_subspaces=m_subspaces,
+    )
+    sub = dims // m_subspaces
+    q_sub = qn.select("query_id", F.explode(F.array(*[
+        F.struct(F.lit(m).alias("m"), F.slice("qe", m * sub + 1, sub).alias("qsv"))
+        for m in range(m_subspaces)
+    ])).alias("b")).select("query_id", "b.m", "b.qsv")
+    lut = q_sub.join(F.broadcast(books), "m").select(
+        "query_id", "m", "code_id", l2sq(F.col("qsv"), F.col("ce"), sub).alias("d")
+    )
+    adist = (
+        codes.join(F.broadcast(lut), ["m", "code_id"])
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum(F.col("d").cast("decimal(28,14)")).cast("double").alias("adist"))
+    )
+    w_a = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
+    short = adist.withColumn("r", F.row_number().over(w_a)).filter(
+        F.col("r") <= refine * k
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+    return (
+        short.select("query_id", "neighbor_id")
+        .join(cn, "neighbor_id")
+        .join(F.broadcast(qn), "query_id")
+        .withColumn("cos", dot(F.col("qe"), F.col("ce"), dims))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", "cos", "rk")
+    )
+
+
+def _dedup_rows(pdf):
+    cols = ["vec_id", "cluster_id", "cos_centroid", "kept", "witness_cos"]
+    return sorted(map(tuple, pdf[cols].fillna(-1).itertuples(index=False)))
+
+
+def test_semantic_dedup_grouped_equals_join_exactly(spark):
+    """The applyInPandas refine replays the SQL aggregate's left-fold op
+    order, so every witness cosine is BIT-identical to the within-cluster
+    self-join — the property that lets the slot keep its join-shaped
+    oracle while executing the n-row-shuffle plan."""
+    from xarray_dataaccessor_spark.operators.similarity import (
+        ivf_assign,
+        semantic_dedup,
+    )
 
     rng = np.random.default_rng(11)
     rows = [(i, rng.normal(size=8).tolist()) for i in range(120)]
     rows += [(1000 + i, [v * 1.01 for v in rows[i][1]]) for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kw = dict(threshold=0.9, n_clusters=4, n_iters=2, dims=8, train_limit=64)
-    a = semantic_dedup(df, pairwise="grouped", **kw).toPandas().sort_values(
-        "vec_id").reset_index(drop=True)
-    b = semantic_dedup(df, pairwise="join", **kw).toPandas().sort_values(
-        "vec_id").reset_index(drop=True)
-    assert a["kept"].tolist() == b["kept"].tolist()
+    a = semantic_dedup(df, **kw).toPandas()
+    v = df.select("vec_id", F.col("embedding").alias("e"))
+    cent = _lloyd_reference(v, 4, 2, 8, 64)
+    b = _semantic_dedup_reference(
+        ivf_assign(v, cent, rank=1, dims=8), cent, 0.9, 8
+    ).toPandas()
+    assert _dedup_rows(a) == _dedup_rows(b)  # both cosines bit-exact
     assert (a["kept"] == False).sum() >= 12  # noqa: E712 — planted dups drop
-    for x, y in zip(a["witness_cos"], b["witness_cos"]):
-        both_null = (x is None or (isinstance(x, float) and math.isnan(x))) and (
-            y is None or (isinstance(y, float) and math.isnan(y)))
-        assert both_null or x == y, (x, y)  # bit-exact, not approx
 
 
 @pytest.mark.parametrize(
@@ -956,18 +1149,13 @@ def test_semantic_dedup_grouped_equals_join_exactly(spark):
 def test_embedding_near_duplicates_grouped_equals_join_exactly(
     spark, monkeypatch, max_records
 ):
-    """The grouped bucket-run refine produces the SAME pair set, each
-    pair once, with BIT-identical cosines as the join path the oracle
+    """The bucket-run kernel produces the SAME pair set, each pair once,
+    with BIT-identical cosines as the candidate-pair join the oracle
     replays — also when bucket runs cross Arrow batches (3 records per
     batch) and when one bucket is wider than the kernel's column block
     (a cluster of 12 scaled copies shares every band; block lowered to
     5)."""
-    import numpy as np
-
     from xarray_dataaccessor_spark.operators import similarity
-    from xarray_dataaccessor_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
 
     rng = np.random.default_rng(3)
     rows = [(i, rng.normal(size=8).tolist()) for i in range(150)]
@@ -982,10 +1170,10 @@ def test_embedding_near_duplicates_grouped_equals_join_exactly(
     if max_records is not None:
         spark.conf.set(key, str(max_records))
     try:
-        a = embedding_near_duplicates(df, refine="grouped", **kw).toPandas()
+        a = embedding_near_duplicates(df, **kw).toPandas()
     finally:
         spark.conf.set(key, prev)
-    b = embedding_near_duplicates(df, refine="join", **kw).toPandas()
+    b = _neardup_reference(df, **kw).toPandas()
     assert not a.duplicated(["id_a", "id_b"]).any()
     a = a.sort_values(["id_a", "id_b"]).reset_index(drop=True)
     b = b.sort_values(["id_a", "id_b"]).reset_index(drop=True)
@@ -998,12 +1186,10 @@ def test_embedding_near_duplicates_grouped_equals_join_exactly(
 
 def test_pq_ann_grouped_equals_join_exactly(spark):
     """The Arrow-batched normalization + code assignment replay the SQL
-    folds' exact dimension order, so the grouped execution returns
-    BIT-identical neighbors and cosines to the join path the oracle
+    folds' exact dimension order, so pq_ann returns BIT-identical
+    neighbors and cosines to the pure-DataFrame pipeline the oracle
     replays — the property that lets `similarity_pq_ann` keep its full
     SQL-replay oracle while executing the n-row Arrow plan."""
-    import numpy as np
-
     from xarray_dataaccessor_spark.operators.similarity import pq_ann
 
     rng = np.random.default_rng(7)
@@ -1012,54 +1198,43 @@ def test_pq_ann_grouped_equals_join_exactly(spark):
     q = df.filter("vec_id < 5")
     kw = dict(k=5, m_subspaces=4, n_codes=8, n_iters=2, refine=4, dims=16,
               train_limit=64)
-    a = pq_ann(q, df, execution="grouped", **kw).toPandas().sort_values(
+    a = pq_ann(q, df, **kw).toPandas().sort_values(
         ["query_id", "rk"]).reset_index(drop=True)
-    b = pq_ann(q, df, execution="join", **kw).toPandas().sort_values(
+    b = _pq_ann_reference(q, df, **kw).toPandas().sort_values(
         ["query_id", "rk"]).reset_index(drop=True)
     assert len(a) == len(b) == 25
     assert a["neighbor_id"].tolist() == b["neighbor_id"].tolist()
     assert a["cos"].tolist() == b["cos"].tolist()  # bit-exact
-    import pytest
-
-    with pytest.raises(ValueError, match="execution"):
-        pq_ann(q, df, execution="bogus", **kw)
 
 
 def test_kmeans_grouped_equals_join_exactly(spark):
-    """The Arrow-exact Lloyd assignment (_rank1_assign_arrow with the
-    tiled fold replay) yields BIT-identical centroids to the
-    broadcast-join path the SQL oracles replay."""
-    import numpy as np
-
+    """The Arrow Lloyd assignment (_rank1_assign with the tiled fold
+    replay) yields BIT-identical centroids to the broadcast-join loop
+    the SQL oracles replay."""
     from xarray_dataaccessor_spark.operators.similarity import kmeans_centroids
 
     rng = np.random.default_rng(13)
     rows = [(i, rng.normal(size=24).tolist()) for i in range(500)]
     df = spark.createDataFrame(rows, "vec_id long, e array<double>")
-    kw = dict(n_centroids=37, n_iters=3, dims=24, train_limit=300)
-    a = kmeans_centroids(df, execution="grouped", **kw).toPandas()
-    b = kmeans_centroids(df, execution="join", **kw).toPandas()
+    a = kmeans_centroids(
+        df, n_centroids=37, n_iters=3, dims=24, train_limit=300
+    ).toPandas()
+    b = _lloyd_reference(df, 37, 3, 24, 300).toPandas()
     a = a.sort_values("centroid_id").reset_index(drop=True)
     b = b.sort_values("centroid_id").reset_index(drop=True)
     assert a["centroid_id"].tolist() == b["centroid_id"].tolist()
     for x, y in zip(a["ce"], b["ce"]):
         assert list(x) == list(y)  # bit-exact, not approx
-    import pytest
-
-    with pytest.raises(ValueError, match="execution"):
-        kmeans_centroids(df, execution="bogus", **kw)
 
 
 def test_coarse_assign_grouped_equals_join_exactly(spark):
     """The two-level (coarse-quantized) rank-1 assignment — the scale
-    path for SemDeDup's k ∝ N rule — yields identical structure and
-    assignments in both execution modes, and degenerates to the exact
-    flat assignment when n_groups=1 (one group = argmin over all fine
-    centroids)."""
-    import numpy as np
-
+    path for SemDeDup's k ∝ N rule — yields the same structure and
+    assignments as the broadcast-join replay, and degenerates to the
+    exact flat assignment when n_groups=1 (one group = argmin over all
+    fine centroids)."""
     from xarray_dataaccessor_spark.operators.similarity import (
-        _rank1_assign_arrow,
+        _rank1_assign,
         coarse_rank1_assign,
         coarse_structure,
         kmeans_centroids,
@@ -1071,35 +1246,28 @@ def test_coarse_assign_grouped_equals_join_exactly(spark):
     cent = kmeans_centroids(
         df, n_centroids=25, n_iters=2, dims=16, train_limit=None
     ).cache()
-    cg, gg = coarse_structure(cent, dims=16, execution="grouped")
-    cj, gj = coarse_structure(cent, dims=16, execution="join")
+    cg, gg = coarse_structure(cent, dims=16)
+    cj, gj = _coarse_structure_reference(cent, dims=16)
     assert sorted(map(tuple, gg.collect())) == sorted(map(tuple, gj.collect()))
-    ag = coarse_rank1_assign(
-        df, cent, cg, gg, dims=16, execution="grouped"
-    ).select("vec_id", "centroid_id")
-    aj = coarse_rank1_assign(
-        df, cent, cj, gj, dims=16, execution="join"
-    ).select("vec_id", "centroid_id")
+    ag = coarse_rank1_assign(df, cent, cg, gg, dims=16).select(
+        "vec_id", "centroid_id")
+    aj = _coarse_assign_reference(df, cent, cj, gj, dims=16).select(
+        "vec_id", "centroid_id")
     assert sorted(map(tuple, ag.collect())) == sorted(map(tuple, aj.collect()))
     # n_groups=1 == exact flat assignment, bit-for-bit
-    c1, g1 = coarse_structure(cent, n_groups=1, dims=16, execution="grouped")
-    a1 = coarse_rank1_assign(
-        df, cent, c1, g1, dims=16, execution="grouped"
-    ).select("vec_id", "centroid_id")
-    flat = _rank1_assign_arrow(df, cent).select("vec_id", "centroid_id")
+    c1, g1 = coarse_structure(cent, n_groups=1, dims=16)
+    a1 = coarse_rank1_assign(df, cent, c1, g1, dims=16).select(
+        "vec_id", "centroid_id")
+    flat = _rank1_assign(df, cent).select("vec_id", "centroid_id")
     assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, flat.collect()))
     cent.unpersist()
 
 
 def test_semantic_dedup_coarse_parity_and_agreement(spark):
-    """semantic_dedup(assign='coarse') is engine-parity exact between
-    the grouped and join paths (the oracle replays the join shape), and
-    routes the vast majority of vectors to the same cluster as the
-    exact assignment (the IVF probes=1 trade misses only boundary
-    vectors)."""
-    import numpy as np
-    import pytest
-
+    """semantic_dedup(assign='coarse') equals its broadcast-join replay
+    exactly (the shape the oracle replays), and routes the vast majority
+    of vectors to the same cluster as the exact assignment (the IVF
+    probes=1 trade misses only boundary vectors)."""
     from xarray_dataaccessor_spark.operators.similarity import semantic_dedup
 
     rng = np.random.default_rng(7)
@@ -1110,34 +1278,63 @@ def test_semantic_dedup_coarse_parity_and_agreement(spark):
         threshold=0.9, n_clusters=20, vec_col="e", dims=16,
         train_limit=None, assign="coarse",
     )
-    g = semantic_dedup(df, pairwise="grouped", **kw).toPandas()
-    j = semantic_dedup(df, pairwise="join", **kw).toPandas()
-    key = ["vec_id", "cluster_id", "kept", "witness_cos"]
-    gt = sorted(map(tuple, g[key].fillna(-1).itertuples(index=False)))
-    jt = sorted(map(tuple, j[key].fillna(-1).itertuples(index=False)))
-    assert gt == jt
+    g = semantic_dedup(df, **kw).toPandas()
+    cent = _lloyd_reference(df, 20, 2, 16, None).cache()
+    coarse, gmap = _coarse_structure_reference(cent, dims=16)
+    j = _semantic_dedup_reference(
+        _coarse_assign_reference(df, cent, coarse, gmap, dims=16), cent, 0.9, 16
+    ).toPandas()
+    cent.unpersist()
+    assert _dedup_rows(g) == _dedup_rows(j)
     # planted scaled duplicates must be resolved (one of each pair drops)
     dropped = set(g.loc[~g["kept"], "vec_id"])
     resolved = sum(
         1 for i, _ in base[:40] if (i in dropped) != (i + 10000 in dropped)
     )
     assert resolved >= 35
-    ex = semantic_dedup(df, pairwise="grouped", **{**kw, "assign": "exact"})
+    ex = semantic_dedup(df, **{**kw, "assign": "exact"})
     me = {r["vec_id"]: r["cluster_id"] for r in ex.collect()}
     mc = dict(zip(g["vec_id"], g["cluster_id"]))
     agree = sum(1 for k in me if me[k] == mc[k])
     assert agree / len(me) > 0.7
     with pytest.raises(ValueError, match="assign"):
         semantic_dedup(df, assign="bogus", vec_col="e")
-    with pytest.raises(ValueError, match="grouped"):
-        from xarray_dataaccessor_spark.operators.similarity import (
-            coarse_rank1_assign,
-            coarse_structure,
-            kmeans_centroids,
-        )
 
-        cent = kmeans_centroids(df, n_centroids=5, dims=16, train_limit=None)
-        c, gm = coarse_structure(cent, dims=16, execution="join")
-        coarse_rank1_assign(
-            df, cent, c, gm, dims=16, execution="join", with_cos=True
-        )
+
+def test_one_execution_path_per_similarity_operator():
+    """No JVM. No function in ``operators/similarity.py`` takes a
+    string-valued ``execution``/``pairwise``/``refine`` switch to a
+    second execution path, and one kernel owns the Arrow rank-1
+    assignment: ``_rank1_assign`` is the only function that calls the
+    tiled l2sq fold replay, through a single ``mapInPandas``."""
+    import ast
+    from pathlib import Path
+
+    tree = ast.parse(Path(similarity_module.__file__).read_text())
+    switches = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+        pairs += list(zip(a.kwonlyargs, a.kw_defaults))
+        switches += [
+            f"{fn.name}({arg.arg}=)" for arg, d in pairs
+            if arg.arg in ("execution", "pairwise", "refine")
+            and isinstance(d, ast.Constant) and isinstance(d.value, str)
+        ]
+    assert switches == []
+
+    def calls(node, name):
+        return [
+            n for n in ast.walk(node) if isinstance(n, ast.Call)
+            and name in (getattr(n.func, "id", None), getattr(n.func, "attr", None))
+        ]
+
+    kernels = [
+        fn for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and calls(fn, "_l2sq_dist_tiled")
+    ]
+    assert [fn.name for fn in kernels] == ["_rank1_assign"]
+    assert len(calls(kernels[0], "mapInPandas")) == 1

@@ -113,6 +113,24 @@ def test_crash_before_commit_publishes_nothing(spark, tmp_path, monkeypatch):
     assert read_versioned(spark, path).count() == 70
 
 
+def test_footer_stats_error_fails_the_commit(spark, tmp_path, monkeypatch):
+    """A footer-stats read that raises is a fault, not a file without
+    stats: the append fails and readers still see the old version."""
+    import xarray_dataaccessor_spark.sinks.versioned as V
+
+    path = str(tmp_path / "ds")
+    write_versioned(_batch(spark, 0, 40), path)
+
+    def boom(fpath):
+        raise TypeError("unreadable footer")
+
+    monkeypatch.setattr(V, "_file_stats", boom)
+    with pytest.raises(TypeError, match="footer"):
+        append_versioned(_batch(spark, 40, 70), path)
+    assert list_versions(path) == [0]
+    assert read_versioned(spark, path).count() == 40
+
+
 def test_duplicate_version_commit_rejected(spark, tmp_path):
     import xarray_dataaccessor_spark.sinks.versioned as V
 

@@ -200,11 +200,6 @@ def _require_codec(kind: str, codec: str) -> None:
         )
 
 
-BINARY_META_SCHEMA = (
-    "media_type string, width int, height int, n_channels int, duration_ms bigint"
-)
-
-
 def attach_binary_column(
     df: DataFrame, text_col: str = "text", media_type: str = "image/fake"
 ) -> DataFrame:
@@ -365,16 +360,14 @@ def binary_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
-def decode_binary(
-    df: DataFrame, payload_col: str = "payload", batch_schema: str | None = None
-) -> DataFrame:
+def decode_binary(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched mapInPandas decode: the distributed plumbing a real
     image/audio decode would ride on. The row function receives the raw
     bytes; the codec call is replaced by a deterministic fake (first/last
     byte, simple checksum) so the batch shape, schema, and partition
     behavior are testable in this container.
     """
-    out_schema = batch_schema or (
+    out_schema = (
         "doc_id bigint, n_bytes bigint, first_byte int, last_byte int, byte_sum bigint"
     )
 

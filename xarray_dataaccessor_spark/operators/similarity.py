@@ -413,7 +413,6 @@ def embedding_near_duplicates(
     vec_col: str = "embedding",
     dims: int | None = None,
     n_docs: int | None = None,
-    refine: str = "grouped",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs above ``threshold`` via BANDED
     multi-probe hyperplane LSH (the same banding machinery as MinHash
@@ -438,25 +437,22 @@ def embedding_near_duplicates(
     :func:`lsh_autoparams` (supply ``n_docs`` if the caller already
     counted — otherwise one count() action fires here).
 
-    ``refine`` selects the candidate-refine execution (identical
-    output, pinned by test). ``"grouped"`` (default): one
-    ``(band, bucket)``-keyed shuffle of the n*b (id, vector) rows, sorted
-    within each partition by (band, bucket, id), then ONE ``mapInPandas``
-    kernel per partition walks the contiguous bucket runs (a run that
-    crosses an Arrow batch boundary is carried into the next batch). The
-    kernel builds the vector matrix once per batch and computes each
-    run's pairs as numpy steps replaying the SQL cosine fold's exact op
-    order, in blocks of :data:`PAIR_BLOCK_COLS` columns. Every row
-    carries its full bucket array, and a pair is emitted only from the
-    LOWEST band both vectors share — the duplicate-free partitioning of
-    "Distributed Similarity Joins over Top-K Rankings" (EDBT 2020) — so
-    each pair leaves the kernel exactly once and no cross-band dedup
-    shuffle follows. The ``"join"`` path (the shape the SQL oracle
-    replays) shuffles CANDIDATE-PAIR rows with both vectors attached and
-    evaluates one interpreted zip_with/aggregate fold per pair —
-    measured 4.5x slower at the sf3 knee (72 s vs 16 s), since
-    higher-order functions never enter codegen and the pair join moves
-    ~2 * dims doubles per candidate."""
+    Refine: one ``(band, bucket)``-keyed shuffle of the n*b (id, vector)
+    rows, sorted within each partition by (band, bucket, id), then ONE
+    ``mapInPandas`` kernel per partition walks the contiguous bucket runs
+    (a run that crosses an Arrow batch boundary is carried into the next
+    batch). The kernel builds the vector matrix once per batch and
+    computes each run's pairs as numpy steps replaying the SQL cosine
+    fold's exact op order, in blocks of :data:`PAIR_BLOCK_COLS` columns,
+    so every cosine is bit-identical to the candidate-pair join the SQL
+    oracle replays. Every row carries its full bucket array, and a pair
+    is emitted only from the LOWEST band both vectors share — the
+    duplicate-free partitioning of "Distributed Similarity Joins over
+    Top-K Rankings" (EDBT 2020) — so each pair leaves the kernel exactly
+    once and no cross-band dedup shuffle follows. Shuffling candidate
+    pairs with both vectors attached and folding each pair's cosine in
+    interpreted SQL instead measured 4.5x slower at the sf3 knee (72 s
+    vs 16 s)."""
     from xarray_dataaccessor_spark.operators.dedup import spread_small_input
 
     v = spread_small_input(
@@ -473,50 +469,23 @@ def embedding_near_duplicates(
         )
         for bidx in range(n_bands)
     ])
-    if refine == "grouped":
-        # posexplode_OUTER: the array always holds n_bands buckets, and the
-        # inner form makes Catalyst infer a size(vals) > 0 filter that
-        # evaluates every plane dot a second time below the shuffle
-        rows = (
-            v.withColumn("vals", vals)
-            .select(id_col, "e", "vals", F.posexplode_outer("vals").alias("band", "val"))
-            .repartition("band", "val")
-            .sortWithinPartitions("band", "val", id_col)
-        )
-        id_type = v.schema[id_col].dataType
-        pair_schema = T.StructType([
-            T.StructField("id_a", id_type), T.StructField("id_b", id_type),
-            T.StructField("cos", T.DoubleType()),
-        ])
-        return rows.mapInPandas(
-            _first_band_pairs_kernel(id_col, float(threshold), PAIR_BLOCK_COLS),
-            pair_schema,
-        )
-    sig = v.select(id_col, F.posexplode_outer(vals).alias("band", "val"))
-    # cache the signature table (ids + band + bucket only — b rows per
-    # doc, no embedding payload; same convention as the MinHash
-    # signatures): the candidate join is typically planned as a
-    # broadcast self-join, whose two sides would otherwise each
-    # recompute all b*r plane dots over the corpus
-    sig = tracked_cache(sig)
-    cand = (
-        sig.alias("sa")
-        .join(sig.alias("sb"), ["band", "val"])
-        .filter(F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}"))
-        .select(
-            F.col(f"sa.{id_col}").alias("id_a"),
-            F.col(f"sb.{id_col}").alias("id_b"),
-        )
-        .distinct()
+    # posexplode_OUTER: the array always holds n_bands buckets, and the
+    # inner form makes Catalyst infer a size(vals) > 0 filter that
+    # evaluates every plane dot a second time below the shuffle
+    rows = (
+        v.withColumn("vals", vals)
+        .select(id_col, "e", "vals", F.posexplode_outer("vals").alias("band", "val"))
+        .repartition("band", "val")
+        .sortWithinPartitions("band", "val", id_col)
     )
-    ea = v.select(F.col(id_col).alias("id_a"), F.col("e").alias("ea"))
-    eb = v.select(F.col(id_col).alias("id_b"), F.col("e").alias("eb"))
-    return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .withColumn("cos", cosine(F.col("ea"), F.col("eb"), dims))
-        .filter(F.col("cos") > threshold)
-        .select("id_a", "id_b", "cos")
+    id_type = v.schema[id_col].dataType
+    pair_schema = T.StructType([
+        T.StructField("id_a", id_type), T.StructField("id_b", id_type),
+        T.StructField("cos", T.DoubleType()),
+    ])
+    return rows.mapInPandas(
+        _first_band_pairs_kernel(id_col, float(threshold), PAIR_BLOCK_COLS),
+        pair_schema,
     )
 
 
@@ -607,34 +576,73 @@ def _make_l2sq_dist_tiled():
 _l2sq_dist_tiled = _make_l2sq_dist_tiled()
 
 
-def _rank1_assign_arrow(
+def _id_sorted(table: DataFrame) -> tuple:
+    """Collect a dimension-sized ``(centroid_id, ce)`` table as
+    ``(ids, matrix)`` in ascending id order, so argmin-first over the
+    matrix breaks distance ties to the smaller id."""
+    import numpy as np
+
+    rows = sorted(table.collect(), key=lambda r: r["centroid_id"])
+    return (
+        np.asarray([r["centroid_id"] for r in rows]),
+        np.asarray([list(map(float, r["ce"])) for r in rows], dtype=np.float64),
+    )
+
+
+def _rank1_assign(
     vectors: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "e",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "ce",
+    groups: tuple[DataFrame, DataFrame] | None = None,
+    with_cos: bool = False,
 ) -> DataFrame:
-    """Arrow-exact :func:`ivf_assign` (rank=1): collect the
-    dimension-sized centroid table once and assign in one
-    ``mapInPandas`` pass — no per-(vector, centroid) interpreted l2sq
-    folds. Distances replay the SQL fold via :func:`_l2sq_dist_tiled`;
-    the min-struct tie-break (smaller centroid id on equal distance)
-    becomes argmin-first over the id-sorted centroid matrix. Output
-    schema matches ``ivf_assign(rank=1)``; pinned bit-exact by
-    test_kmeans_grouped_equals_join_exactly."""
+    """The Arrow rank-1 assignment kernel behind Lloyd, the coarse group
+    map, :func:`coarse_rank1_assign` and :func:`semantic_dedup`: collect
+    the dimension-sized ``(centroid_id, ce)`` table once and assign in
+    one ``mapInPandas`` pass — no per-(vector, centroid) interpreted l2sq
+    folds. Output ``(id_col, vec_col, centroid_id)``, plus
+    ``cos_centroid`` when ``with_cos``.
+
+    ``groups`` is a ``(coarse, gmap)`` pair from
+    :func:`coarse_structure`: each vector is first routed to its nearest
+    coarse center, then argmin runs over that group's fine members only.
+    Without it every centroid sits in a single group and there is no
+    routing step.
+
+    Bit-exact discipline: distances replay the SQL ``l2sq`` fold's
+    dimension order (:func:`_l2sq_dist_tiled`) and the cosine replays the
+    SQL ``cosine`` fold's per-dimension accumulations; both levels take
+    the first minimum over id-sorted matrices, the smaller-id tie-break
+    of :func:`ivf_assign`'s min-struct. Assignment is a DISCRETE
+    decision, immune to the ~1-ulp centroid-mean difference across
+    engines, so the SQL-oracle replay picks identical centroids."""
     import numpy as np
 
-    rows = sorted(centroids.collect(), key=lambda r: r[centroid_id])
-    cm = np.asarray([list(map(float, r[centroid_vec])) for r in rows])
-    cids = np.asarray([r[centroid_id] for r in rows])
-    cid_type = centroids.schema[centroid_id].dataType
-    schema = T.StructType([
+    ids, mat = _id_sorted(centroids)
+    if groups is None:
+        route = None
+        members = [(ids, mat)]
+    else:
+        coarse, gmap = groups
+        g_ids, route = _id_sorted(coarse)
+        group_of = {r["centroid_id"]: r["group_id"] for r in gmap.collect()}
+        of = np.asarray([group_of[c] for c in ids.tolist()])
+        members = [(ids[of == g], mat[of == g]) for g in g_ids.tolist()]
+    norms = []
+    for _, m_mat in members:
+        # accumulated per dimension from 0.0: the SQL norm fold's order
+        cn2 = np.zeros(m_mat.shape[0])
+        for t in range(m_mat.shape[1]):
+            cn2 = cn2 + m_mat[:, t] * m_mat[:, t]
+        norms.append(np.sqrt(cn2))
+    fields = [
         vectors.schema[id_col],
         T.StructField(vec_col, T.ArrayType(T.DoubleType()), True),
-        T.StructField(centroid_id, cid_type),
-        T.StructField("probe_rank", T.IntegerType(), False),
-    ])
+        T.StructField("centroid_id", centroids.schema["centroid_id"].dataType),
+    ]
+    if with_cos:
+        fields.append(T.StructField("cos_centroid", T.DoubleType()))
 
     def _assign(batches):
         import pandas as pd
@@ -643,15 +651,34 @@ def _rank1_assign_arrow(
             if not len(pdf):
                 continue
             E = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            idx = _l2sq_dist_tiled(E, cm).argmin(axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                vec_col: pdf[vec_col],
-                centroid_id: cids[idx],
-                "probe_rank": np.ones(len(pdf), dtype=np.int32),
-            })
+            if route is None:
+                parts = [(slice(None), 0)]
+            else:
+                gi = _l2sq_dist_tiled(E, route).argmin(axis=1)
+                parts = [(gi == g, g) for g in np.unique(gi)]
+            cid = np.empty(len(E), dtype=ids.dtype)
+            cos = np.empty(len(E))
+            for rows, g in parts:
+                m_ids, m_mat = members[g]
+                sub = E[rows]
+                idx = _l2sq_dist_tiled(sub, m_mat).argmin(axis=1)
+                cid[rows] = m_ids[idx]
+                if with_cos:
+                    sel = m_mat[idx]
+                    dotv = np.zeros(sub.shape[0])
+                    en2 = np.zeros(sub.shape[0])
+                    for t in range(sub.shape[1]):
+                        dotv = dotv + sub[:, t] * sel[:, t]
+                        en2 = en2 + sub[:, t] * sub[:, t]
+                    cos[rows] = dotv / (np.sqrt(en2) * norms[g][idx])
+            data = {id_col: pdf[id_col], vec_col: pdf[vec_col], "centroid_id": cid}
+            if with_cos:
+                data["cos_centroid"] = cos
+            yield pd.DataFrame(data)
 
-    return vectors.select(id_col, vec_col).mapInPandas(_assign, schema)
+    return vectors.select(id_col, vec_col).mapInPandas(
+        _assign, T.StructType(fields)
+    )
 
 
 def training_sample(
@@ -677,13 +704,11 @@ def kmeans_centroids(
     vec_col: str = "e",
     dims: int | None = None,
     train_limit: int | None = 4096,
-    execution: str = "grouped",
 ) -> DataFrame:
-    """Deterministic Lloyd iterations as pure DataFrame aggregations:
-    init = first ``n_centroids`` vectors by id (reproducible seed), then
-    per iteration (a) rank-1 assignment via the broadcast quantizer and
-    (b) element-wise exact centroid means (posexplode -> per-(centroid,
-    dim) DECIMAL-sum mean -> regroup sorted by position). Decimal sums
+    """Deterministic Lloyd iterations: init = first ``n_centroids``
+    vectors by id (reproducible seed), then per iteration (a) rank-1
+    assignment (:func:`_rank1_assign`) and (b) element-wise exact
+    centroid means (per-(centroid, dim) DECIMAL-sum mean). Decimal sums
     make the means independent of aggregation order, so the centroids —
     and everything downstream — are bit-reproducible across runs and
     engines (the SQL-oracle convention, memory: oracle-exactness).
@@ -698,20 +723,14 @@ def kmeans_centroids(
     A centroid that captures no vectors drops out of the next iteration
     (standard Lloyd degeneracy; deterministic here).
 
-    ``execution`` picks the per-iteration assignment (bit-identical
-    results, pinned by test_kmeans_grouped_equals_join_exactly):
-    ``"grouped"`` (default since r11) collects the centroid table each
-    iteration (k rows — dimension-sized by contract) and assigns in an
-    Arrow pass via :func:`_rank1_assign_arrow` — the broadcast-join
-    path evaluates train_limit x k INTERPRETED l2sq folds per
-    iteration, and with rules like SemDeDup's k ∝ N *and*
-    train_limit ∝ k that term is quadratic in the corpus (the sf10
-    study's Lloyd profile: 45 s of the neardup slot); ``"join"`` is
-    the pure-DataFrame loop the SQL oracles replay. Note grouped
-    training fires one job per iteration at build time (the collect);
-    use ``"join"`` where a fully lazy plan matters more than speed."""
-    if execution not in ("grouped", "join"):
-        raise ValueError(f"execution must be 'grouped' or 'join': {execution!r}")
+    Each iteration collects the centroid table (k rows — dimension-sized
+    by contract) and assigns in one Arrow pass whose argmin is
+    bit-identical to the broadcast-join ``ivf_assign`` loop the SQL
+    oracles replay. That join evaluates train_limit x k INTERPRETED l2sq
+    folds per iteration, and with rules like SemDeDup's k ∝ N *and*
+    train_limit ∝ k the term is quadratic in the corpus (the sf10
+    study's Lloyd profile: 45 s of the neardup slot). The price: training
+    fires one job per iteration at build time (the collect)."""
     train = vectors
     if train_limit is not None:
         # cache: the sample feeds init + one assignment per iteration,
@@ -721,15 +740,7 @@ def kmeans_centroids(
         F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("ce")
     )
     for _ in range(n_iters):
-        if execution == "grouped":
-            assigned = _rank1_assign_arrow(
-                train, cent, id_col=id_col, vec_col=vec_col
-            )
-        else:
-            assigned = ivf_assign(
-                train, cent, id_col=id_col, vec_col=vec_col, rank=1,
-                dims=dims,
-            )
+        assigned = _rank1_assign(train, cent, id_col=id_col, vec_col=vec_col)
         cent = _centroid_means(assigned, ["centroid_id"], vec_col, dims)
     return cent
 
@@ -778,7 +789,6 @@ def coarse_structure(
     n_groups: int | None = None,
     n_iters: int = 2,
     dims: int | None = None,
-    execution: str = "grouped",
 ) -> tuple[DataFrame, DataFrame]:
     """Two-level quantizer structure over a fine-centroid table: cluster
     the ``k`` fine centroids into ``n_groups`` (default
@@ -813,14 +823,9 @@ def coarse_structure(
     )
     coarse = kmeans_centroids(
         cfine, n_centroids=g, n_iters=n_iters, id_col="vec_id",
-        vec_col="e", dims=dims, train_limit=None, execution=execution,
+        vec_col="e", dims=dims, train_limit=None,
     )
-    if execution == "grouped":
-        gmap_full = _rank1_assign_arrow(cfine, coarse)
-    else:
-        gmap_full = ivf_assign(cfine, coarse, id_col="vec_id",
-                               vec_col="e", rank=1, dims=dims)
-    gmap = gmap_full.select(
+    gmap = _rank1_assign(cfine, coarse).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("centroid_id").alias("group_id"),
     )
@@ -839,120 +844,20 @@ def coarse_rank1_assign(
     id_col: str = "vec_id",
     vec_col: str = "e",
     dims: int | None = None,
-    execution: str = "grouped",
     with_cos: bool = False,
 ) -> DataFrame:
     """Two-level rank-1 assignment: route each vector to its nearest
-    coarse center (over the non-empty groups), then argmin over that
-    group's fine members only. Output ``(id_col, vec_col, centroid_id)``
-    (+ ``cos_centroid`` when ``with_cos``, replaying the exact grouped
-    path's per-dimension accumulation order — grouped execution only).
-
-    Bit-exact discipline: every distance replays the SQL ``l2sq`` fold's
-    dimension order (:func:`_l2sq_dist_tiled` in the grouped path, the
-    interpreted fold in the join path), and both levels break ties to
-    the smaller id — so the grouped and join paths, and the SQL-oracle
-    replay, pick identical centroids (assignment is a DISCRETE decision,
-    immune to the ~1-ulp centroid-mean difference across engines)."""
-    if execution == "join":
-        if with_cos:
-            raise ValueError("with_cos requires execution='grouped'")
-        vg = (
-            ivf_assign(vectors, coarse, id_col=id_col, vec_col=vec_col,
-                       rank=1, dims=dims)
-            .select(id_col, vec_col,
-                    F.col("centroid_id").alias("group_id"))
-        )
-        scored = (
-            vg.join(F.broadcast(gmap), "group_id")
-            .join(
-                F.broadcast(
-                    centroids.select("centroid_id", "ce")
-                ),
-                "centroid_id",
-            )
-            .withColumn("__d", l2sq(F.col(vec_col), F.col("ce"), dims))
-        )
-        best = scored.groupBy(id_col).agg(
-            F.min(F.struct("__d", "centroid_id", vec_col)).alias("__b")
-        )
-        return best.select(
-            id_col,
-            F.col(f"__b.{vec_col}").alias(vec_col),
-            F.col("__b.centroid_id").alias("centroid_id"),
-        )
-    import numpy as np
-
-    c_rows = sorted(coarse.collect(), key=lambda r: r["centroid_id"])
-    g_ids = [r["centroid_id"] for r in c_rows]
-    g_mat = np.asarray([list(map(float, r["ce"])) for r in c_rows])
-    group_of = {r["centroid_id"]: r["group_id"] for r in gmap.collect()}
-    f_rows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    members: dict = {gid: ([], []) for gid in g_ids}
-    for r in f_rows:
-        gid = group_of[r["centroid_id"]]
-        ids, vecs = members[gid]
-        ids.append(r["centroid_id"])
-        vecs.append(list(map(float, r["ce"])))
-    member_ids = [np.asarray(members[gid][0]) for gid in g_ids]
-    member_mats = [np.asarray(members[gid][1]) for gid in g_ids]
-    # per-member centroid norms with the exact grouped-assign op order
-    # (cn2 accumulated per dimension from 0.0) so the optional cosine is
-    # bit-identical to semantic_dedup's flat grouped path
-    member_cn = []
-    for mat in member_mats:
-        cn2 = np.zeros(mat.shape[0])
-        for t in range(mat.shape[1]):
-            cn2 = cn2 + mat[:, t] * mat[:, t]
-        member_cn.append(np.sqrt(cn2))
-    cid_type = centroids.schema["centroid_id"].dataType
-    fields = [
-        vectors.schema[id_col],
-        T.StructField(vec_col, T.ArrayType(T.DoubleType()), True),
-        T.StructField("centroid_id", cid_type),
-    ]
-    if with_cos:
-        fields.append(T.StructField("cos_centroid", T.DoubleType()))
-    schema = T.StructType(fields)
-
-    def _assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            m, d_ = E.shape
-            gi = _l2sq_dist_tiled(E, g_mat).argmin(axis=1)
-            out = np.empty(m, dtype=object)
-            cos = np.empty(m) if with_cos else None
-            for gidx in np.unique(gi):
-                mask = gi == gidx
-                sub_idx = _l2sq_dist_tiled(
-                    E[mask], member_mats[gidx]
-                ).argmin(axis=1)
-                out[mask] = member_ids[gidx][sub_idx]
-                if with_cos:
-                    sub = E[mask]
-                    sel = member_mats[gidx][sub_idx]
-                    dotv = np.zeros(sub.shape[0])
-                    en2 = np.zeros(sub.shape[0])
-                    for t in range(d_):
-                        dotv = dotv + sub[:, t] * sel[:, t]
-                        en2 = en2 + sub[:, t] * sub[:, t]
-                    cos[mask] = dotv / (
-                        np.sqrt(en2) * member_cn[gidx][sub_idx]
-                    )
-            data = {
-                id_col: pdf[id_col],
-                vec_col: pdf[vec_col],
-                "centroid_id": out,
-            }
-            if with_cos:
-                data["cos_centroid"] = cos
-            yield pd.DataFrame(data)
-
-    return vectors.select(id_col, vec_col).mapInPandas(_assign, schema)
+    coarse center (over the non-empty groups of :func:`coarse_structure`),
+    then argmin over that group's fine members only. Output
+    ``(id_col, vec_col, centroid_id)`` (+ ``cos_centroid`` when
+    ``with_cos``). Every distance replays the SQL ``l2sq`` fold and both
+    levels break ties to the smaller id (:func:`_rank1_assign`), so the
+    SQL-oracle replay picks identical centroids. ``dims`` is accepted
+    for signature symmetry with the other quantizer operators."""
+    return _rank1_assign(
+        vectors, centroids, id_col=id_col, vec_col=vec_col,
+        groups=(coarse, gmap), with_cos=with_cos,
+    )
 
 
 def pq_codebooks(
@@ -1193,7 +1098,6 @@ def pq_ann(
     vec_col: str = "embedding",
     dims: int | None = None,
     train_limit: int | None = 4096,
-    execution: str = "grouped",
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation and
     exact re-rank — the third ANN strategy beside :func:`lsh_ann_banded`
@@ -1224,21 +1128,16 @@ def pq_ann(
     distance-concentration worst case — clustered real embeddings do
     better at equal cost.
 
-    ``execution`` selects how the two corpus-sized interpreted stages
-    run (identical results bit-for-bit, pinned by
-    test_pq_ann_grouped_equals_join_exactly): ``"grouped"`` (default
-    since r11) normalizes the corpus and assigns codes in Arrow-batched
-    numpy passes that replay the SQL folds' exact op order
-    (:func:`_normalize_arrow` / :func:`_pq_encode_arrow`) — the r11 sf3
-    profile showed the interpreted transform-normalization (O(dims^2)
-    per row, no CSE inside higher-order lambdas) and the per-(row,
-    code) interpreted l2sq folds dominating the slot; ``"join"`` is the
-    pure-DataFrame pipeline the oracle replays in SQL. Codebook
-    TRAINING always stays in DataFrame ops (decimal means on the
-    ``train_limit`` sample — bounded, and the cross-engine-verified
-    core)."""
-    if execution not in ("grouped", "join"):
-        raise ValueError(f"execution must be 'grouped' or 'join': {execution!r}")
+    The two corpus-sized stages, normalization and code assignment, run
+    as Arrow-batched numpy passes that replay the SQL folds' exact op
+    order (:func:`_normalize_arrow` / :func:`_pq_encode_arrow`), so the
+    result is bit-identical to the pure-DataFrame pipeline the oracle
+    replays in SQL. The r11 sf3 profile showed the interpreted
+    transform-normalization (O(dims^2) per row, no CSE inside
+    higher-order lambdas) and the per-(row, code) interpreted l2sq folds
+    dominating the slot. Codebook TRAINING stays in DataFrame ops
+    (decimal means on the ``train_limit`` sample — bounded, and the
+    cross-engine-verified core)."""
     qn = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qe"),
@@ -1247,12 +1146,7 @@ def pq_ann(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("ce"),
     )
-    if execution == "grouped":
-        cn = _normalize_arrow(cn0, "neighbor_id", "ce", dims)
-    else:
-        cn = cn0.withColumn(
-            "ce", F.transform("ce", lambda x: x / norm(F.col("ce"), dims))
-        )
+    cn = _normalize_arrow(cn0, "neighbor_id", "ce", dims)
 
     books = tracked_cache(pq_codebooks(
         cn,
@@ -1264,16 +1158,10 @@ def pq_ann(
         dims=dims,
         train_limit=train_limit,
     ))
-    if execution == "grouped":
-        codes = _pq_encode_arrow(
-            cn, books, id_col="neighbor_id", vec_col="ce", dims=dims,
-            m_subspaces=m_subspaces,
-        )
-    else:
-        codes = pq_encode(
-            cn, books, id_col="neighbor_id", vec_col="ce", dims=dims,
-            m_subspaces=m_subspaces,
-        )
+    codes = _pq_encode_arrow(
+        cn, books, id_col="neighbor_id", vec_col="ce", dims=dims,
+        m_subspaces=m_subspaces,
+    )
 
     sub = dims // m_subspaces
     q_sub = qn.select(
@@ -1320,14 +1208,9 @@ def pq_ann(
     # from a corpus scan to refine*k rows per query (guide §8: heavy
     # bytes move once the shortlist is known).
     cand_ids = short.select("neighbor_id").distinct()
-    if execution == "grouped":
-        cand_n = _normalize_arrow(
-            cn0.join(cand_ids, "neighbor_id"), "neighbor_id", "ce", dims
-        )
-    else:
-        cand_n = cn0.join(cand_ids, "neighbor_id").withColumn(
-            "ce", F.transform("ce", lambda x: x / norm(F.col("ce"), dims))
-        )
+    cand_n = _normalize_arrow(
+        cn0.join(cand_ids, "neighbor_id"), "neighbor_id", "ce", dims
+    )
     rescored = (
         short.join(cand_n, "neighbor_id")
         .join(F.broadcast(qn), "query_id")
@@ -1640,6 +1523,43 @@ def build_ivfpq_index(
                    "dims": dims, "schemas": schemas}, fh)
 
 
+def _open_ivfpq_index(spark, path: str, m_subspaces: int | None):
+    """Open a persisted IVF-PQ index (:func:`build_ivfpq_index`) without
+    firing a Spark job. Returns ``(meta, m_subspaces, read_table)``:
+    ``meta`` is the parsed ``meta.json`` (``{}`` when absent),
+    ``m_subspaces`` the caller's value or the recorded one, and
+    ``read_table(name)`` reads one of the index tables under its
+    recorded schema, so no footer-inference job fires either."""
+    import json
+    import os
+
+    meta_path = os.path.join(path, "meta.json")
+    meta = {}
+    if os.path.exists(meta_path):
+        with open(meta_path) as fh:
+            meta = json.load(fh)
+    if m_subspaces is None and "m_subspaces" in meta:
+        m_subspaces = int(meta["m_subspaces"])
+    if m_subspaces is None:
+        # build_ivfpq_index always writes meta.json; a missing value here
+        # means the path is not a composed index — fail fast BEFORE any
+        # table read (a schema-less read would fire footer-inference
+        # jobs just to discover the path is wrong).
+        raise ValueError(
+            f"{meta_path} missing or lacks m_subspaces; pass m_subspaces= "
+            "explicitly for indexes built outside build_ivfpq_index"
+        )
+    schemas = meta.get("schemas", {})
+
+    def read_table(name: str) -> DataFrame:
+        reader = spark.read
+        if name in schemas:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schemas[name])))
+        return reader.parquet(f"{path}/{name}")
+
+    return meta, m_subspaces, read_table
+
+
 def query_ivfpq_index(
     spark,
     path: str,
@@ -1666,39 +1586,10 @@ def query_ivfpq_index(
     one ADC lookup table per (query, probed centroid) from the
     centered query ``q - c``; the LUT stays broadcast-sized
     (queries x n_probe x m x n_codes)."""
-    import json
-    import os
-
-    by_residual = False
-    meta_path = os.path.join(path, "meta.json")
-    schemas = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        by_residual = bool(meta.get("by_residual", False))
-        schemas = meta.get("schemas", {})
-        if m_subspaces is None:
-            m_subspaces = int(meta["m_subspaces"])
-
-    if m_subspaces is None:
-        # build_ivfpq_index always writes meta.json; a missing value here
-        # means the path is not a composed index — fail fast BEFORE any
-        # table read (a schema-less read would fire footer-inference
-        # jobs just to discover the path is wrong; ADVICE r6).
-        raise ValueError(
-            f"{meta_path} missing or lacks m_subspaces; pass m_subspaces= "
-            "explicitly for indexes built outside build_ivfpq_index"
-        )
+    meta, m_subspaces, read_table = _open_ivfpq_index(spark, path, m_subspaces)
+    by_residual = bool(meta.get("by_residual", False))
     if dims is None or dims % m_subspaces != 0:
         raise ValueError("dims must be known and divisible by m_subspaces")
-
-    def read_table(name: str) -> DataFrame:
-        # With the recorded schema the read fires no footer-inference
-        # job — plan building stays a pure driver-side operation.
-        reader = spark.read
-        if name in schemas:
-            reader = reader.schema(T.StructType.fromJson(json.loads(schemas[name])))
-        return reader.parquet(f"{path}/{name}")
 
     cent = read_table("centroids")
     books = read_table("codebooks")
@@ -1853,22 +1744,9 @@ def append_to_ivfpq_index(
     produce, so probe results after append match a frozen-model rebuild
     bit-for-bit (parity-tested). Drift monitoring:
     :func:`ivf_index_drift` on the same path."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "meta.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    m_subspaces = int(meta["m_subspaces"])
+    meta, m_subspaces, read_table = _open_ivfpq_index(spark, path, None)
     dims = int(meta["dims"])
     by_residual = bool(meta.get("by_residual", False))
-    schemas = meta.get("schemas", {})
-
-    def read_table(name: str) -> DataFrame:
-        reader = spark.read
-        if name in schemas:
-            reader = reader.schema(T.StructType.fromJson(json.loads(schemas[name])))
-        return reader.parquet(f"{path}/{name}")
 
     cent = read_table("centroids")
     books = read_table("codebooks")
@@ -1955,7 +1833,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     dims: int | None = None,
     train_limit: int | None = 4096,
-    pairwise: str = "grouped",
     assign: str = "exact",
     n_groups: int | None = None,
     centroids: DataFrame | None = None,
@@ -1977,25 +1854,25 @@ def semantic_dedup(
     strongest duplicate evidence (max cosine to a higher-priority
     cluster-mate; NULL for kept rows).
 
-    Scale: the only corpus-sized shuffles are the rank-1 assignment
-    (broadcast centroid join + map-side argmin aggregation) and the
-    per-cluster window/refine, both keyed on ``cluster_id``. The
-    within-cluster refine is quadratic in cluster population, so
+    Scale: the rank-1 assignment is one map-side Arrow pass against the
+    collected centroid table (:func:`_rank1_assign`), and the only
+    corpus-sized shuffle is the per-cluster window/refine, keyed on
+    ``cluster_id``. The within-cluster refine is quadratic in cluster
+    population, so
     ``n_clusters`` must scale with the corpus (the paper uses ~11k
     clusters for 100M+ docs; at 100 TB pick n_clusters ~= N /
     desired_cluster_size and the per-cluster work stays bounded).
     Lloyd itself trains on the ``train_limit`` hash-ordered sample —
     two shuffles over a few thousand rows regardless of corpus size.
 
-    ``pairwise`` selects the refine execution (identical results,
-    pinned by test): ``"grouped"`` (default since r11) runs the
-    quadratic refine as one Arrow-batched numpy pass per cluster
-    (``applyInPandas``) whose accumulations replay the SQL aggregate's
-    exact left-fold order — the cluster-keyed shuffle carries n rows of
-    (vector, prio), not candidate-pair rows of DUPLICATED vectors (the
-    r11 sf1 profile: the pair join shuffled ~3.6 GB at 23k vectors and
-    dominated the slot at 30 s); ``"join"`` is the pure-DataFrame
-    self-join the oracle replays in SQL.
+    The quadratic refine runs as one Arrow-batched numpy pass per
+    cluster (``applyInPandas``) whose accumulations replay the SQL
+    aggregate's exact left-fold order, so every witness cosine is
+    bit-identical to the within-cluster self-join the oracle replays in
+    SQL. The cluster-keyed shuffle carries n rows of (vector, prio), not
+    candidate-pair rows of DUPLICATED vectors (the r11 sf1 profile: the
+    pair join shuffled ~3.6 GB at 23k vectors and dominated the slot at
+    30 s).
 
     ``assign`` selects the rank-1 quantizer: ``"exact"`` scores every
     (vector, centroid) pair — ``n·k`` distance folds, quadratic in the
@@ -2008,6 +1885,8 @@ def semantic_dedup(
     approximately). Both paths are deterministic and SQL-replayable.
     ``centroids`` lets a caller share a pre-trained centroid table
     across variants (skips Lloyd; caller owns its cache lifecycle)."""
+    import numpy as np
+
     if assign not in ("exact", "coarse"):
         raise ValueError(f"assign must be 'exact' or 'coarse': {assign!r}")
     v = vectors.select(
@@ -2021,31 +1900,20 @@ def semantic_dedup(
         )
     else:
         cent = centroids
-    if pairwise != "grouped":
-        # rank-1 assignment over the full corpus; keep the centroid
-        # vector to score centrality (centroids are dimension-sized ->
-        # broadcast)
-        if assign == "coarse":
-            coarse, gmap = coarse_structure(
-                cent, n_groups=n_groups, dims=dims, execution="join"
-            )
-            flat = coarse_rank1_assign(
-                v, cent, coarse, gmap, id_col=id_col, vec_col="e",
-                dims=dims, execution="join",
-            )
-        else:
-            flat = ivf_assign(
-                v, cent, id_col=id_col, vec_col="e", rank=1, dims=dims
-            )
-        assigned = (
-            flat.join(F.broadcast(cent), "centroid_id")
-            .select(
-                F.col(id_col),
-                F.col("e"),
-                F.col("centroid_id").alias("cluster_id"),
-                cosine(F.col("e"), F.col("ce"), dims).alias("cos_centroid"),
-            )
+    if assign == "coarse":
+        # the structure build collects cent several times (coarse Lloyd
+        # iterations + gmap + member matrices), so pin it when we own it;
+        # nothing in the returned plan references cent afterwards — every
+        # matrix lives in the mapInPandas closure
+        cent_pin = tracked_cache(cent) if owns_cent else cent
+        groups = coarse_structure(cent_pin, n_groups=n_groups, dims=dims)
+        assigned = _rank1_assign(
+            v, cent_pin, id_col=id_col, groups=groups, with_cos=True
         )
+        if owns_cent:
+            cent_pin.unpersist()
+    else:
+        assigned = _rank1_assign(v, cent, id_col=id_col, with_cos=True)
     # priority orders on the QUANTIZED centrality (4 decimals): cosine
     # is scale-invariant, so a vector and its scalar multiple have
     # mathematically equal cos_centroid but ~1-ulp float difference —
@@ -2057,177 +1925,8 @@ def semantic_dedup(
     w = Window.partitionBy("cluster_id").orderBy(
         F.asc(F.round(F.col("cos_centroid"), 4)), F.asc(id_col)
     )
-    if pairwise == "grouped":
-        import numpy as np
-        from pyspark.sql import types as T
-
-        if assign == "coarse":
-            # two-level Arrow assignment (see coarse_structure): the
-            # structure build collects cent several times (coarse Lloyd
-            # iterations + gmap + member matrices), so pin it when we
-            # own it; nothing in the returned plan references cent
-            # afterwards — every matrix lives in the mapInPandas closure
-            cent_pin = tracked_cache(cent) if owns_cent else cent
-            coarse, gmap = coarse_structure(
-                cent_pin, n_groups=n_groups, dims=dims,
-                execution="grouped",
-            )
-            assigned = coarse_rank1_assign(
-                v, cent_pin, coarse, gmap, id_col=id_col, vec_col="e",
-                dims=dims, execution="grouped", with_cos=True,
-            ).withColumnRenamed("centroid_id", "cluster_id")
-            if owns_cent:
-                cent_pin.unpersist()
-            rk = assigned.withColumn("prio", F.row_number().over(w))
-        else:
-            # Arrow-exact rank-1 assignment: the SQL path's broadcast
-            # cross join evaluates n*k INTERPRETED zip_with/aggregate
-            # folds (higher-order functions never enter codegen) and,
-            # with the SemDeDup rule k ∝ N, that term is quadratic — it
-            # dominated the r11 sf3 profile (~150 s of the slot's 159).
-            # Here the centroid table (dimension-sized by construction)
-            # collects once and each Arrow batch replays l2sq/cosine as
-            # d dimension-ordered matrix accumulations — bit-identical
-            # per element to the SQL folds, ties to the smaller centroid
-            # id via argmin-first over the id-sorted centroid matrix
-            # (the struct min's lexicographic rule).
-            cent_rows = sorted(
-                cent.collect(), key=lambda r: r["centroid_id"]
-            )
-            c_mat = [list(map(float, r["ce"])) for r in cent_rows]
-            c_ids = [r["centroid_id"] for r in cent_rows]
-            v_fields = {f.name: f for f in v.schema.fields}
-            cid_type = cent.schema["centroid_id"].dataType
-            assign_schema = T.StructType([
-                v_fields[id_col], v_fields["e"],
-                T.StructField("cluster_id", cid_type),
-                T.StructField("cos_centroid", T.DoubleType()),
-            ])
-            idc0 = id_col
-
-            def _assign(batches):
-                import pandas as pd
-
-                cm = np.asarray(c_mat, dtype=np.float64)
-                k_, d_ = cm.shape
-                cn2 = np.zeros(k_)
-                for t in range(d_):
-                    cn2 = cn2 + cm[:, t] * cm[:, t]
-                cn = np.sqrt(cn2)
-                cid_arr = np.asarray(c_ids)
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    e_mat = np.asarray(
-                        pdf["e"].tolist(), dtype=np.float64
-                    )
-                    m = len(pdf)
-                    # tiled fold replay (r11): same per-element op
-                    # order, cache-resident accumulator — see
-                    # _l2sq_dist_tiled
-                    idx = _l2sq_dist_tiled(e_mat, cm).argmin(axis=1)
-                    # first min = smallest id
-                    sel = cm[idx]
-                    dotv = np.zeros(m)
-                    en2 = np.zeros(m)
-                    for t in range(d_):
-                        dotv = dotv + e_mat[:, t] * sel[:, t]
-                        en2 = en2 + e_mat[:, t] * e_mat[:, t]
-                    cos = dotv / (np.sqrt(en2) * cn[idx])
-                    yield pd.DataFrame({
-                        idc0: pdf[idc0],
-                        "e": pdf["e"],
-                        "cluster_id": cid_arr[idx],
-                        "cos_centroid": cos,
-                    })
-
-            assigned = v.mapInPandas(_assign, assign_schema)
-            rk = assigned.withColumn("prio", F.row_number().over(w))
-        base_fields = {
-            f.name: f for f in rk.select(id_col, "cluster_id",
-                                         "cos_centroid").schema.fields
-        }
-        schema = T.StructType(
-            [base_fields[id_col], base_fields["cluster_id"],
-             base_fields["cos_centroid"],
-             T.StructField("kept", T.BooleanType()),
-             T.StructField("witness_cos", T.DoubleType())]
-        )
-        thr = float(threshold)
-        idc = id_col
-
-        def _witness(pdf):
-            import pandas as pd
-
-            pdf = pdf.sort_values("prio", kind="mergesort").reset_index(
-                drop=True)
-            m = len(pdf)
-            wit = np.full(m, np.nan)
-            if m > 1:
-                E = np.asarray(pdf["e"].tolist(), dtype=np.float64)
-                d = E.shape[1]
-                # sequential left-fold norms/dots, replaying the SQL
-                # aggregate's exact IEEE op order per pair: each
-                # element's accumulation is acc + x*y in dimension
-                # order, so every cosine is bit-identical to the join
-                # path's. The fold runs as d matrix ops over column
-                # blocks (not per-pair python loops — measured 16x
-                # slower at 300-member clusters) with block width
-                # capped so scratch stays ~O(m * 512) doubles even on
-                # a pathologically skewed cluster.
-                nrm2 = np.zeros(m)
-                for k in range(d):
-                    nrm2 = nrm2 + E[:, k] * E[:, k]
-                nrm = np.sqrt(nrm2)
-                bs = 512
-                for j0 in range(1, m, bs):
-                    j1 = min(j0 + bs, m)
-                    acc = np.zeros((m, j1 - j0))
-                    for k in range(d):
-                        acc = acc + E[:, k, None] * E[None, j0:j1, k]
-                    cos = acc / (nrm[:, None] * nrm[None, j0:j1])
-                    # strict upper triangle: witness candidates are
-                    # higher-priority rows i < column j only
-                    rows = np.arange(m)[:, None]
-                    cols = np.arange(j0, j1)[None, :]
-                    ok = (cos >= thr) & (rows < cols)
-                    hit = ok.any(axis=0)
-                    if hit.any():
-                        masked = np.where(ok, cos, -np.inf)
-                        wit[j0:j1][hit] = masked.max(axis=0)[hit]
-            keep = np.isnan(wit)
-            return pd.DataFrame({
-                idc: pdf[idc],
-                "cluster_id": pdf["cluster_id"],
-                "cos_centroid": pdf["cos_centroid"],
-                "kept": keep,
-                # object column: None (not NaN) for kept rows -> SQL NULL
-                "witness_cos": [
-                    None if keep[i] else float(wit[i]) for i in range(m)
-                ],
-            })
-
-        return rk.groupBy("cluster_id").applyInPandas(_witness, schema)
-    ranked = tracked_cache(assigned.withColumn("prio", F.row_number().over(w)))
-    a = ranked.select(
-        F.col("cluster_id"),
-        F.col(id_col).alias("__ida"),
-        F.col("e").alias("__ea"),
-        F.col("prio").alias("__pa"),
-    )
-    b = ranked.select(
-        F.col("cluster_id"),
-        F.col(id_col).alias("__idb"),
-        F.col("e").alias("__eb"),
-        F.col("prio").alias("__pb"),
-    )
-    dropped = (
-        a.join(b, "cluster_id")
-        .filter(F.col("__pa") < F.col("__pb"))
-        .withColumn("__cos", cosine(F.col("__ea"), F.col("__eb"), dims))
-        .filter(F.col("__cos") >= threshold)
-        .groupBy(F.col("__idb").alias(id_col))
-        .agg(F.max("__cos").alias("witness_cos"))
+    rk = assigned.withColumnRenamed("centroid_id", "cluster_id").withColumn(
+        "prio", F.row_number().over(w)
     )
     # witness_cos (the strongest duplicate evidence) is a fold over
     # ORIGINAL vectors, so it is bit-identical across engines;
@@ -2236,16 +1935,66 @@ def semantic_dedup(
     # between engines (double->decimal cast rounding), which is fine for
     # every DISCRETE decision (assignment, priority order) but not for a
     # hashed float column.
-    return (
-        ranked.join(dropped, id_col, "left")
-        .select(
-            id_col,
-            "cluster_id",
-            "cos_centroid",
-            F.col("witness_cos").isNull().alias("kept"),
-            "witness_cos",
-        )
-    )
+    schema = T.StructType([
+        *rk.select(id_col, "cluster_id", "cos_centroid").schema.fields,
+        T.StructField("kept", T.BooleanType()),
+        T.StructField("witness_cos", T.DoubleType()),
+    ])
+    thr = float(threshold)
+    idc = id_col
+
+    def _witness(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("prio", kind="mergesort").reset_index(
+            drop=True)
+        m = len(pdf)
+        wit = np.full(m, np.nan)
+        if m > 1:
+            E = np.asarray(pdf["e"].tolist(), dtype=np.float64)
+            d = E.shape[1]
+            # sequential left-fold norms/dots, replaying the SQL
+            # aggregate's exact IEEE op order per pair: each
+            # element's accumulation is acc + x*y in dimension
+            # order, so every cosine is bit-identical to the SQL
+            # self-join's. The fold runs as d matrix ops over column
+            # blocks (not per-pair python loops — measured 16x
+            # slower at 300-member clusters) with block width
+            # capped so scratch stays ~O(m * 512) doubles even on
+            # a pathologically skewed cluster.
+            nrm2 = np.zeros(m)
+            for k in range(d):
+                nrm2 = nrm2 + E[:, k] * E[:, k]
+            nrm = np.sqrt(nrm2)
+            bs = 512
+            for j0 in range(1, m, bs):
+                j1 = min(j0 + bs, m)
+                acc = np.zeros((m, j1 - j0))
+                for k in range(d):
+                    acc = acc + E[:, k, None] * E[None, j0:j1, k]
+                cos = acc / (nrm[:, None] * nrm[None, j0:j1])
+                # strict upper triangle: witness candidates are
+                # higher-priority rows i < column j only
+                rows = np.arange(m)[:, None]
+                cols = np.arange(j0, j1)[None, :]
+                ok = (cos >= thr) & (rows < cols)
+                hit = ok.any(axis=0)
+                if hit.any():
+                    masked = np.where(ok, cos, -np.inf)
+                    wit[j0:j1][hit] = masked.max(axis=0)[hit]
+        keep = np.isnan(wit)
+        return pd.DataFrame({
+            idc: pdf[idc],
+            "cluster_id": pdf["cluster_id"],
+            "cos_centroid": pdf["cos_centroid"],
+            "kept": keep,
+            # object column: None (not NaN) for kept rows -> SQL NULL
+            "witness_cos": [
+                None if keep[i] else float(wit[i]) for i in range(m)
+            ],
+        })
+
+    return rk.groupBy("cluster_id").applyInPandas(_witness, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -150,12 +150,11 @@ def _land_files(df: DataFrame, path: str, version: int) -> list[dict]:
         final = f"part-{version:06d}-{n:05d}-{wtok}.parquet"
         dst = os.path.join(data_dir, final)
         os.replace(os.path.join(tmp, name), dst)
-        entry = {"name": final, "bytes": os.path.getsize(dst)}
-        try:
-            entry["stats"] = _file_stats(dst)
-        except Exception:
-            pass  # stats are an optimization, never a correctness gate
-        entries.append(entry)
+        entries.append({
+            "name": final,
+            "bytes": os.path.getsize(dst),
+            "stats": _file_stats(dst),
+        })
         n += 1
     for leftover in os.listdir(tmp):
         os.remove(os.path.join(tmp, leftover))
