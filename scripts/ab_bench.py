@@ -27,9 +27,21 @@ Canaries default to the five slots the judge's r10 A/B used: the most
 expensive families plus the flagship — slots that are rarely touched,
 so a same-day delta is a real regression, not new surface.
 
+Perfbench mode (``--perfbench WORKLOAD``) runs the repository benchmark
+instead of the slots: per pair, ``perfbench/run.py`` once on the
+``git archive`` of REF and once on the working tree, each from its own
+checkout, with the same seed (``--seed`` + pair index), perfbench's own
+run length and the first side alternating by pair. Each pair records every printed metric, the
+run record's CPU steal, PSI and ``get_spark_s``, failed ops, both SHAs
+and the working tree's dirty flag; the summary gives per metric both
+medians, both interquartile ranges and the pairs the working tree won
+(direction from ``BENCHMARK.json``).
+
 Usage:
     python scripts/ab_bench.py [--prev REF] [--repeats 3]
         [--out BENCH_AB_rNN.json] [--slots a,b,c]
+    python scripts/ab_bench.py --perfbench grid_backfill_aoi --pairs 10
+        --prev REF [--seed 11] [--trace 0] [--out X.json]
 """
 
 from __future__ import annotations
@@ -115,6 +127,101 @@ def _run_side(runner: str, repo: str, sf_dir: str, slots: list[str]) -> dict:
     )
 
 
+def _run_perfbench(root: str, args, seed: int) -> dict:
+    """One ``perfbench/run.py`` process in checkout ``root``: its printed
+    metrics plus the host state and session start time of its run
+    record."""
+    proc = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", args.perfbench,
+         "--seed", str(seed), "--trace", str(args.trace)],
+        cwd=root, capture_output=True, text=True, timeout=1800,
+    )
+    lines = proc.stdout.splitlines()
+    records = [ln.split(None, 1)[1] for ln in lines if ln.strip().startswith("record ")]
+    if proc.returncode or not records:
+        raise RuntimeError(f"perfbench failed in {root}:\n{proc.stderr[-2000:]}")
+    out = json.loads(lines[-1])
+    with open(os.path.join(root, records[-1].strip())) as fh:
+        record = json.load(fh)
+    return {
+        "metrics": {k: v["value"] for k, v in out["metrics"].items()},
+        "attempted": out["attempted"],
+        "failed": out["failed"],
+        "steal_share": record["host"]["steal_share"],
+        "psi_cpu_some_share": record["host"]["psi_cpu_some_share"],
+        "get_spark_s": record["get_spark_s"],
+    }
+
+
+def _quartiles(xs: list[float]) -> tuple[float, float, float]:
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def perfbench_ab(args, prev_ref: str, prev_sha: str, head_sha: str) -> dict:
+    """Alternating pairs of perfbench runs, REF export vs working tree."""
+    with open(os.path.join(REPO, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+    prev_dir = tempfile.mkdtemp(prefix="xda_ab_prev_")
+    _export(prev_sha, prev_dir)
+    pairs = []
+    try:
+        for i in range(args.pairs):
+            seed = args.seed + i
+            sides = [("prev", prev_dir), ("head", REPO)]
+            if i % 2:
+                sides.reverse()
+            pair = {"seed": seed, "order": [side for side, _ in sides]}
+            for side, root in sides:
+                print(f"# pair {i + 1}/{args.pairs} seed={seed} side={side}", file=sys.stderr)
+                pair[side] = _run_perfbench(root, args, seed)
+            pair["prev"]["sha"] = prev_sha
+            pair["head"]["sha"] = head_sha
+            pair["head"]["dirty"] = bool(_git("status", "--porcelain"))
+            pairs.append(pair)
+    finally:
+        shutil.rmtree(prev_dir, ignore_errors=True)
+
+    summary = {}
+    for name in pairs[0]["head"]["metrics"]:
+        prev = [p["prev"]["metrics"][name] for p in pairs]
+        head = [p["head"]["metrics"][name] for p in pairs]
+        sign = -1.0 if better.get(name) == "lower" else 1.0
+        pq1, pmed, pq3 = _quartiles(prev)
+        hq1, hmed, hq3 = _quartiles(head)
+        summary[name] = {
+            "better": better.get(name),
+            "prev_median": pmed,
+            "head_median": hmed,
+            "prev_iqr": pq3 - pq1,
+            "head_iqr": hq3 - hq1,
+            "head_wins": sum(sign * (h - p) > 0 for p, h in zip(prev, head)),
+            "delta_pct": round(100.0 * (hmed - pmed) / pmed, 1) if pmed else None,
+            "median_gain_exceeds_prev_iqr": sign * (hmed - pmed) > pq3 - pq1,
+        }
+    return {
+        "method": (
+            "alternating perfbench pairs: per pair, perfbench/run.py runs once on a "
+            "git archive of prev_ref and once on the working tree with the same seed, "
+            "the first side alternating by pair (see each pair's 'order'); wins count "
+            "the pairs where head is better in the metric's BENCHMARK.json direction"
+        ),
+        "date": datetime.date.today().isoformat(),
+        "workload": args.perfbench,
+        "trace": args.trace,
+        "prev_ref": prev_ref,
+        "prev_sha": prev_sha,
+        "head_sha": head_sha,
+        "head_dirty": bool(_git("status", "--porcelain")),
+        "head_diffstat": _git("diff", "--stat", "HEAD"),
+        "pairs": pairs,
+        "summary": summary,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--prev", default=None, help="git ref of the previous round's HEAD")
@@ -122,7 +229,23 @@ def main() -> None:
     ap.add_argument("--slots", default=",".join(DEFAULT_SLOTS))
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_AB_last.json"))
+    ap.add_argument("--perfbench", default=None, metavar="WORKLOAD",
+                    help="A/B the repository benchmark on WORKLOAD instead of slots")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seed", type=int, default=11, help="seed of the first perfbench pair")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
+
+    if args.perfbench:
+        prev_ref = args.prev or _default_prev_ref()
+        result = perfbench_ab(args, prev_ref, _git("rev-parse", prev_ref),
+                              _git("rev-parse", "HEAD"))
+        with open(args.out, "w") as fh:
+            json.dump(result, fh, indent=1)
+        for name, e in result["summary"].items():
+            print(f"{name}: prev {e['prev_median']:.4g} vs head {e['head_median']:.4g} "
+                  f"({e['delta_pct']}%), head won {e['head_wins']}/{args.pairs}")
+        return
 
     slots = [s for s in args.slots.split(",") if s]
     prev_ref = args.prev or _default_prev_ref()

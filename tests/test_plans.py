@@ -453,6 +453,7 @@ def test_catalog_second_load_runs_no_job(spark, landed_grid):
     every later request plans without touching the footers."""
     from xarray_dataaccessor_spark.catalog import DatasetCatalog
     from xarray_dataaccessor_spark.meta import BoundingBox
+    from xarray_dataaccessor_spark.operators.spatial import grid_axes
 
     cat = DatasetCatalog()
     cat.register("grid", landed_grid, ["t2m", "u100"])
@@ -463,14 +464,19 @@ def test_catalog_second_load_runs_no_job(spark, landed_grid):
         end_time="2019-02-01 12:00",
     )
     cat.load(spark, "grid", **request)
+    # a load resolves no axes: only a request that asks for them does
+    assert cat.entries["grid"].axes is None
     gf, jobs = _jobs_run(spark, lambda: cat.load(spark, "grid", **request))
     assert jobs == 0
     fresh = DatasetCatalog()
     fresh.register("grid", landed_grid, ["t2m", "u100"])
     assert sorted(gf.df.collect()) == sorted(fresh.load(spark, "grid", **request).df.collect())
     assert "PartitionFilters: [((year" in plan_string(gf.df)
+    grid_axes(gf.df)
+    assert cat.entries["grid"].axes
     cat.register("grid", landed_grid, ["t2m"])
     assert cat.entries["grid"].schema is None
+    assert cat.entries["grid"].axes is None
 
 
 @pytest.mark.parametrize("op", ["points_to_table", "bilinear", "upsample_kernels"])
@@ -498,8 +504,9 @@ def test_aoi_operators_scan_no_python_rdd(spark, landed_grid, op):
         assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
 
 
-#: jobs of one default-event .gag render, measured on this grid: the
-#: distinct-cell guard and the one long-row collect
+#: jobs of one default-event .gag render of a bare frame, measured on
+#: this grid: the axes aggregate behind the max_gages guard (a partial
+#: and a final stage) and the one long-row collect
 GAG_SINK_JOBS = 3
 
 
@@ -520,3 +527,27 @@ def test_gag_sink_job_count(spark, landed_grid, tmp_path):
     )
     assert path.read_text().startswith("EVENT precipitation_event_1\nNRPDS ")
     assert jobs <= GAG_SINK_JOBS, jobs
+
+
+def test_gag_sink_catalog_frame_runs_one_job(spark, landed_grid, tmp_path):
+    """Once an earlier request resolved the entry's axes, a frame the
+    catalog returns reads them with no job, so the guard is free and the
+    render is the one long-row collect."""
+    from xarray_dataaccessor_spark.catalog import DatasetCatalog
+    from xarray_dataaccessor_spark.meta import BoundingBox
+    from xarray_dataaccessor_spark.operators.spatial import grid_axes
+    from xarray_dataaccessor_spark.sinks.gssha import make_precipitation_input
+
+    cat = DatasetCatalog()
+    cat.register("grid", landed_grid, ["t2m", "u100"])
+    grid_axes(cat.load(spark, "grid").df)
+    aoi = cat.load(
+        spark, "grid", variables=["u100"],
+        bbox=BoundingBox(west=-83.3, south=42.0, east=-82.7, north=42.7),
+    ).df
+    path, jobs = _jobs_run(
+        spark,
+        lambda: make_precipitation_input(aoi, "u100", file_dir=tmp_path, file_name="jobs"),
+    )
+    assert path.read_text().startswith("EVENT precipitation_event_1\nNRPDS ")
+    assert jobs == 1, jobs

@@ -1249,14 +1249,14 @@ def test_coarse_assign_grouped_equals_join_exactly(spark):
     cg, gg = coarse_structure(cent, dims=16)
     cj, gj = _coarse_structure_reference(cent, dims=16)
     assert sorted(map(tuple, gg.collect())) == sorted(map(tuple, gj.collect()))
-    ag = coarse_rank1_assign(df, cent, cg, gg, dims=16).select(
+    ag = coarse_rank1_assign(df, cent, cg, gg).select(
         "vec_id", "centroid_id")
     aj = _coarse_assign_reference(df, cent, cj, gj, dims=16).select(
         "vec_id", "centroid_id")
     assert sorted(map(tuple, ag.collect())) == sorted(map(tuple, aj.collect()))
     # n_groups=1 == exact flat assignment, bit-for-bit
     c1, g1 = coarse_structure(cent, n_groups=1, dims=16)
-    a1 = coarse_rank1_assign(df, cent, c1, g1, dims=16).select(
+    a1 = coarse_rank1_assign(df, cent, c1, g1).select(
         "vec_id", "centroid_id")
     flat = _rank1_assign(df, cent).select("vec_id", "centroid_id")
     assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, flat.collect()))

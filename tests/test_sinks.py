@@ -113,6 +113,19 @@ def test_precipitation_gag_golden_bytes(spark, tmp_path):
     assert path.read_bytes() == want.encode("ascii")
 
 
+def test_precipitation_gag_guard_counts_sparse_networks_exactly(spark, tmp_path):
+    """``max_gages`` bounds the distinct cells, not the axes product:
+    three cells on a diagonal span 3 x 3 axes, and 8 still renders them
+    (the product only accepts for free; past it the cells are counted),
+    while 2 refuses them."""
+    rows = [(T0, 42.0 + i, -83.0 + i, float(i)) for i in range(3)]
+    df = spark.createDataFrame(rows, "time timestamp, y double, x double, tp double")
+    path = make_precipitation_input(df, "tp", file_dir=tmp_path, max_gages=8)
+    assert path.read_text().splitlines()[2] == "NRGAG 3"
+    with pytest.raises(ValueError, match="max_gages=2"):
+        make_precipitation_input(df, "tp", file_dir=tmp_path, max_gages=2)
+
+
 def test_grass_ascii_one_file_per_timestep(small_grid, tmp_path):
     paths = make_grass_ascii(small_grid, "t2m", file_dir=tmp_path)
     assert len(paths) == 5  # test_5_gssha.py:58-73

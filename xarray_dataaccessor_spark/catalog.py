@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from xarray_dataaccessor_spark.meta import BoundingBox, GridMeta
+from xarray_dataaccessor_spark.operators.filters import bbox_axes
+from xarray_dataaccessor_spark.operators.spatial import record_axes
 from xarray_dataaccessor_spark.session import local_frame
 
 
@@ -47,6 +49,12 @@ class DatasetEntry:
     #: job over the footers, paid once per entry instead of per request
     #: (``register`` builds a fresh entry, so re-registering resets it)
     schema: StructType | None = field(default=None, repr=False, compare=False)
+    #: a parquet entry's coordinate axes as ``(files, axes)``: the input
+    #: files they were resolved over and the sorted ``(xs, ys)``, ``()``
+    #: when those files are not dense (see :func:`_request_axes`). Resolved
+    #: by the first request that asks for its axes, again whenever the
+    #: entry's files change, and reset by ``register`` like ``schema``
+    axes: tuple | None = field(default=None, repr=False, compare=False)
 
 
 @dataclass
@@ -130,12 +138,19 @@ class DatasetCatalog:
         instead, and the bbox/time comparisons below reach its
         ``pushFilters`` — granule/record-range/chunk pruning happens in
         the source's partition planner, no landing step needed.
+
+        A parquet entry's returned frame takes its coordinate axes from
+        the entry (see :func:`_request_axes`): ``operators.spatial.
+        grid_axes`` on it — the regrid, point snap and ``.gag`` guard —
+        pays one aggregate the first time the entry's files are asked
+        and no job after, while a load that never asks pays nothing.
+        Any frame derived from it reads its axes from its rows.
         """
         from xarray_dataaccessor_spark.gridframe import GridFrame
 
         entry = self.entries[name]
         keep = self.verify_variables(name, variables)
-        df = self._scan(spark, entry, keep)
+        df = scan = self._scan(spark, entry, keep)
         has_window = start_time is not None or end_time is not None
         if has_window and entry.format == "parquet":
             from xarray_dataaccessor_spark.operators.filters import (
@@ -149,6 +164,8 @@ class DatasetCatalog:
             gf = gf.filter_bbox(bbox)
         if has_window:
             gf = gf.filter_time(start_time, end_time)
+        if entry.format == "parquet":
+            record_axes(gf.df, lambda: _request_axes(entry, scan, bbox))
         if resolution_factor is not None or xy_resolution_factors is not None:
             # optional regrid step of the flagship read path
             # (core_functions.py:134-141)
@@ -218,6 +235,53 @@ class DatasetCatalog:
             f"Unsupported dataset format {entry.format!r} "
             "(parquet/netcdf/geotiff/zarr/grib2)"
         )
+
+
+def _request_axes(entry: DatasetEntry, scan: DataFrame, bbox: BoundingBox | None):
+    """The sorted ``(xs, ys)`` of a request on a parquet entry, from the
+    entry's axes, or None when its files are not dense. ``scan`` is the
+    request's base scan: its input files (the driver-side listing Spark
+    made when the scan was built, no job) key the entry's axes, so files
+    appended or replaced since they were resolved resolve them again.
+    Coordinates are metadata, as in an xarray Dataset: a time window
+    keeps them (even an empty one), a bbox trims them."""
+    files = frozenset(scan.inputFiles())
+    if entry.axes is None or entry.axes[0] != files:
+        entry.axes = (files, _dense_axes(scan))
+    axes = entry.axes[1]
+    if not axes:
+        return None
+    return bbox_axes(*axes, bbox) if bbox is not None else axes
+
+
+def _dense_axes(df: DataFrame) -> tuple:
+    """``(xs, ys)`` of a grid table when it is dense — its row count is
+    |times|·|ys|·|xs|, as when each cell of the axes' product holds one
+    row (the landing contract: nodata is a null value, not a missing
+    row) — else ``()``. One aggregate over the coordinate columns; only
+    on a dense table does every non-empty bbox/time request keep every
+    axis value inside its bbox, which is what lets a request trim the
+    axes instead of reading its rows. Only float/double
+    coordinates qualify: the trimmed axes must compare like the bbox
+    filter, and Spark compares a decimal coordinate with a double bound
+    after casting it."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType, FloatType
+
+    types = {f.name: f.dataType for f in df.schema}
+    if not all(isinstance(types.get(c), (DoubleType, FloatType)) for c in ("x", "y")):
+        return ()
+    # size(collect_set) rather than count_distinct: a distinct aggregate
+    # beside the axis sets re-groups them by time before a second shuffle
+    n_times = F.size(F.collect_set("time")) if "time" in types else F.lit(1)
+    row = df.agg(
+        F.array_sort(F.collect_set("x")).alias("xs"),
+        F.array_sort(F.collect_set("y")).alias("ys"),
+        n_times.alias("nt"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    xs, ys = list(row["xs"]), list(row["ys"])
+    return (xs, ys) if row["n"] == len(xs) * len(ys) * row["nt"] else ()
 
 
 def bbox_from_coords(coords: Sequence[tuple[float, float]]) -> BoundingBox:

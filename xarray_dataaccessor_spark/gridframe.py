@@ -112,8 +112,8 @@ class GridFrame:
         (upstream cell counts via the Euler-tour ranking; per-time
         grids accumulate independently per timestep) or ``'contours'``
         (marching-squares segments; pass ``levels=[...]``). Grid steps
-        infer from the coordinate axes (one dimension-sized job, the
-        ``grid_axes`` discipline)."""
+        infer from the coordinate axes (``grid_axes``: recorded on a
+        catalog frame, else one dimension-sized job)."""
         from xarray_dataaccessor_spark.operators.spatial import (
             axis_step,
             contour_segments,

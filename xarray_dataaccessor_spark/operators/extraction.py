@@ -6,7 +6,8 @@ cell per point, then a (time x point_id) pivot, batched 100 timesteps at a
 time to bound memory.
 
 Spark design — one lazy plan, no batching:
-    driver-side J3 nearest-cell snap (one axes job)
+    driver-side J3 nearest-cell snap (no job on a catalog frame whose
+    entry's axes are resolved)
     -> equi-join the fact table on (y, x)   [broadcast hash join against
        the matched cells, a local relation]
     -> groupBy(time).pivot(point_id).agg(first(var))
@@ -46,9 +47,9 @@ def points_to_table(
     the driver, and the matched cells are the broadcast side of the
     fact join.
     """
-    # the snap runs on the driver (one axes job, see snap_points) and the
-    # matched cells go straight into the broadcast side as a local
-    # relation, so the fact scan is the only pass over the grid's rows
+    # the snap runs on the driver (see snap_points) and the matched cells
+    # go straight into the broadcast side as a local relation, so the
+    # fact scan is the only pass over the grid's rows
     snapped = snap_points(points, grid, x_col=x_col, y_col=y_col)
     if point_ids is None:
         point_ids = sorted({row["point_id"] for row, _, _ in snapped})

@@ -53,11 +53,30 @@ def filter_bbox(
     row/column. ``snap_half_step`` (half the axis step) widens the bounds
     to reproduce that; None means plain inclusive between.
     """
-    pad = snap_half_step or 0.0
+    x_lo, x_hi, y_lo, y_hi = _bbox_bounds(bbox, snap_half_step)
     return df.filter(
-        F.col(x_col).between(bbox.west - pad, bbox.east + pad)
-        & F.col(y_col).between(bbox.south - pad, bbox.north + pad)
+        F.col(x_col).between(x_lo, x_hi) & F.col(y_col).between(y_lo, y_hi)
     )
+
+
+def _bbox_bounds(bbox: BoundingBox, snap_half_step: float | None):
+    """``(x_lo, x_hi, y_lo, y_hi)``, the inclusive bounds of
+    :func:`filter_bbox`."""
+    pad = snap_half_step or 0.0
+    return bbox.west - pad, bbox.east + pad, bbox.south - pad, bbox.north + pad
+
+
+def bbox_axes(
+    xs: Sequence[float], ys: Sequence[float], bbox: BoundingBox
+) -> tuple[list[float], list[float]]:
+    """The axes of what ``filter_bbox(df, bbox)`` keeps of a dense grid
+    with axes ``xs``, ``ys``: its inclusive comparisons on the same
+    doubles, run on the driver. A dense grid keeps a cell exactly when
+    it keeps the cell's x and its y, so one empty axis empties both."""
+    x_lo, x_hi, y_lo, y_hi = _bbox_bounds(bbox, None)
+    kept_x = [v for v in xs if x_lo <= v <= x_hi]
+    kept_y = [v for v in ys if y_lo <= v <= y_hi]
+    return (kept_x, kept_y) if kept_x and kept_y else ([], [])
 
 
 def filter_time(df, start=None, end=None, time_col: str = "time") -> DataFrame:

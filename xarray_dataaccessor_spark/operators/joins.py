@@ -73,13 +73,11 @@ def nearest_match_1d(
 def _nearest_1d_py(target: float, axis_vals: Sequence[float]) -> float:
     """Nearest value on a sorted 1-D axis with numpy-argmin tie semantics
     (equidistant -> the smaller / first value). Mirrors the reference's
-    ``np.abs(axis - target).argmin()`` (``to_tables.py:76-77``) for axes
-    already collected to the driver."""
+    ``np.abs(axis - target).argmin()`` (``to_tables.py:76-77``) for a
+    non-empty axis already on the driver."""
     import bisect
 
     axis = list(axis_vals)
-    if not axis:
-        raise ValueError("empty axis")
     i = bisect.bisect_left(axis, target)
     if i == 0:
         return axis[0]
@@ -102,12 +100,16 @@ def snap_points(
     reference's two 1-D argmins, ``to_tables.py:76-101``; also
     ``ds.sel(method='nearest')``, ``to_gssha.py:563-567``).
 
-    The grid axes come from ONE ``collect_set`` aggregation pass (the
-    driver receives |xs| + |ys| values — never the O(nx*ny) cell set),
-    and the points side is user-supplied coordinates, so the per-point
-    argmin is a driver-side bisect with the tie semantics of
-    :func:`nearest_match_1d` (distance asc, then the smaller axis value):
-    one Spark job for the axes, none for the match."""
+    The grid axes come from :func:`~xarray_dataaccessor_spark.operators.
+    spatial.grid_axes`: no job for a frame ``DatasetCatalog.load``
+    returned once its entry's axes are resolved, else one
+    ``collect_set`` aggregate (the driver receives |xs| + |ys| values —
+    never the O(nx*ny) cell set). The points side
+    is user-supplied coordinates, so the per-point argmin is a
+    driver-side bisect with the tie semantics of
+    :func:`nearest_match_1d` (distance asc, then the smaller axis value)
+    and runs no job. A grid with no cells has no nearest cell: every
+    point snaps to ``(None, None)``."""
     from xarray_dataaccessor_spark.operators.spatial import grid_axes
 
     xs_vals, ys_vals = grid_axes(grid, x_col, y_col)
@@ -118,6 +120,8 @@ def snap_points(
                 f"point {row.asDict()} has a NULL coordinate; drop or fill "
                 "the points table before extraction"
             )
+    if not xs_vals or not ys_vals:
+        return [(row, None, None) for row in pt_rows]
     return [
         (row, _nearest_1d_py(row[lon_col], xs_vals), _nearest_1d_py(row[lat_col], ys_vals))
         for row in pt_rows

@@ -843,7 +843,6 @@ def coarse_rank1_assign(
     gmap: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "e",
-    dims: int | None = None,
     with_cos: bool = False,
 ) -> DataFrame:
     """Two-level rank-1 assignment: route each vector to its nearest
@@ -852,8 +851,7 @@ def coarse_rank1_assign(
     ``(id_col, vec_col, centroid_id)`` (+ ``cos_centroid`` when
     ``with_cos``). Every distance replays the SQL ``l2sq`` fold and both
     levels break ties to the smaller id (:func:`_rank1_assign`), so the
-    SQL-oracle replay picks identical centroids. ``dims`` is accepted
-    for signature symmetry with the other quantizer operators."""
+    SQL-oracle replay picks identical centroids."""
     return _rank1_assign(
         vectors, centroids, id_col=id_col, vec_col=vec_col,
         groups=(coarse, gmap), with_cos=with_cos,

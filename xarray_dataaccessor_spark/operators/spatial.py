@@ -31,7 +31,8 @@ ever materialized driver-side except the coordinate axes.
 
 from __future__ import annotations
 
-from typing import Sequence
+import weakref
+from typing import Callable, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -86,17 +87,40 @@ def axis_values(df: DataFrame, col: str) -> list[float]:
     return [r[0] for r in df.select(col).distinct().orderBy(col).collect()]
 
 
-def grid_axes(df: DataFrame, x_col: str = "x", y_col: str = "y"):
-    """Both coordinate axes in ONE distributed job with the driver
-    receiving only |xs| + |ys| values — never the O(nx*ny) distinct cell
-    set (a planetary 0.01-degree grid has 36k x 18k = 648M cells but only
-    54k axis values). ``collect_set`` partial-aggregates map-side, so the
-    final exchange carries per-partition deduplicated axis fragments and
-    the single driver row holds the two sorted axes.
+#: per DataFrame object, a no-argument callable that returns its sorted
+#: ``(xs, ys)`` from metadata, or None when the metadata cannot tell: a
+#: derived frame is a new object, so it never reads its parent's axes
+_RECORDED_AXES: "weakref.WeakKeyDictionary[DataFrame, Callable]" = weakref.WeakKeyDictionary()
 
-    Mirrors the reference's per-dimension coordinate reads
-    (``shared_functions.py:185-190``: 1-D ``ds.x.values`` /
-    ``ds.y.values`` — never the cell product)."""
+
+def record_axes(df: DataFrame, resolve: Callable[[], tuple | None]) -> None:
+    """Let :func:`grid_axes` take the ``x``/``y`` axes of ``df`` from
+    ``resolve()`` instead of its rows. The caller vouches that a non-None
+    result equals what the ``collect_set`` aggregate would return for
+    this exact frame (``DatasetCatalog.load`` resolves a dense entry's
+    axes once and trims them to the request's bbox). Keyed by the object,
+    not carried on ``GridMeta``: callers hand the bare ``.df`` to the
+    free operator functions."""
+    _RECORDED_AXES[df] = resolve
+
+
+def grid_axes(df: DataFrame, x_col: str = "x", y_col: str = "y"):
+    """Both sorted coordinate axes of ``df``, as two lists.
+
+    A frame ``DatasetCatalog.load`` returned from a dense parquet entry
+    (see :func:`record_axes`) reads them from the entry's metadata: one
+    aggregate the first time the entry's files are asked, no job after,
+    like the reference's 1-D coordinate reads
+    (``shared_functions.py:185-190``: ``ds.x.values`` / ``ds.y.values``
+    are metadata). Any other frame pays one distributed ``collect_set``
+    aggregate (a partial and a final stage) whose single driver row
+    holds |xs| + |ys| values — never the O(nx*ny) distinct cell set (a
+    planetary 0.01-degree grid has 36k x 18k = 648M cells but only 54k
+    axis values)."""
+    resolve = _RECORDED_AXES.get(df) if (x_col, y_col) == ("x", "y") else None
+    recorded = resolve() if resolve is not None else None
+    if recorded is not None:
+        return list(recorded[0]), list(recorded[1])
     row = df.agg(
         F.array_sort(F.collect_set(F.col(x_col))).alias("xs"),
         F.array_sort(F.collect_set(F.col(y_col))).alias("ys"),
@@ -122,8 +146,11 @@ def _target_axis(values: list[float], factor: float) -> list[float]:
     Old centers v0..v0+(n-1)s span edges [v0-s/2, v0+(n-1)s+s/2]; the new
     axis has n' = round(n*factor) cells of step s' = n*s/n' centered in
     the same envelope. Matches the reference's ``len(x)*factor`` width
-    (``core_functions.py:300-320``).
+    (``core_functions.py:300-320``). A frame with no cells has no axis
+    and regrids to no cells.
     """
+    if not values:
+        return []
     n = len(values)
     s = axis_step(values)
     n2 = max(1, round(n * factor))
@@ -183,8 +210,9 @@ def spatial_resample(
         c for c in df.columns if c not in (time_col, x_col, y_col)
     ]
     spark = df.sparkSession
-    # one distributed pass for both coordinate axes; the driver receives
-    # only the two dimension-sized axes, never the nx*ny cell product
+    # both coordinate axes, recorded or from one distributed pass; the
+    # driver receives only the two dimension-sized axes, never the nx*ny
+    # cell product
     xs, ys = grid_axes(df, x_col, y_col)
 
     if resample_method in CONVOLUTIONAL_KERNELS:
@@ -296,8 +324,10 @@ def _downsample_by_agg(df, xs, ys, fx, fy, method, value_cols, time_col, x_col, 
     i maps to target block floor(i*f); the target coordinate is the block
     center computed arithmetically (deterministic — an avg() of member
     coordinates would depend on float summation order)."""
-    x0, sx = xs[0], axis_step(xs)
-    y0, sy = ys[0], axis_step(ys)
+    # an empty axis (a frame with no cells) anchors nothing: any origin
+    # plans the same zero rows
+    x0, sx = (xs or [0.0])[0], axis_step(xs)
+    y0, sy = (ys or [0.0])[0], axis_step(ys)
     agg = _AGG_KERNELS[method]
     bx = F.floor(F.round((F.col(x_col) - F.lit(x0)) / F.lit(sx), 6) * F.lit(fx)).alias("__bx")
     by = F.floor(F.round((F.col(y_col) - F.lit(y0)) / F.lit(sy), 6) * F.lit(fy)).alias("__by")

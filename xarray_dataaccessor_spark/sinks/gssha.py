@@ -130,30 +130,44 @@ def make_precipitation_input(
     the reference's stable ``sort_values([x_dim, 'time'])`` (to_gssha.py:
     299-309) preserves the dataset's y order within each x, which for
     ERA5-style grids is descending latitude. ``max_gages`` bounds the
-    distinct-cell collect that comes first (a .gag file is a gage
-    *network*, not a planetary raster — the text format itself puts
-    every gage on every line). The guarded AOI's long rows then arrive
-    in ONE ``toArrow`` collect: the (time x gage) matrix, the default
-    event's time extent and every event's time window are driver-side
-    work over a payload the text file repeats anyway. An absent
-    (time, cell) row and a null value both render as ``None``.
+    gage network (a .gag file is a gage *network*, not a planetary
+    raster — the text format itself puts every gage on every line). It
+    is checked first: the axes product |xs|·|ys| from ``grid_axes`` (no
+    job on a frame ``DatasetCatalog.load`` returned, else one axes
+    aggregate) bounds the distinct cells, so a product within
+    ``max_gages`` accepts; only a larger product — a sparse network on
+    wide axes, or too many cells — counts the distinct cells exactly
+    (one more job). The guarded AOI's long rows then arrive
+    in ONE ``toArrow`` collect: the gage list (the payload's distinct
+    cells), the (time x gage) matrix, the default event's time extent
+    and every event's time window are driver-side work over a payload
+    the text file repeats anyway. An absent (time, cell) row and a null
+    value both render as ``None``.
     """
     import pyarrow as pa
 
+    from xarray_dataaccessor_spark.operators.spatial import grid_axes
+
     path = Path(file_dir) / f"{file_name}{file_suffix}"
-    cell_rows = (
-        grid.select(x_col, y_col).distinct().limit(max_gages + 1).collect()
-    )
-    if len(cell_rows) > max_gages:
+    xs, ys = grid_axes(grid, x_col, y_col)
+    if (
+        len(xs) * len(ys) > max_gages
+        and grid.select(x_col, y_col).distinct().limit(max_gages + 1).count() > max_gages
+    ):
         raise ValueError(
             f"Grid has more than max_gages={max_gages} distinct cells; a "
             ".gag gage network of that size is not renderable. Aggregate "
             "or subset the grid first (or raise max_gages explicitly)."
         )
-    cells = sorted(
-        ((r[x_col], r[y_col]) for r in cell_rows),
-        key=lambda c: (c[0], -c[1]),
-    )
+
+    # timestamps stay epoch microseconds on the driver; the time type's
+    # own conversions give the bounds and the rendered wall clock exactly
+    # as a Spark literal and a collected row would
+    time_type = grid.schema[time_col].dataType
+    long = grid.select(time_col, x_col, y_col, precipitation_variable).toArrow()
+    long_t = long.column(time_col).cast(pa.int64()).to_pylist()
+    long_xy = list(zip(long.column(x_col).to_pylist(), long.column(y_col).to_pylist()))
+    cells = sorted(set(long_xy), key=lambda c: (c[0], -c[1]))
     gage_of = {c: i for i, c in enumerate(cells)}
 
     projected = _project_coords(cells, input_epsg, output_epsg)
@@ -164,20 +178,12 @@ def make_precipitation_input(
         )
     coords_header = "\n".join(coord_lines) + "\n"
 
-    # timestamps stay epoch microseconds on the driver; the time type's
-    # own conversions give the bounds and the rendered wall clock exactly
-    # as a Spark literal and a collected row would
-    time_type = grid.schema[time_col].dataType
-    long = grid.select(time_col, x_col, y_col, precipitation_variable).toArrow()
     matrix: dict[int, list] = {}
-    for t, cx, cy, v in zip(
-        long.column(time_col).cast(pa.int64()).to_pylist(),
-        long.column(x_col).to_pylist(),
-        long.column(y_col).to_pylist(),
-        long.column(precipitation_variable).to_pylist(),
+    for t, cell, v in zip(
+        long_t, long_xy, long.column(precipitation_variable).to_pylist()
     ):
         if t is not None:
-            matrix.setdefault(t, [None] * len(cells))[gage_of[(cx, cy)]] = v
+            matrix.setdefault(t, [None] * len(cells))[gage_of[cell]] = v
     times = sorted(matrix)
 
     def micros(bound):
@@ -314,22 +320,24 @@ def make_hmet_wes(
     df = filter_time(grid, start_time, end_time, time_col=time_col)
     # nodata fill BEFORE the collapse/sample — reference order
     # (_prepare_dataset fills, then the aggregate runs, to_gssha.py:525-532)
-    df = _fill_nodata(df, dict(variable_to_hmet))
+    filled = _fill_nodata(df, dict(variable_to_hmet))
     hmet_to_var = {h: v for v, h in variable_to_hmet.items()}
 
     if xy_coords is not None:
-        # nearest-cell sample (ds.sel(method='nearest'), to_gssha.py:563-567)
+        # nearest-cell sample (ds.sel(method='nearest'), to_gssha.py:563-567);
+        # the fill rewrites values only, so the unfilled frame's axes hold
+        # (the entry's when ``grid`` is a catalog frame and no window is set)
         from xarray_dataaccessor_spark.operators.spatial import grid_axes
 
         xs, ys = grid_axes(df, x_col, y_col)
         nx = min(xs, key=lambda v: (abs(v - xy_coords[0]), v))
         ny = min(ys, key=lambda v: (abs(v - xy_coords[1]), v))
-        collapsed = df.filter((F.col(x_col) == nx) & (F.col(y_col) == ny)).select(
+        collapsed = filled.filter((F.col(x_col) == nx) & (F.col(y_col) == ny)).select(
             time_col, *variable_to_hmet.keys()
         )
     else:
         collapsed = collapse_spatial(
-            df, how=how, value_cols=list(variable_to_hmet.keys()), time_col=time_col,
+            filled, how=how, value_cols=list(variable_to_hmet.keys()), time_col=time_col,
             group_cols=(y_col, x_col),
         )
 

@@ -136,7 +136,7 @@ def require_transform_with_state() -> None:
     try:
         install_protobuf_shim()
         from google.protobuf import descriptor  # noqa: F401
-    except Exception as e:  # pragma: no cover - shim install never fails
+    except ImportError as e:  # pragma: no cover - the shim covers a missing protobuf
         raise NotImplementedError(
             "transformWithStateInPandas requires a protobuf runtime "
             "(the stateful-processor state server speaks protobuf) and "
