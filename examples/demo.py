@@ -485,19 +485,17 @@ def main() -> None:
 
     # sketch family: HLL distinct, Bloom membership, CMS frequency
     from xarray_dataaccessor_spark.operators.sketch import (
-        bloom_build, bloom_contains_sql, cms_build, cms_estimate_sql,
-        hll_ndv,
+        bloom_build, bloom_contains_sql, bloom_keys, cms_build,
+        cms_estimate_sql, hll_ndv,
     )
     ndv = hll_ndv(docs_txt, "text", p=10).first()["approx_ndv"]
     print(f"HLL: ~{ndv:.0f} distinct texts (64-register twin drives the "
           "oracle'd corpus report)")
     words_df = docs_txt.select(F.explode(F.split("text", " ")).alias("w"))
     bloom = bloom_build(words_df.limit(2000), "w", m_bits=8192, k=3)
-    from xarray_dataaccessor_spark.functions.hashing import portable_hash32
+    h1, h2 = bloom_keys(F.col("w"))
     probe = words_df.limit(50).select(
-        "w",
-        portable_hash32(F.concat(F.lit("b1:"), F.col("w"))).alias("__h1"),
-        portable_hash32(F.concat(F.lit("b2:"), F.col("w"))).alias("__h2"),
+        "w", h1.alias("__h1"), h2.alias("__h2")
     )
     hits = probe.filter(F.expr(bloom_contains_sql("__h1", "__h2", bloom))).count()
     print(f"Bloom: {hits}/50 member probes hit (no false negatives by law)")

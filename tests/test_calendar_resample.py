@@ -59,3 +59,28 @@ def test_case_sensitivity_minute_vs_month(spark):
     s = pd.Series([1.0, 2.0, 3.0, 4.0], index=idx)
     got = _spark_resample(spark, s, "min")
     assert got == {ts: pytest.approx(v) for ts, v in s.resample("min").sum().items()}
+
+
+@pytest.mark.parametrize("freq", ["1H", "W", "2D", "M"])
+def test_resample_apply_buckets_match_aggregate(spark, freq):
+    """The custom-callable resample buckets and labels exactly like the
+    built-in aggregate: ``np.mean`` through ``resample_apply`` equals
+    ``"mean"`` through ``resample_aggregate`` on the golden grid, for
+    tick, weekly, multi-day (start-day anchored) and calendar
+    frequencies."""
+    from tests.grid_fixture import grid_df
+    from xarray_dataaccessor_spark.operators.resample import resample_apply
+
+    df = grid_df(spark, with_nulls=False)
+
+    def rows(out):
+        return {
+            (r["time"], r["y"], r["x"]): (r["t2m"], r["u100"])
+            for r in out.collect()
+        }
+
+    want = rows(resample_aggregate(df, freq, "mean"))
+    got = rows(resample_apply(df, freq, np.mean))
+    assert got.keys() == want.keys()
+    for k, (t2m, u100) in want.items():
+        assert got[k] == (pytest.approx(t2m, rel=1e-12), pytest.approx(u100, rel=1e-12)), k

@@ -426,6 +426,30 @@ def test_raster_pyramid_shapes_and_validation(grid):
         raster_pyramid(grid, levels=0)
 
 
+def test_zero_row_frames_return_empty_results(grid):
+    """A frame with no rows has no axes: the pyramid and every terrain
+    product return zero rows with their usual schema, as
+    ``spatial_resample`` does, instead of indexing an empty axis."""
+    from xarray_dataaccessor_spark.gridframe import GridFrame
+    from xarray_dataaccessor_spark.operators.spatial import raster_pyramid
+
+    empty = grid.filter("x > 1000")
+    pyr = raster_pyramid(empty, levels=2, method="mean")
+    assert pyr.count() == 0
+    assert pyr.schema == raster_pyramid(grid, levels=2, method="mean").schema
+    one_step = grid.filter(F.col("time") == F.lit(grid.first()["time"]))
+    for what, kw in (
+        ("derivatives", {}),
+        ("flow", {}),
+        ("watersheds", {}),
+        ("accumulation", {}),
+        ("contours", {"levels": [270.0]}),
+    ):
+        out = GridFrame(empty).terrain("t2m", what, **kw)
+        assert out.count() == 0, what
+        assert out.schema == GridFrame(one_step).terrain("t2m", what, **kw).schema, what
+
+
 # ---------------------------------------------------------------------------
 # DEM derivatives (slope / aspect / hillshade)
 # ---------------------------------------------------------------------------

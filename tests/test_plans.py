@@ -330,19 +330,19 @@ def test_no_cartesian_product_in_any_query_plan(spark, sf_dir):
 
 
 def test_contamination_report_single_shingling(spark, sf_dir):
-    """Each variant shingles the train corpus ONCE: three Generate
-    (explode) nodes total — the exact branch's train positional
-    posexplode + eval shingle explode, and the bloom branch's train
-    posexplode (its eval pass ran in the filter-BUILD job, so the main
-    plan carries no eval side at all — the broadcast-free shape). The
-    naive overlap+span composition had four for the exact report
-    alone."""
+    """Both variants share ONE shingling of the train corpus: three
+    Generate nodes total — the train positional posexplode that carries
+    both hit markers, the eval shingle explode feeding the exact
+    variant's hash set, and the unpivot explode emitting the two
+    variant rows per document (the Bloom filter's eval pass ran in its
+    own BUILD job, so the plan carries no second eval side). The naive
+    overlap+span composition had four for the exact report alone."""
     df = QUERIES["contamination_ngram_overlap"](spark, sf_dir)
     plan = plan_string(df, "simple")
     assert plan.count("Generate") == 3, plan
     assert "CartesianProduct" not in plan
-    # the bloom branch is join-free: the only (shuffle or broadcast)
-    # join in the whole plan is the exact branch's eval equi-join
+    # the Bloom probe is join-free: the only (shuffle or broadcast)
+    # join in the whole plan is the exact variant's eval equi-join
     assert plan.count("Join") == 1, plan
 
 

@@ -244,9 +244,9 @@ def test_contamination_span_detects_planted_passage(spark):
 
 
 def test_contamination_report_fused_matches_composition(spark):
-    """The fused single-pass report must agree with composing
-    ngram_contamination + contamination_spans (collision-free small
-    corpus: distinct-string and distinct-hash counts coincide)."""
+    """The fused single-pass report's ``'exact'`` rows must agree with
+    composing ngram_contamination + contamination_spans (collision-free
+    small corpus: distinct-string and distinct-hash counts coincide)."""
     from xarray_dataaccessor_spark.operators.sampling import (
         contamination_report,
         contamination_spans,
@@ -265,7 +265,8 @@ def test_contamination_report_fused_matches_composition(spark):
         "doc_id bigint, text string",
     )
     ev = spark.createDataFrame([(100, passage)], "doc_id bigint, text string")
-    fused = {r["doc_id"]: r for r in contamination_report(train, ev).collect()}
+    fused = {r["doc_id"]: r for r in contamination_report(train, ev).collect()
+             if r["variant"] == "exact"}
     ov = {r["doc_id"]: r for r in ngram_contamination(train, ev).collect()}
     sp = {r["doc_id"]: r["max_span_tokens"] for r in
           contamination_spans(train, ev).collect()}
@@ -489,3 +490,50 @@ def test_priority_sample_partition_invariant_and_stratified(spark):
 
     with pytest.raises(ValueError, match="k must be"):
         priority_sample(df, "w", k=0)
+
+
+def test_one_decontamination_report():
+    """One contamination report in ``sampling`` (its ``'exact'`` and
+    ``'bloom'`` rows come from one corpus pass), one word k-gram window
+    in the package, and one Spark spelling of the Bloom keys: the
+    ``'b1:'`` salt appears only in ``sketch.py`` and in oracle SQL."""
+    import ast
+    from pathlib import Path
+
+    import xarray_dataaccessor_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    texts = {p.relative_to(root).as_posix(): p.read_text() for p in root.rglob("*.py")}
+    trees = {p: ast.parse(t) for p, t in texts.items()}
+
+    sampling = [
+        n.name for n in trees["operators/sampling.py"].body
+        if isinstance(n, ast.FunctionDef)
+    ]
+    assert [n for n in sampling if "contamination_report" in n] == ["contamination_report"]
+    assert "_contamination_assemble" not in sampling
+
+    def calls(node, attr):
+        return [
+            c for c in ast.walk(node)
+            if isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == attr
+        ]
+
+    windows = [
+        (path, d.name)
+        for path, tree in trees.items()
+        for d in ast.walk(tree)
+        if isinstance(d, ast.FunctionDef)
+        and any(calls(c, "get") for c in calls(d, "concat_ws"))
+    ]
+    assert windows == [("operators/dedup.py", "_word_kgrams")]
+
+    salted = sorted(p for p, t in texts.items() if "'b1:'" in t or '"b1:"' in t)
+    assert salted == ["operators/sketch.py", "queries_ext.py"]
+    oracle = [
+        c.value for c in ast.walk(trees["queries_ext.py"])
+        if isinstance(c, ast.Constant) and isinstance(c.value, str) and "b1:" in c.value
+    ]
+    assert oracle and all("SELECT" in v for v in oracle)

@@ -177,13 +177,16 @@ def test_stream_incremental_matches_batch_exact(spark, tmp_path):
 
 
 def test_stream_bloom_contamination_matches_batch(spark, tmp_path, sf_dir):
-    """The stateless streaming gate agrees with the batch bloom report
-    on overlap counts for every document (same filter, same shingles)."""
+    """The stateless streaming gate agrees with the batch report's
+    ``'bloom'`` rows on overlap counts for every document (same filter,
+    same tokenization, same shingles) — including a document whose
+    text holds a double space and a tab, where a whitespace-regex split
+    would cut different shingles."""
     from pyspark.sql import functions as F
 
     from xarray_dataaccessor_spark.operators.dedup import word_shingles
     from xarray_dataaccessor_spark.operators.sampling import (
-        contamination_report_bloom,
+        contamination_report,
         deterministic_split,
     )
     from xarray_dataaccessor_spark.operators.sketch import bloom_build
@@ -197,6 +200,15 @@ def test_stream_bloom_contamination_matches_batch(spark, tmp_path, sf_dir):
     split = deterministic_split(docs, "doc_id", eval_per_mille=50)
     train = split.filter(F.col("split") == "train").drop("split")
     ev = split.filter(F.col("split") == "eval").drop("split")
+    # an eval passage pasted into a train doc with a double space and a
+    # tab between its words: the single-space split keeps the empty
+    # token and the tab inside the shingles, so the shingles across
+    # each gap miss where a whitespace-regex split would hit
+    w = ev.orderBy("doc_id").first()["text"].split(" ")
+    assert len(w) >= 12
+    odd_text = " ".join(w[:4]) + "  " + " ".join(w[4:8]) + "\t" + " ".join(w[8:])
+    odd = spark.createDataFrame([(-1, odd_text)], train.schema)
+    train = train.unionByName(odd)
     eval_sh = word_shingles(ev, "text", "doc_id", 3).select("shingle").distinct()
     words = bloom_build(eval_sh, "shingle", m_bits=65536, k=3)
 
@@ -211,7 +223,9 @@ def test_stream_bloom_contamination_matches_batch(spark, tmp_path, sf_dir):
     got = {r["doc_id"]: (r["n_shingles"], r["n_hits"])
            for r in out.collect()}
     batch = {r["doc_id"]: (r["n_shingles"], r["n_overlap"])
-             for r in contamination_report_bloom(train, ev, k=3).collect()}
+             for r in contamination_report(train, ev, k=3).collect()
+             if r["variant"] == "bloom"}
+    assert -1 in batch
     # batch reports only contaminated docs; the stream reports all
     for d, (n, hits) in batch.items():
         assert got[d][0] == n and got[d][1] == hits, d

@@ -128,8 +128,9 @@ class GridFrame:
         dx, dy = axis_step(xs), axis_step(ys)
         # anchor stencil indices to the axis minima — grids offset a
         # half step from (0,0) would otherwise hit round-half-even
-        # index tearing (see _stencil_windows)
-        origin = (xs[0], ys[0])
+        # index tearing (see _stencil_windows); an empty frame has no
+        # axes, and any origin plans the same zero rows
+        origin = ((xs or [0.0])[0], (ys or [0.0])[0])
         groups = ("time",) if per_time and "time" in self.df.columns else ()
         src = self.df.select(*groups, "x", "y", F.col(variable).alias("z"))
         if what == "derivatives":
@@ -146,7 +147,7 @@ class GridFrame:
             return watershed_labels(flow, group_cols=groups, **kwargs)
         if what == "accumulation":
             return flow_accumulation(
-                flow, dx=dx, dy=dy, group_cols=groups, **kwargs
+                flow, dx=dx, dy=dy, group_cols=groups, origin=origin, **kwargs
             )
         raise ValueError(f"terrain: unknown what={what!r}")
 

@@ -5,7 +5,7 @@ any EPSG via rioxarray/pyproj. Here the common projected CRS families get
 closed-form transforms that run as **pure Spark column expressions**
 (whole-stage codegen, no Python in the hot path):
 
-- EPSG:4326 <-> EPSG:3857 (spherical Web Mercator) — ``spatial.py``
+- EPSG:4326 <-> EPSG:3857 (spherical Web Mercator)
 - EPSG:4326 <-> UTM zones (EPSG 326xx north / 327xx south) — the
   Karney–Krüger series for the ellipsoidal Transverse Mercator
   (public algorithm: Karney 2011, "Transverse Mercator with an
@@ -268,6 +268,41 @@ class Sinusoidal:
         return (
             F.lit(self.lon0_deg) + F.degrees(lam),
             F.degrees(phi),
+        )
+
+
+class WebMercator:
+    """Spherical Web Mercator, EPSG:3857 (Snyder 1987 eqs. 7-1/7-2 on the
+    sphere of radius ``WGS84_A``): ``x = R*lam``,
+    ``y = R*ln(tan(pi/4 + phi/2))``; the inverse is
+    ``phi = 2*atan(exp(y/R)) - pi/2``. ``spatial.to_web_mercator`` /
+    ``from_web_mercator`` are the column twins over a frame."""
+
+    def forward(self, lon: float, lat: float) -> tuple[float, float]:
+        return (
+            WGS84_A * math.radians(lon),
+            WGS84_A * math.log(math.tan(math.pi / 4 + math.radians(lat) / 2)),
+        )
+
+    def inverse(self, x: float, y: float) -> tuple[float, float]:
+        return (
+            math.degrees(x / WGS84_A),
+            math.degrees(2 * math.atan(math.exp(y / WGS84_A)) - math.pi / 2),
+        )
+
+    def forward_cols(self, lon: Column, lat: Column) -> tuple[Column, Column]:
+        return (
+            F.lit(WGS84_A) * F.radians(lon),
+            F.lit(WGS84_A) * F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(lat) / 2)),
+        )
+
+    def inverse_cols(self, x: Column, y: Column) -> tuple[Column, Column]:
+        return (
+            F.degrees(x / F.lit(WGS84_A)),
+            F.degrees(
+                F.lit(2.0) * F.atan(F.exp(y / F.lit(WGS84_A)))
+                - F.lit(math.pi / 2.0)
+            ),
         )
 
 
@@ -818,11 +853,13 @@ def sinusoidal_crs(code: int) -> Sinusoidal | None:
 
 
 def projected_crs(code: int):
-    """Closed-form projection registry: WGS84 UTM zones, spherical
-    sinusoidal, polar stereographic (NSIDC/UPS), Lambert conformal
-    conic, Albers equal-area — and (round 9) datum-shifted national
-    grids (OSGB36). Returns an object with forward/inverse (+ _cols
-    twins) or None."""
+    """Closed-form projection registry: spherical Web Mercator, WGS84
+    UTM zones, spherical sinusoidal, polar stereographic (NSIDC/UPS),
+    Lambert conformal conic, Albers equal-area — and datum-shifted
+    national grids (OSGB36). Returns an object with forward/inverse
+    (+ _cols twins) or None."""
+    if code == 3857:
+        return WebMercator()
     return (
         utm_crs(code) or sinusoidal_crs(code) or conic_polar_crs(code)
         or datum_grid_crs(code)
@@ -894,8 +931,9 @@ def _apply_pair_cols(df: DataFrame, fn, x_col: str, y_col: str) -> DataFrame:
 def transform_grid(
     df: DataFrame, from_epsg, to_epsg, x_col: str = "x", y_col: str = "y"
 ) -> DataFrame:
-    """Closed-form CRS transform over grid columns (4326 <-> any WGS84
-    UTM zone or spherical sinusoidal). Accepts EPSG ints or PROJ.4
+    """Closed-form CRS transform over grid columns (4326 <-> any CRS of
+    the :func:`projected_crs` registry, and any pair of those through
+    the geographic pivot). Accepts EPSG ints or PROJ.4
     strings on either side. Raises KeyError when the pair has no closed
     form here — callers (``spatial.transform_crs_udf``) then try the
     pyproj gate."""

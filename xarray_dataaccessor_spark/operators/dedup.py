@@ -17,7 +17,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xarray_dataaccessor_spark.functions.hashing import (
@@ -93,21 +93,28 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     return df
 
 
-def word_shingles(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """Distinct word k-shingles per document: (id, shingle)."""
-    df = spread_small_input(df)
-    words = F.split(F.col(text_col), " ")
+def _word_kgrams(words: Column, k: int) -> Column:
+    """Positional k-grams of a word array: element ``i`` is words
+    ``i .. i+k-1`` joined by single spaces. The one k-gram window of
+    the package — the shingle, MinHash, decontamination and substring
+    dedup operators all cut their grams here."""
     idx = F.sequence(F.lit(0), F.greatest(F.size(words) - k, F.lit(0)))
     # F.get is 0-based and null-safe: a doc shorter than k words yields a
     # partial shingle instead of an ANSI out-of-bounds error
-    shingle = F.transform(
+    return F.transform(
         idx,
         lambda i: F.concat_ws(
             " ", *[F.get(words, (i + j).cast("int")) for j in range(k)]
         ),
     )
+
+
+def word_shingles(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
+) -> DataFrame:
+    """Distinct word k-shingles per document: (id, shingle)."""
+    df = spread_small_input(df)
+    shingle = _word_kgrams(F.split(F.col(text_col), " "), k)
     # distinct-per-document == distinct over (id, shingle): every shingle
     # of a document lives in ONE array in ONE row, so array_distinct
     # before the explode is exact and entirely map-side — the global
@@ -140,14 +147,7 @@ def minhash_band_structs(
     from xarray_dataaccessor_spark.functions.hashing import portable_hash32
 
     n_bands = num_perm // rows_per_band
-    words = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - k, F.lit(0)))
-    shingle = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.get(words, (i + j).cast("int")) for j in range(k)]
-        ),
-    )
+    shingle = _word_kgrams(F.split(F.col(text_col), " "), k)
     sh = F.filter(F.array_distinct(shingle), lambda s: F.length(s) > 0)
     h = F.transform(sh, lambda s: portable_hash32(s))
     mhs = [
@@ -981,13 +981,7 @@ def substring_dedup(
     base = src.select(
         id_col, text_col, words.alias("__w"), F.size(words).alias("n_tokens")
     )
-    idx = F.sequence(F.lit(0), F.greatest(F.size(F.col("__w")) - k, F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.get(F.col("__w"), (i + j).cast("int")) for j in range(k)]
-        ),
-    )
+    grams = _word_kgrams(F.col("__w"), k)
     pos_g = (
         base.filter(F.col("n_tokens") >= k)
         .select(F.col(id_col), F.posexplode(grams).alias("pos", "g"))

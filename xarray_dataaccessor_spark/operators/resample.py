@@ -134,20 +134,21 @@ def resample_aggregate(
     if method in ("ffill", "bfill"):
         return resample_fill(df, freq, method, value_cols, time_col, group_cols)
     value_cols = value_cols or _value_columns(df, time_col, group_cols)
-    groups = [c for c in group_cols if c in df.columns]
     aggs = [agg_expr(method, v, time_col).alias(v) for v in value_cols]
-    cal = _calendar_window(freq, time_col)
-    if cal is not None:
-        bucket, label = cal
-        return (
-            df.groupBy(bucket.alias("__w"), *groups)
-            .agg(*aggs)
-            .select(label.alias(time_col), *groups, *value_cols)
-        )
-    interval = freq_to_interval(freq)
-    win, label = _anchored_window(df, freq, interval, time_col)
+    return _bucket_aggregate(df, freq, aggs, value_cols, time_col, group_cols)
+
+
+def _bucket_aggregate(df, freq, aggs, value_cols, time_col, group_cols):
+    """Aggregate ``aggs`` per (time bucket, cell): the one bucketing of
+    the downsampling resamplers. Calendar periods bucket with
+    :func:`_calendar_window`, tick and week frequencies with
+    :func:`_anchored_window`; the output is labeled per pandas."""
+    groups = [c for c in group_cols if c in df.columns]
+    bucket, label = _calendar_window(freq, time_col) or _anchored_window(
+        df, freq, freq_to_interval(freq), time_col
+    )
     return (
-        df.groupBy(win.alias("__w"), *groups)
+        df.groupBy(bucket.alias("__w"), *groups)
         .agg(*aggs)
         .select(label.alias(time_col), *groups, *value_cols)
     )
@@ -528,42 +529,15 @@ def _interpolate_spline(df, freq, method, value_cols, time_col, group_cols):
         + [f"{v} double" for v in value_cols]
     )
 
-    def interp_group(pdf):
-        # NOTE: this closure must be fully self-contained. Referencing a
-        # module-level helper would make cloudpickle serialize it BY
-        # REFERENCE, and executor Python workers that don't have this
-        # package on sys.path (a consumer driving from another cwd, or a
-        # real cluster without the wheel shipped) would fail with
-        # ModuleNotFoundError. The tridiagonal solve is therefore inlined
-        # (same algorithm as _natural_cubic_second_derivs).
-        import numpy as np
+    # workers may lack the package: the closure calls the module's
+    # tridiagonal solve, so the module ships by value
+    import xarray_dataaccessor_spark.operators.resample as _self
+    from xarray_dataaccessor_spark.session import ship_by_value
 
-        def second_derivs(xs, ys):
-            n = len(xs)
-            m = np.zeros(n)
-            if n < 3:
-                return m
-            h = np.diff(xs)
-            a = np.zeros(n)
-            b = np.ones(n)
-            c = np.zeros(n)
-            d = np.zeros(n)
-            for i in range(1, n - 1):
-                a[i] = h[i - 1]
-                b[i] = 2.0 * (h[i - 1] + h[i])
-                c[i] = h[i]
-                d[i] = 6.0 * (
-                    (ys[i + 1] - ys[i]) / h[i] - (ys[i] - ys[i - 1]) / h[i - 1]
-                )
-            for i in range(1, n):
-                if b[i - 1] != 0:
-                    wgt = a[i] / b[i - 1]
-                    b[i] -= wgt * c[i - 1]
-                    d[i] -= wgt * d[i - 1]
-            m[n - 1] = d[n - 1] / b[n - 1] if b[n - 1] else 0.0
-            for i in range(n - 2, -1, -1):
-                m[i] = (d[i] - c[i] * m[i + 1]) / b[i] if b[i] else 0.0
-            return m
+    ship_by_value(_self)
+
+    def interp_group(pdf):
+        import numpy as np
 
         pdf = pdf.sort_values(time_col).reset_index(drop=True)
         # datetime64[ns] (legacy Arrow) or datetime64[us] (pandas 2 / NTZ)
@@ -577,7 +551,7 @@ def _interpolate_spline(df, freq, method, value_cols, time_col, group_cols):
             if len(xs) >= 2:
                 inside = (t >= xs[0]) & (t <= xs[-1])
                 if method == "cubic" and len(xs) >= 3:
-                    m = second_derivs(xs, ys)
+                    m = _natural_cubic_second_derivs(xs, ys)
                     idx = np.clip(np.searchsorted(xs, t[inside]) - 1, 0, len(xs) - 2)
                     x0, x1 = xs[idx], xs[idx + 1]
                     y0, y1 = ys[idx], ys[idx + 1]
@@ -633,15 +607,13 @@ def resample_apply(
     ``test_3_era5_manipulations.py:119-125``).
 
     ``fn`` receives a pandas Series per (window, cell) group and returns a
-    scalar — the engine's UDAF surface, run via Arrow-batched
-    applyInPandas.
+    scalar — the engine's UDAF surface, run as an Arrow-batched grouped
+    pandas UDF over the same buckets and labels as
+    :func:`resample_aggregate`.
     """
     from pyspark.sql.functions import pandas_udf
 
-    interval = freq_to_interval(freq)
     value_cols = value_cols or _value_columns(df, time_col, group_cols)
-    groups = [c for c in group_cols if c in df.columns]
-    bucketed = df.withColumn("__bucket", F.window(time_col, interval).start)
 
     # grouped-agg pandas UDF: Arrow ships one column batch per group and
     # the callable returns a scalar — far lighter than a full
@@ -651,12 +623,7 @@ def resample_apply(
         return float(fn(s))
 
     aggs = [udaf(F.col(v)).alias(v) for v in value_cols]
-    return (
-        bucketed.groupBy("__bucket", *groups)
-        .agg(*aggs)
-        .withColumnRenamed("__bucket", time_col)
-        .select(time_col, *groups, *value_cols)
-    )
+    return _bucket_aggregate(df, freq, aggs, value_cols, time_col, group_cols)
 
 
 def temporal_resample(

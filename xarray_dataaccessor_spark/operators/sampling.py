@@ -8,10 +8,11 @@ engine) never had but a 100 TB documents pipeline uses constantly:
   split never depends on what other rows exist).
 - ``stratified_downsample``: per-stratum hash-threshold sampling to a
   common target (domain/language rebalancing before training).
-- ``ngram_contamination`` / ``contamination_spans``: eval-set n-gram
-  containment per train doc plus the longest CONTIGUOUS contaminated
-  passage — the standard decontamination checks before benchmark
-  evaluation.
+- ``contamination_report``: eval-set n-gram containment per train doc
+  plus the longest CONTIGUOUS contaminated passage, exact and
+  Bloom-probed, from one corpus pass — the standard decontamination
+  checks before benchmark evaluation (``ngram_contamination`` and
+  ``contamination_spans`` are the two halves as standalone references).
 - ``sequence_packing``: concat-and-chunk pretraining layout on a token
   budget grid, per-shard prefix sums.
 - ``shuffle_rows`` / ``shard_shuffled``: deterministic epoch shuffles
@@ -253,74 +254,6 @@ def shard_shuffled(
     )
 
 
-def contamination_report(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
-    """Fused decontamination report: overlap counts AND the longest
-    contiguous contaminated span from ONE positional shingling of the
-    train corpus (``ngram_contamination`` + ``contamination_spans``
-    composed naively shingle the corpus twice — at 100 TB the second
-    pass over the fact table is the single largest avoidable cost).
-
-    Per train document with any eval overlap:
-    ``(id, n_shingles, n_overlap, contamination, max_span_tokens)``
-    where the counts are DISTINCT shingle hashes (the hash-set
-    semantics decontamination at scale uses) and ``max_span_tokens``
-    is the longest run of consecutive positions whose k-grams all
-    appear in the eval set, in tokens (run + k - 1).
-
-    Plan shape — one linear pipeline, no cache, no windows, no Expand:
-    positional shingles (map-side posexplode, duplicates and positions
-    kept) -> LEFT join the deduped eval hash set (AQE broadcasts it
-    when small) -> two-level aggregation: level 1 on ``(doc, hash)``
-    compacts to distinct shingles (map-side combine) while collecting
-    the MATCHED positions; level 2 on the doc key counts distincts as
-    plain ``count``s (the distinctness is structural, so no Expand
-    rewrite) and folds the span directly — longest run of consecutive
-    values in the sorted matched-position array via ``F.aggregate``,
-    a pure codegen expression over an array bounded by doc length.
-    Shuffles: the hash join + the two aggregation exchanges, all on
-    compacted keys; per-doc sorting is gone entirely. The CPU-bound
-    shingling is spread to session parallelism when the input arrives
-    as a single small file (``spread_small_input`` — a no-op on
-    production block-split inputs)."""
-    from xarray_dataaccessor_spark.operators.dedup import (
-        spread_small_input,
-        word_shingles,
-    )
-
-    train = spread_small_input(train)
-    words = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - k, F.lit(0)))
-    shingles = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.get(words, (i + j).cast("int")) for j in range(k)]
-        ),
-    )
-    pos_sh = (
-        train.select(F.col(id_col), F.posexplode(shingles).alias("pos", "shingle"))
-        .filter(F.length("shingle") > 0)
-        .select(id_col, "pos", portable_hash32(F.col("shingle")).alias("h"))
-    )
-    eval_h = (
-        word_shingles(eval_df, text_col, id_col, k)
-        .select(portable_hash32(F.col("shingle")).alias("h"))
-        .distinct()
-        .withColumn("__m", F.lit(1))
-    )
-    joined = pos_sh.join(eval_h, "h", "left")  # eval distinct on h: no fan-out
-    marked = joined.select(
-        id_col, "pos", "h",
-        F.coalesce(F.col("__m"), F.lit(0)).alias("__hit"),
-    )
-    return _contamination_assemble(marked, id_col, k)
-
-
 def _longest_run(pos_col: Column) -> Column:
     """Longest run of consecutive values in a sorted position array,
     folded in one codegen array pass (no window, no explode)."""
@@ -344,39 +277,7 @@ def _longest_run(pos_col: Column) -> Column:
     )
 
 
-def _contamination_assemble(marked: DataFrame, id_col: str, k: int) -> DataFrame:
-    """Shared back half of the contamination reports: positional
-    shingles tagged with a 0/1 ``__hit`` -> per-doc distinct counts +
-    longest contiguous contaminated span (the two-level aggregation and
-    the consecutive-run fold of :func:`contamination_report`). The hit
-    PREDICATE is the caller's — an eval-set equi-join for the exact
-    report, a broadcast Bloom probe for the sketched one."""
-    hit = F.col("__hit") == 1
-    per_shingle = marked.groupBy(id_col, "h").agg(
-        F.max("__hit").alias("__hit"),
-        F.collect_list(F.when(hit, F.col("pos"))).alias("__mpos"),
-    )
-    per_doc = per_shingle.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_shingles"),
-        F.sum("__hit").alias("n_overlap"),
-        F.sort_array(F.flatten(F.collect_list("__mpos"))).alias("__pos"),
-    )
-    return (
-        per_doc.filter(F.col("n_overlap") > 0)
-        .select(
-            id_col,
-            "n_shingles",
-            "n_overlap",
-            (
-                F.col("n_overlap").cast("double")
-                / F.col("n_shingles").cast("double")
-            ).alias("contamination"),
-            (_longest_run(F.col("__pos")) + F.lit(k - 1)).cast("bigint").alias("max_span_tokens"),
-        )
-    )
-
-
-def contamination_report_bloom(
+def contamination_report(
     train: DataFrame,
     eval_df: DataFrame,
     text_col: str = "text",
@@ -385,93 +286,49 @@ def contamination_report_bloom(
     m_bits: int = 65536,
     k_hashes: int = 3,
 ) -> DataFrame:
-    """:func:`contamination_report` with the eval side compressed into a
-    broadcast Bloom filter — the 100 TB shape: the eval shingle set
-    becomes ``m_bits / 32`` literal longs probed MAP-SIDE, so the train
-    corpus never joins anything; the only shuffles left are the two
-    compacted aggregation exchanges. False positives (rate
-    ``(1 - e^(-k n / m))^k``) can only OVERSTATE contamination — safe
-    for a removal gate; the decisions themselves are deterministic
-    integer arithmetic and replay exactly in SQL
-    (``operators/sketch.py::bloom_build_sql`` + ``bloom_contains_sql``),
-    which is what the 'bloom' oracle variant pins."""
-    from xarray_dataaccessor_spark.functions.hashing import portable_hash32
-    from xarray_dataaccessor_spark.operators.dedup import (
-        spread_small_input,
-        word_shingles,
-    )
-    from xarray_dataaccessor_spark.operators.sketch import (
-        bloom_build,
-        bloom_contains_sql,
-    )
-
-    eval_sh = word_shingles(eval_df, text_col, id_col, k).select(
-        F.col("shingle")
-    ).distinct()
-    words = bloom_build(eval_sh, "shingle", m_bits=m_bits, k=k_hashes)
-    train = spread_small_input(train)
-    ws = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - k, F.lit(0)))
-    shingles = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.get(ws, (i + j).cast("int")) for j in range(k)]
-        ),
-    )
-    pos_sh = (
-        train.select(F.col(id_col), F.posexplode(shingles).alias("pos", "shingle"))
-        .filter(F.length("shingle") > 0)
-        .select(
-            id_col, "pos",
-            portable_hash32(F.col("shingle")).alias("h"),
-            portable_hash32(
-                F.concat(F.lit("b1:"), F.col("shingle"))
-            ).alias("__h1"),
-            portable_hash32(
-                F.concat(F.lit("b2:"), F.col("shingle"))
-            ).alias("__h2"),
-        )
-    )
-    marked = pos_sh.select(
-        id_col, "pos", "h",
-        F.expr(bloom_contains_sql("__h1", "__h2", words, k=k_hashes))
-        .cast("int")
-        .alias("__hit"),
-    )
-    return _contamination_assemble(marked, id_col, k)
-
-
-def contamination_report_dual(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    m_bits: int = 65536,
-    k_hashes: int = 3,
-) -> DataFrame:
-    """Both contamination variants — ``'exact'``
-    (:func:`contamination_report`) and ``'bloom'``
-    (:func:`contamination_report_bloom`) — from ONE positional
+    """Decontamination report: per train document with any eval
+    overlap, ``(variant, id, n_shingles, n_overlap, contamination,
+    max_span_tokens)`` for two hit predicates, from ONE positional
     shingling of the train corpus.
 
-    Row-for-row identical to the union of the two single-variant
-    reports (each tagged with a ``variant`` column), but the
-    CPU-dominant work runs once instead of twice: the train corpus is
-    split/shingled/hashed in one pass that carries BOTH hit markers
-    (the eval-hash-set equi-join and the map-side Bloom probe), both
-    aggregation levels fold the two markers side by side, and the two
-    variant rows unpivot out of the per-doc row at the end. The eval
-    side is shingled once and feeds both the distinct hash set and the
-    Bloom build. No cache, no barrier — the sharing is structural
-    (guide §1 remove passes / §8 don't do the same work twice)."""
+    - ``'exact'`` marks a shingle when its hash is in the eval set
+      (an equi-join against the deduped eval hash set);
+    - ``'bloom'`` marks it when it probes positive in an ``m_bits``
+      Bloom filter of the eval shingles (``operators/sketch.py``),
+      inlined as literal words and probed MAP-SIDE — the 100 TB shape,
+      where the eval side never joins the corpus. False positives (rate
+      ``(1 - e^(-k n / m))^k``) can only OVERSTATE contamination — safe
+      for a removal gate — and every bit position is md5-derived integer
+      arithmetic, so the rows replay exactly in SQL
+      (``bloom_build_sql`` + ``bloom_contains_sql``).
+
+    The counts are DISTINCT shingle hashes (the hash-set semantics
+    decontamination at scale uses) and ``max_span_tokens`` is the
+    longest run of consecutive positions whose k-grams all hit, in
+    tokens (run + k - 1) — benchmarks leak as passages, and span length
+    is the signal removal acts on.
+
+    Plan shape — one linear pipeline, no cache, no windows, no Expand:
+    positional shingles (map-side posexplode, duplicates and positions
+    kept) carrying BOTH hit markers -> two-level aggregation: level 1 on
+    ``(doc, hash)`` compacts to distinct shingles (map-side combine)
+    while collecting each variant's matched positions; level 2 on the
+    doc key counts distincts as plain ``count``s and folds each span
+    with :func:`_longest_run`; the two variant rows unpivot out of the
+    per-doc row at the end. The eval side is shingled once and feeds
+    both the distinct hash set and the Bloom build. The CPU-bound
+    shingling is spread to session parallelism when the input arrives
+    as a single small file (``spread_small_input`` — a no-op on
+    production block-split inputs)."""
     from xarray_dataaccessor_spark.operators.dedup import (
+        _word_kgrams,
         spread_small_input,
         word_shingles,
     )
     from xarray_dataaccessor_spark.operators.sketch import (
         bloom_build,
         bloom_contains_sql,
+        bloom_keys,
     )
 
     eval_sh = word_shingles(eval_df, text_col, id_col, k).select(
@@ -484,26 +341,16 @@ def contamination_report_dual(
         .withColumn("__m", F.lit(1))
     )
     train = spread_small_input(train)
-    ws = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - k, F.lit(0)))
-    shingles = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.get(ws, (i + j).cast("int")) for j in range(k)]
-        ),
-    )
+    shingles = _word_kgrams(F.split(F.col(text_col), " "), k)
+    h1, h2 = bloom_keys(F.col("shingle"))
     pos_sh = (
         train.select(F.col(id_col), F.posexplode(shingles).alias("pos", "shingle"))
         .filter(F.length("shingle") > 0)
         .select(
             id_col, "pos",
             portable_hash32(F.col("shingle")).alias("h"),
-            portable_hash32(
-                F.concat(F.lit("b1:"), F.col("shingle"))
-            ).alias("__h1"),
-            portable_hash32(
-                F.concat(F.lit("b2:"), F.col("shingle"))
-            ).alias("__h2"),
+            h1.alias("__h1"),
+            h2.alias("__h2"),
         )
     )
     probed = pos_sh.select(
@@ -595,18 +442,10 @@ def contamination_spans(
     equi-join against the deduped eval hash set, then gaps-and-islands
     per document (island = pos - row_number, one window keyed on the
     doc) and a max. Shuffles on the hash join + the doc key only."""
-    from xarray_dataaccessor_spark.functions.hashing import portable_hash32
-    from xarray_dataaccessor_spark.operators.dedup import word_shingles
+    from xarray_dataaccessor_spark.operators.dedup import _word_kgrams, word_shingles
     from pyspark.sql.window import Window
 
-    words = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - k, F.lit(0)))
-    shingles = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.get(words, (i + j).cast("int")) for j in range(k)]
-        ),
-    )
+    shingles = _word_kgrams(F.split(F.col(text_col), " "), k)
     pos_sh = (
         train.select(F.col(id_col), F.posexplode(shingles).alias("pos", "shingle"))
         .filter(F.length("shingle") > 0)

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Flajolet et al. 2007 bias constants (alpha_m) for the register
@@ -98,6 +98,20 @@ def hll_ndv(
     return agg.select(*keys, F.round(est, 6).alias(out_col))
 
 
+def bloom_keys(x: Column) -> tuple[Column, Column]:
+    """The two Kirsch-Mitzenmacher base hashes of a string column,
+    ``h1 = md5('b1:'||x)`` and ``h2 = md5('b2:'||x)`` 32-bit prefixes —
+    the one Spark spelling of the Bloom key derivation that
+    :func:`bloom_build` writes with and every probe side reads with
+    (:func:`bloom_build_sql` is the DuckDB replay)."""
+    from xarray_dataaccessor_spark.functions.hashing import portable_hash32
+
+    return (
+        portable_hash32(F.concat(F.lit("b1:"), x)),
+        portable_hash32(F.concat(F.lit("b2:"), x)),
+    )
+
+
 def bloom_build(
     df: DataFrame, col: str, m_bits: int = 65536, k: int = 3
 ) -> list[int]:
@@ -110,24 +124,19 @@ def bloom_build(
     in a map-side predicate instead of a join side).
 
     Hashing is Kirsch-Mitzenmacher double hashing over the repo's
-    portable md5 hash: ``pos_i = (h1 + i*h2) % m_bits`` with
-    ``h1 = md5('b1:'||x)``, ``h2 = md5('b2:'||x)`` 32-bit prefixes —
-    every position, and therefore every false positive, reproduces
-    exactly in DuckDB (:func:`bloom_build_sql`). Bit words aggregate
-    with ``bit_or`` (one m/32-sized shuffle with map-side combine;
-    disjoint-batch filters merge with OR, so incremental appends are
-    free). The collect is ``m_bits / 32`` longs — 16 KB at the default
+    portable md5 hash: ``pos_i = (h1 + i*h2) % m_bits`` with ``h1, h2``
+    from :func:`bloom_keys` — every position, and therefore every false
+    positive, reproduces exactly in DuckDB (:func:`bloom_build_sql`).
+    Bit words aggregate with ``bit_or`` (one m/32-sized shuffle with
+    map-side combine; disjoint-batch filters merge with OR, so
+    incremental appends are free). The collect is ``m_bits / 32`` longs — 16 KB at the default
     size, a model artifact like the PCA components.
 
     False-positive rate ~= (1 - e^(-k n / m))^k; the default 64 K bits
     with k=3 holds ~5 000 distinct members under 1e-3."""
     if m_bits % 32 or m_bits <= 0:
         raise ValueError("m_bits must be a positive multiple of 32")
-    from xarray_dataaccessor_spark.functions.hashing import portable_hash32
-
-    x = F.col(col).cast("string")
-    h1 = portable_hash32(F.concat(F.lit("b1:"), x))
-    h2 = portable_hash32(F.concat(F.lit("b2:"), x))
+    h1, h2 = bloom_keys(F.col(col).cast("string"))
     pos = F.explode(
         F.array(*[(h1 + F.lit(i) * h2) % F.lit(m_bits) for i in range(k)])
     )

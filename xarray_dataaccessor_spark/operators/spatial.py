@@ -77,8 +77,6 @@ _AGG_KERNELS = {
     "bilinear": lambda c: F.avg(c),  # downsampling bilinear ~ area average
 }
 
-WGS84_RADIUS = 6378137.0  # Web-Mercator sphere radius (EPSG:3857 definition)
-
 
 def axis_values(df: DataFrame, col: str) -> list[float]:
     """Distinct sorted coordinate axis, driver-side. Axes are
@@ -512,8 +510,9 @@ def raster_pyramid(
         c for c in df.columns if c not in (time_col, x_col, y_col)
     ]
     xs, ys = grid_axes(df, x_col, y_col)
-    x0, sx = xs[0], axis_step(xs) or 1.0
-    y0, sy = ys[0], axis_step(ys) or 1.0
+    # an empty frame has no axes: any origin plans the same zero rows
+    x0, sx = (xs or [0.0])[0], axis_step(xs) or 1.0
+    y0, sy = (ys or [0.0])[0], axis_step(ys) or 1.0
 
     # level-0 state at cell grain: integer cell indices + per-column state
     ix = F.round((F.col(x_col) - F.lit(x0)) / F.lit(sx)).cast("long")
@@ -608,42 +607,43 @@ def normalize_longitude(df: DataFrame, x_col: str = "x") -> DataFrame:
 
 def to_web_mercator(df: DataFrame, x_col: str = "x", y_col: str = "y") -> DataFrame:
     """R2/R4 closed-form EPSG:4326 -> EPSG:3857, pure built-ins (stays in
-    whole-stage codegen; no UDF). Arbitrary CRS pairs go through
-    :func:`transform_crs_udf` (pyproj, gated)."""
-    lam = F.radians(F.col(x_col))
-    phi = F.radians(F.col(y_col))
-    return df.withColumn(x_col, F.lit(WGS84_RADIUS) * lam).withColumn(
-        y_col, F.lit(WGS84_RADIUS) * F.log(F.tan(F.lit(3.141592653589793 / 4.0) + phi / 2))
-    )
+    whole-stage codegen; no UDF) — ``crs.WebMercator``'s column
+    forward. Arbitrary CRS pairs go through :func:`transform_crs_udf`."""
+    from xarray_dataaccessor_spark.operators.crs import WebMercator
+
+    mx, my = WebMercator().forward_cols(F.col(x_col), F.col(y_col))
+    return df.withColumns({x_col: mx, y_col: my})
 
 
 def from_web_mercator(df: DataFrame, x_col: str = "x", y_col: str = "y") -> DataFrame:
     """Closed-form EPSG:3857 -> EPSG:4326 inverse."""
-    lon = F.degrees(F.col(x_col) / F.lit(WGS84_RADIUS))
-    lat = F.degrees(
-        F.lit(2.0) * F.atan(F.exp(F.col(y_col) / F.lit(WGS84_RADIUS)))
-        - F.lit(3.141592653589793 / 2.0)
-    )
-    return df.withColumn(x_col, lon).withColumn(y_col, lat)
+    from xarray_dataaccessor_spark.operators.crs import WebMercator
+
+    lon, lat = WebMercator().inverse_cols(F.col(x_col), F.col(y_col))
+    return df.withColumns({x_col: lon, y_col: lat})
+
+
+_CLOSED_FORMS = (
+    "Web Mercator (3857), UTM zones, MODIS sinusoidal, polar "
+    "stereographic (3413/3976/3031/3995/UPS), Lambert conformal conic "
+    "(2154/3978), Albers (5070), LAEA (3035/6931/6932), EASE-Grid 2.0 "
+    "(6933), OSGB36 (27700) and DHDN (31467), and any pair of them"
+)
 
 
 def transform_crs_udf(df: DataFrame, from_epsg: int, to_epsg: int, x_col="x", y_col="y"):
     """R2/R4 general CRS transform (``convert_crs``,
     ``shared_functions.py:132-157``; ``_convert_xy_coordinates``,
-    ``utility_functions.py:224-248``). Closed-form first: 4326<->3857
-    spherical Mercator here; 4326 <-> {UTM zones (Karney–Krüger), MODIS
-    sinusoidal, polar stereographic (NSIDC 3413/3976, 3031/3995, UPS),
-    Lambert conformal conic (2154/3978), Albers (5070)} — and any pair
-    of those via the geographic pivot — in :mod:`operators.crs`, all
-    pure column expressions in whole-stage codegen. Only CRS pairs with
-    no closed form reach the Arrow-batched pandas_udf wrapping
+    ``utility_functions.py:224-248``). Closed-form first: 4326 <->
+    {Web Mercator, UTM zones (Karney–Krüger), MODIS sinusoidal, polar
+    stereographic (NSIDC 3413/3976, 3031/3995, UPS), Lambert conformal
+    conic (2154/3978), Albers (5070), ...} — and any pair of those via
+    the geographic pivot — in :mod:`operators.crs`, all pure column
+    expressions in whole-stage codegen. Only CRS pairs with no closed
+    form reach the Arrow-batched pandas_udf wrapping
     ``pyproj.Transformer`` (gated on the geo extras)."""
     if from_epsg == to_epsg:
         return df
-    if (from_epsg, to_epsg) == (4326, 3857):
-        return to_web_mercator(df, x_col, y_col)
-    if (from_epsg, to_epsg) == (3857, 4326):
-        return from_web_mercator(df, x_col, y_col)
     try:
         from xarray_dataaccessor_spark.operators.crs import transform_grid
 
@@ -655,9 +655,7 @@ def transform_crs_udf(df: DataFrame, from_epsg: int, to_epsg: int, x_col="x", y_
     except ImportError as exc:
         raise NotImplementedError(
             f"CRS transform {from_epsg}->{to_epsg} requires pyproj, which is "
-            "not installed; closed-form coverage: 4326<->3857, UTM zones, "
-            "MODIS sinusoidal, polar stereographic (3413/3976/3031/3995/"
-            "UPS), Lambert conformal conic (2154/3978), Albers (5070)."
+            f"not installed; closed-form coverage: 4326 <-> {_CLOSED_FORMS}."
         ) from exc
     import pandas as pd  # pragma: no cover
     from pyspark.sql.functions import pandas_udf  # pragma: no cover
@@ -677,41 +675,20 @@ def transform_crs_udf(df: DataFrame, from_epsg: int, to_epsg: int, x_col="x", y_
 
 
 def bbox_to_crs(bbox, from_epsg: int, to_epsg: int):
-    """R5: reproject the 4 bbox corners driver-side (``_convert_bbox``,
-    ``utility_functions.py:251-282``)."""
-    import math
-
+    """R5: reproject the 2 bbox corners driver-side (``_convert_bbox``,
+    ``utility_functions.py:251-282``) with ``crs.transform_point``."""
     from xarray_dataaccessor_spark.meta import BoundingBox
+    from xarray_dataaccessor_spark.operators.crs import transform_point
 
-    def fwd(lon, lat):
-        return (
-            WGS84_RADIUS * math.radians(lon),
-            WGS84_RADIUS * math.log(math.tan(math.pi / 4 + math.radians(lat) / 2)),
-        )
-
-    def inv(x, y):
-        return (
-            math.degrees(x / WGS84_RADIUS),
-            math.degrees(2 * math.atan(math.exp(y / WGS84_RADIUS)) - math.pi / 2),
-        )
-
-    if (from_epsg, to_epsg) == (4326, 3857):
-        w, s = fwd(bbox.west, bbox.south)
-        e, n = fwd(bbox.east, bbox.north)
-    elif (from_epsg, to_epsg) == (3857, 4326):
-        w, s = inv(bbox.west, bbox.south)
-        e, n = inv(bbox.east, bbox.north)
-    else:
-        try:
-            from xarray_dataaccessor_spark.operators.crs import transform_point
-
-            w, s = transform_point(bbox.west, bbox.south, from_epsg, to_epsg)
-            e, n = transform_point(bbox.east, bbox.north, from_epsg, to_epsg)
-        except KeyError as exc:
-            raise NotImplementedError(
-                "Closed-form bbox reprojection covers 4326<->3857 and "
-                "4326<->UTM; other CRS pairs need pyproj (geo extras)."
-            ) from exc
+    try:
+        w, s = transform_point(bbox.west, bbox.south, from_epsg, to_epsg)
+        e, n = transform_point(bbox.east, bbox.north, from_epsg, to_epsg)
+    except KeyError as exc:
+        raise NotImplementedError(
+            f"No closed-form bbox reprojection {from_epsg}->{to_epsg}; "
+            f"coverage: 4326 <-> {_CLOSED_FORMS}. Other CRS pairs need "
+            "pyproj (geo extras)."
+        ) from exc
     return BoundingBox(west=min(w, e), south=min(s, n), east=max(w, e), north=max(s, n))
 
 

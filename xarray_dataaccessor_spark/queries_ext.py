@@ -3273,19 +3273,18 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     length is the signal removal acts on).
 
     Two variant row sets: ``'exact'`` marks hits by joining the eval
-    hash set; ``'bloom'`` (round 8) compresses the eval side into a
-    broadcast Bloom filter (``operators/sketch.py``) probed map-side —
-    the 100 TB decontamination shape. Every bit position is
-    md5-derived integer arithmetic, so the oracle rebuilds the
-    identical filter in SQL and the reports match hash-exactly, false
-    positives included. Since r14 both variants come from
-    ``contamination_report_dual``: ONE positional shingling of the
-    train corpus carries both hit markers through one aggregation
-    chain and unpivots the variant rows at the end — row-identical to
-    the old exact∪bloom union at half the corpus passes, no cache."""
+    hash set; ``'bloom'`` compresses the eval side into a broadcast
+    Bloom filter (``operators/sketch.py``) probed map-side — the
+    100 TB decontamination shape. Every bit position is md5-derived
+    integer arithmetic, so the oracle rebuilds the identical filter in
+    SQL and the reports match hash-exactly, false positives included.
+    Both variants come from ``sampling.contamination_report``: ONE
+    positional shingling of the train corpus carries both hit markers
+    through one aggregation chain and unpivots the variant rows at the
+    end — no cache, no second corpus pass."""
     configure_session(spark)
     from xarray_dataaccessor_spark.operators.sampling import (
-        contamination_report_dual,
+        contamination_report,
         deterministic_split,
     )
 
@@ -3293,12 +3292,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = deterministic_split(docs, "doc_id", eval_per_mille=50)
     train = split.filter(F.col("split") == "train").drop("split")
     eval_df = split.filter(F.col("split") == "eval").drop("split")
-    # one fused train-corpus pass emitting both variant row sets —
-    # row-identical to exact.unionByName(bloom) of the single-variant
-    # reports, at half the shingling/hashing CPU and half the
-    # aggregation exchanges (the r13 verdict ruled out sharing via a
-    # cache barrier; this sharing is structural)
-    return contamination_report_dual(
+    return contamination_report(
         train, eval_df, "text", "doc_id", k=3, m_bits=65536, k_hashes=3
     )
 

@@ -94,18 +94,9 @@ def _project_coords(cells, input_epsg, output_epsg):
     runs on the driver."""
     if output_epsg is None or output_epsg == input_epsg:
         return cells
-    from xarray_dataaccessor_spark.meta import BoundingBox
-    from xarray_dataaccessor_spark.operators.spatial import bbox_to_crs
+    from xarray_dataaccessor_spark.operators.crs import transform_point
 
-    out = []
-    for cx, cy in cells:
-        b = bbox_to_crs(
-            BoundingBox(west=cx, south=cy, east=cx, north=cy),
-            input_epsg,
-            output_epsg,
-        )
-        out.append((b.west, b.south))
-    return out
+    return [transform_point(cx, cy, input_epsg, output_epsg) for cx, cy in cells]
 
 
 def make_precipitation_input(

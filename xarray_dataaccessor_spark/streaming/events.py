@@ -787,57 +787,53 @@ def stream_bloom_contamination(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Streaming decontamination gate — the stream twin of
-    ``sampling.contamination_report_bloom``: every arriving document's
-    DISTINCT word k-gram shingles probe a PRE-BUILT eval-set Bloom
-    filter (``operators/sketch.bloom_build``) inlined as literal words.
-    The whole gate is ONE map-side projection — per-row array ops, no
-    aggregation, no state store, no watermark, no join — so it runs in
-    any output mode at scan-bound throughput. (Rebuilding the filter
-    nightly means restarting the query with new literals; the
-    stream-static join in ``stream_corpus_dedup`` is the alternative
-    when the reference set must hot-swap.)
+    """Streaming decontamination gate — the stream twin of the
+    ``'bloom'`` rows of ``sampling.contamination_report``: every
+    arriving document's DISTINCT word k-gram shingles probe a PRE-BUILT
+    eval-set Bloom filter (``operators/sketch.bloom_build``) inlined as
+    literal words. The whole gate is ONE map-side projection — per-row
+    array ops, no aggregation, no state store, no watermark, no join —
+    so it runs in any output mode at scan-bound throughput. (Rebuilding
+    the filter nightly means restarting the query with new literals;
+    the stream-static join in ``stream_corpus_dedup`` is the
+    alternative when the reference set must hot-swap.)
 
     Emits ``(id[, ts], n_shingles, n_hits, contaminated)`` per document
     — same counts as the batch report's distinct-shingle semantics
-    (distinct by shingle string; the batch path dedupes by 32-bit hash,
+    (same single-space tokenization and k-gram window; distinct by
+    shingle string where the batch path dedupes by 32-bit hash,
     identical short of a hash collision). False positives can only
     overstate contamination — safe for a removal gate."""
-    from xarray_dataaccessor_spark.operators.sketch import bloom_contains_sql
+    from xarray_dataaccessor_spark.operators.dedup import _word_kgrams
+    from xarray_dataaccessor_spark.operators.sketch import (
+        bloom_contains_sql,
+        bloom_keys,
+    )
 
-    words = F.filter(
-        F.split(F.trim(F.col(text_col)), "\\s+"), lambda w: F.length(w) > 0
-    )
-    idx = F.sequence(
-        F.lit(0), F.greatest(F.size(words) - k_grams, F.lit(0))
-    )
     shingles = F.array_distinct(
         F.filter(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ",
-                    *[F.get(words, (i + j).cast("int"))
-                      for j in range(k_grams)],
-                ),
-            ),
+            _word_kgrams(F.split(F.col(text_col), " "), k_grams),
             lambda sh: F.length(sh) > 0,
         )
     )
-    h1 = ("CAST(conv(substring(md5(concat('b1:', s)), 1, 8), 16, 10) "
-          "AS BIGINT)")
-    h2 = ("CAST(conv(substring(md5(concat('b2:', s)), 1, 8), 16, 10) "
-          "AS BIGINT)")
-    probe = bloom_contains_sql(h1, h2, bloom_words, k=k_hashes)
+    def keyed(s):
+        h1, h2 = bloom_keys(s)
+        return F.struct(h1.alias("h1"), h2.alias("h2"))
+
+    probe = bloom_contains_sql("k.h1", "k.h2", bloom_words, k=k_hashes)
     keep = [c for c in (id_col, "ts") if c in stream.columns]
     return (
         stream.select(*keep, shingles.alias("__sh"))
-        .withColumn("n_shingles", F.size("__sh").cast("long"))
+        .select(
+            *keep,
+            F.size("__sh").cast("long").alias("n_shingles"),
+            F.transform("__sh", keyed).alias("__k"),
+        )
         .withColumn(
             "n_hits",
-            F.expr(f"size(filter(__sh, s -> {probe}))").cast("long"),
+            F.expr(f"size(filter(__k, k -> {probe}))").cast("long"),
         )
-        .drop("__sh")
+        .drop("__k")
         .withColumn("contaminated", F.col("n_hits") > 0)
     )
 
